@@ -6,8 +6,9 @@ alternating large-star/small-star algorithm (Kiveris et al., "Connected
 Components in MapReduce and Beyond", SoCC'14) expressed as pure DataFrame
 transforms in a driver loop — the one part of the engine Catalyst cannot
 express (SURVEY §4.2).  Converges in O(log n) rounds; every round is
-``localCheckpoint``-ed to cut lineage (at cluster scale, swap in a
-table-backed checkpoint via checkpoint.StageCheckpointer).
+``localCheckpoint``-ed to cut lineage and released once the next round is
+materialized (at cluster scale, swap in a table-backed checkpoint via
+checkpoint.StageCheckpointer).
 
 Component label = minimum node id in the component — deterministic, so group
 ids are stable across partitionings and cluster sizes.
@@ -75,6 +76,12 @@ def _is_star_forest(edges: DataFrame) -> bool:
     return viol.isEmpty()
 
 
+def _release(checkpointed: DataFrame) -> None:
+    """Drop a ``localCheckpoint``-ed frame's blocks now instead of at the
+    ContextCleaner's next GC pass.  Only for a frame no live plan reads."""
+    checkpointed._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def _large_star(edges: DataFrame) -> DataFrame:
     """For each u: connect every strictly-larger neighbor to min(Γ(u) ∪ {u})."""
     # symmetrize in one scan (explode, not self-union — see _is_star_forest)
@@ -127,10 +134,16 @@ def connected_components(
     # converged the moment the edges are a disjoint star forest (checked
     # BEFORE each round too: an already-star input pays no round at all);
     # see _is_star_forest for why this saves one full round per call
+    prev = None
     for _ in range(max_iterations + 1):
-        if _is_star_forest(cur):
+        star = _is_star_forest(cur)
+        if prev is not None:
+            # the check just materialized cur, so the round it was built
+            # from is dead: only the final round outlives the call
+            _release(prev)
+        if star:
             break
-        cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
+        prev, cur = cur, _small_star(_large_star(cur)).localCheckpoint(eager=False)
     else:
         raise RuntimeError(f"connected_components did not converge in {max_iterations} iterations")
 
@@ -177,7 +190,15 @@ def group_labels(
                       over position-ordered rows, SG:872-873)
       * 'centroid' -> row with the largest similarity row-sum (SG:875-881);
                       ties -> smallest row id (pandas idxmax keeps first max).
+
+    'centroid' reads the edges twice (CC input, then the weights), so it
+    materializes them ONCE first with an eager ``localCheckpoint`` and both
+    consumers read those blocks: a lazy upstream plan (gram join, top-n,
+    symmetry repair) would otherwise run once per consumer.  'first' reads
+    the edges only once and stays lazy.
     """
+    if cfg.group_rep == GROUP_REP_CENTROID:
+        edges = edges.localCheckpoint(eager=True)
     simple = edges.where(F.col(LEFT) != F.col(RIGHT)).select(
         F.col(LEFT).alias("u"), F.col(RIGHT).alias("v")
     )

@@ -76,16 +76,17 @@ def match_edges(
             # than the ratio are excluded from CANDIDATE GENERATION only;
             # surviving pairs are re-scored on the full postings, so every
             # emitted similarity is exact
-            from .similarity import candidate_pairs_from_postings, score_pairs_packed
+            from .similarity import _mirrored, candidate_pairs_from_postings, score_pairs_packed
 
             n = n_master if n_master is not None else master.count()
             max_df = max(1, int(cfg.candidate_max_df_ratio * n))
             cand = candidate_pairs_from_postings(m_post, max_df)
-            half = score_pairs_packed(cand, m_post).where(
+            # one re-score pass: both directions come from the same scan, so
+            # each candidate crosses the Arrow boundary once.  The threshold
+            # filters AFTER the mirror: a filter directly on the UDF column
+            # is pushed below its projection and re-evaluates the UDF there
+            off_diag = _mirrored(score_pairs_packed(cand, m_post)).where(
                 F.col(SIM) >= float(cfg.min_similarity)
-            )
-            off_diag = half.unionAll(
-                half.select(F.col(RIGHT).alias(LEFT), F.col(LEFT).alias(RIGHT), F.col(SIM))
             )
         else:
             off_diag = cosine_join(m_post, m_post, cfg.min_similarity, self_join=True)

@@ -13,6 +13,11 @@ Plan shape (all built-in operators, whole-stage codegen end to end):
       FILTER sim >= min_similarity           -- threshold "pushdown" by construction
       WINDOW row_number over (l ORDER BY sim DESC, r) <= max_n_matches
 
+A self-join scores each unordered pair once (l < r) and emits both
+directions from ONE scan of the summed pairs (``_mirrored``: explode of a
+two-struct array), never as ``sims UNION mirror(sims)``: Spark re-executes
+each leg of a union, so the two-legged form ran the gram join twice.
+
 The reference's blocking machinery (SG:734-752) is exactly Spark partitioning;
 its zip-merge invariant ("per-row top-n computed across all B-blocks") is the
 reason the top-n window runs AFTER the global aggregation, never per-partition
@@ -89,6 +94,23 @@ def candidate_pairs_from_postings(postings: DataFrame, max_df: int) -> DataFrame
     )
 
 
+def _mirrored(edges: DataFrame) -> DataFrame:
+    """(l, r, s) -> (l, r, s) and (r, l, s), both from ONE scan of ``edges``.
+
+    explode, not a self-union (the idiom of ``grouping._large_star``): each
+    leg of a union re-executes its whole subplan, so ``edges UNION
+    mirror(edges)`` paid the upstream join (or re-score UDF) twice.
+    """
+    return edges.select(
+        F.explode(
+            F.array(
+                F.struct(LEFT, RIGHT, SIM),
+                F.struct(F.col(RIGHT).alias(LEFT), F.col(LEFT).alias(RIGHT), SIM),
+            )
+        ).alias("_e")
+    ).select("_e.*")
+
+
 def cosine_join(
     postings_l: DataFrame,
     postings_r: DataFrame,
@@ -110,18 +132,15 @@ def cosine_join(
     )
     pairs = l.join(r, GRAM)
     if self_join:
-        # compute each unordered pair once; mirror afterwards (halves the agg)
+        # compute each unordered pair once (halves the agg), then emit both
+        # directions in the same scan of the sums (_mirrored)
         pairs = pairs.where(F.col(LEFT) < F.col(RIGHT))
     sims = (
         pairs.groupBy(LEFT, RIGHT)
         .agg(F.sum(F.col("_wl") * F.col("_wr")).alias(SIM))
         .where(F.col(SIM) >= float(min_similarity))
     )
-    if self_join:
-        sims = sims.unionAll(
-            sims.select(F.col(RIGHT).alias(LEFT), F.col(LEFT).alias(RIGHT), F.col(SIM))
-        )
-    return sims
+    return _mirrored(sims) if self_join else sims
 
 
 def top_n_per_left(edges: DataFrame, max_n_matches: Optional[int]) -> DataFrame:
@@ -154,11 +173,8 @@ def symmetrize(edges: DataFrame, node_ids: DataFrame) -> DataFrame:
     diag = node_ids.select(
         F.col(idc).alias(LEFT), F.col(idc).alias(RIGHT), F.lit(1.0).alias(SIM)
     )
-    mirrored = edges.select(
-        F.col(RIGHT).alias(LEFT), F.col(LEFT).alias(RIGHT), F.col(SIM)
-    )
     return (
-        edges.unionAll(mirrored)
+        _mirrored(edges)
         .unionAll(diag)
         .groupBy(LEFT, RIGHT)
         .agg(F.max(SIM).alias(SIM))

@@ -45,7 +45,7 @@ from .config import (
 )
 from .operators import matching
 from .operators.grouping import NODE, group_labels
-from .operators.similarity import LEFT, RIGHT, SIM
+from .operators.similarity import LEFT, RIGHT, SIM, symmetrize
 
 
 class StringGrouperNotFitException(Exception):
@@ -194,15 +194,8 @@ class SparkStringGrouper:
         self._self_join_fit = self_join
         self._edges_pre_sdf = pre_sym
         if self_join and cfg.force_symmetries:
-            off = pre_sym.where(F.col(LEFT) != F.col(RIGHT))
-            mirrored = off.select(
-                F.col(RIGHT).alias(LEFT), F.col(LEFT).alias(RIGHT), F.col(SIM)
-            )
-            diag = self.spark.range(len(self._master)).select(
-                F.col("id").alias(LEFT), F.col("id").alias(RIGHT), F.lit(1.0).alias(SIM)
-            )
-            self._edges_sym_sdf = (
-                off.unionAll(mirrored).unionAll(diag).groupBy(LEFT, RIGHT).agg(F.max(SIM).alias(SIM))
+            self._edges_sym_sdf = symmetrize(
+                pre_sym.where(F.col(LEFT) != F.col(RIGHT)), self.spark.range(len(self._master))
             )
         else:
             self._edges_sym_sdf = pre_sym

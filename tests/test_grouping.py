@@ -54,6 +54,36 @@ def test_group_similar_strings_never_collects_edges(spark, customers_df):
     assert sg._matches_pdf is not None
 
 
+def test_group_labels_centroid_reads_edges_once(spark):
+    # CC and the centroid weights both consume the edges; a lazy edge plan
+    # would be evaluated once per consumer, so group_labels materializes it
+    # once — the counting UDF sees every edge row exactly once
+    from pyspark.sql.functions import udf
+    from pyspark.sql.types import LongType
+
+    from string_grouper_spark.config import MatchConfig
+    from string_grouper_spark.operators.grouping import group_labels
+
+    reads = spark.sparkContext.accumulator(0)
+
+    # an endpoint column: both consumers need it (the similarity column is
+    # pruned from the CC read)
+    @udf(returnType=LongType())
+    def counted(node):
+        reads.add(1)
+        return node
+
+    rows = [(0, 1, 0.9), (1, 0, 0.9), (1, 2, 0.85), (2, 1, 0.85)]
+    rows += [(i, i, 1.0) for i in range(5)]
+    edges = spark.createDataFrame(
+        rows, ["master_side", "dupe_side", "similarity"]
+    ).withColumn("master_side", counted("master_side"))
+    nodes = spark.range(5).select(F.col("id").alias("row_id"))
+    got = group_labels(edges, nodes, MatchConfig(group_rep="centroid")).toPandas()
+    assert dict(zip(got["node"], got["group_rep"])) == {0: 1, 1: 1, 2: 1, 3: 3, 4: 4}
+    assert reads.value == len(rows)
+
+
 def test_group_similar_strings_first(spark, customers_df):
     # TSG:767-780
     got = group_similar_strings(

@@ -61,6 +61,38 @@ def test_cosine_join_has_partial_aggregation(spark, docs):
     assert "partial_sum" in plan, plan
 
 
+def test_self_join_runs_gram_join_once(spark, docs):
+    # both directions of each pair come from ONE scan of the summed pairs:
+    # a two-legged self-union re-executed the gram join in each leg
+    import re
+
+    from string_grouper_spark.functions.tfidf import tfidf_postings
+    from string_grouper_spark.operators.similarity import cosine_join
+
+    cfg = MatchConfig()
+    p, _, _ = tfidf_postings(docs, None, cfg, id_col="doc_id", assume_ascii=True)
+    # checkpointed postings: the postings build's own (tf JOIN idf ON gram)
+    # must not count
+    p = p.localCheckpoint()
+    plan = plan_of(cosine_join(p, p, 0.8, self_join=True))
+    gram_joins = [ln for ln in plan.splitlines() if re.search(r"Join \[gram#", ln)]
+    assert len(gram_joins) == 1, plan
+
+
+def test_stop_gram_path_rescores_once(spark, docs):
+    # candidate_max_df_ratio path: the packed re-score UDF runs in one pass,
+    # so every candidate pair crosses the Arrow boundary once, not per
+    # mirror leg
+    from string_grouper_spark.operators.matching import match_edges
+
+    cfg = MatchConfig(candidate_max_df_ratio=0.5)
+    edges = match_edges(
+        docs.limit(200), None, cfg, id_col="doc_id", n_master=200, assume_ascii=True
+    )
+    plan = plan_of(edges)
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_whole_stage_codegen_in_tokenize(spark, docs):
     # AQE wraps the tree and hides codegen markers in toString; disable it
     # for this one inspection — the plan shape is identical
