@@ -105,6 +105,7 @@ def prof_exact1k(docs, reps=3):
 def prof_suffix(docs, reps=2):
     from string_grouper_spark.operators.suffix_array import (
         _emit_suffixes,
+        _partition_sorted,
         suffix_array_spans,
     )
 
@@ -114,8 +115,7 @@ def prof_suffix(docs, reps=2):
             docs, cfg, min_len=24).count())
     suff = _emit_suffixes(docs, cfg, 24, 56, "text", "doc_id")
     timed("sa_emit_only", lambda: noop(suff))
-    ranged = suff.repartitionByRange(32, "suff").sortWithinPartitions("suff", "doc_id")
-    timed("sa_emit+range+sort", lambda: noop(ranged))
+    timed("sa_emit+hash+sort", lambda: noop(_partition_sorted(suff, 24, 32)))
 
 
 def prof_union(spark, n_docs, reps=2):
@@ -149,10 +149,9 @@ def prof_union(spark, n_docs, reps=2):
 def prof_substring(docs, reps=2):
     from string_grouper_spark.operators.candidates import (
         _substring_params,
-        make_winnow_udf,
+        _winnow_fingerprints,
         substring_containment,
     )
-    from string_grouper_spark.functions.normalize import normalize_expr
 
     cfg = MatchConfig(min_similarity=0.8, max_n_matches=1_000_000)
     for rep in range(reps):
@@ -160,13 +159,8 @@ def prof_substring(docs, reps=2):
             docs, cfg, anchor_len=24).count())
     k, w = _substring_params(24, None, None)
     print(f"  params k={k} w={w}")
-    norm = docs.select(F.col("doc_id").alias("doc_id"),
-                       normalize_expr(F.col("text"), cfg).alias("norm"))
-    timed("ss_normalize_only", lambda: noop(norm))
-    winnow = make_winnow_udf(k, w)
-    fps = norm.where(F.length("norm") >= 24).select(
-        "doc_id", winnow(F.col("norm")).alias("fp"))
-    timed("ss_winnow_udf", lambda: noop(fps))
+    fps = _winnow_fingerprints(docs, cfg, k, w, 24)
+    timed("ss_winnow_pass", lambda: noop(fps))
 
 
 def prof_simhash(docs, reps=2):

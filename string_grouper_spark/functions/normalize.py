@@ -57,7 +57,8 @@ def normalize_expr(col: Column, cfg: MatchConfig, assume_ascii: bool = False) ->
         out = F.lower(out)
     if cfg.normalize_to_ascii and not assume_ascii:
         out = _nfkd_ascii(out)
-    # Java and Python regex agree on the default class ``[,-./]|\s``.
+    # Java's ``\s`` keeps \x1c-\x1f and Unicode spaces that ``py_normalize``
+    # (Python ``re``, the reference's tokenizer) strips.
     out = F.regexp_replace(out, cfg.regex, "")
     return out
 

@@ -477,7 +477,7 @@ def fingerprint(
     minima are uniform).  ``engine='catalyst'``: the pure-expression form
     (xxhash64 per window position) for contexts that require a projection
     with no Python — it is the interpreted-HOF shape measured ~60x slower
-    than the numpy kernel on long docs (see ``make_winnow_udf``), so it is
+    than the numpy kernel on long docs (see ``_winnow_fingerprints``), so it is
     NOT the scan default.  The two engines use different (equally valid)
     window hash functions, so fingerprint VALUES differ between engines;
     the induced duplicate partition agrees wherever equal-fingerprint docs

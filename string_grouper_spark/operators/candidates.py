@@ -7,7 +7,7 @@ candidate-pair set which the EXACT TF-IDF re-scorer
 (operators/similarity.score_pairs) then scores; recall vs the exact path is
 the tested contract (>= 0.99 at matched config).
 
-All signature kernels are Arrow-vectorized pandas UDFs over numpy — no
+All signature kernels are Arrow-vectorized Python passes over numpy — no
 per-row Python (input_hint requirement).  Gram hashing itself stays JVM-side
 (xxhash64 inside whole-stage codegen); Python only sees batches of hash
 arrays.
@@ -25,6 +25,7 @@ from typing import Optional, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -935,54 +936,71 @@ def _roll_hash_windows(norm: str, k: int) -> Optional[np.ndarray]:
     return _splitmix64(h).astype(np.int64)
 
 
-def make_winnow_udf(k: int, w: int):
-    """pandas UDF: normalized text -> struct(anchors, stripes).
-
+def _winnow(v: np.ndarray, w: int) -> Tuple[np.ndarray, np.ndarray]:
+    """(anchors, stripes) of one doc's window hashes ``v`` (len(v) >= w):
     anchors = distinct sliding-window minima (winnowing fingerprints),
-    stripes = minima of aligned non-overlapping stripes of width ``w`` —
-    over the length-``k`` window hashes of the text.
+    stripes = minima of aligned non-overlapping stripes of width ``w``."""
+    n = len(v)
+    anchors = np.unique(np.lib.stride_tricks.sliding_window_view(v, w).min(axis=1))
+    head = v[: (n // w) * w].reshape(-1, w).min(axis=1)
+    tail = v[(n // w) * w:]
+    stripes = np.concatenate([head, [tail.min()]]) if len(tail) else head
+    return anchors, stripes
 
-    ONE numpy pass per doc for BOTH the window hashes (vectorized rolling
-    polynomial hash) and the minima.  Two prior formulations were measured
-    and rejected: Catalyst ``transform(sequence, i -> array_min(slice))``
-    for the minima (one allocation per window position, 60x slower) and
-    Catalyst ``transform(sequence, i -> xxhash64(substring(norm,i,k)))``
-    for the hashes (interpreted HOF lambda + per-position string alloc —
-    the dominant cost of the substring query at sf0.1).
+
+def _list_array(parts: list):
+    """Arrow list<int64> column from per-row int64 arrays (no per-value
+    Python objects)."""
+    offsets = np.zeros(len(parts) + 1, dtype=np.int32)
+    np.cumsum([len(p) for p in parts], out=offsets[1:])
+    values = np.concatenate(parts) if parts else np.zeros(0, dtype=np.int64)
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(values))
+
+
+def _winnow_fingerprints(
+    docs: DataFrame, cfg: MatchConfig, k: int, w: int, min_chars: int,
+    text_col: str = "text", id_col: str = "doc_id",
+) -> DataFrame:
+    """(doc_id, norm, anchors, stripes) for every doc whose normalized text
+    has >= ``min_chars`` (>= k + 2w - 2) characters, from ONE
+    ``mapInArrow`` pass: ``py_normalize`` (as in the suffix emitter and the
+    fast plan's terms pass), the rolling length-``k`` window hashes and
+    their winnowing minima, with list columns built from numpy offsets.
+    Measured and rejected: Catalyst HOF lambdas for the hashes or minima
+    (interpreted, up to 60x slower), and a JVM normalize chained with NFKD
+    and winnow UDFs (several ``ArrowEvalPython`` crossings per text).
     """
-    out_type = StructType(
-        [
-            StructField("anchors", ArrayType(LongType()), True),
-            StructField("stripes", ArrayType(LongType()), True),
-        ]
+    from ..functions.normalize import py_normalize
+
+    schema = (
+        docs.select(F.col(id_col).alias(DOC)).schema.add("norm", "string")
+        .add("anchors", ArrayType(LongType())).add("stripes", ArrayType(LongType()))
     )
 
-    @pandas_udf(out_type)
-    def winnow(norms: pd.Series) -> pd.DataFrame:
-        anchors_col, stripes_col = [], []
-        with np.errstate(over="ignore"):
-            for s in norms:
-                v = None if s is None else _roll_hash_windows(s, k)
-                if v is None or len(v) == 0:
-                    anchors_col.append(None)
-                    stripes_col.append(None)
-                    continue
-                n = len(v)
-                if n < w:
-                    m = np.array([v.min()], dtype=np.int64)
-                    anchors_col.append(m)
-                    stripes_col.append(m)
-                    continue
-                slid = np.lib.stride_tricks.sliding_window_view(v, w).min(axis=1)
-                anchors_col.append(np.unique(slid))
-                head = v[: (n // w) * w].reshape(-1, w).min(axis=1)
-                tail = v[(n // w) * w:]
-                stripes_col.append(
-                    np.concatenate([head, [tail.min()]]) if len(tail) else head
-                )
-        return pd.DataFrame({"anchors": anchors_col, "stripes": stripes_col})
+    def run(batches):
+        for batch in batches:
+            keep, norms, anchors, stripes = [], [], [], []
+            with np.errstate(over="ignore"):
+                for i, text in enumerate(batch.column(1).to_pylist()):
+                    norm = None if text is None else py_normalize(text, cfg)
+                    if norm is None or len(norm) < min_chars:
+                        continue
+                    a, s = _winnow(_roll_hash_windows(norm, k), w)
+                    keep.append(i)
+                    norms.append(norm)
+                    anchors.append(a)
+                    stripes.append(s)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0).take(pa.array(keep, pa.int64())),
+                    pa.array(norms, pa.string()),
+                    _list_array(anchors),
+                    _list_array(stripes),
+                ],
+                names=schema.fieldNames(),
+            )
 
-    return winnow
+    return docs.select(id_col, text_col).mapInArrow(run, schema)
 
 
 def substring_containment(
@@ -1017,32 +1035,25 @@ def substring_containment(
     inner, i.e. one of inner's sliding-window minima — so the equi-join on
     fingerprint hash cannot miss a true containment.  False candidates are
     killed by the exact verify.
-    """
-    from ..functions.normalize import normalize_expr
 
+    Normalization is ``py_normalize`` (Python ``re``, as the reference and
+    ``suffix_array_spans``): its ``\\s`` also strips ``\\x1c``-``\\x1f``
+    and Unicode spaces such as ``\\xa0``, which Java's ``\\s`` keeps.
+    """
     k, w = _substring_params(anchor_len, window_len, stride)
-    winnow = make_winnow_udf(k, w)
-    # ONE narrow Arrow pass computes normalization + rolling window hashes +
+    # ONE mapInArrow pass computes normalization + rolling window hashes +
     # winnowing minima, localCheckpoint-ed (lazy) because it has THREE
     # consumers — the anchor explode, the stripe-index explode and the
-    # verify join.  The previous shape recomputed the winnow UDF once per
-    # explode side and leaked a ``persist()`` CacheManager entry per call
+    # verify join.  A ``persist()`` would leak a CacheManager entry per call
     # (no caller can safely unpersist a lazily-consumed result — the
     # bipartite sibling's documented lesson); the checkpoint runs the pass
     # once and its blocks are reclaimed with the RDD.  At corpus scale the
-    # winnow pass over every normalized byte is the dominant narrow stage,
-    # so halving it matters more than the checkpoint's storage.
+    # winnow pass over every normalized byte is the dominant narrow stage.
     # (Length threshold is on CHARS; byte windows only grow the window
     # count, so the guaranteed-hit bound is preserved.)
-    fps = (
-        docs.select(
-            F.col(id_col).alias(DOC),
-            normalize_expr(F.col(text_col), cfg).alias("norm"),
-        )
-        .where(F.length("norm") >= anchor_len)
-        .select(DOC, "norm", winnow(F.col("norm")).alias("fp"))
-        .localCheckpoint(eager=False)
-    )
+    fps = _winnow_fingerprints(
+        docs, cfg, k, w, anchor_len, text_col, id_col
+    ).localCheckpoint(eager=False)
     # anchors: winnowing fingerprints (distinct sliding minima) of inner
     # docs — SLIM (id, hash) rows only.  Carrying inner_norm here would
     # ship ~len(norm)/stride copies of every doc's full text through the
@@ -1051,12 +1062,12 @@ def substring_containment(
     # candidate pair from the checkpointed fps below.
     anchors = fps.select(
         F.col(DOC).alias("inner_id"),
-        F.explode("fp.anchors").alias("wh"),
+        F.explode("anchors").alias("wh"),
     )
     # index: one min-hash per aligned stripe of w window positions
     index = fps.select(
         F.col(DOC).alias("outer_id"),
-        F.explode("fp.stripes").alias("wh"),
+        F.explode("stripes").alias("wh"),
     ).dropDuplicates(["outer_id", "wh"])
     cand = (
         anchors.join(index, "wh")
@@ -1101,36 +1112,45 @@ def substring_containment_bipartite(
     ``substring_containment`` (which is the self-corpus special case), with
     the sides split: the huge CORPUS side carries the sparse stripe index
     (~1/stride of its bytes), the small benchmark side the sliding-window
-    minima.  Cost: one narrow Arrow pass per side + one equi-join on the
-    fingerprint hash; ids may overlap between sides and are NOT excluded
-    (the two tables are distinct corpora).
+    minima.  Cost: one ``_winnow_fingerprints`` pass per side + one
+    equi-join on the fingerprint hash; ids may overlap between sides and
+    are NOT excluded (the two tables are distinct corpora).
 
     CONTRACT: benchmark items whose NORMALIZED length is below
     ``anchor_len`` are NOT searched for (the winnowing guarantee needs
     >= anchor_len characters) — lower ``anchor_len`` to cover shorter
     items, and pass ``skip_stats`` (a dict) to receive
     ``{"n_inner_skipped": ...}`` so short-item skips are never silent.
-    The normalized corpus side is localCheckpoint-ed for the two consumers
-    (stripe index + verify join): eager, computed once, and its blocks are
-    released by the ContextCleaper's plan GC when the result is dropped —
-    ``persist()`` would leak a CacheManager entry per call for the session
-    lifetime, since no caller can safely unpersist a lazily-consumed
-    result (the group_rep ``_with_pos`` lesson).
+    The corpus side's fingerprints are localCheckpoint-ed for the two
+    consumers (stripe index + verify join): eager, computed once, and its
+    blocks are released by the ContextCleaper's plan GC when the result is
+    dropped — ``persist()`` would leak a CacheManager entry per call for
+    the session lifetime, since no caller can safely unpersist a
+    lazily-consumed result (the group_rep ``_with_pos`` lesson).
     """
-    from ..functions.normalize import normalize_expr
-
     k, w = _substring_params(anchor_len, window_len, stride)
-    winnow = make_winnow_udf(k, w)
-    inner_norm = inner_docs.select(
-        F.col(id_col).alias("inner_id"),
-        normalize_expr(F.col(text_col), cfg).alias("inner_norm"),
+    # searchable inner docs, checkpointed (lazy) for the anchor pass AND
+    # the verify-time norm attach — the anchor explode itself stays SLIM
+    # (id, hash): shipping inner_norm on every anchor row would move
+    # ~len/stride copies of each benchmark item through the fingerprint
+    # join; the norm is attached once per deduped candidate pair instead.
+    searchable = (
+        _winnow_fingerprints(inner_docs, cfg, k, w, anchor_len, text_col, id_col)
+        .toDF("inner_id", "inner_norm", "anchors", "stripes").drop("stripes")
+        .localCheckpoint(eager=False)
     )
-    outer_norm = outer_docs.select(
-        F.col(id_col).alias("outer_id"),
-        normalize_expr(F.col(text_col), cfg).alias("outer_norm"),
-    ).localCheckpoint()
+    # an outer shorter than anchor_len cannot contain any inner
+    outer = (
+        _winnow_fingerprints(outer_docs, cfg, k, w, anchor_len, text_col, id_col)
+        .toDF("outer_id", "outer_norm", "anchors", "stripes").drop("anchors")
+        .localCheckpoint()
+    )
     if skip_stats is not None:
-        n_skip = inner_norm.where(F.length("inner_norm") < anchor_len).count()
+        # counting the searchable items materializes their checkpoint
+        n_skip = (
+            inner_docs.where(F.col(text_col).isNotNull()).count()
+            - searchable.count()
+        )
         skip_stats["n_inner_skipped"] = int(n_skip)
         if n_skip:
             import logging
@@ -1139,25 +1159,10 @@ def substring_containment_bipartite(
                 "%d benchmark item(s) shorter than anchor_len=%d after "
                 "normalization are NOT searched for", n_skip, anchor_len
             )
-    # searchable inner docs, checkpointed (lazy) for the anchor pass AND
-    # the verify-time norm attach — the anchor explode itself stays SLIM
-    # (id, hash): shipping inner_norm on every anchor row would move
-    # ~len/stride copies of each benchmark item through the fingerprint
-    # join; the norm is attached once per deduped candidate pair instead.
-    searchable = inner_norm.where(
-        F.length("inner_norm") >= anchor_len
-    ).localCheckpoint(eager=False)
-    anchors = (
-        searchable.select("inner_id", winnow(F.col("inner_norm")).alias("fp"))
-        .select("inner_id", F.explode("fp.anchors").alias("wh"))
-    )
-    index = (
-        # an outer shorter than anchor_len cannot contain any inner
-        outer_norm.where(F.length("outer_norm") >= anchor_len)
-        .select("outer_id", winnow(F.col("outer_norm")).alias("fp"))
-        .select("outer_id", F.explode("fp.stripes").alias("wh"))
-        .dropDuplicates(["outer_id", "wh"])
-    )
+    anchors = searchable.select("inner_id", F.explode("anchors").alias("wh"))
+    index = outer.select(
+        "outer_id", F.explode("stripes").alias("wh")
+    ).dropDuplicates(["outer_id", "wh"])
     cand = (
         anchors.join(index, "wh")
         .select("inner_id", "outer_id")
@@ -1165,7 +1170,7 @@ def substring_containment_bipartite(
     )
     verified = (
         cand.join(searchable, "inner_id")
-        .join(outer_norm, "outer_id")
+        .join(outer, "outer_id")
         .where(F.expr("locate(inner_norm, outer_norm) > 0"))
     )
     return verified.select("inner_id", "outer_id")

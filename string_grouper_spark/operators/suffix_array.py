@@ -16,8 +16,8 @@ Language Models Better") re-expressed Spark-first.
 
 The plan, and why it survives 100 TB:
 
-1. ONE narrow ``mapInPandas`` pass emits truncated suffixes
-   ``norm[i : i+truncate]`` per document (numpy normalization via the
+1. ONE narrow ``mapInArrow`` pass emits truncated suffixes
+   ``norm[i : i+truncate]`` per document (numpy buffers normalized via the
    shared ``py_normalize``; no shuffle; output bytes are bounded by
    ``truncate`` x corpus bytes).
 2. HASH partitioning on the first ``min_len`` bytes of each suffix +
@@ -41,7 +41,8 @@ The plan, and why it survives 100 TB:
    partition, where the linear LCP scan (m-1 edges per run, see below) and
    the external sort's spilling bound the cost; hash distributes DISTINCT
    prefixes uniformly without needing representative samples.
-3. A per-partition vectorized LCP scan over ADJACENT suffixes only.
+3. A per-partition ``mapInArrow`` LCP scan over ADJACENT suffixes only,
+   vectorized on the sorted column's Arrow buffers (``_pairwise_lcp``).
    Within a sorted run of m suffixes sharing a >= ``min_len`` prefix the
    scan emits m-1 chain edges, never m^2/2 pairs — the megabucket blowup
    every bucket-join generator has to guard against simply does not exist
@@ -50,10 +51,10 @@ The plan, and why it survives 100 TB:
 4. Components come from the existing O(log n) large/small-star loop;
    per-pair spans from one max aggregation over the slim edge triples.
 """
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -106,8 +107,6 @@ def _emit_suffixes(
     int32 Arrow offsets can never overflow and worker memory stays
     bounded regardless of document sizes.
     """
-    import pyarrow as pa
-
     from ..functions.normalize import py_normalize
 
     tgt_bytes = 64 << 20
@@ -196,63 +195,68 @@ def _partition_sorted(
     ).sortWithinPartitions("suff", "doc_id")
 
 
-def _tail_lcp(ta: bytes, tb: bytes) -> int:
-    """Common-prefix length of two byte strings via binary-searched memcmp
-    (each probe is one C-level slice compare) — O(log W) probes instead of
-    a per-byte Python loop, so even a degenerate all-identical run costs a
-    handful of C compares per pair."""
-    hi = min(len(ta), len(tb))
-    if ta[:hi] == tb[:hi]:
-        return hi
-    lo = 0
-    while lo < hi - 1:
-        mid = (lo + hi) // 2
-        if ta[:mid] == tb[:mid]:
-            lo = mid
-        else:
-            hi = mid
-    return lo
-
-
-def _pairwise_lcp(suffs: list, min_len: int) -> np.ndarray:
-    """LCP between consecutive byte strings (each >= ``min_len`` bytes —
-    guaranteed by ``_emit_suffixes``), returned as int32 of length
-    ``len(suffs) - 1``.
-
-    Shape: ONE vectorized gather of the first ``min_len`` bytes of every
-    suffix (fixed width — no ragged padding) decides each adjacent pair
-    exactly when the pair differs inside the head, which is the common
-    case by construction (heads shorter than ``min_len`` never make
-    edges).  Full-head-equal pairs (the actual duplicate runs, few) are
-    extended exactly with ``_tail_lcp``.  Measured 3.9x over the padded
-    full-width int16 matrix this replaces (500k sorted suffixes with
-    planted duplicate runs).
+def _pairwise_lcp(suffs, min_len: int) -> np.ndarray:
+    """LCP between consecutive rows of a binary Arrow array (each row >=
+    ``min_len`` bytes — guaranteed by ``_emit_suffixes``) as int32 of
+    length ``len(suffs) - 1``, read from the array's offsets and values
+    buffers (no per-row Python objects).  ONE gather of the fixed-width
+    ``min_len``-byte heads decides every pair that differs inside the head;
+    head-equal pairs (the duplicate runs) get one more gather of their
+    bytes ``min_len..``, capped by the shorter row (< ``truncate``) and
+    blocked to bound memory — nothing to gather when truncate == min_len.
     """
     m = len(suffs)
     if m < 2:
         return np.zeros(0, dtype=np.int32)
     k = min_len
-    lens = np.fromiter((len(s) for s in suffs), dtype=np.int32, count=m)
-    flat = np.frombuffer(b"".join(suffs), dtype=np.uint8)
-    starts = np.zeros(m, dtype=np.int64)
-    np.cumsum(lens[:-1], out=starts[1:])
-    head = flat[starts[:, None] + np.arange(k, dtype=np.int64)[None, :]]
+    _, obuf, vbuf = suffs.buffers()
+    otype = np.int64 if pa.types.is_large_binary(suffs.type) else np.int32
+    off = np.frombuffer(obuf, dtype=otype)[suffs.offset : suffs.offset + m + 1]
+    starts, lens = off[:-1].astype(np.int64), np.diff(off)
+    flat = np.frombuffer(vbuf, dtype=np.uint8)
+    head = flat[starts[:, None] + np.arange(k)]
     neq = head[1:] != head[:-1]
-    any_neq = neq.any(axis=1)
-    lcp = np.where(any_neq, neq.argmax(axis=1), k).astype(np.int32)
-    for i in np.nonzero(~any_neq)[0]:
-        lcp[i] = k + _tail_lcp(suffs[i][k:], suffs[i + 1][k:])
+    lcp = np.where(neq.any(axis=1), neq.argmax(axis=1), k).astype(np.int32)
+    eq = np.flatnonzero(lcp == k)
+    cap = np.minimum(lens[eq], lens[eq + 1])  # never past the shorter row
+    width = int(cap.max(initial=k)) - k
+    if width > 0:
+        pos = np.arange(k, k + width)
+        last = len(flat) - 1
+        step = max(1, (1 << 20) // width)
+        for c in range(0, len(eq), step):
+            e, ce = eq[c : c + step], cap[c : c + step, None]
+            a = flat[np.minimum(starts[e, None] + pos, last)]
+            b = flat[np.minimum(starts[e + 1, None] + pos, last)]
+            stop = (a != b) | (pos >= ce)
+            lcp[e] = k + np.where(stop.any(axis=1), stop.argmax(axis=1), width)
     return lcp
 
 
-def _chain_edges(ids: np.ndarray, lcp: np.ndarray, min_len: int):
-    """(left<right, span) triples for adjacent pairs with lcp >= min_len
-    and distinct docs.  Same-doc adjacencies are dropped — the chain
-    through them still connects the flanking docs transitively."""
-    keep = (lcp >= min_len) & (ids[1:] != ids[:-1])
-    l = np.minimum(ids[1:], ids[:-1])[keep]
-    r = np.maximum(ids[1:], ids[:-1])[keep]
-    return l, r, lcp[keep]
+def _lcp_scan(batches, min_len: int):
+    """One sorted partition's Arrow (suff, doc_id) batches -> (left<right,
+    span) chain edges: adjacent pairs with lcp >= min_len and distinct
+    docs.  Same-doc adjacencies are dropped — the chain through them still
+    connects the flanking docs transitively.  Each batch is stitched to the
+    previous batch's last row, so a run straddling two batches keeps its
+    edge."""
+    prev = None  # (last suffix as a 1-row array, its doc id)
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        suffs, ids = batch.column(0), batch.column(1).to_numpy()
+        if prev is not None:
+            suffs = pa.concat_arrays([prev[0], suffs])
+            ids = np.concatenate(([prev[1]], ids))
+        lcp = _pairwise_lcp(suffs, min_len)
+        keep = (lcp >= min_len) & (ids[1:] != ids[:-1])
+        prev = suffs.slice(len(suffs) - 1), ids[-1]
+        if keep.any():
+            lo, hi = np.minimum(ids[1:], ids[:-1]), np.maximum(ids[1:], ids[:-1])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(lo[keep]), pa.array(hi[keep]), pa.array(lcp[keep])],
+                names=_EDGE_SCHEMA.fieldNames(),
+            )
 
 
 def suffix_array_spans(
@@ -301,26 +305,9 @@ def suffix_array_spans(
         num_partitions = int(max(sc.defaultParallelism, min(est, 2_000_000)))
     sorted_suff = _partition_sorted(suffixes, min_len, num_partitions)
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prev_suff, prev_id = None, None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            suffs = list(pdf["suff"])
-            ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-            if prev_suff is not None:
-                # stitch across Arrow batches inside this partition
-                suffs = [prev_suff] + suffs
-                ids = np.concatenate(([prev_id], ids))
-            lcp = _pairwise_lcp(suffs, min_len)
-            l, r, sp = _chain_edges(ids, lcp, min_len)
-            prev_suff, prev_id = suffs[-1], int(ids[-1])
-            if len(l):
-                yield pd.DataFrame(
-                    {"left": l, "right": r, "span": sp.astype(np.int32)}
-                )
-
-    edges = sorted_suff.mapInPandas(scan, _EDGE_SCHEMA)
+    edges = sorted_suff.mapInArrow(
+        lambda batches: _lcp_scan(batches, min_len), _EDGE_SCHEMA
+    )
     return (
         edges.groupBy("left", "right")
         .agg(F.max("span").alias("span"))

@@ -168,6 +168,26 @@ def test_substring_index_row_reduction(spark, docs):
         assert ratio >= min_ratio, (window_len, stride, ratio)
 
 
+@pytest.mark.parametrize(
+    "sep, cfg",
+    [("\x1f", MatchConfig()), ("\xa0", MatchConfig(normalize_to_ascii=False))],
+)
+def test_substring_and_suffix_agree_on_python_whitespace(spark, sep, cfg):
+    # both generators normalize with py_normalize (Python re, as the
+    # reference tokenizer): a character Python's \s strips but Java's keeps
+    # must not split their verdicts on a pair
+    from string_grouper_spark.operators.suffix_array import suffix_array_spans
+
+    text = "the quick brown fox jumps over the lazy dog"
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [0, 1], "text": [text, text.replace(" ", sep, 1)]})
+    )
+    contain = cand.substring_containment(docs, cfg, anchor_len=16).toPandas()
+    spans = suffix_array_spans(docs, cfg, min_len=16).toPandas()
+    assert set(zip(contain["inner_id"], contain["outer_id"])) == {(0, 1), (1, 0)}
+    assert set(zip(spans["left"], spans["right"])) == {(0, 1)}
+
+
 def test_salted_bucket_join_equals_plain(spark):
     # salting must re-shard the self-join WITHOUT changing the pair set
     pdf = pd.DataFrame(

@@ -2,6 +2,8 @@
 be visible in `.explain` output, not just claimed (task brief: "iterate until
 it's the plan you'd want")."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -276,29 +278,69 @@ def test_generator_union_plan_has_no_cartesian(spark, docs):
     assert "BatchEvalPython" not in plan, plan
 
 
-def test_suffix_array_is_one_range_exchange(spark, docs):
-    # the distributed suffix-array construction must be: parquet scan ->
-    # narrow MapInPandas (suffix emission) -> EXACTLY ONE range-partitioning
-    # exchange -> in-partition sort -> MapInPandas LCP scan.  A hash
-    # exchange, a global sort, or a second shuffle before the scan would
-    # break the skew story (range bounds splitting hot boilerplate runs).
-    from string_grouper_spark.operators.suffix_array import _emit_suffixes
+def final_plan(df) -> str:
+    # an adaptive plan prints its final tree, then its initial one
+    return plan_of(df).split("== Initial Plan ==")[0]
 
-    cfg = MatchConfig()
-    suff = _emit_suffixes(docs, cfg, 16, 48, "text", "doc_id")
-    sorted_suff = suff.repartitionByRange(8, "suff").sortWithinPartitions(
-        "suff", "doc_id"
-    )
-    plan = plan_of(sorted_suff)
-    assert plan.count("Exchange") == 1, plan
-    assert "rangepartitioning" in plan, plan
-    assert "hashpartitioning" not in plan, plan
+
+def checkpoint_sources(monkeypatch, df_type) -> list:
+    # a checkpoint replaces its source plan with an RDD scan, so the passes
+    # it ran are visible only on the frames handed to localCheckpoint
+    seen = []
+    orig = df_type.localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        seen.append(self)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(df_type, "localCheckpoint", capture)
+    return seen
+
+
+def python_nodes(plan: str) -> list:
+    return re.findall(r"\w*(?:EvalPython|InArrow|InPandas)\b", plan)
+
+
+def test_suffix_array_scan_is_one_hash_exchange(spark, docs, monkeypatch):
+    # suffix_array_spans must be: parquet scan -> narrow MapInArrow (suffix
+    # emission) -> EXACTLY ONE hash exchange on the min_len-byte head ->
+    # in-partition sort -> MapInArrow LCP scan.  A range exchange re-runs
+    # the emission for its bound sampling, a global sort or a second
+    # shuffle costs a pass, and a pandas or scalar UDF scan turns every
+    # suffix into a Python object.
+    from string_grouper_spark.operators.suffix_array import suffix_array_spans
+
+    seen = checkpoint_sources(monkeypatch, type(docs))
+    suffix_array_spans(docs, MatchConfig(), min_len=16, truncate=48)
+    assert len(seen) == 1
+    plan = final_plan(seen[0])
+    lines = plan.splitlines()
+    scan = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
+    below = "\n".join(lines[scan + 1:])
+    assert below.count("Exchange") == 1, plan
+    assert "Exchange hashpartitioning(xxhash64(substring(suff" in below, plan
+    assert "rangepartitioning" not in plan, plan
+    assert python_nodes(plan) == ["MapInArrow", "MapInArrow"], plan
     # the in-partition sort must NOT be a global (all-partitions) sort:
     # Sort [...], false, 0 — the 'false' is the global flag
-    assert "true, 0" not in plan, plan
+    sorts = [ln for ln in lines if "Sort [suff" in ln]
+    assert sorts and all(ln.endswith("], false, 0") for ln in sorts), plan
     # column pruning reaches the scan: only (doc_id, text) are read
-    read = [ln for ln in plan.splitlines() if "ReadSchema" in ln][0]
+    read = [ln for ln in lines if "ReadSchema" in ln][0]
     assert "lang" not in read and "n_chars" not in read
+
+
+def test_substring_containment_is_one_python_pass(spark, docs, monkeypatch):
+    # normalization, window hashes and winnowing minima cross the Python
+    # boundary in ONE node: no ArrowEvalPython (a JVM lower/regexp chained
+    # with NFKD and winnow UDFs shipped every text through several)
+    from string_grouper_spark.operators.candidates import substring_containment
+
+    seen = checkpoint_sources(monkeypatch, type(docs))
+    out = substring_containment(docs, MatchConfig(), anchor_len=16)
+    plans = [final_plan(df) for df in [out] + seen]
+    nodes = [n for p in plans for n in python_nodes(p)]
+    assert nodes == ["MapInArrow"], plans
 
 
 def test_gopher_filter_evaluates_screens_once(spark, docs):

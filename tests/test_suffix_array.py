@@ -1,15 +1,17 @@
 """Distributed suffix-array pass: exactness vs a brute-force k-gram join,
-boundary stitching across range partitions, span values on planted runs."""
+boundary stitching across Arrow batches, span values on planted runs."""
 import itertools
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from string_grouper_spark.config import MatchConfig
 from string_grouper_spark.functions.normalize import py_normalize
 from string_grouper_spark.operators.suffix_array import (
+    _lcp_scan,
     _pairwise_lcp,
     suffix_array_dedup,
     suffix_array_spans,
@@ -134,14 +136,85 @@ def test_no_cross_doc_edges_below_min_len(spark):
     assert sorted(comp["component"]) == [0, 1, 2]  # all singletons
 
 
+def _lcp(rows, min_len):
+    return _pairwise_lcp(pa.array(rows, pa.binary()), min_len).tolist()
+
+
 def test_pairwise_lcp_kernel():
-    assert _pairwise_lcp([], 4).tolist() == []
-    assert _pairwise_lcp([b"abcd"], 4).tolist() == []
-    got = _pairwise_lcp([b"abcd", b"abcdef", b"abcf", b"zz"], 2)
+    assert _lcp([], 4) == []
+    assert _lcp([b"abcd"], 4) == []
+    got = _lcp([b"abcd", b"abcdef", b"abcf", b"zz"], 2)
     # capped at shorter member; argmax on first mismatch; no overlap
-    assert got.tolist() == [4, 3, 0]
+    assert got == [4, 3, 0]
     # equal strings LCP at their true length, not the pad width
-    assert _pairwise_lcp([b"aa", b"aa", b"aab"], 2).tolist() == [2, 2]
+    assert _lcp([b"aa", b"aa", b"aab"], 2) == [2, 2]
+    # duplicate-heavy run at full truncate width (8): the tail gather
+    # resolves every head-equal pair up to the row length
+    run = [b"abcdefgh"] * 5 + [b"abcdefgz", b"abcdxxxx"]
+    assert _lcp(run, 4) == [8, 8, 8, 8, 7, 4]
+    # rows below truncate (the short tail suffixes of a doc): the LCP is
+    # capped by the shorter row of each pair
+    tails = [b"abcd", b"abcde", b"abcdef", b"abcdef", b"abcdeg", b"abcx"]
+    assert _lcp(tails, 4) == [4, 5, 6, 5, 3]
+    # a sliced array reads its own window of the shared buffers
+    assert _pairwise_lcp(pa.array(run, pa.binary()).slice(4), 4).tolist() == [7, 4]
+    # rows too wide for one tail gather are resolved in row blocks
+    base = bytes(np.random.default_rng(3).integers(97, 123, 300_000).tolist())
+    assert _lcp([base] * 4 + [base[:200_000] + b"{"], 16) == [300_000] * 3 + [200_000]
+
+
+def test_pairwise_lcp_matches_loop_reference():
+    # the buffer kernel against a per-byte loop on random sorted runs over a
+    # 2-letter alphabet (duplicate-heavy), lengths between min_len and
+    # truncate, on whole and sliced arrays
+    def loop_lcp(rows):
+        out = []
+        for a, b in zip(rows, rows[1:]):
+            n = 0
+            while n < min(len(a), len(b)) and a[n] == b[n]:
+                n += 1
+            out.append(n)
+        return out
+
+    rng = np.random.default_rng(7)
+    for _ in range(200):
+        k = int(rng.integers(2, 6))
+        trunc = int(rng.integers(k, k + 12))
+        rows = sorted(
+            bytes(rng.choice([97, 98], size=int(rng.integers(k, trunc + 1))).tolist())
+            for _ in range(int(rng.integers(0, 40)))
+        )
+        assert _lcp(rows, k) == loop_lcp(rows)
+        large = pa.array(rows, pa.large_binary())
+        assert _pairwise_lcp(large, k).tolist() == loop_lcp(rows)
+        arr = pa.array(rows, pa.binary())
+        assert _pairwise_lcp(arr.slice(2), k).tolist() == loop_lcp(rows[2:])
+
+
+def test_lcp_scan_stitches_arrow_batches():
+    # one sorted run split across two Arrow batches: the pair at the
+    # boundary (docs 2 and 3) is found by stitching the previous batch's
+    # last row, exactly as in a single-batch scan
+    def batch(rows):
+        suffs, ids = zip(*rows)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(suffs, pa.binary()), pa.array(ids, pa.int64())],
+            names=["suff", "doc_id"],
+        )
+
+    rows = [
+        (b"abcdefgh", 1), (b"abcdefgh", 2),
+        (b"abcdefgh", 3), (b"abcdefgz", 4), (b"zzzzzzzz", 5),
+    ]
+
+    def edges(batches):
+        out = pa.Table.from_batches(list(_lcp_scan(batches, 4)))
+        return sorted(zip(*(out.column(c).to_pylist() for c in out.column_names)))
+
+    want = [(1, 2, 8), (2, 3, 8), (3, 4, 7)]
+    assert edges([batch(rows)]) == want
+    assert edges([batch(rows[:2]), batch(rows[2:])]) == want
+    assert edges([batch(rows[:2]), batch(rows[2:3]).slice(0, 0), batch(rows[2:])]) == want
 
 
 def test_validation_errors(spark, corpus):
