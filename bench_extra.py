@@ -169,8 +169,8 @@ def prof_simhash(docs, reps=2):
     cfg = MatchConfig(min_similarity=0.8, max_n_matches=1_000_000)
     for rep in range(reps):
         timed(f"sh{rep}_full", lambda: candidates.simhash_candidates(
-            docs, cfg, max_hamming=3, engine="fast").count())
-    sigs = candidates.simhash_signatures(docs, cfg, engine="fast")
+            docs, cfg, max_hamming=3).count())
+    sigs = candidates.simhash_signatures(docs, cfg)
     timed("sh_signatures_only", lambda: noop(sigs))
 
 

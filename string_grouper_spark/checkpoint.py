@@ -287,8 +287,12 @@ def checkpointed_lsh_dedup_pipeline(
     )
     from .operators.dedup import _INTEGRAL_DTYPES, run_with_long_ids
     from .operators.grouping import connected_components
-    from .operators.similarity import LEFT, RIGHT, SIM, _sparse_dot
-    from .plans.fast_dedup import doc_term_arrays, doc_vectors
+    from .operators.similarity import LEFT, RIGHT
+    from .plans.fast_dedup import (
+        doc_term_arrays,
+        doc_vectors,
+        rescore_candidates_with_vecs,
+    )
 
     if dict(docs.dtypes)[id_col] not in _INTEGRAL_DTYPES:
         # xxhash64 is deterministic, so resume fingerprints stay stable
@@ -355,14 +359,8 @@ def checkpointed_lsh_dedup_pipeline(
             raw = _salted_self_pairs(
                 buckets, salt_above, key_cols=kc, max_bucket_size=max_bucket_size
             )
-        cand = raw.dropDuplicates([LEFT, RIGHT])
-        pl = vecs.select(F.col("doc_id").alias(LEFT), F.col("codes").alias("_g1"), F.col("ws").alias("_w1"))
-        pr = vecs.select(F.col("doc_id").alias(RIGHT), F.col("codes").alias("_g2"), F.col("ws").alias("_w2"))
-        return (
-            cand.join(pl, LEFT)
-            .join(pr, RIGHT)
-            .select(LEFT, RIGHT, _sparse_dot("_g1", "_w1", "_g2", "_w2").alias(SIM))
-            .where(F.col(SIM) >= float(cfg.min_similarity))
+        return rescore_candidates_with_vecs(
+            raw.dropDuplicates([LEFT, RIGHT]), vecs, cfg
         )
 
     pairs = ck.stage("pairs", build_pairs, upstream_fps=[fp_vecs])
@@ -517,7 +515,7 @@ def checkpointed_union_dedup_pipeline(
                         docs, cfg, max_hamming=max_hamming,
                         num_blocks=num_blocks,
                         max_bucket_size=max_bucket_size, text_col=text_col,
-                        id_col=id_col, engine="fast", shingle=shingle,
+                        id_col=id_col, shingle=shingle,
                         shingle_words=shingle_words,
                     ).select(LEFT, RIGHT),
                 )

@@ -1,7 +1,7 @@
 """Gopher-style document quality filter (Rae et al. 2021, Table A1) — the
 standard webtext keep/drop gate, composed from the engine's existing
-repetition stats plus word/line-level screens, all in ONE Catalyst pass
-per family (no per-row Python anywhere).
+repetition stats plus word/line-level screens, all computed in ONE Arrow
+pass per document batch; the threshold flags are Catalyst expressions.
 
 Every rule is a deterministic ratio with a published threshold; a failing
 rule contributes its name to ``drop_reasons`` so curation is auditable
@@ -101,7 +101,7 @@ def gopher_filter(
     # line Counter that kernel already builds: one Python pass, one text
     # transfer, one tokenization — and still a single evaluation barrier,
     # so downstream predicate shape remains irrelevant.
-    from .text_stats import _repetition_stats_fast
+    from .text_stats import _STAT_COLS, _repetition_stats_fast
 
     from pyspark.sql.types import DoubleType, IntegerType, StructField
 
@@ -144,6 +144,17 @@ def gopher_filter(
         "dup_8gram_char_frac", "dup_9gram_char_frac", "dup_10gram_char_frac",
     ]
     screen_names = [f.name for f in screen_fields]
+    # every column the gate adds, including the kernel's intermediates:
+    # an input column of the same name would be silently shadowed
+    added = set(screen_names + rep_cols + list(_STAT_COLS)) | {
+        "n_lines", "top_bigram_frac", "drop_reasons", "kept",
+    }
+    clash = sorted(added & set(df.columns))
+    if clash:
+        raise ValueError(
+            f"gopher_filter: input column(s) {clash} clash with the "
+            "columns the gate adds; rename or drop them first"
+        )
     joined = _repetition_stats_fast(
         df, text_col, id_col, line_sep, (2, 3, 4), (5, 6, 7, 8, 9, 10),
         passthrough=True, extra=(screen_fields, _screens),

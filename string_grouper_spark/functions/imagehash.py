@@ -22,7 +22,7 @@ Two standard hashes (see e.g. the pHash.org DCT hash and the widely-used
     roughly preserve the low-frequency ordering).
 
 Both return int64 (the uint64 bit pattern two's-complement folded, exactly
-like ``candidates._simhash64``) so signatures ride Spark ``LongType``
+like ``candidates.simhash_fast_batch``) so signatures ride Spark ``LongType``
 columns and reuse ``bit_count``/``shiftrightunsigned`` JVM-side.
 
 Resizing uses integer-bin AREA AVERAGING (``np.add.reduceat`` over both
@@ -74,7 +74,7 @@ def resize_area(gray: np.ndarray, h: int, w: int) -> np.ndarray:
 
 def _fold_bits(bits: np.ndarray) -> int:
     """64 bools (MSB first) -> int64 via the uint64 two's-complement fold
-    (same convention as candidates._simhash64)."""
+    (same convention as candidates.simhash_fast_batch)."""
     val = np.uint64(0)
     packed = np.packbits(bits.astype(np.uint8))
     for byte in packed:

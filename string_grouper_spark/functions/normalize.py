@@ -57,10 +57,10 @@ def normalize_expr(col: Column, cfg: MatchConfig, assume_ascii: bool = False) ->
         out = F.lower(out)
     if cfg.normalize_to_ascii and not assume_ascii:
         out = _nfkd_ascii(out)
-    # Java's ``\s`` keeps \x1c-\x1f and Unicode spaces that ``py_normalize``
-    # (Python ``re``, the reference's tokenizer) strips.
-    out = F.regexp_replace(out, cfg.regex, "")
-    return out
+    # the default pattern runs as the explicit class of what Python's ``\s``
+    # strips: Java's ``\s`` keeps \x1c-\x1f and the Unicode spaces
+    pattern = _JAVA_DEFAULT_STRIP if cfg.regex == _DEFAULT_STRIP_RE else cfg.regex
+    return F.regexp_replace(out, pattern, "")
 
 
 def ngrams_expr(norm_col: Column, ngram_size: int) -> Column:
@@ -93,6 +93,25 @@ _DEFAULT_STRIP_TABLE = {
     for cp in range(0x10000)
     if re.fullmatch(_DEFAULT_STRIP_RE, chr(cp))
 }
+
+
+def _java_char_class(cps) -> str:
+    """Java regex character class matching exactly the code points ``cps``
+    (BMP only), as ``\\uXXXX`` ranges."""
+    cps = sorted(cps)
+    runs, start = [], cps[0]
+    for prev, cp in zip(cps, cps[1:] + [None]):
+        if cp != prev + 1:
+            runs.append((start, prev))
+            start = cp
+    return "[" + "".join(
+        f"\\u{a:04x}" if a == b else f"\\u{a:04x}-\\u{b:04x}" for a, b in runs
+    ) + "]"
+
+
+# the JVM form of the default strip regex, generated from the same table so
+# ``normalize_expr`` and ``py_normalize`` strip the same characters
+_JAVA_DEFAULT_STRIP = _java_char_class(_DEFAULT_STRIP_TABLE)
 
 
 def py_normalize(s: str, cfg: MatchConfig) -> str:

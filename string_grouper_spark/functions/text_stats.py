@@ -1,9 +1,10 @@
 """Text-analysis functions for training-data pipelines: language ID,
 quality scoring, token counting, document fingerprinting.
 
-Everything here is pure Catalyst expressions (lower/regexp/split/aggregate/
-xxhash64) — JVM-side, whole-stage-codegen friendly, and each mirrors to
-plain ANSI SQL for the DuckDB oracle gate.
+Language ID, quality score and token counts are pure Catalyst
+expressions (lower/regexp/split/aggregate) — JVM-side, whole-stage-codegen
+friendly.  ``repetition_stats`` and ``fingerprint`` are one Arrow pass
+each.  Every output mirrors to plain ANSI SQL for the DuckDB oracle gate.
 """
 
 from __future__ import annotations
@@ -121,6 +122,14 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("quality_score", F.round(score, 2)).drop("_wnorm")
 
 
+# the per-doc integer columns of the repetition pass: 4 line stats, then 5
+# per-gram-order arrays
+_STAT_COLS = (
+    "_n_lines", "_n_distinct", "_dup_chars", "_tot_chars",
+    "_top_cnt", "_top_l", "_tot_ch", "_dup_ch", "_n_grams",
+)
+
+
 def _repetition_stats_fast(
     df: DataFrame,
     text_col: str,
@@ -131,12 +140,11 @@ def _repetition_stats_fast(
     passthrough: bool,
     extra=None,
 ) -> DataFrame:
-    """The one-pass fast engine behind ``repetition_stats`` (see its
-    docstring): ONE ``mapInPandas`` row per doc carrying exact integer
-    line stats plus per-order gram stats as 9-element arrays (null element
-    where the doc has fewer words than the order, mirroring the catalyst
-    pivot's missing-row null), all divisions/rounding left in Spark for
-    bit parity with the relational engine.
+    """The one pass behind ``repetition_stats`` (see its docstring): ONE
+    ``mapInPandas`` row per doc carrying exact integer line stats plus
+    per-order gram stats as 9-element arrays (null element where the doc
+    has fewer words than the order), all divisions/rounding left in Spark
+    so the SQL oracle's arithmetic matches bit for bit.
 
     ``extra``: optional ``(fields, fn)`` — extra per-doc columns computed
     INSIDE the same pass.  ``fields`` is a list of StructField; ``fn(t,
@@ -155,10 +163,7 @@ def _repetition_stats_fast(
     all_ns = tuple(top_ns) + tuple(dup_ns)
     word_re = re.compile(r"\s+")
     sep = line_sep
-    stat_names = (
-        "_n_lines", "_n_distinct", "_dup_chars", "_tot_chars",
-        "_top_cnt", "_top_l", "_tot_ch", "_dup_ch", "_n_grams",
-    )
+    stat_names = _STAT_COLS
     extra_fields, extra_fn = extra if extra is not None else ([], None)
     extra_names = [f.name for f in extra_fields]
     in_df = df if passthrough else df.select(id_col, text_col)
@@ -186,8 +191,8 @@ def _repetition_stats_fast(
             for text in pdf[text_col]:
                 t = text if isinstance(text, str) else ""
                 # line stats: literal split, single-space trim, char
-                # lengths — the exact F.split/F.trim/F.length semantics of
-                # the catalyst line leg (NULL text == no lines)
+                # lengths — the SQL split/trim/length semantics the oracle
+                # uses (NULL text == no lines)
                 lc = Counter(
                     ln for ln in (x.strip(" ") for x in t.split(sep)) if ln
                 )
@@ -288,8 +293,6 @@ def repetition_stats(
     text_col: str = "text",
     id_col: str = "doc_id",
     line_sep: str = "\n",
-    engine: str = "fast",
-    passthrough: bool = False,
 ) -> DataFrame:
     """Gopher-style repetition features per doc (Rae et al. 2021's
     repetitious-text filters, the standard webtext quality gate):
@@ -305,10 +308,11 @@ def repetition_stats(
                                   word n-gram: cnt_top * len(top) over the
                                   total n-gram occurrence chars sum(cnt*len)
                                   (the Gopher top-n-gram filters, n = 2-4;
-                                  the most frequent gram is picked by
-                                  max(struct(cnt, len, gram)) so count ties
-                                  break deterministically and identically
-                                  in Spark and the SQL oracle);
+                                  the most frequent gram is the max of
+                                  (cnt, len, utf-8 bytes of the gram), so
+                                  count ties break deterministically and
+                                  identically to the SQL oracle's
+                                  max(struct(cnt, len, gram)));
       * ``dup_{5..10}gram_char_frac`` — character share of n-grams occurring
                                   more than once: sum(cnt*len | cnt>1) over
                                   sum(cnt*len) (the Gopher dup-n-gram
@@ -319,144 +323,18 @@ def repetition_stats(
     are not position-unioned — a deterministic, relational variant of the
     published filters (monotonically related; the positional-union form
     needs per-doc interval logic that does not decompose into partial
-    aggregations).
+    aggregations).  Columns for orders longer than the doc are null.
 
-    Shape: RELATIONAL — lines and n-grams are exploded and counted with
-    groupBy partial aggregations (ONE gram explode covers every n via a
-    carried ``n`` column, then count -> per-(doc, n) agg -> pivot), never
-    a per-row distinct x filter array lambda (the O(L^2) interpreted
-    pattern this engine keeps measuring as 10-60x slow).  The hot
-    aggregation keys are (doc_id, n, gram) — a boilerplate gram repeated
-    across 10^9 docs is still per-doc keyed, so no global skew key exists.
-    Docs with no non-empty lines are kept with zero counts via the
-    join-back on ``df`` ids.  All fractions round to 6dp so an independent
-    SQL engine hash-matches.
-
-    ``engine='fast'`` (default): ALL statistics — line repeats AND every
-    gram order — come from ONE narrow ``mapInPandas`` pass emitting ONE
-    wide row of exact INTEGER stats per doc, with every division and 6dp
-    round left in Spark so values are bit-identical to
-    ``engine='catalyst'``.  The whole operator is a map: zero shuffles,
-    zero joins (the catalyst shape pays a line explode+agg, a gram
-    explode+agg, a pivot and two joins — at 100 TB those are corpus-sized
-    exchanges; gram/line counting here never leaves the executor that
-    holds the doc).  The catalyst engine's gram generator (``transform`` +
-    ``slice`` + ``array_join`` per position per order) is additionally
-    INTERPRETED and measured ~40 s at sf0.1 once all columns materialize
-    (interpreted-HOF kill #7).  The tie-break compares UTF-8 BYTES,
-    matching Spark's and DuckDB's binary string order.  Cross-doc
-    aggregation never happens in either engine, so there is no skew key
-    to salt.
-
-    ``passthrough=True`` (fast engine only): every input column rides
-    through the stats pass and the output keeps them ahead of the stat
-    columns — composition (``gopher_filter``) attaches per-doc stats to a
-    wide document row WITHOUT a join, so the document payload is never
-    shuffled just to meet its own statistics (the move-heavy-rows-once
-    rule).
+    Shape: ONE narrow ``mapInPandas`` pass (``_repetition_stats_fast``)
+    emits one row of exact INTEGER stats per doc — line repeats and every
+    gram order from one Counter each — and every division and 6dp round
+    runs in Spark, so an independent SQL engine hash-matches.  The whole
+    operator is a map: zero shuffles, zero joins, no cross-doc
+    aggregation, so no skew key to salt.
     """
-    if engine not in ("fast", "catalyst"):
-        raise ValueError(f"unknown engine {engine!r}")
-    if passthrough and engine != "fast":
-        raise ValueError("passthrough requires engine='fast'")
-    top_ns, dup_ns = (2, 3, 4), (5, 6, 7, 8, 9, 10)
-    all_ns = top_ns + dup_ns
-    if engine == "fast":
-        return _repetition_stats_fast(
-            df, text_col, id_col, line_sep, top_ns, dup_ns, passthrough
-        )
-    ids = df.select(id_col)
-    lines = df.select(
-        id_col,
-        F.explode(
-            F.filter(
-                # F.split takes a REGEX: escape so a '.' or '|' separator
-                # splits literally (same guard as corpus_line_dedup)
-                F.transform(
-                    F.split(F.col(text_col), re.escape(line_sep)),
-                    lambda x: F.trim(x),
-                ),
-                lambda x: x != "",
-            )
-        ).alias("_line"),
-    )
-    per_line = lines.groupBy(id_col, "_line").agg(F.count(F.lit(1)).alias("_cnt"))
-    line_stats = per_line.groupBy(id_col).agg(
-        F.sum("_cnt").alias("n_lines"),
-        F.count(F.lit(1)).alias("_n_distinct"),
-        F.sum((F.col("_cnt") - 1) * F.length("_line")).alias("_dup_chars"),
-        F.sum(F.col("_cnt") * F.length("_line")).alias("_tot_chars"),
-    )
-    if engine == "catalyst":  # always true here; keeps the reference shape scoped
-        words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-        # ONE explode carries every n: (doc, n, gram) rows for n-grams of all
-        # the orders the Gopher family needs
-        def _gram_lambda(n):
-            # factory, NOT a default-arg lambda: F.transform treats a two-
-            # parameter lambda as (element, index) and would bind ``n`` to the
-            # array index
-            return lambda i: F.struct(
-                F.lit(n).alias("_n"),
-                F.array_join(F.slice(words, i + 1, n), " ").alias("_g"),
-            )
-
-        gram_arrays = [
-            F.when(
-                F.size(words) >= n,
-                F.transform(F.sequence(F.lit(0), F.size(words) - n), _gram_lambda(n)),
-            ).otherwise(F.array().cast("array<struct<_n:int,_g:string>>"))
-            for n in all_ns
-        ]
-        grams = df.select(
-            id_col, F.explode(F.flatten(F.array(*gram_arrays))).alias("_gr")
-        ).select(id_col, F.col("_gr._n").alias("_n"), F.col("_gr._g").alias("_g"))
-        per_gram = grams.groupBy(id_col, "_n", "_g").agg(F.count(F.lit(1)).alias("_cnt"))
-        glen = F.length("_g")
-        gram_stats = per_gram.groupBy(id_col, "_n").agg(
-            # deterministic top gram: count, then char length, then the gram
-            F.max(F.struct(F.col("_cnt"), glen.alias("_l"), F.col("_g"))).alias("_top"),
-            F.sum(F.col("_cnt") * glen).alias("_tot_ch"),
-            F.sum(F.when(F.col("_cnt") > 1, F.col("_cnt") * glen).otherwise(0)).alias("_dup_ch"),
-            F.max("_cnt").alias("_top_cnt"),
-            F.sum("_cnt").alias("_n_grams"),
-        )
-        per_n = gram_stats.select(
-            id_col,
-            "_n",
-            F.round(F.col("_top_cnt") / F.col("_n_grams"), 6).alias("_count_frac"),
-            F.round(F.col("_top._cnt") * F.col("_top._l") / F.col("_tot_ch"), 6).alias("_top_frac"),
-            F.round(F.col("_dup_ch") / F.col("_tot_ch"), 6).alias("_dup_frac"),
-        )
-    pivoted = per_n.groupBy(id_col).pivot("_n", list(all_ns)).agg(
-        F.first("_count_frac").alias("cf"),
-        F.first("_top_frac").alias("tf"),
-        F.first("_dup_frac").alias("df"),
-    )
-
-    return (
-        ids.join(line_stats, id_col, "left")
-        .join(pivoted, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_lines", F.lit(0)).alias("n_lines"),
-            F.round(
-                F.when(
-                    F.col("n_lines") > 0,
-                    (F.col("n_lines") - F.col("_n_distinct")) / F.col("n_lines"),
-                ).otherwise(F.lit(0.0)),
-                6,
-            ).alias("dup_line_frac"),
-            F.round(
-                F.when(
-                    F.col("_tot_chars") > 0,
-                    F.col("_dup_chars") / F.col("_tot_chars"),
-                ).otherwise(F.lit(0.0)),
-                6,
-            ).alias("dup_line_char_frac"),
-            F.col("2_cf").alias("top_bigram_frac"),
-            *[F.col(f"{n}_tf").alias(f"top_{n}gram_char_frac") for n in top_ns],
-            *[F.col(f"{n}_df").alias(f"dup_{n}gram_char_frac") for n in dup_ns],
-        )
+    return _repetition_stats_fast(
+        df, text_col, id_col, line_sep, (2, 3, 4), (5, 6, 7, 8, 9, 10),
+        passthrough=False,
     )
 
 
@@ -465,55 +343,29 @@ def fingerprint(
     text_col: str = "text",
     k: int = 9,
     out_col: str = "fingerprint",
-    engine: str = "fast",
 ) -> DataFrame:
     """Winnowing-style document fingerprint: min hash over all k-char
     windows of the whitespace-collapsed lowered text.  Robust to reordering
     of large chunks; equal fingerprints => docs share their minimal window.
 
-    ``engine='fast'`` (default): ONE Arrow pass per batch sharing the
-    substring index's vectorized rolling polynomial hash
-    (``operators.candidates._roll_hash_windows`` — splitmix64-finalized, so
-    minima are uniform).  ``engine='catalyst'``: the pure-expression form
-    (xxhash64 per window position) for contexts that require a projection
-    with no Python — it is the interpreted-HOF shape measured ~60x slower
-    than the numpy kernel on long docs (see ``_winnow_fingerprints``), so it is
-    NOT the scan default.  The two engines use different (equally valid)
-    window hash functions, so fingerprint VALUES differ between engines;
-    the induced duplicate partition agrees wherever equal-fingerprint docs
-    share their minimal window (always true for exact duplicates), which a
-    test pins on the testdata corpus.  Empty (non-null) text gets a real
-    value under both engines, so empty docs still group as exact
-    duplicates; NULL text is NULL under 'fast' (absent data should not
-    equi-join) while 'catalyst' inherits xxhash64's hash-the-seed
-    behavior — a deliberate structural difference.
+    ONE Arrow pass per batch sharing the substring index's vectorized
+    rolling polynomial hash (``operators.candidates._roll_hash_windows`` —
+    splitmix64-finalized, so minima are uniform).  Text shorter than ``k``
+    bytes is one whole-string window.  Empty (non-null) text gets a real
+    value, so empty docs still group as exact duplicates; NULL text is
+    NULL (absent data should not equi-join).
     """
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    if engine == "catalyst":
-        windows = F.when(
-            F.length(norm) >= k,
-            F.transform(
-                F.sequence(F.lit(1), F.length(norm) - (k - 1)),
-                lambda i: F.xxhash64(F.substring(norm, i, k)),
-            ),
-        ).otherwise(F.array(F.xxhash64(norm)))
-        return df.withColumn(out_col, F.array_min(windows))
-    if engine != "fast":
-        raise ValueError(engine)
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
-    from ..operators.candidates import _roll_hash_windows
+    from ..operators.candidates import _roll_hash_windows, _splitmix64
 
-    from ..operators.candidates import _splitmix64
-
+    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
     # fingerprint of the EMPTY string: the k=0 polynomial hash (0),
     # splitmix64-finalized — a real value, so empty docs still equi-join
-    # into an exact-duplicate group exactly like the catalyst engine's
-    # xxhash64('').  Only NULL text yields NULL.
+    # into an exact-duplicate group.  Only NULL text yields NULL.
     empty_fp = int(
         _splitmix64(np.zeros(1, dtype=np.uint64))[0].astype(np.int64)
     )
@@ -531,8 +383,7 @@ def fingerprint(
                 if not s:
                     out.append(empty_fp)
                     continue
-                # short strings fall back to one whole-string window, the
-                # same fallback shape as the catalyst form
+                # short strings fall back to one whole-string window
                 kk = min(k, max(1, len(s.encode("utf-8"))))
                 v = _roll_hash_windows(s, kk)
                 out.append(empty_fp if v is None or not len(v) else int(v.min()))

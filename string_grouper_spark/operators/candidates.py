@@ -8,9 +8,10 @@ candidate-pair set which the EXACT TF-IDF re-scorer
 the tested contract (>= 0.99 at matched config).
 
 All signature kernels are Arrow-vectorized Python passes over numpy — no
-per-row Python (input_hint requirement).  Gram hashing itself stays JVM-side
-(xxhash64 inside whole-stage codegen); Python only sees batches of hash
-arrays.
+per-row Python (input_hint requirement).  MinHash gram hashing stays
+JVM-side (xxhash64 inside whole-stage codegen), so its Python only sees
+batches of hash arrays; SimHash packs and mixes its grams inside its one
+numpy pass over the text.
 
 Skew design: band/bucket keys are Zipf-distributed on web text.  Buckets
 larger than ``max_bucket_size`` are dropped from candidate generation (they
@@ -505,72 +506,6 @@ def rescored_pairs_bipartite(
 _BIT_VALUES = np.uint64(1) << np.arange(64, dtype=np.uint64)
 
 
-@pandas_udf(LongType())
-def _simhash64(hashes: pd.Series, tfs: pd.Series) -> pd.Series:
-    """Weighted 64-bit SimHash from gram hashes + term frequencies.
-
-    Fully vectorized per doc: bit extraction, the ±tf vote sum AND the
-    sign-fold are numpy array ops (the fold = sum of the distinct powers of
-    two whose vote is positive — exact in uint64, then a C-cast view back to
-    int64).  No per-bit Python loop."""
-    out = np.zeros(len(hashes), dtype=np.int64)
-    for i, (h, tf) in enumerate(zip(hashes, tfs)):
-        if h is None or len(h) == 0:
-            out[i] = 0
-            continue
-        hv = np.asarray(h, dtype=np.int64).astype(np.uint64)
-        w = np.asarray(tf, dtype=np.float64)
-        # bits matrix (n_grams, 64): 1 -> +w, 0 -> -w
-        bits = ((hv[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & np.uint64(1)).astype(
-            np.float64
-        )
-        acc = (w[:, None] * (2.0 * bits - 1.0)).sum(axis=0)
-        sig = _BIT_VALUES[acc > 0].sum(dtype=np.uint64)
-        out[i] = sig.astype(np.int64)  # two's-complement view, wraps exactly
-    return pd.Series(out)
-
-
-def simhash_expr(gh_col, tf_col):
-    """Pure-Catalyst 64-bit SimHash over (array<long> gram hashes, tf counts).
-
-    One ``aggregate`` pass keeps a 64-long bit-vote accumulator; votes are
-    integers (tf * ±1), so the result is bit-identical to the numpy kernel
-    regardless of summation order.  JVM-only => usable in Structured
-    Streaming projections and whole-stage codegen (no Python in the path).
-    """
-    pairs = F.zip_with(
-        gh_col, tf_col, lambda g, t: F.struct(g.alias("g"), t.cast("long").alias("t"))
-    )
-    votes = F.aggregate(
-        pairs,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, s: F.zip_with(
-            acc,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(63)),
-                lambda b: F.when(F.getbit(s["g"], b) == 1, s["t"]).otherwise(-s["t"]),
-            ),
-            lambda x, y: x + y,
-        ),
-    )
-    # fold sign bits into a long via two 32-bit halves (pow(2,b) is exact
-    # for b<=31; shiftleft is bitwise => no ANSI overflow)
-    def half(offset):
-        return F.aggregate(
-            F.zip_with(
-                F.slice(votes, offset + 1, 32),
-                F.sequence(F.lit(0), F.lit(31)),
-                lambda v, b: F.when(v > 0, F.pow(F.lit(2.0), b).cast("long")).otherwise(
-                    F.lit(0).cast("long")
-                ),
-            ),
-            F.lit(0).cast("long"),
-            lambda a, x: a.bitwiseOR(x),
-        )
-
-    return F.shiftleft(half(32), 32).bitwiseOR(half(0))
-
-
 def _splitmix64(x: np.ndarray) -> np.ndarray:
     """Vectorized splitmix64 finalizer (uint64 -> uint64): turns the fast
     plan's byte-pack gram codes (only 8*ngram_size low bits populated) into
@@ -584,14 +519,16 @@ def _splitmix64(x: np.ndarray) -> np.ndarray:
 def simhash_fast_batch(
     texts, cfg: MatchConfig, shingle: str = "char", shingle_words: int = 5
 ) -> list:
-    """The ``engine='fast'`` per-batch kernel: iterable of texts -> int64
-    signatures (``None`` for NULL text, mirroring the 'expr' engine's
-    Catalyst null propagation — a null page must not kill a streaming
-    query).  Byte-pack gram codes (plans.fast_dedup._encode_doc)
-    splitmix64-mixed to uniform 64-bit hashes, tf-weighted bit votes in one
-    numpy pass per doc.  Shared by the batch ``simhash_signatures`` engine
-    and the streaming tag (``streaming_simhash_tag(engine='fast')``) so
-    stream and batch signatures are bit-identical by construction.
+    """The SimHash kernel: iterable of texts -> int64 signatures.
+
+    Byte-pack gram codes (plans.fast_dedup._encode_doc) splitmix64-mixed
+    to uniform 64-bit hashes, tf-weighted bit votes in one numpy pass per
+    doc, positive votes folded into the signature.  NULL text gives a
+    ``None`` signature (a null page must not kill a streaming query);
+    empty or shorter-than-``ngram_size`` text gives 0.  The batch
+    ``simhash_signatures`` and the streaming ``streaming_simhash_tag``
+    both call this, so stream and batch signatures are bit-identical by
+    construction.
 
     ``shingle='word'`` votes over the DISTINCT word-``shingle_words``-gram
     blake2b codes (plans.fast_dedup._word_shingle_codes) — binary-weighted
@@ -607,7 +544,7 @@ def simhash_fast_batch(
     with np.errstate(over="ignore"):
         for i, t in enumerate(texts):
             if t is None or (isinstance(t, float) and np.isnan(t)):
-                continue  # null text -> null signature (expr-engine parity)
+                continue  # null text -> null signature
             if shingle == "word":
                 codes = _word_shingle_codes(t, cfg, shingle_words)
                 tfs = None if codes is None else np.ones(len(codes))
@@ -632,64 +569,33 @@ def simhash_signatures(
     cfg: MatchConfig,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "numpy",
     shingle: str = "char",
     shingle_words: int = 5,
 ) -> DataFrame:
-    """(doc_id, simhash): tf-weighted 64-bit signatures.
-
-    Three engines:
-      * ``'numpy'`` / ``'expr'`` — BIT-IDENTICAL to each other (asserted in
-        tests) over xxhash64 gram hashes; 'expr' is the pure-Catalyst form
-        Structured Streaming projections require.  Both pay two wide stages
-        (explode + tf groupBy + collect_list) before the bit math.
-      * ``'fast'`` — ONE narrow mapInPandas pass, NO shuffle: byte-pack
-        gram codes (plans.fast_dedup._encode_doc) splitmix64-mixed to
-        uniform 64-bit hashes, votes in the same numpy kernel.  Different
-        gram hash => different (equally valid) signature values; the
-        Hamming-ball join semantics are unchanged.  This is the scale
-        shape: per-doc work with map-side everything.
-    """
+    """(doc_id, simhash): 64-bit signatures from ``simhash_fast_batch`` in
+    ONE narrow mapInPandas pass — no shuffle, per-doc work map-side."""
     if shingle not in ("char", "word"):
         raise ValueError(f"shingle must be 'char' or 'word', got {shingle!r}")
-    if shingle == "word" and engine != "fast":
-        raise ValueError(
-            "shingle='word' simhash requires engine='fast' (the Catalyst "
-            "engines hash char n-grams only)"
-        )
-    if engine == "fast":
-        from pyspark.sql.types import StructField, StructType
-
-        schema = StructType(
-            [
-                StructField("doc_id", LongType(), False),
-                # nullable: NULL text -> NULL signature (expr-engine parity)
-                StructField("simhash", LongType(), True),
-            ]
-        )
-
-        def run(batches):
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf[id_col],
-                        "simhash": simhash_fast_batch(
-                            pdf[text_col], cfg, shingle, shingle_words
-                        ),
-                    }
-                )
-
-        return docs.select(id_col, text_col).mapInPandas(run, schema)
-    tokens = tokenize(docs, cfg, text_col=text_col, id_col=id_col)
-    tf = tokens.groupBy(DOC, GRAM).agg(F.count(F.lit(1)).alias("tf"))
-    per_doc = tf.select(DOC, F.xxhash64(GRAM).alias("gh"), "tf").groupBy(DOC).agg(
-        F.collect_list("gh").alias("ghs"), F.collect_list("tf").alias("tfs")
+    schema = StructType(
+        [
+            StructField("doc_id", LongType(), False),
+            # nullable: NULL text -> NULL signature
+            StructField("simhash", LongType(), True),
+        ]
     )
-    if engine == "expr":
-        sig = simhash_expr(F.col("ghs"), F.col("tfs"))
-    else:
-        sig = _simhash64("ghs", "tfs")
-    return per_doc.select(DOC, sig.alias("simhash"))
+
+    def run(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf[id_col],
+                    "simhash": simhash_fast_batch(
+                        pdf[text_col], cfg, shingle, shingle_words
+                    ),
+                }
+            )
+
+    return docs.select(id_col, text_col).mapInPandas(run, schema)
 
 
 def simhash_candidates(
@@ -700,7 +606,7 @@ def simhash_candidates(
     max_bucket_size: Optional[int] = 1000,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "numpy",
+    engine: str = "fast",
     shingle: str = "char",
     shingle_words: int = 5,
 ) -> DataFrame:
@@ -709,14 +615,15 @@ def simhash_candidates(
     Pigeonhole: any pair within Hamming distance <= num_blocks-1 shares at
     least one of the num_blocks 16-bit blocks, so the block-equality join is
     EXHAUSTIVE for max_hamming <= num_blocks-1; the bit_count filter then
-    enforces the exact ball radius JVM-side.  ``engine`` selects the
-    signature kernel (see ``simhash_signatures``; 'fast' = one narrow pass,
-    no shuffle before the block join); ``shingle``/``shingle_words`` select
-    the vote feature space (word shingles need ``engine='fast'``).
+    enforces the exact ball radius JVM-side.  Signatures come from
+    ``simhash_signatures``; ``shingle``/``shingle_words`` select the vote
+    feature space.  ``engine`` accepts only ``'fast'``, the one signature
+    kernel; it stays for callers that still name it.
     """
+    if engine != "fast":
+        raise ValueError(f"engine must be 'fast', got {engine!r}")
     sigs = simhash_signatures(
-        docs, cfg, text_col, id_col, engine=engine,
-        shingle=shingle, shingle_words=shingle_words,
+        docs, cfg, text_col, id_col, shingle=shingle, shingle_words=shingle_words
     )
     return hamming_ball_pairs(
         sigs, max_hamming=max_hamming, num_blocks=num_blocks,

@@ -293,7 +293,7 @@ def near_duplicate_clusters_scale(
                     simhash_candidates(
                         docs, cfg, max_hamming=max_hamming, num_blocks=num_blocks,
                         max_bucket_size=max_bucket_size, text_col=text_col,
-                        id_col=id_col, engine="fast", shingle=shingle,
+                        id_col=id_col, shingle=shingle,
                         shingle_words=shingle_words,
                     ).select(LEFT, RIGHT)
                 )

@@ -83,6 +83,86 @@ _EDGE_SCHEMA = StructType(
 )
 
 
+# target Arrow batch size of the suffix emission, read when the pass is
+# built: keeps the int32 offsets far from overflow and worker memory bounded
+_EMIT_BATCH_BYTES = 64 << 20
+
+
+def _suffix_batches(
+    batches, cfg: MatchConfig, min_len: int, truncate: int,
+    text_col: str, id_col: str, tgt_bytes: int,
+):
+    """Arrow batches in -> (suff, doc_id) record batches of about
+    ``tgt_bytes`` value bytes out (the kernel of ``_emit_suffixes``).
+
+    A doc of n normalized bytes emits n - min_len + 1 suffix rows.  The
+    full-width windows are copied straight into the Arrow values buffer by
+    ``sliding_window_view(...).ravel()`` in slices of at most
+    ``tgt_bytes // truncate`` windows, with a flush between slices, so one
+    giant document is split across batches instead of materialized (and
+    its int32 offsets wrapped) at once.  The (< truncate) tail suffixes
+    come from a bounded per-doc loop, the offsets from one ``cumsum`` per
+    batch — zero per-row Python objects.
+    """
+    from ..functions.normalize import py_normalize
+
+    step = max(1, tgt_bytes // truncate)
+    for batch in batches:
+        pdf = batch.to_pandas()
+        vals: list = []  # uint8 pieces of the Arrow values buffer
+        lens: list = []  # int32 per-row lengths
+        rids: list = []  # int64 doc_id per row
+        acc = 0
+
+        def flush():
+            nonlocal vals, lens, rids, acc
+            values = np.concatenate(vals)
+            lengths = np.concatenate(lens)
+            offsets = np.zeros(len(lengths) + 1, dtype=np.int32)
+            np.cumsum(lengths, out=offsets[1:])
+            suff = pa.Array.from_buffers(
+                pa.binary(),
+                len(lengths),
+                [None, pa.py_buffer(offsets), pa.py_buffer(values)],
+            )
+            ids_arr = pa.array(np.concatenate(rids), type=pa.int64())
+            vals, lens, rids, acc = [], [], [], 0
+            return pa.RecordBatch.from_arrays([suff, ids_arr], ["suff", "doc_id"])
+
+        for did, text in zip(pdf[id_col], pdf[text_col]):
+            if text is None:
+                continue
+            b = np.frombuffer(
+                py_normalize(text, cfg).encode("utf-8"), dtype=np.uint8
+            )
+            n = len(b)
+            m = n - min_len + 1
+            if m <= 0:
+                continue
+            f = max(0, n - truncate + 1)  # full-width window count
+            for lo in range(0, f, step):
+                hi = min(f, lo + step)
+                vals.append(
+                    np.lib.stride_tricks.sliding_window_view(
+                        b[lo : hi + truncate - 1], truncate
+                    ).ravel()
+                )
+                lens.append(np.full(hi - lo, truncate, dtype=np.int32))
+                rids.append(np.full(hi - lo, did, dtype=np.int64))
+                acc += (hi - lo) * truncate
+                if acc >= tgt_bytes:
+                    yield flush()
+            if m > f:  # <= truncate - min_len short tails
+                vals.extend(b[i:] for i in range(f, m))
+                lens.append((n - np.arange(f, m)).astype(np.int32))
+                rids.append(np.full(m - f, did, dtype=np.int64))
+                acc += int(lens[-1].sum(dtype=np.int64))
+                if acc >= tgt_bytes:
+                    yield flush()
+        if lens:
+            yield flush()
+
+
 def _emit_suffixes(
     docs: DataFrame,
     cfg: MatchConfig,
@@ -91,86 +171,15 @@ def _emit_suffixes(
     text_col: str,
     id_col: str,
 ) -> DataFrame:
-    """Truncated-suffix emission as a ``mapInArrow`` pass that builds the
-    Arrow binary column DIRECTLY from numpy buffers.
-
-    A doc of n normalized bytes emits n - min_len + 1 suffix rows; the
-    previous formulation sliced each row in a per-position Python loop and
-    handed pandas an object array (one Python bytes object + one
-    element-wise Arrow conversion per row — the dominant cost of the emit
-    stage, which is itself the pass's dominant narrow stage).  Here the
-    full-width windows are materialized with ONE vectorized
-    ``sliding_window_view(...).ravel()`` copy per doc straight into the
-    Arrow values buffer, the (< truncate) tail suffixes with a bounded
-    per-doc loop, and the offsets array via one ``cumsum`` — zero
-    per-row Python objects.  Output batches are flushed at ~64 MB so the
-    int32 Arrow offsets can never overflow and worker memory stays
-    bounded regardless of document sizes.
-    """
-    from ..functions.normalize import py_normalize
-
-    tgt_bytes = 64 << 20
+    """Truncated-suffix emission as ONE narrow ``mapInArrow`` pass that
+    builds the Arrow binary column directly from numpy buffers (see
+    ``_suffix_batches``)."""
+    tgt_bytes = _EMIT_BATCH_BYTES
 
     def run(batches):
-        for batch in batches:
-            pdf = batch.to_pandas()
-            vals: list = []  # uint8 pieces of the Arrow values buffer
-            lens: list = []  # int32 per-row lengths
-            rids: list = []  # int64 doc_id per row
-            acc = 0
-
-            def flush():
-                nonlocal vals, lens, rids, acc
-                if not lens:
-                    return None
-                values = np.concatenate(vals)
-                lengths = np.concatenate(lens)
-                offsets = np.zeros(len(lengths) + 1, dtype=np.int32)
-                np.cumsum(lengths, out=offsets[1:])
-                suff = pa.Array.from_buffers(
-                    pa.binary(),
-                    len(lengths),
-                    [None, pa.py_buffer(offsets), pa.py_buffer(values)],
-                )
-                ids_arr = pa.array(np.concatenate(rids), type=pa.int64())
-                out = pa.RecordBatch.from_arrays(
-                    [suff, ids_arr], ["suff", "doc_id"]
-                )
-                vals, lens, rids, acc = [], [], [], 0
-                return out
-
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                b = np.frombuffer(
-                    py_normalize(text, cfg).encode("utf-8"), dtype=np.uint8
-                )
-                n = len(b)
-                m = n - min_len + 1
-                if m <= 0:
-                    continue
-                f = max(0, n - truncate + 1)  # full-width window count
-                doc_lens = np.empty(m, dtype=np.int32)
-                if f > 0:
-                    vals.append(
-                        np.lib.stride_tricks.sliding_window_view(b, truncate)[
-                            :f
-                        ].ravel()
-                    )
-                    doc_lens[:f] = truncate
-                for i in range(f, m):  # <= truncate - min_len short tails
-                    vals.append(b[i:])
-                    doc_lens[i] = n - i
-                lens.append(doc_lens)
-                rids.append(np.full(m, did, dtype=np.int64))
-                acc += int(doc_lens.sum(dtype=np.int64))
-                if acc >= tgt_bytes:
-                    out = flush()
-                    if out is not None:
-                        yield out
-            out = flush()
-            if out is not None:
-                yield out
+        return _suffix_batches(
+            batches, cfg, min_len, truncate, text_col, id_col, tgt_bytes
+        )
 
     return docs.select(id_col, text_col).mapInArrow(run, _SUFF_SCHEMA)
 

@@ -38,6 +38,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -409,24 +410,42 @@ def lsh_band_candidates(
     ).select(LEFT, RIGHT)
 
 
+# the packed-vector dot, flagged nondeterministic for the re-score
+# projection only: Spark pushes a filter through a projection of
+# deterministic expressions by inlining the aliased expression, so
+# ``where(similarity >= t)`` re-ran the Arrow kernel in the filter whenever
+# the similarity column was kept (2 ArrowEvalPython nodes instead of 1).
+# A separate UDF object, because asNondeterministic() mutates in place.
+_rescore_dot = pandas_udf(_sparse_dot.func, DoubleType()).asNondeterministic()
+
+
+def _rescore(
+    cand: DataFrame, left: DataFrame, right: DataFrame, min_similarity: float
+) -> DataFrame:
+    """(master_side, dupe_side, similarity) for candidate id-pairs: each side
+    joined to its packed (doc_id, codes, ws) vectors, the Arrow dot kernel
+    evaluated once per pair, sim >= ``min_similarity`` kept."""
+    pl = left.select(
+        F.col("doc_id").alias(LEFT), F.col("codes").alias("_g1"), F.col("ws").alias("_w1")
+    )
+    pr = right.select(
+        F.col("doc_id").alias(RIGHT), F.col("codes").alias("_g2"), F.col("ws").alias("_w2")
+    )
+    return (
+        cand.join(pl, LEFT)
+        .join(pr, RIGHT)
+        .select(LEFT, RIGHT, _rescore_dot("_g1", "_w1", "_g2", "_w2").alias(SIM))
+        .where(F.col(SIM) >= float(min_similarity))
+    )
+
+
 def rescore_candidates_with_vecs(
     cand: DataFrame, vecs: DataFrame, cfg: MatchConfig
 ) -> DataFrame:
     """Exact TF-IDF cosine over candidate id-pairs via the packed-vector
     Arrow kernel: (master_side, dupe_side, similarity), sim >= threshold.
     The flagship's re-score stage, shared by every candidate generator."""
-    pl = vecs.select(
-        F.col("doc_id").alias(LEFT), F.col("codes").alias("_g1"), F.col("ws").alias("_w1")
-    )
-    pr = vecs.select(
-        F.col("doc_id").alias(RIGHT), F.col("codes").alias("_g2"), F.col("ws").alias("_w2")
-    )
-    return (
-        cand.join(pl, LEFT)
-        .join(pr, RIGHT)
-        .select(LEFT, RIGHT, _sparse_dot("_g1", "_w1", "_g2", "_w2").alias(SIM))
-        .where(F.col(SIM) >= float(cfg.min_similarity))
-    )
+    return _rescore(cand, vecs, vecs, cfg.min_similarity)
 
 
 def fast_lsh_dedup(
@@ -605,14 +624,7 @@ def fast_lsh_dedup_bipartite(
             .select(LEFT, RIGHT)
             .dropDuplicates([LEFT, RIGHT])
         )
-        pl = vecs_m.select(F.col("doc_id").alias(LEFT), F.col("codes").alias("_g1"), F.col("ws").alias("_w1"))
-        pr = vecs_d.select(F.col("doc_id").alias(RIGHT), F.col("codes").alias("_g2"), F.col("ws").alias("_w2"))
-        out = (
-            cand.join(pl, LEFT)
-            .join(pr, RIGHT)
-            .select(LEFT, RIGHT, _sparse_dot("_g1", "_w1", "_g2", "_w2").alias(SIM))
-            .where(F.col(SIM) >= float(cfg.min_similarity))
-        )
+        out = _rescore(cand, vecs_m, vecs_d, cfg.min_similarity)
         # materialization fence: downstream actions must not re-run the
         # narrow passes after the persisted inputs are released
         out = out.localCheckpoint(eager=True)
@@ -735,18 +747,7 @@ class PrefitLshMatcher:
             .select(LEFT, RIGHT)
             .dropDuplicates([LEFT, RIGHT])
         )
-        pl = self.corpus_vecs.select(
-            F.col("doc_id").alias(LEFT), F.col("codes").alias("_g1"), F.col("ws").alias("_w1")
-        )
-        pr = vecs_b.select(
-            F.col("doc_id").alias(RIGHT), F.col("codes").alias("_g2"), F.col("ws").alias("_w2")
-        )
-        out = (
-            cand.join(pl, LEFT)
-            .join(pr, RIGHT)
-            .select(LEFT, RIGHT, _sparse_dot("_g1", "_w1", "_g2", "_w2").alias(SIM))
-            .where(F.col(SIM) >= float(self.cfg.min_similarity))
-        )
+        out = _rescore(cand, self.corpus_vecs, vecs_b, self.cfg.min_similarity)
         if self_pairs:
             out = out.unionByName(self._self_pairs_vecs(vecs_b, bb))
         return out
@@ -764,18 +765,7 @@ class PrefitLshMatcher:
         cand = _grouped_bucket_pairs(
             bb, self.max_bucket_size, key_cols=("key",)
         ).dropDuplicates([LEFT, RIGHT])
-        pl = vecs_b.select(
-            F.col("doc_id").alias(LEFT), F.col("codes").alias("_g1"), F.col("ws").alias("_w1")
-        )
-        pr = vecs_b.select(
-            F.col("doc_id").alias(RIGHT), F.col("codes").alias("_g2"), F.col("ws").alias("_w2")
-        )
-        return (
-            cand.join(pl, LEFT)
-            .join(pr, RIGHT)
-            .select(LEFT, RIGHT, _sparse_dot("_g1", "_w1", "_g2", "_w2").alias(SIM))
-            .where(F.col(SIM) >= float(self.cfg.min_similarity))
-        )
+        return _rescore(cand, vecs_b, vecs_b, self.cfg.min_similarity)
 
     def extend(self, batch: DataFrame) -> None:
         """Absorb a batch into the frozen index: subsequent ``match`` calls

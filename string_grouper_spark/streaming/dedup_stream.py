@@ -1,7 +1,7 @@
 """Structured-Streaming dedup for a pages/documents stream.
 
 The reference has no streaming story (SURVEY §2.3); at web scale ingest is a
-stream, so the engine ships two streaming operators:
+stream, so the engine ships streaming operators, among them:
 
   * ``streaming_exact_dedup`` — drop exact-content duplicates within a
     watermark horizon: ``withWatermark`` + ``dropDuplicatesWithinWatermark``
@@ -10,9 +10,10 @@ stream, so the engine ships two streaming operators:
     variant bounds state by the horizon for any subset — required at 10^12
     docs.
   * ``streaming_simhash_tag`` — stateless per-batch signature tagging
-    (the LSH/banding join then runs as periodic batch compaction over the
-    signature sink, which is the standard lambda design for streaming
-    near-dup: signatures streamed, candidate joins batched).
+    with the batch SimHash kernel (the Hamming-ball join then runs as
+    periodic batch compaction over the signature sink, which is the
+    standard lambda design for streaming near-dup: signatures streamed,
+    candidate joins batched).
 
 ``streaming_incremental_dedup`` + ``compact_incremental_matches`` close
 that lambda loop end-to-end: micro-batches are matched against a frozen
@@ -162,67 +163,31 @@ def streaming_simhash_tag(
     cfg=None,
     text_col: str = "text",
     id_col: str = "url",
-    engine: str = "expr",
 ) -> DataFrame:
     """Tag each streamed page with its 64-bit SimHash (stateless map).
 
-    Two engines, mirroring batch ``simhash_signatures``:
-
-      * ``'expr'`` (default) — pure-Catalyst, bit-identical to the batch
-        ``'numpy'``/``'expr'`` engines (xxhash64 gram hashes).  Costs one
-        interpreted 64-vote ``aggregate`` per gram: O(64·L) lambda evals.
-      * ``'fast'`` — the batch ``engine='fast'`` numpy kernel via a
-        stateless ``mapInPandas`` (legal in Structured Streaming: no
-        state, no shuffle), all non-text columns passed through.  Use it
-        when the downstream compaction also runs ``engine='fast'`` —
-        signature VALUES differ from 'expr' (different gram hash), the
-        Hamming-ball semantics don't.  ~7x faster per batch on
-        webtext-length pages (measured probe in BASELINE.md round 5:
-        5,000 pages, warm medians 6.9 s -> 0.94 s).
+    The batch kernel ``candidates.simhash_fast_batch`` runs in a stateless
+    ``mapInPandas`` (legal in Structured Streaming: no state, no shuffle)
+    with every input column passed through, so streamed signatures are
+    bit-identical to batch ``simhash_signatures`` and a periodic batch
+    compaction can Hamming-join them directly.  NULL text gets a NULL
+    signature: a null page must not kill the streaming query.
     """
     from ..config import MatchConfig
-    from ..functions.normalize import ngrams_expr, normalize_expr
-    from ..operators.candidates import simhash_expr, simhash_fast_batch
+    from ..operators.candidates import simhash_fast_batch
 
     cfg = cfg or MatchConfig()
-    if engine not in ("expr", "fast"):
-        raise ValueError(f"engine must be 'expr' or 'fast', got {engine!r}")
-    if engine == "fast":
-        from pyspark.sql.types import LongType, StructField, StructType
+    out_schema = StructType(
+        list(stream.schema.fields) + [StructField("simhash", LongType(), True)]
+    )
 
-        out_schema = StructType(
-            # nullable: NULL text -> NULL signature, matching the 'expr'
-            # engine's Catalyst null propagation (a null page must not
-            # kill the streaming query)
-            list(stream.schema.fields) + [StructField("simhash", LongType(), True)]
-        )
+    def tag(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["simhash"] = simhash_fast_batch(pdf[text_col], cfg)
+            yield pdf
 
-        def tag(batches):
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf["simhash"] = simhash_fast_batch(pdf[text_col], cfg)
-                yield pdf
-
-        return stream.mapInPandas(tag, out_schema)
-    normed = stream.withColumn("_norm", normalize_expr(F.col(text_col), cfg))
-    grams = normed.withColumn("_grams", ngrams_expr(F.col("_norm"), cfg.ngram_size))
-    # NO per-row tf aggregation at all: SimHash's tf-weighted vote over
-    # DISTINCT grams equals a +/-1 vote per gram OCCURRENCE (sum over
-    # distinct g of tf(g)*sign(g) == sum over occurrences of sign(g)), and
-    # votes are exact integers, so passing every gram with tf=1 is
-    # bit-identical to the batch engines — while staying O(L) in the gram
-    # count.  The previous distinct x filter formulation rescanned the full
-    # gram array once per distinct gram (O(L^2) interpreted-lambda
-    # comparisons: ~10^8 per 10k-gram page).
-    # simhash_expr is pure Catalyst (no Python UDF), so it composes freely
-    # with the higher-order expressions above even inside a streaming plan
-    return grams.withColumn(
-        "simhash",
-        simhash_expr(
-            F.transform("_grams", lambda g: F.xxhash64(g)),
-            F.transform("_grams", lambda g: F.lit(1)),
-        ),
-    ).drop("_norm", "_grams")
+    return stream.mapInPandas(tag, out_schema)
 
 
 def streaming_incremental_dedup(

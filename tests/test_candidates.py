@@ -41,34 +41,54 @@ def test_minhash_recall(spark, docs, exact_pairs):
     assert set(zip(got[LEFT], got[RIGHT])) <= exact_pairs
 
 
-def test_simhash_hamming_ball_exhaustive(spark, docs, exact_pairs):
-    # Pigeonhole contract: the 4x16-bit block join must find EXACTLY the
-    # signature pairs within Hamming distance 3 — verified against a
-    # brute-force O(n^2) hamming scan of the collected signatures.
+def _hamming_ball_pairs(sigs, k):
+    # brute-force O(n^2) scan: every (lo, hi) doc pair whose 64-bit
+    # signatures differ in at most k bits
     import numpy as np
 
-    cfg = MatchConfig(min_similarity=0.5, max_n_matches=1_000_000)
-    c = cand.simhash_candidates(docs, cfg, max_hamming=3).toPandas()
-    got_pairs = set(zip(c[LEFT], c[RIGHT]))
-
-    sigs = cand.simhash_signatures(docs, cfg).toPandas().sort_values("doc_id")
+    sigs = sigs.sort_values("doc_id")
     ids = sigs["doc_id"].to_numpy()
     sv = sigs["simhash"].to_numpy().astype(np.uint64)
     xors = sv[:, None] ^ sv[None, :]
     dist = np.zeros_like(xors, dtype=np.int64)
     for b in range(64):
         dist += ((xors >> np.uint64(b)) & np.uint64(1)).astype(np.int64)
-    want = set()
-    n = len(ids)
-    iu, ju = np.nonzero(dist <= 3)
-    for i, j in zip(iu, ju):
-        if ids[i] < ids[j]:
-            want.add((int(ids[i]), int(ids[j])))
-    assert got_pairs == want
+    iu, ju = np.nonzero(dist <= k)
+    return {(int(ids[i]), int(ids[j])) for i, j in zip(iu, ju) if ids[i] < ids[j]}
+
+
+def test_simhash_hamming_ball_exhaustive(spark, docs, exact_pairs):
+    # Pigeonhole contract: the 4x16-bit block join must find EXACTLY the
+    # signature pairs within Hamming distance 3 — verified against a
+    # brute-force O(n^2) hamming scan of the collected signatures.
+    cfg = MatchConfig(min_similarity=0.5, max_n_matches=1_000_000)
+    c = cand.simhash_candidates(docs, cfg, max_hamming=3).toPandas()
+    got_pairs = set(zip(c[LEFT], c[RIGHT]))
+    assert got_pairs == _hamming_ball_pairs(cand.simhash_signatures(docs, cfg).toPandas(), 3)
 
     # and the rescored output stays a subset of the exact >=0.5 pairs
     got = cand.rescored_pairs(docs, spark.createDataFrame(c), cfg).toPandas()
     assert set(zip(got[LEFT], got[RIGHT])) <= exact_pairs
+
+
+def test_simhash_fast_engine_exhaustive_and_useful(spark, docs, exact_pairs):
+    # engine='fast', the one engine the keyword still names: block join is
+    # EXACTLY the hamming-<=3 pairs of its own signatures, the rescored
+    # output is a subset of the exact >=0.5 pairs (hamming<=3 is a
+    # VERY-near-dup generator: no 0.5-cosine recall is claimed), and the
+    # generator must actually find dups
+    cfg = MatchConfig(min_similarity=0.5, max_n_matches=1_000_000)
+    c = cand.simhash_candidates(docs, cfg, max_hamming=3, engine="fast").toPandas()
+    got_pairs = set(zip(c[LEFT], c[RIGHT]))
+    assert got_pairs == _hamming_ball_pairs(cand.simhash_signatures(docs, cfg).toPandas(), 3)
+
+    got = cand.rescored_pairs(docs, spark.createDataFrame(c), cfg).toPandas()
+    rp = set(zip(got[LEFT], got[RIGHT]))
+    assert rp <= exact_pairs
+    assert len(rp) > 0
+    # any other engine name is a loud error
+    with pytest.raises(ValueError, match="engine"):
+        cand.simhash_candidates(docs, cfg, engine="numpy")
 
 
 def test_jaccard_pairs_exactness(spark, docs):
@@ -371,25 +391,45 @@ def test_candidate_max_df_ratio_prunes_generation_not_scores(spark, docs, exact_
     assert recall >= 0.99, recall
 
 
-def test_simhash_expr_matches_numpy_kernel(spark, docs):
-    # the Catalyst simhash must be bit-identical to the numpy reference kernel
-    import pyspark.sql.functions as F
+def _py_simhash(text, cfg):
+    # plain-Python SimHash: big-endian byte-packed grams of the normalized
+    # UTF-8 text, splitmix64 mod 2**64, tf-weighted +/-1 bit votes, the
+    # positive votes folded into a signed 64-bit int
+    from collections import Counter
 
-    from string_grouper_spark.functions.tfidf import DOC, GRAM, tokenize
-    from string_grouper_spark.operators.candidates import _simhash64
+    from string_grouper_spark.functions.normalize import py_normalize
 
-    cfg = MatchConfig()
-    tokens = tokenize(docs.limit(100), cfg)
-    tf = tokens.groupBy(DOC, GRAM).agg(F.count(F.lit(1)).alias("tf"))
-    per_doc = tf.select(DOC, F.xxhash64(GRAM).alias("gh"), "tf").groupBy(DOC).agg(
-        F.collect_list("gh").alias("ghs"), F.collect_list("tf").alias("tfs")
-    )
-    both = per_doc.select(
-        DOC,
-        cand.simhash_expr(F.col("ghs"), F.col("tfs")).alias("expr_sig"),
-        _simhash64("ghs", "tfs").alias("npy_sig"),
-    ).toPandas()
-    assert (both["expr_sig"] == both["npy_sig"]).all()
+    if text is None:
+        return None
+    b, n, m = py_normalize(text, cfg).encode("utf-8"), cfg.ngram_size, (1 << 64) - 1
+    tf = Counter(int.from_bytes(b[i : i + n], "big") for i in range(len(b) - n + 1))
+    votes = [0] * 64
+    for z, c in tf.items():
+        z = (z + 0x9E3779B97F4A7C15) & m
+        z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & m
+        z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & m
+        z ^= z >> 31
+        for bit in range(64):
+            votes[bit] += c if (z >> bit) & 1 else -c
+    sig = sum(1 << bit for bit in range(64) if votes[bit] > 0)
+    return sig - (1 << 64) if sig >> 63 else sig
+
+
+@pytest.mark.parametrize(
+    "cfg",
+    [MatchConfig(), MatchConfig(ngram_size=8, normalize_to_ascii=False)],
+    ids=["3gram", "8gram-unicode"],
+)
+def test_simhash_fast_batch_matches_python_reference(cfg):
+    # the one SimHash kernel, bit for bit against the plain-Python form on
+    # corpus docs plus NULL, empty, shorter-than-ngram and non-ASCII texts
+    # (8-grams with a non-ASCII lead byte pack to codes >= 2**63)
+    texts = pd.read_parquet(f"{SF_DIR}/documents.parquet")["text"].head(44).tolist()
+    texts += [
+        None, "", "ab", "a-b.c", "abcdefg", "Ünïcödé straße café",
+        "中文かタ漢字テキスト", "ＭｃＤｏｎａｌｄｓ", "x\u3000y\xa0zzzzzzzz", "aaaaaaaaaaaa",
+    ]
+    assert cand.simhash_fast_batch(texts, cfg) == [_py_simhash(t, cfg) for t in texts]
 
 
 def test_minhash_deterministic_across_runs(spark, docs):
@@ -399,40 +439,6 @@ def test_minhash_deterministic_across_runs(spark, docs):
     a = a.sort_values(["doc_id", "band"]).reset_index(drop=True)
     b = b.sort_values(["doc_id", "band"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
-
-
-def test_simhash_fast_engine_exhaustive_and_useful(spark, docs, exact_pairs):
-    # the one-narrow-pass 'fast' engine: block join must still be EXACTLY
-    # the hamming-<=3 pairs of its own signatures (pigeonhole contract is
-    # engine-independent), and the rescored output stays a subset of the
-    # exact >=0.5 pairs while recovering >=0.99 of them
-    import numpy as np
-
-    cfg = MatchConfig(min_similarity=0.5, max_n_matches=1_000_000)
-    c = cand.simhash_candidates(docs, cfg, max_hamming=3, engine="fast").toPandas()
-    got_pairs = set(zip(c[LEFT], c[RIGHT]))
-
-    sigs = cand.simhash_signatures(docs, cfg, engine="fast").toPandas().sort_values("doc_id")
-    ids = sigs["doc_id"].to_numpy()
-    sv = sigs["simhash"].to_numpy().astype(np.uint64)
-    xors = sv[:, None] ^ sv[None, :]
-    dist = np.zeros_like(xors, dtype=np.int64)
-    for b in range(64):
-        dist += ((xors >> np.uint64(b)) & np.uint64(1)).astype(np.int64)
-    want = set()
-    iu, ju = np.nonzero(dist <= 3)
-    for i, j in zip(iu, ju):
-        if ids[i] < ids[j]:
-            want.add((int(ids[i]), int(ids[j])))
-    assert got_pairs == want
-
-    got = cand.rescored_pairs(docs, spark.createDataFrame(c), cfg).toPandas()
-    rp = set(zip(got[LEFT], got[RIGHT]))
-    # same contract as the default-engine test: precision-exact subset
-    # (hamming<=3 is a VERY-near-dup generator — neither engine claims
-    # 0.5-cosine recall), and the fast engine must actually find dups
-    assert rp <= exact_pairs
-    assert len(rp) > 0
 
 
 def test_prefilter_hot_equals_postfilter_pairs(spark):
@@ -569,7 +575,7 @@ def test_simhash_fast_null_text_and_word_shingles(spark):
 
     cfg = MatchConfig()
     base = "the quick brown fox jumps over the lazy dog again and again ok"
-    # null text -> None signature (no crash; expr-engine parity)
+    # null text -> None signature (no crash)
     out = cand.simhash_fast_batch([base, None, ""], cfg)
     assert out[1] is None and isinstance(out[0], int) and out[2] == 0
     # word shingles: doc sharing most word 5-grams lands near; a doc with
@@ -580,16 +586,16 @@ def test_simhash_fast_null_text_and_word_shingles(spark):
     def ham(a, b):
         return bin((a ^ b) & ((1 << 64) - 1)).count("1")
     assert ham(s[0], s[1]) < ham(s[0], s[2])
-    # Catalyst engines cannot do word shingles: loud error
+    # unknown shingle: loud error
     docs = spark.createDataFrame(_pd.DataFrame({"doc_id": [1], "text": [base]}))
     with pytest.raises(ValueError):
-        cand.simhash_signatures(docs, cfg, engine="expr", shingle="word")
-    # fast engine end-to-end with word shingles + a null text row
+        cand.simhash_signatures(docs, cfg, shingle="token")
+    # end-to-end with word shingles + a null text row
     docs2 = spark.createDataFrame(
         _pd.DataFrame({"doc_id": [1, 2], "text": [base, None]})
     )
     got = (
-        cand.simhash_signatures(docs2, cfg, engine="fast", shingle="word")
+        cand.simhash_signatures(docs2, cfg, shingle="word")
         .toPandas().set_index("doc_id")
     )
     assert got.loc[1, "simhash"] == s[0] and pd.isna(got.loc[2, "simhash"])

@@ -94,3 +94,18 @@ def test_unknown_threshold_key_raises(spark):
             _docs(spark, [_clean_text()]), thresholds={"min_word": 10}
         )
     assert "min_word" in str(ei.value)
+
+
+def test_column_clash_names_the_gate(spark):
+    # an input that already carries a column the gate adds (a screen, a
+    # stat, drop_reasons or kept) is refused before any pass runs, and the
+    # message names gopher_filter and every clashing column
+    import pytest
+
+    docs = _docs(spark, [_clean_text()]).withColumn("kept", F.lit(True))
+    docs = docs.withColumn("n_words", F.lit(0)).withColumn("_n_lines", F.lit(0))
+    with pytest.raises(ValueError) as ei:
+        gopher_filter(docs)
+    msg = str(ei.value)
+    assert "gopher_filter" in msg and "repetition_stats" not in msg
+    assert "['_n_lines', 'kept', 'n_words']" in msg

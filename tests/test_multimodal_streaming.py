@@ -69,7 +69,7 @@ def test_streaming_exact_dedup(spark, tmp_path):
     pages = generate_pages(spark, 120, seed=11)
     # force exact duplicates into the stream
     dup = pages.limit(20).withColumn("url", F.concat(F.lit("dup-"), F.col("url")))
-    src = f"{tmp_path}/src"
+    src = f"{tmp_path}/src2"
     pages.unionByName(dup).coalesce(1).write.parquet(src)
 
     stream = spark.readStream.schema(pages.schema).parquet(src)
@@ -155,18 +155,18 @@ def test_streaming_simhash_matches_batch(spark, tmp_path):
 
 
 def test_streaming_simhash_fast_engine_matches_batch_fast(spark, tmp_path):
-    # engine='fast' reuses the batch numpy kernel through a stateless
-    # mapInPandas: bit-identical to batch engine='fast', all input columns
-    # passed through (the streaming contract), no O(64L) interpreted votes
+    # the stateless mapInPandas tag runs the batch kernel simhash_fast_batch:
+    # bit-identical to it on the same texts, all input columns passed
+    # through (the streaming contract); the engine keyword is gone
     from string_grouper_spark.config import MatchConfig
-    from string_grouper_spark.operators.candidates import simhash_signatures
+    from string_grouper_spark.operators.candidates import simhash_fast_batch
 
     pages = generate_pages(spark, 60, seed=13)
     src = f"{tmp_path}/src_fast"
     pages.coalesce(1).write.parquet(src)
 
     stream = spark.readStream.schema(pages.schema).parquet(src)
-    tagged = streaming_simhash_tag(stream, text_col="text", id_col="url", engine="fast")
+    tagged = streaming_simhash_tag(stream, text_col="text", id_col="url")
     assert set(tagged.columns) == set(pages.columns) | {"simhash"}
     q = (
         tagged.writeStream.format("memory")
@@ -179,18 +179,11 @@ def test_streaming_simhash_fast_engine_matches_batch_fast(spark, tmp_path):
     got = spark.sql("select * from sim_fast_out").toPandas().sort_values("page_id")
     assert len(got) == 60 and set(got.columns) == set(pages.columns) | {"simhash"}
 
-    cfg = MatchConfig()
-    batch = (
-        simhash_signatures(
-            pages.select(F.col("page_id").alias("doc_id"), "text"), cfg, engine="fast"
-        )
-        .toPandas()
-        .sort_values("doc_id")
-    )
-    assert got["simhash"].tolist() == batch["simhash"].tolist()
+    want = pages.select("page_id", "text").toPandas().sort_values("page_id")
+    assert got["simhash"].tolist() == simhash_fast_batch(want["text"].tolist(), MatchConfig())
 
-    with pytest.raises(ValueError, match="engine"):
-        streaming_simhash_tag(stream, engine="bogus")
+    with pytest.raises(TypeError, match="engine"):
+        streaming_simhash_tag(stream, engine="fast")
 
 
 def test_streaming_incremental_dedup_matches_batch(spark, tmp_path):

@@ -1,6 +1,7 @@
 """Tokenizer goldens (reference test_string_grouper.py:495-517)."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from string_grouper_spark.config import MatchConfig
@@ -53,6 +54,33 @@ def test_spark_matches_python_on_unicode_zoo(spark):
     samples = ["ＭｃＤｏｎａｌｄｓ", "ﬁne", "Ångström", "ab cd", "ßharp"]
     for s in samples:
         assert spark_ngrams(spark, s, cfg) == py_ngrams(s, cfg), s
+
+
+@pytest.mark.parametrize(
+    "seps, cfg",
+    [
+        ("\x1c\x1d\x1e\x1f", MatchConfig()),
+        ("\xa0\u3000", MatchConfig(normalize_to_ascii=False)),
+    ],
+)
+def test_tokenize_strips_what_python_whitespace_strips(spark, seps, cfg):
+    # Java's \s keeps the ASCII separators \x1c-\x1f and the Unicode
+    # spaces; Python's strips them, so the exact path's grams must too
+    from string_grouper_spark.functions.tfidf import GRAM, tokenize
+
+    texts = [f"ab{c}cd{c}ef" for c in seps] + [f"x{seps}yz w{seps}"]
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
+    )
+    got = (
+        tokenize(df, cfg)
+        .groupBy("doc_id")
+        .agg(F.sort_array(F.collect_list(GRAM)).alias("g"))
+        .toPandas()
+        .set_index("doc_id")["g"]
+    )
+    for i, t in enumerate(texts):
+        assert list(got[i]) == sorted(py_ngrams(t, cfg)), repr(t)
 
 
 # property-based parity: the byte-identical-normalization invariant

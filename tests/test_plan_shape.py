@@ -95,6 +95,24 @@ def test_stop_gram_path_rescores_once(spark, docs):
     assert plan.count("ArrowEvalPython") == 1, plan
 
 
+def test_prefit_match_rescores_once(spark, docs):
+    # the re-score keeps its similarity column, so a threshold filter that
+    # Spark pushed below the projection would inline the Arrow dot kernel a
+    # second time: one ArrowEvalPython node means one evaluation per pair
+    from string_grouper_spark.plans.fast_dedup import PrefitLshMatcher
+
+    m = PrefitLshMatcher(
+        docs.where(F.col("doc_id") % 2 == 0), MatchConfig(min_similarity=0.5)
+    )
+    try:
+        out = m.match(docs.where(F.col("doc_id") % 2 == 1), self_pairs=False)
+        assert "similarity" in out.columns
+        plan = plan_of(out)
+        assert plan.count("ArrowEvalPython") == 1, plan
+    finally:
+        m.unpersist()
+
+
 def test_whole_stage_codegen_in_tokenize(spark, docs):
     # AQE wraps the tree and hides codegen markers in toString; disable it
     # for this one inspection — the plan shape is identical
@@ -361,14 +379,12 @@ def test_gopher_filter_evaluates_screens_once(spark, docs):
 
 
 def test_repetition_fast_engine_is_one_narrow_pass(spark, docs):
-    # engine='fast': gram stats never shuffle (doc, n, gram) rows — the
-    # only exchanges left are the per-doc pivot and the line stats
+    # gram and line stats never shuffle (doc, n, gram) rows: one narrow
+    # Counter pass per doc, no gram-explode generator
     from string_grouper_spark.functions.text_stats import repetition_stats
 
-    df = repetition_stats(docs.limit(50), engine="fast")
+    df = repetition_stats(docs.limit(50))
     plan = plan_of(df)
-    # the catalyst engine's gram explode carries a flatten(array(transform(
-    # sequence...))) generator; the fast plan must not
     assert "flatten" not in plan.lower() or "sequence" not in plan.lower(), plan
     assert "ArrowEvalPython" not in plan  # mapInPandas, not a scalar UDF
     assert plan.count("MapInPandas") == 1, plan

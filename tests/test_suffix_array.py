@@ -217,6 +217,45 @@ def test_lcp_scan_stitches_arrow_batches():
     assert edges([batch(rows[:2]), batch(rows[2:3]).slice(0, 0), batch(rows[2:])]) == want
 
 
+def test_emit_splits_one_giant_document_across_batches(spark, monkeypatch):
+    # emission flushes INSIDE a document once a batch reaches its target
+    # size, so a document of n * truncate > 2**31 bytes cannot wrap the
+    # int32 offsets; with a 1 KB target a 3 KB document stands in for it
+    from string_grouper_spark.operators import suffix_array as sa
+
+    monkeypatch.setattr(sa, "_EMIT_BATCH_BYTES", 1024)
+    cfg = MatchConfig()
+    min_len, truncate = 16, 48
+    rng = np.random.default_rng(5)
+    big = " ".join("".join(rng.choice(list("abcdefgh"), 6)) for _ in range(500))
+    texts = {7: big, 8: "a short document, still emitted", 9: None, 10: "tiny"}
+
+    want = []
+    for did, t in texts.items():
+        if t is not None:
+            b = py_normalize(t, cfg).encode("utf-8")
+            want += [(b[i : i + truncate], did) for i in range(len(b) - min_len + 1)]
+
+    src = pa.RecordBatch.from_pandas(
+        pd.DataFrame({"doc_id": list(texts), "text": list(texts.values())})
+    )
+    out = list(sa._suffix_batches(
+        [src], cfg, min_len, truncate, "text", "doc_id", sa._EMIT_BATCH_BYTES
+    ))
+    assert sum(7 in b.column(1).to_pylist() for b in out) > 2
+    for b in out:
+        offsets = np.frombuffer(b.column(0).buffers()[1], dtype=np.int32)
+        assert offsets[0] == 0 and (np.diff(offsets[: len(b) + 1]) >= 0).all()
+    got = [r for b in out for r in zip(*(c.to_pylist() for c in b.columns))]
+    assert got == want
+
+    # the Spark pass ships the target it read when it was built
+    pdf = sa._emit_suffixes(
+        _mkdocs(spark, texts), cfg, min_len, truncate, "text", "doc_id"
+    ).toPandas()
+    assert sorted(zip(pdf["suff"].map(bytes), pdf["doc_id"])) == sorted(want)
+
+
 def test_validation_errors(spark, corpus):
     docs = _mkdocs(spark, corpus)
     with pytest.raises(ValueError, match="min_len"):

@@ -66,12 +66,10 @@ def test_fingerprint_invariance(spark):
 
 
 def test_fingerprint_engines_honor_the_contract(spark):
-    # fast (numpy rolling hash) and catalyst (xxhash64 HOF) use different
-    # window hash functions, so VALUES differ and near-dup docs may pick
-    # different minimal windows — the CONTRACT both engines must honor is:
+    # the fingerprint contract, checked in plain python on the corpus:
     #   (1) identical normalized text => identical fingerprint;
     #   (2) equal fingerprint => the docs share a k-char window verbatim
-    #       (their minimal one), verified in plain python.
+    #       (their minimal one).
     import re
 
     k = 9
@@ -80,32 +78,25 @@ def test_fingerprint_engines_honor_the_contract(spark):
     norm = {
         r.doc_id: re.sub(r"\s+", " ", r.text.lower()) for r in pdf.itertuples()
     }
-    for engine in ("fast", "catalyst"):
-        out = (
-            text_stats.fingerprint(docs, k=k, engine=engine)
-            .select("doc_id", "fingerprint")
-            .toPandas()
-        )
-        fp = dict(zip(out.doc_id, out.fingerprint))
-        # (1) exact normalized duplicates collide
-        by_norm = {}
-        for d, n in norm.items():
-            by_norm.setdefault(n, []).append(d)
-        for ds in by_norm.values():
-            assert len({fp[d] for d in ds}) == 1
-        # (2) every fingerprint-equal pair shares a window verbatim
-        by_fp = {}
-        for d, f in fp.items():
-            by_fp.setdefault(f, []).append(d)
-        for ds in by_fp.values():
-            if len(ds) < 2:
-                continue
-            base = {norm[ds[0]][i:i + k] for i in range(len(norm[ds[0]]) - k + 1)}
-            for d in ds[1:]:
-                wins = {
-                    norm[d][i:i + k] for i in range(len(norm[d]) - k + 1)
-                }
-                assert base & wins, f"engine={engine}: {ds[0]} vs {d}"
+    out = text_stats.fingerprint(docs, k=k).select("doc_id", "fingerprint").toPandas()
+    fp = dict(zip(out.doc_id, out.fingerprint))
+    # (1) exact normalized duplicates collide
+    by_norm = {}
+    for d, n in norm.items():
+        by_norm.setdefault(n, []).append(d)
+    for ds in by_norm.values():
+        assert len({fp[d] for d in ds}) == 1
+    # (2) every fingerprint-equal pair shares a window verbatim
+    by_fp = {}
+    for d, f in fp.items():
+        by_fp.setdefault(f, []).append(d)
+    for ds in by_fp.values():
+        if len(ds) < 2:
+            continue
+        base = {norm[ds[0]][i:i + k] for i in range(len(norm[ds[0]]) - k + 1)}
+        for d in ds[1:]:
+            wins = {norm[d][i:i + k] for i in range(len(norm[d]) - k + 1)}
+            assert base & wins, f"{ds[0]} vs {d}"
 
 
 @pytest.fixture(scope="module")
@@ -490,10 +481,12 @@ def test_prefit_ann_index_save_load_identical_results(spark, tmp_path, embedding
         assert np.allclose(w.cos.to_numpy(), g.cos.to_numpy()), method
 
 
-def test_repetition_engines_identical(spark):
-    # engine='fast' (per-doc Counter via mapInPandas, integer stats out,
-    # divisions in Spark) must be BIT-identical to the relational catalyst
-    # engine — including count ties broken by (cnt, len, utf-8-byte gram)
+def test_repetition_stats_golden(spark):
+    # the expected frame was recorded from the relational (explode +
+    # groupBy + pivot) formulation of these statistics, which agreed bit
+    # for bit with the Counter pass — including count ties broken by
+    # (cnt, len, utf-8-byte gram), non-ASCII grams and null columns for
+    # orders longer than the doc
     import pandas as pd
 
     texts = [
@@ -507,10 +500,29 @@ def test_repetition_engines_identical(spark):
         ("w%d " % 1) * 12 + " ".join("w%d" % i for i in range(30)),
     ]
     pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-    df = spark.createDataFrame(pdf)
     from string_grouper_spark.functions import text_stats
 
-    c = lambda d: d.sort_values("doc_id").reset_index(drop=True)
-    fast = c(text_stats.repetition_stats(df, engine="fast").toPandas())
-    cat = c(text_stats.repetition_stats(df, engine="catalyst").toPandas())
-    pd.testing.assert_frame_equal(fast, cat)
+    nan = float("nan")
+    want = pd.DataFrame({
+        "doc_id": [0, 1, 2, 3, 4, 5, 6, 7],
+        "n_lines": [0, 1, 1, 1, 1, 1, 4, 1],
+        "dup_line_frac": [0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.25, 0.0],
+        "dup_line_char_frac": [0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.235294, 0.0],
+        "top_bigram_frac": [nan, nan, 0.555556, 0.04, 0.285714, 0.5, 0.285714, 0.268293],
+        "top_2gram_char_frac": [nan, nan, 0.555556, 0.04, 0.285714, 0.482143, 0.275862, 0.22541],
+        "top_3gram_char_frac": [nan, nan, 0.5, 0.041667, 0.350877, 0.205479, 0.337662, 0.212202],
+        "top_4gram_char_frac": [nan, nan, 0.571429, 0.043478, 0.4, 0.253165, 0.218391, 0.196819],
+        "dup_5gram_char_frac": [nan, nan, 1.0, 0.0, 0.0, 0.0, 0.0, 0.180064],
+        "dup_6gram_char_frac": [nan, nan, 1.0, 0.0, 0.0, 0.0, 0.0, 0.162125],
+        "dup_7gram_char_frac": [nan, nan, 1.0, 0.0, 0.0, 0.0, 0.0, 0.143027],
+        "dup_8gram_char_frac": [nan, nan, 0.666667, 0.0, 0.0, nan, 0.0, 0.122732],
+        "dup_9gram_char_frac": [nan, nan, 0.0, 0.0, nan, nan, nan, 0.101167],
+        "dup_10gram_char_frac": [nan, nan, 0.0, 0.0, nan, nan, nan, 0.078237],
+    })
+    got = (
+        text_stats.repetition_stats(spark.createDataFrame(pdf))
+        .toPandas()
+        .sort_values("doc_id")
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
