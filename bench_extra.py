@@ -68,6 +68,9 @@ def prof_flagship(docs, n_docs, reps=2):
         pairs = rescore_candidates_with_vecs(cand, vecs, cfg).persist()
         timed(f"fl{rep}_rescore", lambda: noop(pairs))
         nodes = docs.select("doc_id")
+        # fl_cc times the whole labelling: at or under grouping's driver
+        # bound the call fetches and labels the edges itself, so
+        # fl_labels_materialize is left with the singletons join
         labels = timed(
             f"fl{rep}_cc",
             lambda: connected_components(

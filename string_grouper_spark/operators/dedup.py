@@ -185,8 +185,9 @@ def lsh_dedup_clusters(
             pairs.select(F.col(LEFT).alias("u"), F.col(RIGHT).alias("v")), nodes
         ).withColumnRenamed(NODE, id_col)
     finally:
-        # labels are localCheckpoint-ed inside connected_components, so the
-        # token cache is no longer needed by the returned DataFrame
+        # connected_components has run every job over the edges before it
+        # returns (the bounded fetch, and any star rounds), so the token
+        # cache is no longer needed by the returned DataFrame
         tokens.unpersist()
 
 
@@ -332,8 +333,9 @@ def near_duplicate_clusters_scale(
         for extra in edge_parts[1:]:
             edges = edges.unionByName(extra)
         nodes = docs.select(F.col(id_col))
-        # connected_components localCheckpoints the edge list EAGERLY, so
-        # the caches are fully consumed before the finally releases them
+        # connected_components fetches (or, above its driver bound,
+        # checkpoints and iterates) the edge list before it returns, so the
+        # caches are fully consumed before the finally releases them
         return connected_components(edges, nodes).withColumnRenamed(NODE, id_col)
     finally:
         for c in caches:

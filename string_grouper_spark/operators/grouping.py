@@ -1,31 +1,43 @@
-"""Iterative DataFrame connected components + group-representative selection.
+"""Connected components + group-representative selection.
 
-Replaces ``scipy.sparse.csgraph.connected_components``
-(/root/reference/string_grouper/string_grouper.py:851-904) with the
-alternating large-star/small-star algorithm (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14) expressed as pure DataFrame
-transforms in a driver loop — the one part of the engine Catalyst cannot
-express (SURVEY §4.2).  Converges in O(log n) rounds; every round is
+The reference labels components on the driver with
+``scipy.sparse.csgraph.connected_components``
+(/root/reference/string_grouper/string_grouper.py:851-904).  Here the
+canonical edge set is built in Spark and fetched by one bounded action: up
+to ``_DRIVER_MAX_EDGES`` edges it is labelled on the driver by a numpy
+hook-and-compress kernel (``_driver_components``; scipy is not a
+dependency).  A larger edge set runs the alternating large-star/small-star
+algorithm (Kiveris et al., "Connected Components in MapReduce and Beyond",
+SoCC'14) as DataFrame transforms in a driver loop: O(log n) rounds, each
 ``localCheckpoint``-ed to cut lineage and released once the next round is
 materialized (at cluster scale, swap in a table-backed checkpoint via
 checkpoint.StageCheckpointer).
 
-Component label = minimum node id in the component — deterministic, so group
-ids are stable across partitionings and cluster sizes.
+Component label = minimum node id in the component on both paths —
+deterministic, so group ids are stable across partitionings, cluster sizes
+and the path taken.
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..config import GROUP_REP_CENTROID, MatchConfig
 from .similarity import LEFT, RIGHT, SIM
 
 NODE = "node"
 COMPONENT = "component"
+
+# canonical edge sets up to this size are labelled on the driver: 2,000,000
+# int64 pairs are 32 MB there, and one collect costs less than the job
+# scheduling of even one star round.  Larger sets run the star rounds.
+_DRIVER_MAX_EDGES = 2_000_000
 
 
 def _canonical_undirected(edges: DataFrame) -> DataFrame:
@@ -54,6 +66,15 @@ def _is_star_forest(edges: DataFrame) -> bool:
     instead of silently passing fingerprint equality into the star-shaped
     label extraction.  Cost: one count-aggregation + limit-1 job over the
     (checkpointed) edge set per round.
+
+    Invariant the round loop relies on: this check scans EVERY row of
+    ``edges``.  Its aggregation's map stage is the job that materializes each
+    round's lazy checkpoint before ``_large_star`` and ``_small_star`` read it
+    twice.  A cheaper check that reads only part of the edges (a pre-filter
+    under the limit, a sample, skipping a round) would let those two reads
+    compute the unmaterialized partitions twice, re-running the round.
+    ``test_connected_components_reads_input_edges_once`` counts the input
+    side of this: each input edge row is evaluated once per call.
     """
     # ONE scan of the edge set: explode each edge into its two (node, side)
     # rows inside the same task.  The two-legged union formulation read the
@@ -107,6 +128,37 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return _canonical_undirected(to_min.unionAll(center))
 
 
+def _driver_components(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Edge endpoint arrays -> (distinct ids ascending, component = min id).
+
+    Hook-and-compress on dense indices (``np.unique``'s inverse).  Hook:
+    every edge whose endpoints have different roots hooks the larger root
+    under the smaller one (``np.minimum.at``: a root hooked by several edges
+    takes the smallest).  Compress: pointer jumping until every node points
+    at its root.  Parents only ever point to smaller indices, so each root is
+    its tree's minimum index, i.e. its minimum id.  A tree with a crossing
+    edge hooks, is hooked into, or — when every neighbour hooked under a
+    smaller root elsewhere — sees that smaller root and hooks next round; so
+    the trees of a component at least halve every two rounds: O(log n)
+    rounds, on chains and hubs alike.  An edge inside one tree never crosses
+    again and is dropped.
+    """
+    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    parent = np.arange(len(ids))
+    u, v = inv[: len(a)], inv[len(a):]
+    while len(u):
+        ru, rv = parent[u], parent[v]
+        cross = ru != rv
+        u, v, ru, rv = u[cross], v[cross], ru[cross], rv[cross]
+        np.minimum.at(parent, np.maximum(ru, rv), np.minimum(ru, rv))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    return ids, ids[parent]
+
+
 def connected_components(
     edges: DataFrame,
     nodes: Optional[DataFrame] = None,
@@ -115,35 +167,76 @@ def connected_components(
     """Edge list (any two numeric columns = endpoints) -> (node, component).
 
     ``nodes``: optional 1-column DataFrame of all node ids; isolated nodes
-    become singleton components.  Component id = min node id in component.
+    become singleton components.  Component id = min node id in component;
+    both columns keep the endpoint type.  ``max_iterations`` bounds the star
+    rounds, which run only above ``_DRIVER_MAX_EDGES`` canonical edges.
     """
     ec = edges.columns
-    # LAZY localCheckpoint: the star-forest check below always runs a
-    # full-aggregation job over ``cur`` immediately after each (re)assign,
-    # which materializes the checkpoint as a side effect of that job's map
-    # stage — an eager checkpoint would run a SEPARATE materialization pass
-    # first and the check would re-read the blocks (one extra pass over the
-    # edge set per round).  The loop can only exit through a check on the
-    # final ``cur`` (or raise), so the returned label plan always reads
-    # fully-materialized checkpoint blocks — callers may release upstream
-    # caches as soon as connected_components returns, exactly as before.
-    cur = _canonical_undirected(
-        edges.select(F.col(ec[0]).alias("u"), F.col(ec[1]).alias("v"))
-    ).localCheckpoint(eager=False)
+    u, v = F.col(ec[0]), F.col(ec[1])
+    # LAZY localCheckpoint: the first action over it (the bounded fetch
+    # below) materializes it as a side effect, so the upstream edge plan is
+    # evaluated once whichever path follows.  An eager checkpoint would run
+    # a SEPARATE materialization pass first.  Self-loops are dropped above
+    # the checkpoint, not below: a filter on the greatest/least projection is
+    # pushed beneath it and evaluates the endpoint expressions a second time.
+    ckpt = (
+        edges.select(F.greatest(u, v).alias("a"), F.least(u, v).alias("b"))
+        .dropDuplicates(["a", "b"])
+        .localCheckpoint(eager=False)
+    )
+    cur = ckpt.where(F.col("a") != F.col("b"))
+    # one action both bounds and fetches the edge set.  Its local limit keeps
+    # at most _DRIVER_MAX_EDGES + 1 rows of each partition for the
+    # single-partition exchange, so on a large graph it moves up to that many
+    # rows per partition before the star rounds start.
+    head = cur.limit(_DRIVER_MAX_EDGES + 1).toArrow()
+    if head.num_rows <= _DRIVER_MAX_EDGES:
+        _release(ckpt)
+        ids, comp = _driver_components(
+            head.column("a").to_numpy(), head.column("b").to_numpy()
+        )
+        # explicit schema: an empty edge set has no rows to infer one from
+        dtype = ckpt.schema["a"].dataType
+        labels = edges.sparkSession.createDataFrame(
+            pa.table({NODE: ids, COMPONENT: comp}),
+            StructType([StructField(NODE, dtype), StructField(COMPONENT, dtype)]),
+        )
+    else:
+        labels = _star_labels(cur, ckpt, max_iterations)
+    if nodes is not None:
+        nc = nodes.columns[0]
+        singletons = nodes.select(F.col(nc).alias(NODE)).join(
+            labels, NODE, "left_anti"
+        ).withColumn(COMPONENT, F.col(NODE))
+        labels = labels.unionAll(singletons)
+    return labels
+
+
+def _star_labels(cur: DataFrame, ckpt: DataFrame, max_iterations: int) -> DataFrame:
+    """Large/small-star rounds from the canonical edge set ``cur``, a view of
+    the materialized checkpoint ``ckpt`` -> (node, component) for every node
+    on an edge."""
+    # ``ckpt`` was materialized by the bounded fetch; each round after it is
+    # checkpointed lazily and materialized by the star-forest check that
+    # runs right after (see _is_star_forest).  The loop can only exit
+    # through a check on the final ``cur`` (or raise), so the returned label
+    # plan always reads fully-materialized checkpoint blocks — callers may
+    # release upstream caches as soon as connected_components returns.
 
     # converged the moment the edges are a disjoint star forest (checked
     # BEFORE each round too: an already-star input pays no round at all);
     # see _is_star_forest for why this saves one full round per call
-    prev = None
+    done = None
     for _ in range(max_iterations + 1):
         star = _is_star_forest(cur)
-        if prev is not None:
+        if done is not None:
             # the check just materialized cur, so the round it was built
             # from is dead: only the final round outlives the call
-            _release(prev)
+            _release(done)
         if star:
             break
-        prev, cur = cur, _small_star(_large_star(cur)).localCheckpoint(eager=False)
+        done = ckpt
+        cur = ckpt = _small_star(_large_star(cur)).localCheckpoint(eager=False)
     else:
         raise RuntimeError(f"connected_components did not converge in {max_iterations} iterations")
 
@@ -151,7 +244,7 @@ def connected_components(
     # A center can appear on the 'b' side only.
     # one scan: each star edge yields its member row and its center row
     # (explode, not a two-legged self-union — see _is_star_forest)
-    labels = (
+    return (
         cur.select(
             F.explode(
                 F.array(
@@ -164,13 +257,6 @@ def connected_components(
         .groupBy(NODE)
         .agg(F.min(COMPONENT).alias(COMPONENT))
     )
-    if nodes is not None:
-        nc = nodes.columns[0]
-        singletons = nodes.select(F.col(nc).alias(NODE)).join(
-            labels, NODE, "left_anti"
-        ).withColumn(COMPONENT, F.col(NODE))
-        labels = labels.unionAll(singletons)
-    return labels
 
 
 def group_labels(

@@ -82,9 +82,8 @@ def match_edges(
             max_df = max(1, int(cfg.candidate_max_df_ratio * n))
             cand = candidate_pairs_from_postings(m_post, max_df)
             # one re-score pass: both directions come from the same scan, so
-            # each candidate crosses the Arrow boundary once.  The threshold
-            # filters AFTER the mirror: a filter directly on the UDF column
-            # is pushed below its projection and re-evaluates the UDF there
+            # each candidate crosses the Arrow boundary once (the kernel is
+            # nondeterministic, so the threshold is not pushed below it)
             off_diag = _mirrored(score_pairs_packed(cand, m_post)).where(
                 F.col(SIM) >= float(cfg.min_similarity)
             )

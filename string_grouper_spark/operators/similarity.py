@@ -218,7 +218,6 @@ def pack_postings(postings: DataFrame) -> DataFrame:
     )
 
 
-@pandas_udf(DoubleType())
 def _sparse_dot(g1: pd.Series, w1: pd.Series, g2: pd.Series, w2: pd.Series) -> pd.Series:
     """Arrow-vectorized sparse dot of sorted (hash, weight) arrays.
 
@@ -255,6 +254,14 @@ def _sparse_dot(g1: pd.Series, w1: pd.Series, g2: pd.Series, w2: pd.Series) -> p
     return pd.Series(out)
 
 
+# the one UDF object over _sparse_dot, flagged nondeterministic: Spark pushes
+# a filter through a projection of deterministic expressions by inlining the
+# aliased expression, so every ``where(similarity >= t)`` over a kept
+# similarity column would run the Arrow kernel a second time in the filter
+# (2 ArrowEvalPython nodes instead of 1).
+_rescore_dot = pandas_udf(_sparse_dot, DoubleType()).asNondeterministic()
+
+
 def score_pairs_packed(
     candidates: DataFrame,
     postings_l: DataFrame,
@@ -282,7 +289,7 @@ def score_pairs_packed(
     )
     joined = cand.join(pl, LEFT, "left").join(pr, RIGHT, "left")
     return joined.select(
-        LEFT, RIGHT, _sparse_dot("_g1", "_w1", "_g2", "_w2").alias(SIM)
+        LEFT, RIGHT, _rescore_dot("_g1", "_w1", "_g2", "_w2").alias(SIM)
     )
 
 

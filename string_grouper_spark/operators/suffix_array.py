@@ -48,7 +48,7 @@ The plan, and why it survives 100 TB:
    every bucket-join generator has to guard against simply does not exist
    here (LCP(s_i, s_j) = min of adjacent LCPs, so chain edges carry the
    full connectivity of the run).
-4. Components come from the existing O(log n) large/small-star loop;
+4. Components come from ``grouping.connected_components``;
    per-pair spans from one max aggregation over the slim edge triples.
 """
 from typing import Optional

@@ -372,13 +372,15 @@ class SparkStringGrouper:
         return self._get_nearest_matches(ignore_index=ignore_index, replace_na=replace_na)
 
     def _deduplicate(self, ignore_index=False) -> Union[pd.DataFrame, pd.Series]:
-        """Reference SG:851-904 — components + rep selection run ON SPARK
-        (iterative large-star/small-star CC, window argmax), assembly in pandas.
+        """Reference SG:851-904 — components + rep selection run through
+        ``grouping.group_labels`` (CC, then the centroid argmax in Spark),
+        assembly in pandas.
 
         When the edge list was never pulled to the driver (no get_matches /
         add_match / remove_match since fit), grouping consumes the LAZY
-        Spark edge view directly — the full edge list never round-trips
-        through the driver; only the final (node, rep) labels are collected.
+        Spark edge view directly — the matches frame is never built; CC
+        fetches only the distinct id pairs (up to its driver bound), and the
+        final (node, rep) labels are collected.
         """
         n = len(self._master)
         if self._matches_pdf is None and self._edges_sym_sdf is not None:

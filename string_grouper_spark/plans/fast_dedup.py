@@ -38,7 +38,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -52,7 +51,7 @@ from pyspark.sql.types import FloatType, IntegerType
 from ..config import MatchConfig
 from ..functions.normalize import py_normalize
 from ..operators.candidates import _band_mixers, _perm_params
-from ..operators.similarity import LEFT, RIGHT, SIM, _sparse_dot
+from ..operators.similarity import LEFT, RIGHT, SIM, _rescore_dot
 
 
 def _code_type(ngram_size: int):
@@ -408,15 +407,6 @@ def lsh_band_candidates(
     return collisions.where(
         F.col("_nbands") >= int(min_band_matches)
     ).select(LEFT, RIGHT)
-
-
-# the packed-vector dot, flagged nondeterministic for the re-score
-# projection only: Spark pushes a filter through a projection of
-# deterministic expressions by inlining the aliased expression, so
-# ``where(similarity >= t)`` re-ran the Arrow kernel in the filter whenever
-# the similarity column was kept (2 ArrowEvalPython nodes instead of 1).
-# A separate UDF object, because asNondeterministic() mutates in place.
-_rescore_dot = pandas_udf(_sparse_dot.func, DoubleType()).asNondeterministic()
 
 
 def _rescore(

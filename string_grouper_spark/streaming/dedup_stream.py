@@ -162,7 +162,6 @@ def streaming_simhash_tag(
     stream: DataFrame,
     cfg=None,
     text_col: str = "text",
-    id_col: str = "url",
 ) -> DataFrame:
     """Tag each streamed page with its 64-bit SimHash (stateless map).
 

@@ -6,9 +6,11 @@ import random
 import numpy as np
 import pandas as pd
 import pandas.testing as pdt
+import pytest
 from pyspark.sql import functions as F
 
 from string_grouper_spark import group_similar_strings
+from string_grouper_spark.operators import grouping
 from string_grouper_spark.operators.grouping import connected_components
 
 
@@ -164,11 +166,6 @@ def _uf_oracle(n, edges):
     comp_min = {}
     for i in range(n):
         r = find(i)
-        comp_min.setdefault(r, i)  # first i touching r is NOT necessarily min
-    # do a second pass for true minimum
-    comp_min = {}
-    for i in range(n):
-        r = find(i)
         comp_min[r] = min(comp_min.get(r, i), i)
     for i in range(n):
         labels[i] = comp_min[find(i)]
@@ -202,3 +199,156 @@ def test_connected_components_chain(spark):
     got = connected_components(edf).toPandas()
     assert set(got["component"]) == {0}
     assert len(got) == n
+
+
+# --- both CC paths: star rounds (_DRIVER_MAX_EDGES = 0) and the driver finish
+
+
+@pytest.fixture(params=["star", "driver"])
+def cc_path(request, monkeypatch):
+    if request.param == "star":
+        monkeypatch.setattr(grouping, "_DRIVER_MAX_EDGES", 0)
+    return request.param
+
+
+def _dense_oracle(a, b):
+    """(distinct ids, component = min id) by union-find over dense indices."""
+    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    mins = _uf_oracle(len(ids), zip(inv[: len(a)].tolist(), inv[len(a):].tolist()))
+    return ids, ids[mins]
+
+
+def _hub_and_chains(rng):
+    # 20,000 spokes on a hub whose id is the component's LARGEST, a 400-node
+    # chain hanging off spoke 7, and a separate chain over shuffled ids
+    spokes = np.arange(1, 20_001)
+    chain = np.arange(20_001, 20_401)
+    shuffled = rng.permutation(np.arange(60_000, 61_000))
+    e = np.concatenate([
+        np.stack([spokes, np.full_like(spokes, 50_000)], 1),
+        np.stack([chain[:-1], chain[1:]], 1),
+        [[chain[0], 7]],
+        np.stack([shuffled[:-1], shuffled[1:]], 1),
+    ])
+    return e[rng.permutation(len(e))]
+
+
+def _shuffled_chain(rng):
+    ids = rng.permutation(5_000) * 3 + 11
+    e = np.stack([ids[:-1], ids[1:]], 1)
+    return e[rng.permutation(len(e))]
+
+
+def _random_graph(rng):
+    # duplicate and reversed edges and self-loops included
+    e = rng.integers(0, 300, (400, 2))
+    return np.concatenate([e, e[:50, ::-1], [[5, 5]]])
+
+
+GRAPHS = {
+    "random": (_random_graph, "bigint"),
+    "hub_and_chains": (_hub_and_chains, "bigint"),
+    "shuffled_chain": (_shuffled_chain, "bigint"),
+    "empty": (lambda rng: np.zeros((0, 2), np.int64), "bigint"),
+    "int32": (lambda rng: _random_graph(rng).astype(np.int32), "int"),
+}
+
+
+@pytest.mark.parametrize("graph", sorted(GRAPHS))
+def test_connected_components_paths_agree(spark, cc_path, graph):
+    make, dtype = GRAPHS[graph]
+    e = make(np.random.default_rng(23))
+    edf = spark.createDataFrame(
+        pd.DataFrame({"u": e[:, 0], "v": e[:, 1]}), f"u {dtype}, v {dtype}"
+    )
+    # every endpoint plus 3 isolated nodes
+    extra = np.arange(3) + (int(e.max()) + 1 if len(e) else 0)
+    node_ids = np.union1d(e.ravel(), extra).astype(e.dtype)
+    nodes = spark.createDataFrame(pd.DataFrame({"id": node_ids}), f"id {dtype}")
+    out = connected_components(edf, nodes)
+    # the endpoint type on both paths, also with no edge to infer it from
+    assert [f.dataType.simpleString() for f in out.schema.fields] == [dtype, dtype]
+    got = out.toPandas().sort_values("node")
+    ids, comp = _dense_oracle(e[:, 0], e[:, 1])
+    expected = dict(zip(node_ids.tolist(), node_ids.tolist()))
+    expected.update(zip(ids.tolist(), comp.tolist()))
+    assert got["node"].tolist() == sorted(expected)
+    assert got["component"].tolist() == [expected[n] for n in sorted(expected)]
+
+
+def test_driver_components_matches_union_find():
+    rng = np.random.default_rng(5)
+    # a 100k-node chain over shuffled ids, edges in random order: the
+    # longest hook chains the kernel can meet
+    ids = rng.permutation(100_000).astype(np.int64) * 7 + 3
+    order = rng.permutation(len(ids) - 1)
+    got_ids, got = grouping._driver_components(ids[:-1][order], ids[1:][order])
+    assert got_ids.tolist() == sorted(ids.tolist())
+    assert set(got.tolist()) == {3}
+    # 1M random edges over 1M nodes: a giant component plus many small ones
+    a, b = rng.integers(0, 1_000_000, (2, 1_000_000))
+    got_ids, got = grouping._driver_components(a, b)
+    ids, expected = _dense_oracle(a, b)
+    assert np.array_equal(got_ids, ids)
+    assert np.array_equal(got, expected)
+
+
+def test_connected_components_reads_input_edges_once(spark, cc_path):
+    # the upstream edge plan is evaluated once on either path: the star
+    # loop's check job materializes each lazy round checkpoint before the
+    # rounds read it twice (see _is_star_forest), and the driver path fetches
+    # the checkpoint once
+    from pyspark.sql.functions import udf
+    from pyspark.sql.types import LongType
+
+    reads = spark.sparkContext.accumulator(0)
+
+    @udf(returnType=LongType())
+    def counted(node):
+        reads.add(1)
+        return node
+
+    e = _random_graph(np.random.default_rng(1))
+    edf = spark.createDataFrame(pd.DataFrame({"u": e[:, 0], "v": e[:, 1]}))
+    out = connected_components(edf.withColumn("u", counted("u")))
+    ids, comp = _dense_oracle(e[:, 0], e[:, 1])
+    got = out.toPandas().sort_values("node")
+    assert got["component"].tolist() == comp.tolist()
+    assert reads.value == len(e)
+
+
+def _settled_persisted(sc) -> int:
+    """Registered cache entries once collection has caught up: py4j sends a
+    collected Python object's JVM release from a worker thread that polls
+    about once a second, so wait that long between the Python and the JVM
+    collection, until two readings agree."""
+    import gc
+    import time
+
+    last = None
+    for _ in range(8):
+        gc.collect()
+        time.sleep(1.1)
+        sc._jvm.System.gc()
+        time.sleep(0.3)
+        size = sc._jsc.getPersistentRDDs().size()
+        if size == last:
+            return size
+        last = size
+    return last
+
+
+def test_connected_components_leaves_no_cache_entry(spark, cc_path):
+    sc = spark.sparkContext
+    e = _random_graph(np.random.default_rng(2))
+    edf = spark.createDataFrame(pd.DataFrame({"u": e[:, 0], "v": e[:, 1]}))
+    nodes = spark.range(310).select(F.col("id").alias("node"))
+    before = _settled_persisted(sc)
+    out = connected_components(edf, nodes)
+    if cc_path == "driver":
+        # the collected checkpoint is released before return, not left to
+        # the next garbage collection
+        assert sc._jsc.getPersistentRDDs().size() == before
+    assert len(out.toPandas()) == 310
+    del out
+    assert _settled_persisted(sc) == before

@@ -131,7 +131,7 @@ def test_streaming_simhash_matches_batch(spark, tmp_path):
     pages.coalesce(1).write.parquet(src)
 
     stream = spark.readStream.schema(pages.schema).parquet(src)
-    tagged = streaming_simhash_tag(stream, text_col="text", id_col="url")
+    tagged = streaming_simhash_tag(stream, text_col="text")
     q = (
         tagged.select("page_id", "simhash")
         .writeStream.format("memory")
@@ -166,7 +166,7 @@ def test_streaming_simhash_fast_engine_matches_batch_fast(spark, tmp_path):
     pages.coalesce(1).write.parquet(src)
 
     stream = spark.readStream.schema(pages.schema).parquet(src)
-    tagged = streaming_simhash_tag(stream, text_col="text", id_col="url")
+    tagged = streaming_simhash_tag(stream, text_col="text")
     assert set(tagged.columns) == set(pages.columns) | {"simhash"}
     q = (
         tagged.writeStream.format("memory")

@@ -113,6 +113,26 @@ def test_prefit_match_rescores_once(spark, docs):
         m.unpersist()
 
 
+def test_rescored_pairs_scores_once(spark, docs):
+    # rescored_pairs filters the similarity column it returns: with a
+    # deterministic kernel Spark would inline the Arrow dot into the filter
+    # and evaluate it twice per candidate pair
+    from string_grouper_spark.functions.tfidf import tfidf_postings
+    from string_grouper_spark.operators.candidates import (
+        minhash_candidates,
+        rescored_pairs,
+    )
+
+    cfg = MatchConfig(min_similarity=0.5)
+    # checkpointed inputs: the tokenizer's own Python nodes must not count
+    cand = minhash_candidates(docs, cfg, num_perm=64, num_bands=32).localCheckpoint()
+    postings = tfidf_postings(docs, None, cfg, id_col="doc_id")[0].localCheckpoint()
+    out = rescored_pairs(docs, cand, cfg, postings=postings)
+    assert "similarity" in out.columns
+    plan = plan_of(out)
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_whole_stage_codegen_in_tokenize(spark, docs):
     # AQE wraps the tree and hides codegen markers in toString; disable it
     # for this one inspection — the plan shape is identical
