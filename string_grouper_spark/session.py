@@ -9,8 +9,48 @@ pandas_udf/mapInPandas).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+_MEM_UNITS = {"": 20, "k": 10, "m": 20, "g": 30, "t": 40}
+
+
+def _mem_bytes(size: str) -> int | None:
+    """A JVM memory string ("3g", "4096m", "512" = MiB) -> bytes; None if
+    it is not one."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", size.strip().lower())
+    return int(m.group(1)) << _MEM_UNITS[m.group(2)] if m else None
+
+
+def _driver_java_options(driver_mem: str) -> str:
+    """JVM options that make the driver heap's footprint follow its live data.
+
+    G1 commits heap as it goes: whenever a burst of collections takes more
+    than a few percent of wall time (bursts of humongous allocations set
+    them off: Spark's 4-32 MB buffers and pages), it grows the heap, and
+    eden moves onto the new regions at its top, which then stay resident.
+    So how far a session's RSS grew depended on GC timing and on how many
+    operations it ran, not on what it held: repeated identical sessions of
+    perfbench's names_exact (live heap about 200 MB) peaked anywhere from
+    1.5 to 2.4 GB of JVM RSS with a 3 GB heap.
+
+    - ``-Xms`` = the maximum heap: the heap never resizes, so eden keeps
+      reusing the same regions.  Only when the heap fits in physical
+      memory: committing more than that fails at start-up under Linux's
+      default overcommit heuristic.  Committed pages stay unbacked until
+      they are touched.
+    - ``-XX:MaxNewSize`` = 1/8 of the heap: eden is the part of the heap
+      touched on every cycle, so with the old generation's peak it bounds
+      the resident heap; G1 would otherwise let it reach 60% of the heap.
+    """
+    heap = _mem_bytes(driver_mem)
+    if heap is None:
+        return ""
+    opts = [f"-XX:MaxNewSize={heap // 8 >> 20}m"]
+    if heap <= os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"):
+        opts.insert(0, f"-Xms{heap >> 20}m")
+    return " ".join(opts)
 
 
 def get_spark(
@@ -19,6 +59,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g")
     # SPARK_GRAFT_MASTER overrides (e.g. local-cluster[4,8,16384] for
     # multi-executor-JVM runs — single-JVM local[32] hits execution-memory
     # pool lock contention past ~8 task threads; see bench_scaling.py)
@@ -71,7 +112,10 @@ def get_spark(
         # local mode = one JVM: size the heap to the machine, not a container
         # default (measured: 8g heap + 32 tasks of array-heavy joins => GC
         # livelock, stages stop scaling past 8 cores)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", driver_mem)
+        # defaultJavaOptions, not extraJavaOptions: a --driver-java-options
+        # in PYSPARK_SUBMIT_ARGS replaces the latter and is appended to this
+        .config("spark.driver.defaultJavaOptions", _driver_java_options(driver_mem))
         # local-cluster mode: the master string caps WORKER memory; executor
         # heap is still spark.executor.memory (default 1g!) — size it too
         .config("spark.executor.memory", os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "4g"))
