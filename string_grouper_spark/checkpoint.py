@@ -415,8 +415,11 @@ def checkpointed_union_dedup_pipeline(
         cand_minhash    LSH band bucket join -> candidate id-pairs
         cand_simhash    Hamming-ball block join -> candidate id-pairs
         edges_cosine    union of cosine candidates -> ONE exact re-score
-        edges_substring verified winnowed containments (direct edges)
-        edges_suffix    exact suffix-array shared-run spans (direct edges)
+        edges_substring verified winnowed containments (direct edges; not
+                        run when 'suffix' is requested, see
+                        ``dedup._union_generators``)
+        edges_suffix    exact shared-window connectivity edges
+                        (``suffix_array.substring_edges``)
         labels          connected components over the edge union
 
     Output contract is IDENTICAL to ``near_duplicate_clusters_scale``:
@@ -431,15 +434,13 @@ def checkpointed_union_dedup_pipeline(
         rescore_candidates_with_vecs,
     )
 
-    if isinstance(generators, str):
-        generators = (generators,)
-    unknown = set(generators) - {"minhash", "simhash", "substring", "suffix"}
-    if unknown:
-        raise ValueError(f"unknown candidate generators: {sorted(unknown)}")
-    if not generators:
-        raise ValueError("at least one candidate generator is required")
-    from .operators.dedup import _INTEGRAL_DTYPES, run_with_long_ids
+    from .operators.dedup import (
+        _INTEGRAL_DTYPES,
+        _union_generators,
+        run_with_long_ids,
+    )
 
+    generators = _union_generators(generators)
     if dict(docs.dtypes)[id_col] not in _INTEGRAL_DTYPES:
         return run_with_long_ids(
             docs, id_col,
@@ -553,18 +554,17 @@ def checkpointed_union_dedup_pipeline(
         edge_fps.append(ck.stage_fingerprint("edges_substring"))
 
     if "suffix" in generators:
-        from .operators.suffix_array import suffix_array_spans
+        from .operators.suffix_array import substring_edges
 
         edge_tables.append(
             ck.stage(
                 "edges_suffix",
-                # truncate=anchor_len: edges feed connectivity only —
-                # min_len-gram equality is lossless for components (see
-                # suffix_array_dedup); a pre-change checkpoint resumes
-                # with its own (equally valid) edge set
-                lambda: suffix_array_spans(
-                    docs, cfg, min_len=anchor_len, truncate=anchor_len,
-                    text_col=text_col, id_col=id_col,
+                # connectivity-only edges (copies collapsed); a checkpoint
+                # written by an older build resumes with its own edge set,
+                # whose components are the same
+                lambda: substring_edges(
+                    docs, cfg, min_len=anchor_len, text_col=text_col,
+                    id_col=id_col,
                 ).select(F.col("left").alias("u"), F.col("right").alias("v")),
             )
         )

@@ -73,6 +73,30 @@ def run_with_long_ids(docs: DataFrame, id_col: str, run):
     )
 
 
+def _union_generators(generators) -> tuple:
+    """The candidate generators a union run executes for ``generators``
+    (one name or a non-empty collection of ``'minhash'``, ``'simhash'``,
+    ``'substring'``, ``'suffix'``): all of them, except that
+    ``'substring'`` is dropped when ``'suffix'`` is also requested.
+
+    That drop is lossless.  A verified containment needs an inner text of
+    >= ``anchor_len`` normalized characters, hence >= ``anchor_len`` bytes;
+    both passes normalize with ``py_normalize``; so the inner text's first
+    ``anchor_len`` bytes are a window the outer text also holds, and the
+    suffix pass already joins the two docs."""
+    if isinstance(generators, str):
+        generators = (generators,)
+    generators = tuple(generators)
+    unknown = set(generators) - {"minhash", "simhash", "substring", "suffix"}
+    if unknown:
+        raise ValueError(f"unknown candidate generators: {sorted(unknown)}")
+    if not generators:
+        raise ValueError("at least one candidate generator is required")
+    if "suffix" in generators:
+        generators = tuple(g for g in generators if g != "substring")
+    return generators
+
+
 def exact_duplicate_groups(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -213,10 +237,13 @@ def near_duplicate_clusters_scale(
     clustering contract: ``'minhash'`` (LSH banding over shingles),
     ``'simhash'`` (64-bit signatures + Hamming-ball block join) and
     ``'substring'`` (the winnowed suffix-window containment pass).  A
-    fourth spelling, ``'suffix'``, swaps the winnowed index for the EXACT
-    distributed suffix-array pass (``operators.suffix_array``): every pair
-    sharing >= ``anchor_len`` normalized bytes becomes an edge, with no
-    fingerprint sampling.
+    fourth spelling, ``'suffix'``, is the EXACT distributed sorted-window
+    pass (``suffix_array.substring_edges``): every two docs sharing >=
+    ``anchor_len`` normalized bytes end up in one component, with no
+    fingerprint sampling; exact copies are collapsed before the window
+    sort, so the pass yields connectivity edges, not every sharing pair.
+    It implies every containment edge, so ``'substring'`` is not run when
+    ``'suffix'`` is also requested (``_union_generators``).
 
     ``generators`` takes any non-empty subset; cosine generators (minhash /
     simhash) only PROPOSE pairs — the union of their candidates goes through
@@ -247,13 +274,7 @@ def near_duplicate_clusters_scale(
     from .grouping import connected_components
 
     cfg = cfg or MatchConfig()
-    if isinstance(generators, str):
-        generators = (generators,)
-    unknown = set(generators) - {"minhash", "simhash", "substring", "suffix"}
-    if unknown:
-        raise ValueError(f"unknown candidate generators: {sorted(unknown)}")
-    if not generators:
-        raise ValueError("at least one candidate generator is required")
+    generators = _union_generators(generators)
     if dict(docs.dtypes)[id_col] not in _INTEGRAL_DTYPES:
         return run_with_long_ids(
             docs, id_col,
@@ -317,17 +338,14 @@ def near_duplicate_clusters_scale(
                 )
             )
         if "suffix" in generators:
-            from .suffix_array import suffix_array_spans
+            from .suffix_array import substring_edges
 
-            # truncate=anchor_len: the spans feed connectivity only, and
-            # min_len-gram equality is lossless for components (see
-            # suffix_array_dedup) — 3x less suffix-table shuffle
-            spans = suffix_array_spans(
-                docs, cfg, min_len=anchor_len, truncate=anchor_len,
-                text_col=text_col, id_col=id_col,
+            # connectivity only: copies collapsed, anchor_len-byte windows
+            sub = substring_edges(
+                docs, cfg, min_len=anchor_len, text_col=text_col, id_col=id_col
             )
             edge_parts.append(
-                spans.select(F.col("left").alias("u"), F.col("right").alias("v"))
+                sub.select(F.col("left").alias("u"), F.col("right").alias("v"))
             )
         edges = edge_parts[0]
         for extra in edge_parts[1:]:

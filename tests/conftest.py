@@ -18,6 +18,33 @@ def spark():
 
 
 @pytest.fixture
+def settled_persisted(spark):
+    """() -> registered cache entries once collection has caught up: py4j
+    sends a collected Python object's JVM release from a worker thread that
+    polls about once a second, so wait that long between the Python and the
+    JVM collection, until two readings agree."""
+    import gc
+    import time
+
+    sc = spark.sparkContext
+
+    def read() -> int:
+        last = None
+        for _ in range(8):
+            gc.collect()
+            time.sleep(1.1)
+            sc._jvm.System.gc()
+            time.sleep(0.3)
+            size = sc._jsc.getPersistentRDDs().size()
+            if size == last:
+                return size
+            last = size
+        return last
+
+    return read
+
+
+@pytest.fixture
 def customers_df():
     """Reference test fixture (test_string_grouper.py:19-29)."""
     return pd.DataFrame(

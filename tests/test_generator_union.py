@@ -4,11 +4,14 @@ substring == exact on tokenizer-erased duplicates, and the minhash ∪
 substring union closes the prefix-dup gap a cosine threshold structurally
 misses."""
 
+import re
+
 import pandas as pd
 import pytest
 
 from string_grouper_spark.config import MatchConfig
 from string_grouper_spark.operators.dedup import (
+    _union_generators,
     components_only,
     near_duplicate_clusters_scale,
 )
@@ -156,3 +159,71 @@ def test_union_word_shingle_mode(spark):
     ).toPandas().set_index("doc_id")["component"]
     assert got.loc[0] == got.loc[1] == got.loc[2] == 0
     assert got.loc[3] == 3
+
+
+def _mixed_fixture(spark):
+    # a prefix dup (containment and shared window, below the cosine
+    # threshold), a case-only dup (cosine), two docs that share only an
+    # interior run (suffix only), and an unrelated doc
+    long = " ".join(_BASE[:4])
+    prefix = " ".join(long.split()[: int(len(long.split()) * 0.6)])
+    shared = "an exactly repeated boilerplate sentence fragment"
+    rows = [
+        (0, long), (1, prefix), (2, _BASE[5]), (3, _BASE[5].upper()),
+        (4, "lorem ipsum dolor sit amet consectetur adipiscing elit " + shared),
+        (5, shared + " sed do eiusmod tempor incididunt ut labore et dolore"),
+        (6, "nothing in common with the others at all"),
+    ]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+
+
+def _labels_and_plans(monkeypatch, docs, generators):
+    """(labels, plans of every frame handed to localCheckpoint): the
+    connected-components input and each pass checkpointed below it."""
+    plans = []
+    orig = type(docs).localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(docs), "localCheckpoint", capture)
+    cfg = MatchConfig(min_similarity=0.95, max_n_matches=1_000_000)
+    out = near_duplicate_clusters_scale(docs, cfg, generators=generators)
+    labels = out.toPandas().set_index("doc_id")["component"].sort_index()
+    monkeypatch.setattr(type(docs), "localCheckpoint", orig)
+    return labels.to_dict(), plans
+
+
+def _ran(plans, column: str) -> bool:
+    # the winnow pass outputs `stripes`, the suffix windows `suff`
+    return any(re.search(rf"\b{column}#", p) for p in plans)
+
+
+def test_suffix_union_skips_the_substring_pass(spark, monkeypatch):
+    docs = _mixed_fixture(spark)
+    got, plans = _labels_and_plans(
+        monkeypatch, docs, ("minhash", "substring", "suffix")
+    )
+    want, want_plans = _labels_and_plans(monkeypatch, docs, ("minhash", "suffix"))
+    assert got == want == {0: 0, 1: 0, 2: 2, 3: 2, 4: 4, 5: 4, 6: 6}
+    assert not _ran(plans, "stripes") and _ran(plans, "suff")
+    assert not _ran(want_plans, "stripes")
+
+
+def test_substring_union_keeps_its_plan(spark, monkeypatch):
+    # the q_union_dedup oracle's generators: the winnow pass runs, the
+    # suffix pass does not, and the labels are unchanged
+    got, plans = _labels_and_plans(
+        monkeypatch, _mixed_fixture(spark), ("minhash", "substring")
+    )
+    assert got == {0: 0, 1: 0, 2: 2, 3: 2, 4: 4, 5: 5, 6: 6}
+    assert _ran(plans, "stripes") and not _ran(plans, "suff")
+
+
+def test_union_generators_rule():
+    assert _union_generators("suffix") == ("suffix",)
+    assert _union_generators(["minhash", "substring", "suffix"]) == ("minhash", "suffix")
+    assert _union_generators(("substring", "minhash")) == ("substring", "minhash")
+    with pytest.raises(ValueError, match="at least one"):
+        _union_generators(())

@@ -317,33 +317,12 @@ def test_connected_components_reads_input_edges_once(spark, cc_path):
     assert reads.value == len(e)
 
 
-def _settled_persisted(sc) -> int:
-    """Registered cache entries once collection has caught up: py4j sends a
-    collected Python object's JVM release from a worker thread that polls
-    about once a second, so wait that long between the Python and the JVM
-    collection, until two readings agree."""
-    import gc
-    import time
-
-    last = None
-    for _ in range(8):
-        gc.collect()
-        time.sleep(1.1)
-        sc._jvm.System.gc()
-        time.sleep(0.3)
-        size = sc._jsc.getPersistentRDDs().size()
-        if size == last:
-            return size
-        last = size
-    return last
-
-
-def test_connected_components_leaves_no_cache_entry(spark, cc_path):
+def test_connected_components_leaves_no_cache_entry(spark, cc_path, settled_persisted):
     sc = spark.sparkContext
     e = _random_graph(np.random.default_rng(2))
     edf = spark.createDataFrame(pd.DataFrame({"u": e[:, 0], "v": e[:, 1]}))
     nodes = spark.range(310).select(F.col("id").alias("node"))
-    before = _settled_persisted(sc)
+    before = settled_persisted()
     out = connected_components(edf, nodes)
     if cc_path == "driver":
         # the collected checkpoint is released before return, not left to
@@ -351,4 +330,4 @@ def test_connected_components_leaves_no_cache_entry(spark, cc_path):
         assert sc._jsc.getPersistentRDDs().size() == before
     assert len(out.toPandas()) == 310
     del out
-    assert _settled_persisted(sc) == before
+    assert settled_persisted() == before

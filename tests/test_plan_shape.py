@@ -368,6 +368,27 @@ def test_suffix_array_scan_is_one_hash_exchange(spark, docs, monkeypatch):
     assert "lang" not in read and "n_chars" not in read
 
 
+def test_substring_edges_is_two_hash_exchanges(spark, docs):
+    # substring_edges must be: parquet scan -> MapInArrow (normalize) ->
+    # hash exchange on the normalized text -> in-partition sort ->
+    # MapInArrow (window emission, copies collapsed) -> hash exchange on
+    # the min_len-byte window -> in-partition sort -> MapInArrow scan; no
+    # aggregation exchange, no checkpoint and no scalar Python UDF
+    from string_grouper_spark.operators.suffix_array import substring_edges
+
+    # the initial adaptive plan: a final one prints both trees
+    plan = plan_of(substring_edges(docs, MatchConfig(), min_len=16), execute=False)
+    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 2, plan
+    # the plan prints top-down: the window exchange sits above the norm one
+    assert "hashpartitioning(xxhash64(substring(suff" in exchanges[0], plan
+    assert "hashpartitioning(xxhash64(norm" in exchanges[1], plan
+    assert python_nodes(plan) == ["MapInArrow"] * 3, plan
+    assert "ArrowEvalPython" not in plan and "rangepartitioning" not in plan, plan
+    sorts = [ln for ln in plan.splitlines() if "Sort [" in ln]
+    assert len(sorts) == 2 and all(ln.endswith("], false, 0") for ln in sorts), plan
+
+
 def test_substring_containment_is_one_python_pass(spark, docs, monkeypatch):
     # normalization, window hashes and winnowing minima cross the Python
     # boundary in ONE node: no ArrowEvalPython (a JVM lower/regexp chained

@@ -1,5 +1,6 @@
 """Distributed suffix-array pass: exactness vs a brute-force k-gram join,
-boundary stitching across Arrow batches, span values on planted runs."""
+boundary stitching across Arrow batches, span values on planted runs, and
+the copy-collapsing connectivity pass (``substring_edges``) against both."""
 import itertools
 
 import numpy as np
@@ -10,9 +11,13 @@ from pyspark.sql import functions as F
 
 from string_grouper_spark.config import MatchConfig
 from string_grouper_spark.functions.normalize import py_normalize
+from string_grouper_spark.operators.grouping import connected_components
 from string_grouper_spark.operators.suffix_array import (
+    _collapsed_window_batches,
+    _collapsed_windows,
     _lcp_scan,
     _pairwise_lcp,
+    substring_edges,
     suffix_array_dedup,
     suffix_array_spans,
 )
@@ -21,11 +26,11 @@ MIN_LEN = 16
 
 
 def _brute_components(texts: dict, min_len: int = MIN_LEN) -> dict:
-    """Closure over 'shares an exact >= min_len normalized substring'."""
+    """Closure over 'shares an exact >= min_len normalized byte run'."""
     cfg = MatchConfig()
     grams = {}
     for did, t in texts.items():
-        norm = py_normalize(t, cfg)
+        norm = b"" if t is None else py_normalize(t, cfg).encode("utf-8")
         for i in range(len(norm) - min_len + 1):
             grams.setdefault(norm[i : i + min_len], set()).add(did)
     parent = {d: d for d in texts}
@@ -264,17 +269,151 @@ def test_validation_errors(spark, corpus):
         suffix_array_spans(docs, min_len=16, truncate=8)
 
 
+def _labels(spark, edges, ids) -> dict:
+    """{doc id: component} over ``edges``' first two columns, every id a
+    node."""
+    nodes = spark.createDataFrame(pd.DataFrame({"node": list(ids)}))
+    comp = connected_components(edges.select("left", "right"), nodes).toPandas()
+    return dict(zip(comp["node"], comp["component"]))
+
+
 def test_truncate_min_len_components_identical(spark, corpus):
-    """The dedup default truncate=min_len must give the SAME components as
-    the span-reporting truncate (min_len+32): gram-equality is lossless
-    for connectivity, only span magnitude is lost."""
+    """suffix_array_dedup (min_len-byte windows, copies collapsed) must give
+    the SAME components as the span-reporting pass at truncate=min_len+32:
+    window equality is lossless for connectivity, only span magnitude is
+    lost."""
     docs = _mkdocs(spark, corpus)
     short = suffix_array_dedup(
         spark.createDataFrame(docs.toPandas()), min_len=MIN_LEN,
         num_partitions=5,
     ).toPandas().set_index("doc_id")["component"].to_dict()
-    long = suffix_array_dedup(
+    spans = suffix_array_spans(
         spark.createDataFrame(docs.toPandas()), min_len=MIN_LEN,
         truncate=MIN_LEN + 32, num_partitions=5,
-    ).toPandas().set_index("doc_id")["component"].to_dict()
+    )
+    long = _labels(spark, spans, corpus)
     assert short == long
+
+
+def _words(rng, n: int) -> str:
+    return " ".join(rng.choice([f"w{i:02d}" for i in range(30)], size=n).tolist())
+
+
+def _near_copies() -> dict:
+    # exact copies next to texts that differ from them in one byte: the
+    # last one, or one inside the first window (so the two first windows
+    # differ); texts too short for a window, with copies; a null text; a
+    # non-ASCII text, whose windows may split a character
+    rng = np.random.default_rng(17)
+    base, other = _words(rng, 30), _words(rng, 30)
+    texts = {}
+    for d in range(0, 40, 4):
+        texts[d] = base
+    texts[1] = base[:-1] + "Q"
+    texts[2] = base[:3] + "Q" + base[4:]
+    texts[3], texts[5] = texts[2], texts[1]
+    texts[6] = other
+    texts[7] = other[40:] + " " + _words(rng, 10)  # shares other's tail
+    texts[9] = texts[10] = "short text"
+    texts[11] = None
+    texts[13] = "çà et là — über " + base[20:60]
+    texts[14] = "çà et là — über " + _words(rng, 20)
+    return texts
+
+
+def _many_copies() -> dict:
+    # 5,000 copies of one text, one doc sharing a window from its middle,
+    # and an unrelated doc
+    rng = np.random.default_rng(19)
+    base = _words(rng, 40)
+    texts = {d: base for d in range(5000)}
+    texts[5000] = _words(rng, 10) + base[50:80] + _words(rng, 10)
+    texts[5001] = _words(rng, 25)
+    return texts
+
+
+@pytest.mark.parametrize("make", [_near_copies, _many_copies])
+def test_substring_edges_components_exact(spark, make):
+    texts = make()
+    docs = _mkdocs(spark, texts)
+    want = _brute_components(texts)
+    got = _labels(spark, substring_edges(docs, min_len=MIN_LEN), texts)
+    spans = suffix_array_spans(docs, min_len=MIN_LEN, truncate=MIN_LEN + 32)
+    assert got == want == _labels(spark, spans, texts)
+    assert 1 < len(set(want.values())) < len(texts)  # not one, not all apart
+
+
+@pytest.mark.parametrize("num_partitions", [2, 13])
+def test_substring_edges_copies_across_input_partitions(spark, num_partitions):
+    # each text's copies are dealt round-robin over 7 input partitions, so
+    # no input partition holds a whole run of copies
+    texts = _near_copies()
+    texts.update({100 + d: texts[d % 15] for d in range(60)})
+    docs = _mkdocs(spark, texts).repartition(7)
+    got = _labels(
+        spark, substring_edges(docs, min_len=MIN_LEN, num_partitions=num_partitions),
+        texts,
+    )
+    assert got == _brute_components(texts)
+
+
+def _expected_windows(texts: dict, min_len: int) -> list:
+    """The unique texts' windows (emitted by the smallest id holding the
+    text) plus one first window per further copy."""
+    cfg = MatchConfig()
+    by_norm = {}
+    for did, t in texts.items():
+        norm = b"" if t is None else py_normalize(t, cfg).encode("utf-8")
+        if len(norm) >= min_len:
+            by_norm.setdefault(norm, []).append(did)
+    want = []
+    for norm, ids in by_norm.items():
+        first, *rest = sorted(ids)
+        want += [(norm[i : i + min_len], first) for i in range(len(norm) - min_len + 1)]
+        want += [(norm[:min_len], d) for d in rest]
+    return sorted(want)
+
+
+def test_collapsed_windows_emit_one_window_per_extra_copy(spark):
+    # 3,000 more copies of one text make a run longer than one Arrow batch
+    # (spark.sql.execution.arrow.maxRecordsPerBatch)
+    texts = _near_copies()
+    texts.update({100 + d: texts[d % 15] for d in range(60)})
+    texts.update({1000 + d: texts[0] for d in range(3000)})
+    pdf = _collapsed_windows(
+        _mkdocs(spark, texts).repartition(5), MatchConfig(), MIN_LEN, 3,
+        "text", "doc_id",
+    ).toPandas()
+    got = sorted(zip(pdf["suff"].map(bytes), pdf["doc_id"]))
+    want = _expected_windows(texts, MIN_LEN)
+    assert got == want
+
+
+def test_collapse_carries_the_previous_text_across_batches():
+    # a run of three copies split by a batch boundary (and an empty batch)
+    # emits the full windows once; the text after it starts a new run
+    def batch(rows):
+        ids, norms = zip(*rows) if rows else ((), ())
+        return pa.RecordBatch.from_arrays(
+            [pa.array(ids, pa.int64()), pa.array(norms, pa.binary())],
+            names=["doc_id", "norm"],
+        )
+
+    a, b = b"abcdefgh", b"abcdxyzw"
+    batches = [batch([(1, a), (2, a)]), batch([]), batch([(3, a), (4, b)])]
+    out = pa.Table.from_batches(list(_collapsed_window_batches(batches, 6, 1 << 20)))
+    got = list(zip(out.column("suff").to_pylist(), out.column("doc_id").to_pylist()))
+    assert got == [
+        (b"abcdef", 1), (b"bcdefg", 1), (b"cdefgh", 1),
+        (b"abcdef", 2), (b"abcdef", 3),
+        (b"abcdxy", 4), (b"bcdxyz", 4), (b"cdxyzw", 4),
+    ]
+
+
+def test_suffix_array_dedup_leaves_no_cache_entry(spark, corpus, settled_persisted):
+    docs = _mkdocs(spark, corpus)
+    before = settled_persisted()
+    out = suffix_array_dedup(docs, min_len=MIN_LEN).toPandas()
+    assert len(out) == len(corpus)
+    del out
+    assert settled_persisted() == before
