@@ -9,9 +9,10 @@
     python -m string_grouper_spark topk --input emb.parquet --output out \
         --k 10 --method blocked
 
-Every command reads parquet, runs one pipeline, writes parquet — resumable
-variants go through ``checkpoint.checkpointed_dedup_pipeline`` with
-``--checkpoint-root``.
+Every command reads parquet, runs one pipeline, writes parquet.  With
+``--checkpoint-root``, ``dedup`` runs the same stages through
+``checkpoint.checkpointed_union_dedup_pipeline`` and ``dedup-exact``
+through ``checkpoint.checkpointed_dedup_pipeline``, each stage resumable.
 """
 
 from __future__ import annotations
@@ -53,10 +54,9 @@ def _build_parser() -> argparse.ArgumentParser:
                    "text extraction first (the Common-Crawl-style pages "
                    "input shape — url, warc_ts, html binary, lang)")
     d.add_argument("--generators", default=None,
-                   help="comma list from {minhash,simhash,substring,suffix}: run the "
-                   "interchangeable-generator surface "
-                   "(near_duplicate_clusters_scale) instead of the minhash "
-                   "flagship — e.g. 'minhash,substring' also clusters exact "
+                   help="comma list from {minhash,simhash,substring,suffix} "
+                   "(near_duplicate_clusters_scale; default minhash, the "
+                   "flagship) — e.g. 'minhash,substring' also clusters exact "
                    "prefix/containment dupes a cosine threshold misses")
     d.add_argument("--tfidf-dtype", choices=["float32", "float64"],
                    default="float32",
@@ -347,48 +347,25 @@ def main(argv: Optional[list] = None) -> int:
         if isinstance(salt, str):
             salt = None if salt == "none" else ("auto" if salt == "auto" else int(salt))
         stats: dict = {}
-        if args.generators and args.checkpoint_root:
+        generators = tuple(
+            g.strip() for g in (args.generators or "").split(",") if g.strip()
+        ) or ("minhash",)
+        knobs = dict(
+            generators=generators, num_perm=args.num_perm,
+            num_bands=args.num_bands, max_bucket_size=args.max_bucket_size,
+            salt_above=salt, shingle=args.shingle, text_col=args.text_col,
+            id_col=args.id_col, drop_stats=stats,
+        )
+        if args.checkpoint_root:
             from .checkpoint import checkpointed_union_dedup_pipeline
 
             out = checkpointed_union_dedup_pipeline(
-                spark, df, cfg, args.checkpoint_root,
-                generators=tuple(g.strip() for g in args.generators.split(",") if g.strip()),
-                num_perm=args.num_perm, num_bands=args.num_bands,
-                max_bucket_size=args.max_bucket_size, salt_above=salt,
-                shingle=args.shingle,
-                text_col=args.text_col, id_col=args.id_col, drop_stats=stats,
-            )
-        elif args.generators:
-            from .operators.dedup import near_duplicate_clusters_scale
-
-            out = near_duplicate_clusters_scale(
-                df, cfg,
-                generators=tuple(g.strip() for g in args.generators.split(",") if g.strip()),
-                num_perm=args.num_perm, num_bands=args.num_bands,
-                max_bucket_size=args.max_bucket_size, salt_above=salt,
-                shingle=args.shingle,
-                text_col=args.text_col, id_col=args.id_col, drop_stats=stats,
-            )
-        elif args.checkpoint_root:
-            from .checkpoint import checkpointed_lsh_dedup_pipeline
-
-            out = checkpointed_lsh_dedup_pipeline(
-                spark, df, cfg, args.checkpoint_root,
-                num_perm=args.num_perm, num_bands=args.num_bands,
-                max_bucket_size=args.max_bucket_size, salt_above=salt,
-                shingle=args.shingle, text_col=args.text_col,
-                id_col=args.id_col, drop_stats=stats,
+                spark, df, cfg, args.checkpoint_root, **knobs
             )
         else:
-            from .plans.fast_dedup import fast_lsh_dedup
+            from .operators.dedup import near_duplicate_clusters_scale
 
-            out = fast_lsh_dedup(
-                df, cfg,
-                num_perm=args.num_perm, num_bands=args.num_bands,
-                max_bucket_size=args.max_bucket_size, salt_above=salt,
-                text_col=args.text_col, id_col=args.id_col,
-                shingle=args.shingle, drop_stats=stats,
-            )
+            out = near_duplicate_clusters_scale(df, cfg, **knobs)
         # skew/drop accounting goes to stderr so stdout stays one JSON line
         print(json.dumps({"skew_policy": stats}), file=sys.stderr)
     elif args.command == "dedup-exact":

@@ -1,22 +1,29 @@
 """Stage checkpointing + lineage/metrics + resume (north rule: "resumable
 from checkpoint with per-partition lineage + metrics").
 
-Design: every pipeline stage is a pure DataFrame -> DataFrame function.  A
-``StageCheckpointer`` wraps each stage: results are written to a stage table
-(parquet in-sandbox; the layout is Iceberg-shaped — one directory per stage
-under a run root — so swapping the writer for an Iceberg catalog is a
-one-line change), together with
+Design: every pipeline stage is a named DataFrame build.
+``StageCheckpointer.stage`` runs each build once and writes its result,
+tagged with ``spark_partition_id()``, to a stage table (parquet
+in-sandbox; one directory per stage under a run root, or a table of a
+``sources.catalog.TableIO`` catalog).  One ``groupBy(_pid).count()`` over
+the written table, collected on the driver, gives
 
   * ``_metrics``: one row per stage (stage, fingerprint, rows_out, wall_ms,
     n_partitions, completed_at) — appended, queryable as a table.
-  * ``_lineage``: one row per output partition (stage, partition_id, rows) —
-    computed with ``spark_partition_id()`` during the same write-side pass.
+  * ``_lineage``: one row per output partition (stage, fingerprint,
+    partition_id, rows).
 
-Resume: a stage is SKIPPED (its table read back) iff a ``_SUCCESS``-marked
-stage table with a MATCHING config fingerprint exists.  The fingerprint
-covers the stage name + config + upstream fingerprints, so changing any
-upstream invalidates everything downstream — the same invalidation rule a
-lineage-aware catalog would apply.
+Reading a stage back drops the ``_pid`` tag.
+
+Resume: a stage is SKIPPED (its table read back) iff its completion marker
+carries a MATCHING fingerprint.  The fingerprint covers the stage name +
+run config + input data + the fingerprints of the stages it reads, so
+changing any upstream invalidates everything downstream — the same
+invalidation rule a lineage-aware catalog would apply.
+
+The pipelines below have no stage bodies of their own: each runs a plain
+pipeline's stages with ``StageCheckpointer.stage`` as the stage runner, so
+adding a checkpoint root never changes what a run computes.
 """
 
 from __future__ import annotations
@@ -108,15 +115,14 @@ class StageCheckpointer:
 
     # -- the core wrapper ----------------------------------------------------
     def stage(
-        self,
-        name: str,
-        build: Callable[[], DataFrame],
-        upstream_fps: Optional[list] = None,
-        extra_config=None,
+        self, name: str, build: Callable[[], DataFrame], after=()
     ) -> DataFrame:
-        """Run (or resume) a named stage.  Returns the stage's DataFrame,
-        always backed by the checkpoint table (lineage cut)."""
-        fp = _fingerprint(name, self.run_fp, upstream_fps or [], extra_config or {})
+        """Run (or resume) the stage ``name``; ``after`` names the stages
+        its build reads, whose fingerprints key this one.  Returns the
+        stage's DataFrame, always read back from its table (lineage cut)."""
+        fp = _fingerprint(
+            name, self.run_fp, [self.stage_fingerprint(a) for a in after], {}
+        )
         sdir = self._stage_dir(name)
         meta_path = self._meta_path(name)
 
@@ -126,7 +132,7 @@ class StageCheckpointer:
         # or silently resume — each other's tables
         table_name = f"{name}_{fp}_data"
 
-        def read_stage() -> DataFrame:
+        def read_tagged() -> DataFrame:
             if self.io is not None:
                 return self.io.read(table_name)
             return self.spark.read.parquet(f"{sdir}/data")
@@ -135,35 +141,22 @@ class StageCheckpointer:
             with open(meta_path) as f:
                 meta = json.load(f)
             if meta.get("fingerprint") == fp:
-                return read_stage()
+                # tables written before the _pid tag was kept have none
+                return read_tagged().drop("_pid")
 
         t0 = time.time()
-        df = build()
-        # lineage pass: tag partition ids, write data + per-partition counts
-        tagged = df.withColumn("_pid", F.spark_partition_id())
-        tagged.write.mode("overwrite").parquet(f"{sdir}/data.tmp")
-        written = self.spark.read.parquet(f"{sdir}/data.tmp")
-        lineage = (
-            written.groupBy("_pid")
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .select(
-                F.lit(name).alias("stage"),
-                F.lit(fp).alias("fingerprint"),
-                F.col("_pid").alias("partition_id"),
-                "rows",
-            )
-        )
-        lineage.write.mode("append").parquet(f"{self.root}/_lineage")
+        tagged = build().withColumn("_pid", F.spark_partition_id())
         if self.io is not None:
-            self.io.write(written.drop("_pid"), table_name, mode="overwrite")
+            self.io.write(tagged, table_name, mode="overwrite")
         else:
-            written.drop("_pid").write.mode("overwrite").parquet(f"{sdir}/data")
-        rows_out = written.count()
-        n_parts = written.select("_pid").distinct().count()
-        # the tmp staging dir has served its purpose (lineage + final copy)
-        import shutil
-
-        shutil.rmtree(f"{sdir}/data.tmp", ignore_errors=True)
+            tagged.write.mode("overwrite").parquet(f"{sdir}/data")
+        # one job over the written table: rows per output partition
+        per_part = read_tagged().groupBy("_pid").count().collect()
+        self.spark.createDataFrame(
+            [(name, fp, r["_pid"], r["count"]) for r in per_part],
+            "stage string, fingerprint string, partition_id int, rows bigint",
+        ).write.mode("append").parquet(f"{self.root}/_lineage")
+        rows_out = sum(r["count"] for r in per_part)
         wall_ms = int((time.time() - t0) * 1000)
         self._append_metrics(
             {
@@ -171,15 +164,16 @@ class StageCheckpointer:
                 "fingerprint": fp,
                 "rows_out": rows_out,
                 "wall_ms": wall_ms,
-                "n_partitions": n_parts,
+                "n_partitions": len(per_part),
                 "completed_at": time.strftime("%Y-%m-%dT%H:%M:%S"),
             }
         )
         # atomic-ish completion marker LAST: a crash before this point leaves
         # no meta file, so resume re-runs the stage
+        os.makedirs(sdir, exist_ok=True)
         with open(meta_path, "w") as f:
             json.dump({"fingerprint": fp, "rows_out": rows_out, "wall_ms": wall_ms}, f)
-        return read_stage()
+        return read_tagged().drop("_pid")
 
     def stage_fingerprint(self, name: str) -> Optional[str]:
         meta_path = self._meta_path(name)
@@ -197,57 +191,48 @@ def checkpointed_dedup_pipeline(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """The flagship pipeline cut at its natural shuffle boundaries
-    (SURVEY §3: corpus -> postings -> pairs -> components -> labels), each
-    stage resumable.  Returns (<id_col>, group_rep)."""
+    """``dedup.near_duplicate_clusters`` cut at its natural shuffle
+    boundaries (SURVEY §3: corpus -> postings -> pairs -> components ->
+    labels), each stage resumable:
+
+        tokens    (doc, gram) rows
+        idf       corpus document frequencies
+        postings  L2-normalized TF-IDF postings
+        edges     ``match_edges``' self-join over the postings
+        labels    connected components + group representative
+
+    Returns (<id_col>, group_rep), equal to ``near_duplicate_clusters``."""
     from .functions.tfidf import build_postings, corpus_idf, term_frequencies, tokenize
     from .operators.grouping import group_labels
-    from .operators.matching import match_edges
-    from .operators.similarity import LEFT, RIGHT
+    from .operators.matching import _self_join_edges
 
     ck = StageCheckpointer(
-        spark, root, run_config=cfg,
+        spark, root, run_config={"plan": "exact", "cfg": cfg},
         input_fp=input_fingerprint(docs, [id_col, text_col]),
     )
     n_docs = docs.count()
 
     tokens = ck.stage("tokens", lambda: tokenize(docs, cfg, text_col, id_col))
-    fp_tokens = ck.stage_fingerprint("tokens")
-
     idf = ck.stage(
-        "idf", lambda: corpus_idf(tokens, None, n_docs), upstream_fps=[fp_tokens]
+        "idf", lambda: corpus_idf(tokens, None, n_docs), after=("tokens",)
     )
     postings = ck.stage(
         "postings",
         lambda: build_postings(term_frequencies(tokens), idf, cfg),
-        upstream_fps=[fp_tokens, ck.stage_fingerprint("idf")],
+        after=("tokens", "idf"),
     )
-
-    def build_edges():
-        from .operators.matching import _self_similarity
-        from .operators.similarity import cosine_join, symmetrize, top_n_per_left
-
-        off = cosine_join(postings, postings, cfg.min_similarity, self_join=True)
-        diag = _self_similarity(postings).where(F.col("similarity") >= cfg.min_similarity)
-        edges = top_n_per_left(off.unionAll(diag), cfg.max_n_matches)
-        if cfg.force_symmetries:
-            edges = symmetrize(
-                edges.where(F.col(LEFT) != F.col(RIGHT)),
-                docs.select(F.col(id_col)),
-            )
-        return edges
-
     edges = ck.stage(
-        "edges", build_edges, upstream_fps=[ck.stage_fingerprint("postings")]
+        "edges",
+        lambda: _self_join_edges(postings, docs.select(F.col(id_col)), cfg, n_docs),
+        after=("postings",),
     )
-    labels = ck.stage(
+    return ck.stage(
         "labels",
         lambda: group_labels(
             edges, docs.select(F.col(id_col).alias("row_id")), cfg
         ).withColumnRenamed("node", id_col),
-        upstream_fps=[ck.stage_fingerprint("edges")],
+        after=("edges",),
     )
-    return labels
 
 
 def checkpointed_lsh_dedup_pipeline(
@@ -266,119 +251,17 @@ def checkpointed_lsh_dedup_pipeline(
     drop_stats: Optional[dict] = None,
     io=None,
 ) -> DataFrame:
-    """The FLAGSHIP fast LSH pipeline (plans.fast_dedup semantics) cut at
-    its natural shuffle boundaries, each stage resumable:
-
-        vectors  narrow vectorize passes (packed TF-IDF + band keys)
-        pairs    bucket join -> exact packed re-score, sim >= threshold
-        labels   connected components (min-id)
-
-    Output contract is IDENTICAL to ``fast_lsh_dedup``: (<id_col>,
-    component) — so toggling ``--checkpoint-root`` on the CLI never changes
-    the schema or semantics of the same command.  The measured skew/drop
-    policy (candidates.auto_skew_policy) is recorded as a ``skew_policy``
-    row in the run's ``_metrics`` table, so bucket drops are never silent.
-    """
-    from .operators.candidates import (
-        _grouped_bucket_pairs,
-        _salted_self_pairs,
-        auto_skew_policy,
-        bucket_drop_stats,
+    """``plans.fast_dedup.fast_lsh_dedup`` with every stage checkpointed:
+    ``checkpointed_union_dedup_pipeline`` with the MinHash generator alone
+    under the flagship's defaults (stages vectors, cand_minhash,
+    edges_cosine, labels).  Same output as ``fast_lsh_dedup``: (<id_col>,
+    component)."""
+    return checkpointed_union_dedup_pipeline(
+        spark, docs, cfg, root, ("minhash",), num_perm, num_bands,
+        max_bucket_size, salt_above, shingle=shingle,
+        shingle_words=shingle_words, text_col=text_col, id_col=id_col,
+        drop_stats=drop_stats, io=io,
     )
-    from .operators.dedup import _INTEGRAL_DTYPES, run_with_long_ids
-    from .operators.grouping import connected_components
-    from .operators.similarity import LEFT, RIGHT
-    from .plans.fast_dedup import (
-        doc_term_arrays,
-        doc_vectors,
-        rescore_candidates_with_vecs,
-    )
-
-    if dict(docs.dtypes)[id_col] not in _INTEGRAL_DTYPES:
-        # xxhash64 is deterministic, so resume fingerprints stay stable
-        return run_with_long_ids(
-            docs, id_col,
-            lambda d, lid: checkpointed_lsh_dedup_pipeline(
-                spark, d, cfg, root, num_perm, num_bands, max_bucket_size,
-                salt_above, shingle, shingle_words, text_col, lid,
-                drop_stats, io,
-            ),
-        )
-
-    knobs = {
-        "plan": "fast_lsh", "num_perm": num_perm, "num_bands": num_bands,
-        "max_bucket_size": max_bucket_size, "shingle": shingle,
-        "shingle_words": shingle_words,
-    }
-    ck = StageCheckpointer(
-        spark, root, run_config={"cfg": cfg, **knobs},
-        input_fp=input_fingerprint(docs, [id_col, text_col]), io=io,
-    )
-    n_docs = docs.count()
-
-    cache = {}
-
-    def build_vecs():
-        terms = doc_term_arrays(docs, cfg, text_col, id_col, shingle, shingle_words)
-        cache["terms"] = terms.persist()
-        return doc_vectors(
-            docs, cfg, num_perm, num_bands, text_col, id_col, n_docs,
-            terms=cache["terms"], shingle=shingle, shingle_words=shingle_words,
-        )
-
-    vecs = ck.stage("vectors", build_vecs)
-    if "terms" in cache:
-        cache["terms"].unpersist()
-    fp_vecs = ck.stage_fingerprint("vectors")
-
-    def build_pairs():
-        # key-only buckets + drops-aware prefilter: same pairing plan as
-        # fast_lsh_dedup (the band index is folded into the key; over-cap
-        # keys are anti-joined out BEFORE collect_list when the measured
-        # histogram shows drops — see plans/fast_dedup.py)
-        kc = ("key",)
-        buckets = vecs.where(F.col("bands").isNotNull()).select(
-            "doc_id", F.explode("bands").alias("key")
-        )
-        nonlocal salt_above
-        if salt_above == "auto":
-            policy = auto_skew_policy(buckets, max_bucket_size, key_cols=kc)
-            salt_above = policy["salt_above"]
-        else:
-            policy = {"salt_above": salt_above,
-                      **bucket_drop_stats(buckets, max_bucket_size, key_cols=kc)}
-        cache["policy"] = policy
-        if drop_stats is not None:
-            drop_stats.update(policy)
-        if salt_above is None:
-            raw = _grouped_bucket_pairs(
-                buckets, max_bucket_size, key_cols=kc,
-                prefilter_hot=policy.get("n_buckets_dropped", 0) > 0,
-            )
-        else:
-            raw = _salted_self_pairs(
-                buckets, salt_above, key_cols=kc, max_bucket_size=max_bucket_size
-            )
-        return rescore_candidates_with_vecs(
-            raw.dropDuplicates([LEFT, RIGHT]), vecs, cfg
-        )
-
-    pairs = ck.stage("pairs", build_pairs, upstream_fps=[fp_vecs])
-    if "policy" in cache:
-        # the measured skew/drop accounting is part of the run's metrics
-        ck._append_metrics(
-            {"stage": "skew_policy", "fingerprint": ck.stage_fingerprint("pairs"),
-             **cache["policy"]}
-        )
-    labels = ck.stage(
-        "labels",
-        lambda: connected_components(
-            pairs.select(F.col(LEFT).alias("u"), F.col(RIGHT).alias("v")),
-            docs.select(F.col(id_col)),
-        ).withColumnRenamed("node", id_col),
-        upstream_fps=[ck.stage_fingerprint("pairs")],
-    )
-    return labels
 
 
 def checkpointed_union_dedup_pipeline(
@@ -401,59 +284,26 @@ def checkpointed_union_dedup_pipeline(
     drop_stats: Optional[dict] = None,
     io=None,
 ) -> DataFrame:
-    """``near_duplicate_clusters_scale`` (the north rule's three
-    interchangeable candidate generators) with EVERY stage checkpointed —
-    the resume granularity a 10^12-document run actually needs: each
-    generator is its own stage table, so a crash during the suffix-array
-    pass resumes with the MinHash and SimHash candidate tables read back,
-    not recomputed.
+    """``dedup.near_duplicate_clusters_scale`` with EVERY stage of its
+    stage graph (``dedup._scale_plan``: vectors, cand_minhash /
+    cand_simhash, edges_cosine, edges_substring / edges_suffix, labels)
+    checkpointed — the resume granularity a 10^12-document run needs: each
+    generator is its own stage table, so a crash during the suffix pass
+    resumes with the MinHash and SimHash candidate tables read back, not
+    recomputed.  Fingerprints chain, so editing any knob invalidates only
+    the stages downstream of it.
 
-    Stage DAG (fingerprints chain, so editing any knob invalidates only
-    downstream):
-
-        vectors         shared narrow vectorize pass (cosine generators)
-        cand_minhash    LSH band bucket join -> candidate id-pairs
-        cand_simhash    Hamming-ball block join -> candidate id-pairs
-        edges_cosine    union of cosine candidates -> ONE exact re-score
-        edges_substring verified winnowed containments (direct edges; not
-                        run when 'suffix' is requested, see
-                        ``dedup._union_generators``)
-        edges_suffix    exact shared-window connectivity edges
-                        (``suffix_array.substring_edges``)
-        labels          connected components over the edge union
+    The measured skew/drop accounting of the MinHash bucket join
+    (``lsh_band_candidates``) is appended to the run's ``_metrics`` table
+    as a ``skew_policy`` row whenever that stage is built, so bucket drops
+    are never silent.
 
     Output contract is IDENTICAL to ``near_duplicate_clusters_scale``:
     (<id_col>, component), component = min id."""
-    from .operators.candidates import simhash_candidates, substring_containment
-    from .operators.grouping import connected_components
-    from .operators.similarity import LEFT, RIGHT
-    from .plans.fast_dedup import (
-        doc_term_arrays,
-        doc_vectors,
-        lsh_band_candidates,
-        rescore_candidates_with_vecs,
-    )
-
-    from .operators.dedup import (
-        _INTEGRAL_DTYPES,
-        _union_generators,
-        run_with_long_ids,
-    )
-
-    generators = _union_generators(generators)
-    if dict(docs.dtypes)[id_col] not in _INTEGRAL_DTYPES:
-        return run_with_long_ids(
-            docs, id_col,
-            lambda d, lid: checkpointed_union_dedup_pipeline(
-                spark, d, cfg, root, generators, num_perm, num_bands,
-                max_bucket_size, salt_above, max_hamming, num_blocks,
-                anchor_len, shingle, shingle_words, text_col, lid,
-                drop_stats, io,
-            ),
-        )
+    from .operators.dedup import _scale_plan, _union_generators
 
     knobs = {
-        "plan": "union", "generators": sorted(generators),
+        "plan": "union", "generators": sorted(_union_generators(generators)),
         "num_perm": num_perm, "num_bands": num_bands,
         "max_bucket_size": max_bucket_size, "max_hamming": max_hamming,
         "num_blocks": num_blocks, "anchor_len": anchor_len,
@@ -463,119 +313,22 @@ def checkpointed_union_dedup_pipeline(
         spark, root, run_config={"cfg": cfg, **knobs},
         input_fp=input_fingerprint(docs, [id_col, text_col]), io=io,
     )
-    cos_gens = [g for g in generators if g in ("minhash", "simhash")]
-    edge_fps, edge_tables = [], []
+    stats: dict = {}  # filled only when cand_minhash is built
 
-    if cos_gens:
-        # only the cosine vectorizer needs the corpus count (IDF N); a
-        # substring/suffix-only run must not pay a full scan for it
-        n_docs = docs.count()
-        cache = {}
-
-        def build_vecs():
-            terms = doc_term_arrays(
-                docs, cfg, text_col, id_col, shingle, shingle_words
+    def stage(name, build, after=(), reused=False):
+        df = ck.stage(name, build, after)
+        if name == "cand_minhash" and stats:
+            ck._append_metrics(
+                {"stage": "skew_policy", "fingerprint": ck.stage_fingerprint(name),
+                 **stats}
             )
-            cache["terms"] = terms.persist()
-            return doc_vectors(
-                docs, cfg, num_perm, num_bands, text_col, id_col, n_docs,
-                terms=cache["terms"], shingle=shingle,
-                shingle_words=shingle_words,
-            )
+        return df
 
-        vecs = ck.stage("vectors", build_vecs)
-        if "terms" in cache:
-            cache["terms"].unpersist()
-        fp_vecs = ck.stage_fingerprint("vectors")
-
-        cand_fps, cand_tables = [], []
-        if "minhash" in cos_gens:
-            cand_tables.append(
-                ck.stage(
-                    "cand_minhash",
-                    lambda: lsh_band_candidates(
-                        vecs, max_bucket_size, salt_above=salt_above,
-                        drop_stats=drop_stats,
-                    ),
-                    upstream_fps=[fp_vecs],
-                )
-            )
-            cand_fps.append(ck.stage_fingerprint("cand_minhash"))
-            if drop_stats:
-                ck._append_metrics(
-                    {"stage": "skew_policy", "fingerprint": cand_fps[-1],
-                     **drop_stats}
-                )
-        if "simhash" in cos_gens:
-            # derives from docs directly (signatures, not the TF-IDF vector
-            # stage) — so vector-knob changes must NOT invalidate it
-            cand_tables.append(
-                ck.stage(
-                    "cand_simhash",
-                    lambda: simhash_candidates(
-                        docs, cfg, max_hamming=max_hamming,
-                        num_blocks=num_blocks,
-                        max_bucket_size=max_bucket_size, text_col=text_col,
-                        id_col=id_col, shingle=shingle,
-                        shingle_words=shingle_words,
-                    ).select(LEFT, RIGHT),
-                )
-            )
-            cand_fps.append(ck.stage_fingerprint("cand_simhash"))
-
-        def build_cos_edges():
-            cand = cand_tables[0]
-            for extra in cand_tables[1:]:
-                cand = cand.unionByName(extra)
-            if len(cand_tables) > 1:
-                cand = cand.dropDuplicates([LEFT, RIGHT])
-            scored = rescore_candidates_with_vecs(cand, vecs, cfg)
-            return scored.select(
-                F.col(LEFT).alias("u"), F.col(RIGHT).alias("v")
-            )
-
-        edge_tables.append(
-            ck.stage("edges_cosine", build_cos_edges, upstream_fps=[fp_vecs] + cand_fps)
-        )
-        edge_fps.append(ck.stage_fingerprint("edges_cosine"))
-
-    if "substring" in generators:
-        edge_tables.append(
-            ck.stage(
-                "edges_substring",
-                lambda: substring_containment(
-                    docs, cfg, anchor_len=anchor_len, text_col=text_col,
-                    id_col=id_col,
-                ).select(
-                    F.col("inner_id").alias("u"), F.col("outer_id").alias("v")
-                ),
-            )
-        )
-        edge_fps.append(ck.stage_fingerprint("edges_substring"))
-
-    if "suffix" in generators:
-        from .operators.suffix_array import substring_edges
-
-        edge_tables.append(
-            ck.stage(
-                "edges_suffix",
-                # connectivity-only edges (copies collapsed); a checkpoint
-                # written by an older build resumes with its own edge set,
-                # whose components are the same
-                lambda: substring_edges(
-                    docs, cfg, min_len=anchor_len, text_col=text_col,
-                    id_col=id_col,
-                ).select(F.col("left").alias("u"), F.col("right").alias("v")),
-            )
-        )
-        edge_fps.append(ck.stage_fingerprint("edges_suffix"))
-
-    def build_labels():
-        edges = edge_tables[0]
-        for extra in edge_tables[1:]:
-            edges = edges.unionByName(extra)
-        return connected_components(
-            edges, docs.select(F.col(id_col))
-        ).withColumnRenamed("node", id_col)
-
-    return ck.stage("labels", build_labels, upstream_fps=edge_fps)
+    labels = _scale_plan(
+        docs, cfg, generators, stage, text_col, id_col, None, num_perm,
+        num_bands, max_bucket_size, salt_above, max_hamming, num_blocks,
+        anchor_len, shingle, shingle_words, stats,
+    )
+    if drop_stats is not None:
+        drop_stats.update(stats)
+    return labels

@@ -8,6 +8,7 @@ core operators, returning DataFrames (nothing collected).
 from __future__ import annotations
 
 import re
+from functools import reduce
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -172,10 +173,11 @@ def lsh_dedup_clusters(
     salt_above: Optional[int] = None,
     drop_stats: Optional[dict] = None,
 ) -> DataFrame:
-    """The WEB-SCALE flagship: MinHash-LSH candidates -> exact TF-IDF
-    re-score -> connected components.  Same output contract as
-    ``near_duplicate_clusters`` but never materializes the all-pairs gram
-    join — cost scales with candidate count, not corpus^2.
+    """MinHash-LSH candidates -> exact TF-IDF re-score -> connected
+    components over the generic token and posting tables (the web-scale
+    flagship is ``plans.fast_dedup.fast_lsh_dedup``).  Same output
+    contract as ``near_duplicate_clusters`` but never materializes the
+    all-pairs gram join — cost scales with candidate count, not corpus^2.
 
     Returns (<id_col>, component) with component = min doc id in cluster.
 
@@ -262,8 +264,56 @@ def near_duplicate_clusters_scale(
     narrow vectorize pass (``doc_term_arrays``/``doc_vectors``, persisted)
     feeds minhash banding AND the packed exact re-score; candidate tables
     are slim id-pair frames (never carrying vectors), so unioning
-    generators adds narrow passes but no new wide shuffle.
+    generators adds narrow passes but no new wide shuffle.  The stages are
+    those of ``_scale_plan``, run in memory: only the vectors are
+    persisted, and released once the labels are computed.
     """
+    held = []
+
+    def stage(name, build, after=(), reused=False):
+        df = build()
+        if reused:
+            df = df.persist()
+            held.append(df)
+        return df
+
+    try:
+        return _scale_plan(
+            docs, cfg, generators, stage, text_col, id_col, n_docs, num_perm,
+            num_bands, max_bucket_size, salt_above, max_hamming, num_blocks,
+            anchor_len, shingle, shingle_words, drop_stats,
+        )
+    finally:
+        # connected_components fetches (or, above its driver bound,
+        # checkpoints and iterates) the edge list before it returns, so the
+        # caches are fully consumed before they are released
+        for df in held:
+            df.unpersist()
+
+
+def _scale_plan(
+    docs, cfg, generators, stage, text_col, id_col, n_docs, num_perm,
+    num_bands, max_bucket_size, salt_above, max_hamming, num_blocks,
+    anchor_len, shingle, shingle_words, drop_stats,
+) -> DataFrame:
+    """The stage graph of ``near_duplicate_clusters_scale`` (arguments as
+    there), run through a stage runner
+    ``stage(name, build, after=<upstream stage names>, reused=False)`` that
+    returns the stage's DataFrame:
+
+        vectors          terms + packed TF-IDF vectors and band keys
+                         (cosine generators; read by two stages: reused)
+        cand_minhash     LSH band bucket join -> candidate id-pairs
+        cand_simhash     Hamming-ball block join -> candidate id-pairs
+        edges_cosine     union of cosine candidates -> ONE exact re-score
+        edges_substring  verified winnowed containments (direct edges)
+        edges_suffix     exact shared-window connectivity edges
+        labels           connected components over the edge union
+
+    The plain surface runs each ``build`` in memory, the checkpointed one
+    (``checkpoint.checkpointed_union_dedup_pipeline``) writes each stage to
+    a resumable table keyed by the fingerprints of its ``after`` stages.
+    Non-integral ids go through ``run_with_long_ids`` first."""
     from ..plans.fast_dedup import (
         doc_term_arrays,
         doc_vectors,
@@ -272,92 +322,103 @@ def near_duplicate_clusters_scale(
     )
     from .candidates import simhash_candidates, substring_containment
     from .grouping import connected_components
+    from .suffix_array import substring_edges
 
     cfg = cfg or MatchConfig()
     generators = _union_generators(generators)
-    if dict(docs.dtypes)[id_col] not in _INTEGRAL_DTYPES:
-        return run_with_long_ids(
-            docs, id_col,
-            lambda d, lid: near_duplicate_clusters_scale(
-                d, cfg, generators, text_col, lid, n_docs, num_perm,
-                num_bands, max_bucket_size, salt_above, max_hamming,
-                num_blocks, anchor_len, shingle, shingle_words, drop_stats,
-            ),
-        )
-    if n_docs is None:
-        n_docs = docs.count()
-
     cos_gens = [g for g in generators if g in ("minhash", "simhash")]
-    edge_parts = []
-    caches = []
-    try:
-        if cos_gens:
-            terms = doc_term_arrays(
-                docs, cfg, text_col, id_col, shingle, shingle_words
-            ).persist()
-            vecs = doc_vectors(
-                docs, cfg, num_perm, num_bands, text_col, id_col, n_docs,
-                terms=terms, shingle=shingle, shingle_words=shingle_words,
-            ).persist()
-            caches += [terms, vecs]
-            cands = []
-            if "minhash" in cos_gens:
-                cands.append(
-                    lsh_band_candidates(
-                        vecs, max_bucket_size, salt_above=salt_above,
-                        drop_stats=drop_stats,
-                    )
-                )
-            if "simhash" in cos_gens:
-                # shingle threads through so proposal happens in the SAME
-                # feature space the exact re-score decides in
-                cands.append(
-                    simhash_candidates(
-                        docs, cfg, max_hamming=max_hamming, num_blocks=num_blocks,
-                        max_bucket_size=max_bucket_size, text_col=text_col,
-                        id_col=id_col, shingle=shingle,
-                        shingle_words=shingle_words,
-                    ).select(LEFT, RIGHT)
-                )
-            cand = cands[0]
-            for extra in cands[1:]:
-                cand = cand.unionByName(extra)
-            if len(cands) > 1:
-                cand = cand.dropDuplicates([LEFT, RIGHT])
-            scored = rescore_candidates_with_vecs(cand, vecs, cfg)
-            edge_parts.append(
-                scored.select(F.col(LEFT).alias("u"), F.col(RIGHT).alias("v"))
-            )
-        if "substring" in generators:
-            contain = substring_containment(
-                docs, cfg, anchor_len=anchor_len, text_col=text_col, id_col=id_col
-            )
-            edge_parts.append(
-                contain.select(
-                    F.col("inner_id").alias("u"), F.col("outer_id").alias("v")
-                )
-            )
-        if "suffix" in generators:
-            from .suffix_array import substring_edges
 
-            # connectivity only: copies collapsed, anchor_len-byte windows
-            sub = substring_edges(
-                docs, cfg, min_len=anchor_len, text_col=text_col, id_col=id_col
+    def plan(docs: DataFrame, id_col: str) -> DataFrame:
+        # the vectors build persists its terms pass, which feeds both the
+        # idf collect and the vector pass; released after the labels
+        terms = []
+
+        def build_vectors():
+            n = n_docs if n_docs is not None else docs.count()
+            terms.append(
+                doc_term_arrays(
+                    docs, cfg, text_col, id_col, shingle, shingle_words
+                ).persist()
             )
-            edge_parts.append(
-                sub.select(F.col("left").alias("u"), F.col("right").alias("v"))
+            return doc_vectors(
+                docs, cfg, num_perm, num_bands, text_col, id_col, n,
+                terms=terms[0], shingle=shingle, shingle_words=shingle_words,
             )
-        edges = edge_parts[0]
-        for extra in edge_parts[1:]:
-            edges = edges.unionByName(extra)
-        nodes = docs.select(F.col(id_col))
-        # connected_components fetches (or, above its driver bound,
-        # checkpoints and iterates) the edge list before it returns, so the
-        # caches are fully consumed before the finally releases them
-        return connected_components(edges, nodes).withColumnRenamed(NODE, id_col)
-    finally:
-        for c in caches:
-            c.unpersist()
+
+        edges = {}
+        try:
+            if cos_gens:
+                vecs = stage("vectors", build_vectors, reused=True)
+                cands = {}
+                if "minhash" in cos_gens:
+                    cands["cand_minhash"] = stage(
+                        "cand_minhash",
+                        lambda: lsh_band_candidates(
+                            vecs, max_bucket_size, salt_above=salt_above,
+                            drop_stats=drop_stats,
+                        ),
+                        after=("vectors",),
+                    )
+                if "simhash" in cos_gens:
+                    # from docs, not the vectors; shingle threads through so
+                    # proposal happens in the SAME feature space the exact
+                    # re-score decides in
+                    cands["cand_simhash"] = stage(
+                        "cand_simhash",
+                        lambda: simhash_candidates(
+                            docs, cfg, max_hamming=max_hamming,
+                            num_blocks=num_blocks,
+                            max_bucket_size=max_bucket_size, text_col=text_col,
+                            id_col=id_col, shingle=shingle,
+                            shingle_words=shingle_words,
+                        ).select(LEFT, RIGHT),
+                    )
+
+                def build_cosine():
+                    cand = reduce(DataFrame.unionByName, cands.values())
+                    if len(cands) > 1:
+                        cand = cand.dropDuplicates([LEFT, RIGHT])
+                    scored = rescore_candidates_with_vecs(cand, vecs, cfg)
+                    return scored.select(
+                        F.col(LEFT).alias("u"), F.col(RIGHT).alias("v")
+                    )
+
+                edges["edges_cosine"] = stage(
+                    "edges_cosine", build_cosine, after=("vectors", *cands)
+                )
+            if "substring" in generators:
+                edges["edges_substring"] = stage(
+                    "edges_substring",
+                    lambda: substring_containment(
+                        docs, cfg, anchor_len=anchor_len, text_col=text_col,
+                        id_col=id_col,
+                    ).select(
+                        F.col("inner_id").alias("u"), F.col("outer_id").alias("v")
+                    ),
+                )
+            if "suffix" in generators:
+                edges["edges_suffix"] = stage(
+                    "edges_suffix",
+                    # connectivity only: copies collapsed, anchor_len-byte
+                    # windows
+                    lambda: substring_edges(
+                        docs, cfg, min_len=anchor_len, text_col=text_col,
+                        id_col=id_col,
+                    ).select(F.col("left").alias("u"), F.col("right").alias("v")),
+                )
+            return stage(
+                "labels",
+                lambda: connected_components(
+                    reduce(DataFrame.unionByName, edges.values()),
+                    docs.select(F.col(id_col)),
+                ).withColumnRenamed(NODE, id_col),
+                after=tuple(edges),
+            )
+        finally:
+            for t in terms:
+                t.unpersist()
+
+    return run_with_long_ids(docs, id_col, plan)
 
 
 def components_only(

@@ -40,6 +40,40 @@ def _self_similarity(postings: DataFrame) -> DataFrame:
     )
 
 
+def _self_join_edges(
+    postings: DataFrame, ids: DataFrame, cfg: MatchConfig, n_docs: Optional[int] = None
+) -> DataFrame:
+    """The self-join tail of ``match_edges`` over one corpus's postings:
+    off-diagonal scores (stop-gram candidates or ``cosine_join``) plus the
+    diagonal, thresholded, top-n per left, then symmetry repair when
+    ``cfg.force_symmetries``.  ``ids``: the corpus's 1-column id frame;
+    ``n_docs``: its row count, counted from ``ids`` when the stop-gram
+    guard needs it and it is not given."""
+    if cfg.candidate_max_df_ratio is not None:
+        # stop-gram guard (config.candidate_max_df_ratio): grams hotter
+        # than the ratio are excluded from CANDIDATE GENERATION only;
+        # surviving pairs are re-scored on the full postings, so every
+        # emitted similarity is exact
+        from .similarity import _mirrored, candidate_pairs_from_postings, score_pairs_packed
+
+        n = n_docs if n_docs is not None else ids.count()
+        max_df = max(1, int(cfg.candidate_max_df_ratio * n))
+        cand = candidate_pairs_from_postings(postings, max_df)
+        # one re-score pass: both directions come from the same scan, so
+        # each candidate crosses the Arrow boundary once (the kernel is
+        # nondeterministic, so the threshold is not pushed below it)
+        off_diag = _mirrored(score_pairs_packed(cand, postings)).where(
+            F.col(SIM) >= float(cfg.min_similarity)
+        )
+    else:
+        off_diag = cosine_join(postings, postings, cfg.min_similarity, self_join=True)
+    diag = _self_similarity(postings).where(F.col(SIM) >= float(cfg.min_similarity))
+    edges = top_n_per_left(off_diag.unionAll(diag), cfg.max_n_matches)
+    if cfg.force_symmetries:
+        edges = symmetrize(edges.where(F.col(LEFT) != F.col(RIGHT)), ids)
+    return edges
+
+
 def match_edges(
     master: DataFrame,
     duplicates: Optional[DataFrame],
@@ -71,29 +105,7 @@ def match_edges(
         # serves, and the caller can spark.catalog.clearCache() between
         # corpora if needed
         m_post = m_post.persist()
-        if cfg.candidate_max_df_ratio is not None:
-            # stop-gram guard (config.candidate_max_df_ratio): grams hotter
-            # than the ratio are excluded from CANDIDATE GENERATION only;
-            # surviving pairs are re-scored on the full postings, so every
-            # emitted similarity is exact
-            from .similarity import _mirrored, candidate_pairs_from_postings, score_pairs_packed
-
-            n = n_master if n_master is not None else master.count()
-            max_df = max(1, int(cfg.candidate_max_df_ratio * n))
-            cand = candidate_pairs_from_postings(m_post, max_df)
-            # one re-score pass: both directions come from the same scan, so
-            # each candidate crosses the Arrow boundary once (the kernel is
-            # nondeterministic, so the threshold is not pushed below it)
-            off_diag = _mirrored(score_pairs_packed(cand, m_post)).where(
-                F.col(SIM) >= float(cfg.min_similarity)
-            )
-        else:
-            off_diag = cosine_join(m_post, m_post, cfg.min_similarity, self_join=True)
-        diag = _self_similarity(m_post).where(F.col(SIM) >= float(cfg.min_similarity))
-        edges = top_n_per_left(off_diag.unionAll(diag), cfg.max_n_matches)
-        if cfg.force_symmetries:
-            ids = master.select(F.col(id_col))
-            edges = symmetrize(edges.where(F.col(LEFT) != F.col(RIGHT)), ids)
+        edges = _self_join_edges(m_post, master.select(F.col(id_col)), cfg, n_master)
     else:
         edges = cosine_join(m_post, d_post, cfg.min_similarity, self_join=False)
         edges = top_n_per_left(edges, cfg.max_n_matches)

@@ -346,14 +346,22 @@ def lsh_band_candidates(
     vecs: DataFrame,
     max_bucket_size: Optional[int] = 1000,
     salt_above="auto",
-    min_band_matches: int = 1,
     drop_stats: Optional[dict] = None,
 ) -> DataFrame:
-    """Banded-LSH candidate pairs (master_side, dupe_side) from a
-    ``doc_vectors`` table — the flagship's bucket stage, reusable by any
-    pipeline that already holds the packed vectors.  Applies the measured
-    hot-bucket policy (auto salting / capped drops, never silent) exactly
-    as ``fast_lsh_dedup`` does."""
+    """Distinct banded-LSH candidate pairs (master_side, dupe_side) from a
+    ``doc_vectors`` table: two docs are a candidate when they share at
+    least one band key.  The flagship's bucket stage (the ``cand_minhash``
+    stage of ``dedup.near_duplicate_clusters_scale``), reusable by any
+    pipeline that already holds the packed vectors.
+
+    Hot-bucket policy (SURVEY §4.2(2)): buckets above ``max_bucket_size``
+    are dropped; buckets above ``salt_above`` (but within the cap) are
+    SALTED — the self-join is spread over ceil(sz/salt_above)^2 sub-tasks
+    instead of skewing one.  ``salt_above='auto'`` picks the threshold from
+    a one-pass bucket-size histogram (candidates.auto_skew_policy) and
+    ALWAYS logs the measured skew/drop accounting (WARNING when buckets are
+    dropped), so drops are never silent.  Salting never changes the
+    emitted pair set.  A ``drop_stats`` dict receives the accounting."""
     import logging
 
     from ..operators.candidates import (
@@ -401,12 +409,8 @@ def lsh_band_candidates(
         raw_pairs = _salted_self_pairs(
             buckets, salt_above, key_cols=kc, max_bucket_size=max_bucket_size
         )
-    collisions = raw_pairs.groupBy(LEFT, RIGHT).agg(
-        F.count(F.lit(1)).alias("_nbands")
-    )
-    return collisions.where(
-        F.col("_nbands") >= int(min_band_matches)
-    ).select(LEFT, RIGHT)
+    # a pair colliding in several bands is one candidate
+    return raw_pairs.dropDuplicates([LEFT, RIGHT])
 
 
 def _rescore(
@@ -447,73 +451,28 @@ def fast_lsh_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_docs: Optional[int] = None,
-    min_band_matches: int = 1,
     shingle: str = "char",
     shingle_words: int = 5,
     salt_above="auto",
     drop_stats: Optional[dict] = None,
 ) -> DataFrame:
-    """End-to-end flagship: narrow vectorize -> bucket join -> packed exact
-    re-score -> connected components.  Returns (<id_col>, component).
+    """The web-scale flagship: narrow vectorize -> bucket join -> packed
+    exact re-score -> connected components.  Returns (<id_col>,
+    component), component = min id.
 
-    ``min_band_matches``: a pair must collide in at least this many bands to
-    be re-scored.  The expensive part of re-scoring is SHIPPING each
-    candidate's two packed vectors (~10 KB/pair); random low-jaccard pairs
-    that collide in exactly one band are most candidates but few true pairs.
-    Default 1 (no filtering): raising it trades recall for volume and is
-    only safe when the threshold's jaccard floor j makes
-    P(Binom(num_bands, j^r) >= k) ~ 1 — measure on your corpus first (on the
-    synthetic pages corpus, k=2 cut candidates 10x but lost prefix-dup pairs
-    whose jaccard is ~0.6 despite cosine >= 0.8).
+    It is ``dedup.near_duplicate_clusters_scale`` with the MinHash
+    generator alone, under the flagship's defaults: 16 bands and the
+    measured hot-bucket policy (``salt_above='auto'``, see
+    ``lsh_band_candidates``), so a default run on a corpus with a
+    megabucket reports its drops (WARNING log + ``drop_stats``) instead of
+    dropping silently."""
+    from ..operators.dedup import near_duplicate_clusters_scale
 
-    Hot-bucket policy (SURVEY §4.2(2)): buckets above ``max_bucket_size``
-    are dropped; buckets above ``salt_above`` (but within the cap) are
-    SALTED — the self-join is spread over ceil(sz/salt_above)^2 sub-tasks
-    instead of skewing one.  ``salt_above='auto'`` (the default) picks the
-    threshold from a one-pass bucket-size histogram
-    (candidates.auto_skew_policy) and ALWAYS logs the measured skew/drop
-    accounting — a default run on a corpus with a megabucket reports it
-    (WARNING log + ``drop_stats``), never drops silently.  Salting never
-    changes the emitted pair set (asserted in tests), so the auto policy is
-    output-invariant.  Pass a ``drop_stats`` dict to also receive the
-    accounting programmatically.
-    """
-    from ..operators.dedup import _INTEGRAL_DTYPES, run_with_long_ids
-    from ..operators.grouping import connected_components
-
-    cfg = cfg or MatchConfig()
-    if dict(docs.dtypes)[id_col] not in _INTEGRAL_DTYPES:
-        # string/url ids: deterministic int64 mapping + min-orig-id relabel
-        return run_with_long_ids(
-            docs, id_col,
-            lambda d, lid: fast_lsh_dedup(
-                d, cfg, num_perm, num_bands, max_bucket_size, text_col, lid,
-                n_docs, min_band_matches, shingle, shingle_words, salt_above,
-                drop_stats,
-            ),
-        )
-    if n_docs is None:
-        n_docs = docs.count()
-    # persist the terms pass: it feeds BOTH the idf collect and the vector
-    # pass — uncached it would run the most expensive narrow stage twice
-    terms = doc_term_arrays(docs, cfg, text_col, id_col, shingle, shingle_words).persist()
-    vecs = doc_vectors(
-        docs, cfg, num_perm, num_bands, text_col, id_col, n_docs,
-        terms=terms, shingle=shingle, shingle_words=shingle_words,
-    ).persist()
-    try:
-        cand = lsh_band_candidates(
-            vecs, max_bucket_size, salt_above=salt_above,
-            min_band_matches=min_band_matches, drop_stats=drop_stats,
-        )
-        pairs = rescore_candidates_with_vecs(cand, vecs, cfg)
-        nodes = docs.select(F.col(id_col))
-        return connected_components(
-            pairs.select(F.col(LEFT).alias("u"), F.col(RIGHT).alias("v")), nodes
-        ).withColumnRenamed("node", id_col)
-    finally:
-        terms.unpersist()
-        vecs.unpersist()
+    return near_duplicate_clusters_scale(
+        docs, cfg, ("minhash",), text_col, id_col, n_docs, num_perm,
+        num_bands, max_bucket_size, salt_above, shingle=shingle,
+        shingle_words=shingle_words, drop_stats=drop_stats,
+    )
 
 
 def fast_lsh_dedup_bipartite(
@@ -579,7 +538,7 @@ def fast_lsh_dedup_bipartite(
         ).persist()
 
         def buckets_of(vecs: DataFrame) -> DataFrame:
-            # key-only buckets — see fast_lsh_dedup: the key folds the band
+            # key-only buckets — see lsh_band_candidates: the key folds the band
             # index, so the band column would be redundant shuffle bytes.
             # Cap via count-agg + broadcast anti-join: never materializes a
             # megabucket (candidates.capped_buckets).
@@ -690,7 +649,7 @@ class PrefitLshMatcher:
         self._corpus_buckets = self._buckets(self.corpus_vecs)
 
     def _buckets(self, vecs: DataFrame) -> DataFrame:
-        # key-only buckets — see fast_lsh_dedup's derivation; cap without
+        # key-only buckets — see lsh_band_candidates' derivation; cap without
         # materializing buckets (candidates.capped_buckets)
         from ..operators.candidates import capped_buckets
 

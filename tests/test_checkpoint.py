@@ -149,6 +149,32 @@ def test_metrics_and_lineage_written(spark, docs, tmp_path):
     assert lin["partition_id"].nunique() >= 1
 
 
+def test_stage_written_once_with_partition_tag(spark, docs, tmp_path):
+    # the stage table carries the _pid tag its lineage rows come from; the
+    # read-back stage does not, and its lineage rows sum to its rows_out
+    ck = StageCheckpointer(spark, str(tmp_path), run_config={})
+    out = ck.stage("ids", lambda: docs.select("doc_id").repartition(3))
+    assert out.columns == ["doc_id"]
+    assert "_pid" in spark.read.parquet(f"{tmp_path}/ids/data").columns
+    rows_out = int(ck.metrics.toPandas()["rows_out"].iloc[0])
+    assert rows_out == 8
+    assert int(ck.lineage.toPandas()["rows"].sum()) == rows_out
+    # resumed: still no tag
+    assert ck.stage("ids", lambda: docs.select("doc_id")).columns == ["doc_id"]
+
+
+def test_exact_pipeline_matches_plain_under_stop_gram_guard(spark, docs, tmp_path):
+    # the checkpointed edges stage runs match_edges' own self-join, so the
+    # stop-gram guard applies there too
+    from string_grouper_spark.operators.dedup import near_duplicate_clusters
+
+    cfg = MatchConfig(min_similarity=0.5, candidate_max_df_ratio=0.1)
+    c = lambda d: d.sort_values("doc_id").reset_index(drop=True)
+    got = c(checkpointed_dedup_pipeline(spark, docs, cfg, str(tmp_path)).toPandas())
+    direct = c(near_duplicate_clusters(docs, cfg).toPandas())
+    pd.testing.assert_frame_equal(got, direct)
+
+
 def test_pipeline_resume_equivalence(spark, docs, tmp_path):
     cfg = MatchConfig(min_similarity=0.5, max_n_matches=100)
     r1 = checkpointed_dedup_pipeline(spark, docs, cfg, str(tmp_path)).toPandas()
@@ -167,6 +193,8 @@ def test_lsh_pipeline_checkpointed_matches_fast_and_resumes(spark, docs, tmp_pat
     # the FLAGSHIP checkpointed variant: same output contract + values as
     # fast_lsh_dedup, resume-identical, and the measured skew policy is a
     # _metrics row (never a silent drop)
+    import os
+
     from string_grouper_spark.checkpoint import checkpointed_lsh_dedup_pipeline
     from string_grouper_spark.plans.fast_dedup import fast_lsh_dedup
 
@@ -189,13 +217,21 @@ def test_lsh_pipeline_checkpointed_matches_fast_and_resumes(spark, docs, tmp_pat
     pol = m[m["stage"] == "skew_policy"].iloc[0]
     assert pol["n_buckets_dropped"] == 0
 
-    # resume: all three stages skip, result identical
+    # the stages of the plain MinHash plan
+    stages = ("vectors", "cand_minhash", "edges_cosine", "labels")
+    for stage in stages:
+        assert os.path.exists(f"{tmp_path}/{stage}/_stage_meta.json"), stage
+    mt = {s: os.path.getmtime(f"{tmp_path}/{s}/_stage_meta.json") for s in stages}
+
+    # resume: every stage skips, result identical
     r2 = c(
         checkpointed_lsh_dedup_pipeline(
             spark, docs, cfg, str(tmp_path), **kw
         ).toPandas()
     )
     pd.testing.assert_frame_equal(r2, r1)
+    for s, t in mt.items():
+        assert os.path.getmtime(f"{tmp_path}/{s}/_stage_meta.json") == t, s
 
 
 def test_union_pipeline_checkpointed_matches_scale_and_resumes(spark, docs, tmp_path):

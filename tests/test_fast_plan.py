@@ -100,9 +100,9 @@ def test_fast_pipeline_recall_vs_exact(spark, docs):
         a, b = find(int(r.master_side)), find(int(r.dupe_side))
         if a != b:
             parent[max(a, b)] = min(a, b)
-    # low-threshold run: band-count prefilter disabled (min_band_matches=1)
+    # low-threshold run: every pair sharing one band key is re-scored
     fast = fast_lsh_dedup(
-        docs, cfg, num_perm=128, num_bands=64, n_docs=500, min_band_matches=1
+        docs, cfg, num_perm=128, num_bands=64, n_docs=500
     ).toPandas()
     got = dict(zip(fast.doc_id, fast.component))
     # pair-level recall of clustering vs exact-path clustering

@@ -13,11 +13,19 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def plan_of(df, execute: bool = True) -> str:
-    # under AQE the physical tree is only final after execution; the noop
-    # writer executes THIS DataFrame's own queryExecution
+    # under AQE the physical tree is only final after execution, so run THIS
+    # DataFrame's own queryExecution: a noop write plans a new one and
+    # leaves this one's adaptive plan at its initial tree
+    # leaves this one's adaptive plan at its initial tree.  A final adaptive
+    # plan prints its final tree, then its initial one: keep the final one
+    qe = df._jdf.queryExecution()
     if execute:
-        df.write.format("noop").mode("overwrite").save()
-    return df._jdf.queryExecution().executedPlan().toString()
+        qe.toRdd().count()
+    plan = qe.executedPlan().toString()
+    if execute and plan.startswith("AdaptiveSparkPlan"):
+        assert plan.startswith("AdaptiveSparkPlan isFinalPlan=true"), plan
+        plan = plan.split("== Initial Plan ==")[0]
+    return plan
 
 
 @pytest.fixture(scope="module")
@@ -316,9 +324,37 @@ def test_generator_union_plan_has_no_cartesian(spark, docs):
     assert "BatchEvalPython" not in plan, plan
 
 
-def final_plan(df) -> str:
-    # an adaptive plan prints its final tree, then its initial one
-    return plan_of(df).split("== Initial Plan ==")[0]
+def test_union_plan_reads_two_caches_and_no_stage_table(spark, docs, monkeypatch):
+    # the plain union plan keeps exactly two cache entries under its edges
+    # (the terms and the vectors the cosine leg reads) and scans no parquet
+    # but its input: no stage table of a checkpointed run leaks into it
+    from string_grouper_spark.operators import grouping
+    from string_grouper_spark.operators.dedup import near_duplicate_clusters_scale
+
+    plans = []
+    orig = grouping.connected_components
+
+    def capture(edges, nodes, *args, **kwargs):
+        plans.append(plan_of(edges))
+        return orig(edges, nodes, *args, **kwargs)
+
+    monkeypatch.setattr(grouping, "connected_components", capture)
+    cfg = MatchConfig(min_similarity=0.8, max_n_matches=1_000_000)
+    near_duplicate_clusters_scale(
+        docs, cfg, generators=("minhash", "substring", "suffix"),
+        num_bands=16, salt_above="auto", anchor_len=48,
+    )
+    assert len(plans) == 1
+    plan = plans[0]
+    cached = {
+        re.sub(r"#\d+L?", "", cols)
+        for cols in re.findall(r"InMemoryRelation \[([^\]]*)\]", plan)
+    }
+    assert cached == {"doc_id, codes, tfs, scodes", "doc_id, codes, ws, bands"}, plan
+    scans = re.findall(r"FileScan parquet .*?Location: [^\[]*\[([^\]]*)\]", plan)
+    assert scans and set(scans) == {f"file:{SF_DIR}/documents.parquet"}, plan
+
+
 
 
 def checkpoint_sources(monkeypatch, df_type) -> list:
@@ -351,7 +387,7 @@ def test_suffix_array_scan_is_one_hash_exchange(spark, docs, monkeypatch):
     seen = checkpoint_sources(monkeypatch, type(docs))
     suffix_array_spans(docs, MatchConfig(), min_len=16, truncate=48)
     assert len(seen) == 1
-    plan = final_plan(seen[0])
+    plan = plan_of(seen[0])
     lines = plan.splitlines()
     scan = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
     below = "\n".join(lines[scan + 1:])
@@ -397,7 +433,7 @@ def test_substring_containment_is_one_python_pass(spark, docs, monkeypatch):
 
     seen = checkpoint_sources(monkeypatch, type(docs))
     out = substring_containment(docs, MatchConfig(), anchor_len=16)
-    plans = [final_plan(df) for df in [out] + seen]
+    plans = [plan_of(df) for df in [out] + seen]
     nodes = [n for p in plans for n in python_nodes(p)]
     assert nodes == ["MapInArrow"], plans
 
