@@ -109,16 +109,6 @@ def build_postings(tf_df: DataFrame, idf_df: DataFrame, cfg: MatchConfig) -> Dat
     return out
 
 
-def tfidf_postings_from_tokens(
-    tokens: DataFrame, n_docs: int, cfg: MatchConfig
-) -> DataFrame:
-    """Self-corpus postings from an already-tokenized (doc_id, gram) table —
-    lets pipelines tokenize ONCE and derive both LSH signatures and postings
-    from the same (persisted) token DataFrame."""
-    idf = corpus_idf(tokens, None, n_docs)
-    return build_postings(term_frequencies(tokens), idf, cfg)
-
-
 def tfidf_postings(
     master: DataFrame,
     duplicates: Optional[DataFrame],

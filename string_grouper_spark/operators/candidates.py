@@ -2,22 +2,25 @@
 
 The reference scores ALL n×m pairs in a blocked C++ matmul
 (/root/reference/string_grouper/string_grouper.py:709-752) — impossible at
-10^12 documents.  Here three interchangeable generators emit a small
+10^12 documents.  Here interchangeable generators emit a small
 candidate-pair set which the EXACT TF-IDF re-scorer
-(operators/similarity.score_pairs) then scores; recall vs the exact path is
-the tested contract (>= 0.99 at matched config).
+(``plans.fast_dedup.rescore_candidates_with_vecs``) then scores; recall vs
+the exact path is the tested contract (>= 0.99 at matched config).
 
-All signature kernels are Arrow-vectorized Python passes over numpy — no
-per-row Python (input_hint requirement).  MinHash gram hashing stays
-JVM-side (xxhash64 inside whole-stage codegen), so its Python only sees
-batches of hash arrays; SimHash packs and mixes its grams inside its one
-numpy pass over the text.
+MinHash signatures and band keys are computed by the flagship's vector
+pass (``plans.fast_dedup.doc_vectors``) and paired by
+``plans.fast_dedup.lsh_band_candidates``; this module holds the bucket
+kernels that pairing runs on (grouped one-shuffle pairing, the salted
+self-join, the flat-table cap) plus the SimHash, Jaccard and substring
+generators.  All signature kernels are Arrow-vectorized Python passes over
+numpy — no per-row Python (input_hint requirement).
 
 Skew design: band/bucket keys are Zipf-distributed on web text.  Buckets
 larger than ``max_bucket_size`` are dropped from candidate generation (they
 are near-stop-gram buckets that would contribute |bucket|^2 join rows); the
-drop count is observable via ``lsh_bucket_stats`` so recall accounting stays
-honest.  AQE skew-join splitting handles residual imbalance.
+drops are measured by ``auto_skew_policy`` / ``bucket_drop_stats`` so
+recall accounting stays honest.  AQE skew-join splitting handles residual
+imbalance.
 """
 
 from __future__ import annotations
@@ -29,7 +32,6 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ..config import MatchConfig
@@ -37,102 +39,8 @@ from ..functions.tfidf import DOC, GRAM, tokenize
 from .similarity import LEFT, RIGHT
 
 # --------------------------------------------------------------------------
-# MinHash + banded LSH
+# LSH bucket pairing and skew accounting
 # --------------------------------------------------------------------------
-
-_MINHASH_SEED = 0x5EED_0001
-
-
-def _perm_params(num_perm: int, seed: int = _MINHASH_SEED) -> np.ndarray:
-    """Deterministic odd multipliers for multiply-shift universal hashing."""
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, 2**62, size=num_perm, dtype=np.int64).astype(np.uint64)
-    return (a * np.uint64(2) + np.uint64(1))  # force odd
-
-
-def _band_mixers(num_bands: int, seed: int = _MINHASH_SEED + 7) -> np.ndarray:
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, 2**62, size=num_bands, dtype=np.int64).astype(np.uint64)
-    return (a * np.uint64(2) + np.uint64(1))
-
-
-def make_minhash_band_udf(num_perm: int, num_bands: int):
-    """Returns a pandas UDF: array<long> gram-hashes -> array<long> band keys.
-
-    Signature: sig_i = min over grams of (a_i * h) in uint64 multiply-shift.
-    Band key b_j = mix of sig[j*r:(j+1)*r] (r = num_perm // num_bands),
-    combined with the band index so keys never collide across bands.
-    """
-    assert num_perm % num_bands == 0
-    r = num_perm // num_bands
-    perms = _perm_params(num_perm)
-    mixers = _band_mixers(num_bands)
-
-    @pandas_udf(ArrayType(LongType()))
-    def band_keys(hashes: pd.Series) -> pd.Series:
-        out = []
-        with np.errstate(over="ignore"):
-            for h in hashes:
-                if h is None or len(h) == 0:
-                    out.append(None)
-                    continue
-                hv = np.asarray(h, dtype=np.int64).astype(np.uint64)
-                # (n_grams, num_perm) products; min over grams -> signature
-                sig = (hv[:, None] * perms[None, :]).min(axis=0)
-                bands = sig.reshape(num_bands, r)
-                # order-dependent mix within each band, then fold
-                acc = np.zeros(num_bands, dtype=np.uint64)
-                for col in range(r):
-                    acc = (acc * np.uint64(0x9E3779B97F4A7C15)) ^ bands[:, col]
-                acc = (acc * mixers) ^ np.arange(num_bands, dtype=np.uint64)
-                out.append(acc.astype(np.int64))
-        return pd.Series(out)
-
-    return band_keys
-
-
-def minhash_bands_from_tokens(
-    tokens: DataFrame, num_perm: int = 128, num_bands: int = 64
-) -> DataFrame:
-    """(doc_id, band, key) from an exploded (doc_id, gram) table.
-
-    Single shuffle: ``collect_set`` of gram HASHES dedups map-side (hashing
-    before the shuffle also halves the shuffled bytes vs shipping strings).
-    """
-    gram_hashes = (
-        tokens.select(DOC, F.xxhash64(GRAM).alias("gh"))
-        .groupBy(DOC)
-        .agg(F.collect_set("gh").alias("ghs"))
-    )
-    udf = make_minhash_band_udf(num_perm, num_bands)
-    sigs = gram_hashes.select(DOC, udf(F.col("ghs")).alias("bands")).where(
-        F.col("bands").isNotNull()
-    )
-    return sigs.select(DOC, F.posexplode("bands").alias("band", "key"))
-
-
-def minhash_bands(
-    docs: DataFrame,
-    cfg: MatchConfig,
-    num_perm: int = 128,
-    num_bands: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(doc_id, band, key): one row per (doc, band) — the LSH bucket table."""
-    tokens = tokenize(docs, cfg, text_col=text_col, id_col=id_col)
-    return minhash_bands_from_tokens(tokens, num_perm, num_bands)
-
-
-def lsh_bucket_stats(bands: DataFrame) -> DataFrame:
-    """Bucket-size histogram for skew accounting/logging."""
-    return (
-        bands.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .groupBy("bucket_size")
-        .agg(F.count(F.lit(1)).alias("n_buckets"))
-        .orderBy("bucket_size")
-    )
 
 
 def bucket_drop_stats(
@@ -387,116 +295,6 @@ def capped_buckets(
         .select(*key_cols)
     )
     return buckets.join(hot, list(key_cols), "left_anti")
-
-
-def _bucket_pairs(
-    buckets: DataFrame,
-    max_bucket_size: Optional[int],
-    salt_above: Optional[int] = None,
-) -> DataFrame:
-    """Bucket table (cols: band, key, doc_id) -> distinct pairs l<r.
-
-    Buckets above ``max_bucket_size`` are dropped (hot-key guard): a bucket
-    of size s contributes s^2/2 join rows, so one megabucket can dominate the
-    whole job.  Drop impact is observable via ``bucket_drop_stats`` — never
-    silently assumed.  Default strategy = grouped map-side pairing (one
-    shuffle); with ``salt_above`` set, the salted self-join spreads hot
-    buckets over many tasks instead (``_salted_self_pairs``);
-    ``salt_above='auto'`` picks the threshold from the measured histogram
-    (``auto_skew_policy``).
-    """
-    if salt_above == "auto":
-        salt_above = auto_skew_policy(buckets, max_bucket_size)["salt_above"]
-    if salt_above is None:
-        return _grouped_bucket_pairs(buckets, max_bucket_size).dropDuplicates(
-            [LEFT, RIGHT]
-        )
-    return _salted_self_pairs(
-        buckets, salt_above, max_bucket_size=max_bucket_size
-    ).dropDuplicates([LEFT, RIGHT])
-
-
-def minhash_candidates(
-    docs: DataFrame,
-    cfg: MatchConfig,
-    num_perm: int = 128,
-    num_bands: int = 64,
-    max_bucket_size: Optional[int] = 1000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """MinHash-LSH candidate pairs (master_side < dupe_side).
-
-    With r = num_perm/num_bands rows per band, a pair with gram-Jaccard j is
-    emitted with probability 1-(1-j^r)^num_bands; defaults (r=2, b=64) give
-    >0.99 recall for j >= 0.27 — tuned for cosine-0.5-and-up near-dups.
-    """
-    bands = minhash_bands(docs, cfg, num_perm, num_bands, text_col, id_col)
-    return _bucket_pairs(bands, max_bucket_size)
-
-
-def minhash_candidates_bipartite(
-    master: DataFrame,
-    duplicates: DataFrame,
-    cfg: MatchConfig,
-    num_perm: int = 128,
-    num_bands: int = 64,
-    max_bucket_size: Optional[int] = 1000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """MinHash-LSH candidates ACROSS two corpora: (master_side, dupe_side).
-
-    The incremental-dedup workflow at scale: match a NEW batch
-    (``duplicates``) against an EXISTING corpus (``master``) without the
-    all-pairs join — both sides band with the same seeded permutations, so
-    a cross-corpus pair collides exactly as it would in a self-join.
-    ``max_bucket_size`` caps each side's bucket independently (a bucket
-    contributes |m| * |d| join rows).
-    """
-    bm = minhash_bands(master, cfg, num_perm, num_bands, text_col, id_col)
-    bd = minhash_bands(duplicates, cfg, num_perm, num_bands, text_col, id_col)
-
-    # cap via count-agg + broadcast anti-join — never materializes a bucket
-    # (capped_buckets); the flat table feeds the equi-join directly
-    l = capped_buckets(bm, max_bucket_size).select(
-        "band", "key", F.col(DOC).alias(LEFT)
-    )
-    r = capped_buckets(bd, max_bucket_size).select(
-        "band", "key", F.col(DOC).alias(RIGHT)
-    )
-    return l.join(r, ["band", "key"]).select(LEFT, RIGHT).dropDuplicates([LEFT, RIGHT])
-
-
-def rescored_pairs_bipartite(
-    master: DataFrame,
-    duplicates: DataFrame,
-    candidates: DataFrame,
-    cfg: MatchConfig,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_master: Optional[int] = None,
-    n_duplicates: Optional[int] = None,
-) -> DataFrame:
-    """Exact TF-IDF cosine on cross-corpus candidates; sim >= min_similarity.
-
-    Corpus fit spans BOTH sides (reference semantics: one vocabulary/IDF
-    over master+duplicates, SG:699-707), so scores equal the exact
-    two-series path's.
-    """
-    from ..functions.tfidf import tfidf_postings
-    from .similarity import SIM, score_pairs_packed
-
-    m_post, d_post, _ = tfidf_postings(
-        master.select(F.col(id_col).alias(DOC), F.col(text_col).alias("text")),
-        duplicates.select(F.col(id_col).alias(DOC), F.col(text_col).alias("text")),
-        cfg,
-        id_col=DOC,
-        n_master=n_master,
-        n_duplicates=n_duplicates,
-    )
-    scored = score_pairs_packed(candidates, m_post, d_post)
-    return scored.where(F.col(SIM) >= float(cfg.min_similarity))
 
 
 # --------------------------------------------------------------------------
@@ -1081,35 +879,3 @@ def substring_containment_bipartite(
         .where(F.expr("locate(inner_norm, outer_norm) > 0"))
     )
     return verified.select("inner_id", "outer_id")
-
-
-# --------------------------------------------------------------------------
-# Candidate -> exact-rescore -> pairs (the scale path's full pipeline)
-# --------------------------------------------------------------------------
-
-def rescored_pairs(
-    docs: DataFrame,
-    candidates: DataFrame,
-    cfg: MatchConfig,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_docs: Optional[int] = None,
-    postings: Optional[DataFrame] = None,
-) -> DataFrame:
-    """Exact TF-IDF cosine on candidate pairs only; (l, r, similarity) with
-    sim >= cfg.min_similarity.  This is what replaces the all-pairs join at
-    web scale: LSH narrows, exact math decides.  Scoring uses the packed
-    Arrow kernel (similarity.score_pairs_packed): O(|cand| * doc_len),
-    independent of gram document frequency — no stop-gram blowup.
-
-    Pass ``postings`` to reuse an existing posting table (avoids
-    re-tokenizing when the pipeline already built one)."""
-    from ..functions.tfidf import tfidf_postings
-    from .similarity import SIM, score_pairs_packed
-
-    if postings is None:
-        postings, _, _ = tfidf_postings(
-            docs, None, cfg, text_col=text_col, id_col=id_col, n_master=n_docs
-        )
-    scored = score_pairs_packed(candidates, postings)
-    return scored.where(F.col(SIM) >= float(cfg.min_similarity))

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from ..config import MatchConfig
 from .grouping import NODE, group_labels
 from .matching import match_edges
-from .similarity import LEFT, RIGHT, SIM
+from .similarity import LEFT, RIGHT
 
 
 _INTEGRAL_DTYPES = ("tinyint", "smallint", "int", "bigint")
@@ -159,62 +159,6 @@ def near_duplicate_clusters(
         n_master=n_docs,
     )
     return group_labels(edges, ids, cfg).withColumnRenamed(NODE, id_col)
-
-
-def lsh_dedup_clusters(
-    docs: DataFrame,
-    cfg: Optional[MatchConfig] = None,
-    num_perm: int = 128,
-    num_bands: int = 64,
-    max_bucket_size: Optional[int] = 1000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_docs: Optional[int] = None,
-    salt_above: Optional[int] = None,
-    drop_stats: Optional[dict] = None,
-) -> DataFrame:
-    """MinHash-LSH candidates -> exact TF-IDF re-score -> connected
-    components over the generic token and posting tables (the web-scale
-    flagship is ``plans.fast_dedup.fast_lsh_dedup``).  Same output
-    contract as ``near_duplicate_clusters`` but never materializes the
-    all-pairs gram join — cost scales with candidate count, not corpus^2.
-
-    Returns (<id_col>, component) with component = min doc id in cluster.
-
-    Plan economy: the corpus is tokenized ONCE (persisted) and both the
-    MinHash signatures and the exact-re-score postings derive from that same
-    token table — tokenization (the only Python UDF in the path, for NFKD)
-    is the most expensive narrow stage, so it must not run twice.
-    """
-    from ..functions.tfidf import tfidf_postings_from_tokens, tokenize
-    from .candidates import (
-        _bucket_pairs,
-        bucket_drop_stats,
-        minhash_bands_from_tokens,
-        rescored_pairs,
-    )
-    from .grouping import connected_components
-
-    cfg = cfg or MatchConfig()
-    if n_docs is None:
-        n_docs = docs.count()
-    tokens = tokenize(docs, cfg, text_col=text_col, id_col=id_col).persist()
-    try:
-        bands = minhash_bands_from_tokens(tokens, num_perm, num_bands)
-        if drop_stats is not None:
-            drop_stats.update(bucket_drop_stats(bands, max_bucket_size))
-        cand = _bucket_pairs(bands, max_bucket_size, salt_above=salt_above)
-        postings = tfidf_postings_from_tokens(tokens, n_docs, cfg)
-        pairs = rescored_pairs(docs, cand, cfg, postings=postings)
-        nodes = docs.select(F.col(id_col))
-        return connected_components(
-            pairs.select(F.col(LEFT).alias("u"), F.col(RIGHT).alias("v")), nodes
-        ).withColumnRenamed(NODE, id_col)
-    finally:
-        # connected_components has run every job over the edges before it
-        # returns (the bounded fetch, and any star rounds), so the token
-        # cache is no longer needed by the returned DataFrame
-        tokens.unpersist()
 
 
 def near_duplicate_clusters_scale(

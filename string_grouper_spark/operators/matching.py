@@ -22,7 +22,6 @@ from .similarity import (
     LEFT,
     RIGHT,
     SIM,
-    complete_zero_matches,
     cosine_join,
     symmetrize,
     top_n_per_left,
@@ -109,25 +108,6 @@ def match_edges(
     else:
         edges = cosine_join(m_post, d_post, cfg.min_similarity, self_join=False)
         edges = top_n_per_left(edges, cfg.max_n_matches)
-    return edges
-
-
-def match_strings_edges(
-    master: DataFrame,
-    duplicates: Optional[DataFrame],
-    cfg: MatchConfig,
-    include_zeroes: Optional[bool] = None,
-    **kwargs,
-) -> DataFrame:
-    """A1 ``match_strings`` as an edge list, with zero-similarity completion
-    when min_similarity <= 0 (reference get_matches, SG:480-488)."""
-    edges = match_edges(master, duplicates, cfg, **kwargs)
-    include_zeroes = cfg.include_zeroes if include_zeroes is None else include_zeroes
-    if cfg.min_similarity <= 0 and include_zeroes:
-        id_col = kwargs.get("id_col", "row_id")
-        m_ids = master.select(id_col)
-        d_ids = (duplicates if duplicates is not None else master).select(id_col)
-        edges = complete_zero_matches(edges, m_ids, d_ids)
     return edges
 
 

@@ -28,9 +28,9 @@ Scale notes (100 TB):
   * The gram join is Zipf-skewed.  ``prune_hot_grams`` caps candidate
     generation; exact re-scoring of surviving pairs never prunes.
   * AQE skew-join splitting is assumed ON (set in session helper).
-  * For web-scale inputs use the LSH candidate generators
-    (operators/candidates.py) and re-score only candidates via
-    ``score_pairs`` below — the all-pairs gram join is the exact/small path.
+  * For web-scale inputs use the flagship LSH plan
+    (``plans.fast_dedup``), which re-scores only candidate pairs on packed
+    per-doc vectors — the all-pairs gram join is the exact/small path.
 """
 
 from __future__ import annotations
@@ -44,7 +44,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
-from ..config import MatchConfig
 from ..functions.tfidf import DOC, GRAM, W
 
 LEFT = "master_side"
@@ -181,23 +180,6 @@ def symmetrize(edges: DataFrame, node_ids: DataFrame) -> DataFrame:
     )
 
 
-def complete_zero_matches(
-    edges: DataFrame, master_ids: DataFrame, dupe_ids: DataFrame
-) -> DataFrame:
-    """Zero-similarity completion (reference SG:765-781, include_zeroes).
-
-    Cross product of all id pairs minus matched pairs, similarity = 0.0.
-    Semantically cartesian — only sane at small scale, same as the reference
-    (which guards via max_n_matches; our pandas layer reproduces that guard).
-    """
-    mc, dc = master_ids.columns[0], dupe_ids.columns[0]
-    all_pairs = master_ids.select(F.col(mc).alias(LEFT)).crossJoin(
-        dupe_ids.select(F.col(dc).alias(RIGHT))
-    )
-    missing = all_pairs.join(edges.select(LEFT, RIGHT), [LEFT, RIGHT], "left_anti")
-    return edges.unionAll(missing.withColumn(SIM, F.lit(0.0)))
-
-
 def pack_postings(postings: DataFrame) -> DataFrame:
     """(doc_id, gram, w) -> (doc_id, ghs: sorted array<long>, ws: array<double>).
 
@@ -262,64 +244,27 @@ def _sparse_dot(g1: pd.Series, w1: pd.Series, g2: pd.Series, w2: pd.Series) -> p
 _rescore_dot = pandas_udf(_sparse_dot, DoubleType()).asNondeterministic()
 
 
-def score_pairs_packed(
-    candidates: DataFrame,
-    postings_l: DataFrame,
-    postings_r: Optional[DataFrame] = None,
-) -> DataFrame:
-    """Exact cosine re-scoring via packed arrays — the SCALE path.
+def score_pairs_packed(candidates: DataFrame, postings: DataFrame) -> DataFrame:
+    """Exact cosine re-scoring of candidate pairs within ONE corpus's
+    posting table, via packed arrays.
 
-    Unlike ``score_pairs`` (gram-equi-join), this never multiplies candidate
-    rows by gram count: two doc_id joins attach each side's packed vector,
-    then an Arrow kernel computes the dot map-side.  Cost is
-    O(|candidates| * avg_doc_len), independent of gram document frequency —
-    at web scale this is the difference between a bounded job and a
-    stop-gram blowup.
+    A gram-equi-join re-score would multiply candidate rows by gram count;
+    here two doc_id joins attach each side's packed vector, then an Arrow
+    kernel computes the dot map-side.  Cost is O(|candidates| *
+    avg_doc_len), independent of gram document frequency — at web scale
+    this is the difference between a bounded job and a stop-gram blowup.
     """
     cand = candidates.select(LEFT, RIGHT).dropDuplicates([LEFT, RIGHT])
-    packed_l = pack_postings(postings_l)
-    # pack ONCE for self-scoring: both join sides reference the same plan
-    # (and the same cache if the caller persisted it)
-    packed_r = pack_postings(postings_r) if postings_r is not None else packed_l
-    pl = packed_l.select(
+    # pack ONCE: both join sides reference the same plan (and the same
+    # cache if the caller persisted it)
+    packed = pack_postings(postings)
+    pl = packed.select(
         F.col(DOC).alias(LEFT), F.col("ghs").alias("_g1"), F.col("ws").alias("_w1")
     )
-    pr = packed_r.select(
+    pr = packed.select(
         F.col(DOC).alias(RIGHT), F.col("ghs").alias("_g2"), F.col("ws").alias("_w2")
     )
     joined = cand.join(pl, LEFT, "left").join(pr, RIGHT, "left")
     return joined.select(
         LEFT, RIGHT, _rescore_dot("_g1", "_w1", "_g2", "_w2").alias(SIM)
-    )
-
-
-def score_pairs(
-    candidates: DataFrame,
-    postings_l: DataFrame,
-    postings_r: Optional[DataFrame] = None,
-) -> DataFrame:
-    """Exact cosine re-scoring of an explicit candidate-pair set.
-
-    ``candidates``: (master_side, dupe_side).  This is the scale path: LSH
-    generates candidates, this computes the exact TF-IDF cosine for just
-    those pairs.  Implementation: semi-join postings down to participating
-    docs, then join through the candidate edge list gram-by-gram.
-    """
-    postings_r = postings_r if postings_r is not None else postings_l
-    cand = candidates.select(LEFT, RIGHT).dropDuplicates([LEFT, RIGHT])
-    lp = postings_l.join(
-        cand.select(F.col(LEFT).alias(DOC)).distinct(), DOC, "left_semi"
-    ).select(F.col(DOC).alias(LEFT), GRAM, F.col(W).alias("_wl"))
-    rp = postings_r.join(
-        cand.select(F.col(RIGHT).alias(DOC)).distinct(), DOC, "left_semi"
-    ).select(F.col(DOC).alias(RIGHT), GRAM, F.col(W).alias("_wr"))
-    prods = (
-        cand.join(lp, LEFT)
-        .join(rp, [RIGHT, GRAM])
-        .groupBy(LEFT, RIGHT)
-        .agg(F.sum(F.col("_wl") * F.col("_wr")).alias(SIM))
-    )
-    # candidate pairs sharing no gram have similarity 0
-    return cand.join(prods, [LEFT, RIGHT], "left").withColumn(
-        SIM, F.coalesce(F.col(SIM), F.lit(0.0))
     )

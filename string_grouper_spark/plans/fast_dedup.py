@@ -1,11 +1,13 @@
-"""Shuffle-minimal physical plan for the flagship LSH dedup pipeline.
+"""Shuffle-minimal physical plan for the flagship LSH dedup pipeline — the
+library's one MinHash-LSH engine.
 
-The generic operators (functions/tfidf.py + operators/candidates.py) build
-TF-IDF through exploded posting tables — 4 wide stages over |docs|*|doc_len|
-rows.  Profiling on local[8..32] showed those shuffles are memory-bandwidth
-bound: they stop scaling with cores long before the CPU does.
+The exact path (functions/tfidf.py + operators/matching.py, behind
+``operators.dedup.near_duplicate_clusters``) builds TF-IDF through exploded
+posting tables — 4 wide stages over |docs|*|doc_len| rows.  Profiling on
+local[8..32] showed those shuffles are memory-bandwidth bound: they stop
+scaling with cores long before the CPU does.
 
-This plan exploits a property of CHARACTER n-grams the generic path can't
+This plan exploits a property of CHARACTER n-grams the exact path can't
 assume: the vocabulary is bounded (ASCII-folded 3-grams: <= ~343k distinct
 codes, and a gram IS its bytes), so
 
@@ -16,7 +18,10 @@ codes, and a gram IS its bytes), so
      (map-side partial agg collapses repeats);
   3. IDF is collected (bounded!) and BROADCAST as two sorted numpy arrays;
      weights + L2 + MinHash bands all happen in a second narrow pass;
-  4. exact re-scoring joins candidates to the per-doc packed vectors by
+  4. the band keys are exploded into one key-only bucket table
+     (``_bucket_table``), paired within a corpus (``lsh_band_candidates``)
+     or across two (``_cross_bucket_pairs``);
+  5. exact re-scoring joins candidates to the per-doc packed vectors by
      doc_id and runs the same `_sparse_dot` Arrow kernel.
 
 Numeric contract: identical tf / sklearn-idf / L2 math as functions/tfidf.py
@@ -24,10 +29,14 @@ Numeric contract: identical tf / sklearn-idf / L2 math as functions/tfidf.py
 = raw n-gram bytes instead of xxhash64(gram) — collision-free, cheaper, and
 exactly the reference's vocabulary (string_grouper.py:699-707).
 
-Scope: ngram_size <= 8 (codes must fit a uint64); self-join
-(``fast_lsh_dedup``) and master-vs-new-batch (``fast_lsh_dedup_bipartite``)
-corpora — the shapes the web-scale dedup rule needs.  Everything else uses
-the generic path.
+Scope: ngram_size <= 8 (codes must fit a uint64), a vocabulary of at most
+8,000,000 grams (the broadcast IDF bound) and byte n-grams (non-ASCII text
+with ``normalize_to_ascii=False`` is shingled by UTF-8 bytes, not
+characters); self-join (``fast_lsh_dedup``) and master-vs-new-batch
+(``fast_lsh_dedup_bipartite``) corpora — the shapes the web-scale dedup
+rule needs.  Outside that scope the exact
+``operators.dedup.near_duplicate_clusters`` is the route, and the plan's
+errors name it.
 """
 
 from __future__ import annotations
@@ -50,7 +59,13 @@ from pyspark.sql.types import FloatType, IntegerType
 
 from ..config import MatchConfig
 from ..functions.normalize import py_normalize
-from ..operators.candidates import _band_mixers, _perm_params
+from ..operators.candidates import (
+    _grouped_bucket_pairs,
+    _salted_self_pairs,
+    auto_skew_policy,
+    bucket_drop_stats,
+    capped_buckets,
+)
 from ..operators.similarity import LEFT, RIGHT, SIM, _rescore_dot
 
 
@@ -79,7 +94,7 @@ def _term_schema(ngram_size: int) -> StructType:
 def _vec_schema(ngram_size: int, weight_dtype: str = "float64") -> StructType:
     # ``weight_dtype`` mirrors the reference's ``tfidf_matrix_dtype`` option
     # (string_grouper.py:161-164,190: float32 allowed for "faster processing
-    # and a smaller memory footprint").  Unlike the generic path — which only
+    # and a smaller memory footprint").  Unlike the exact path — which only
     # ROUNDS through float32 for numeric parity — the fast plan actually
     # SHIPS 4-byte floats, cutting the ws payload of the candidate re-score
     # (the flagship's dominant shuffle) in half.
@@ -179,7 +194,10 @@ def doc_term_arrays(
     reference semantics for short strings) or word-n-gram hashes
     (``shingle='word'``, document-scale practice)."""
     if cfg.ngram_size > 8:
-        raise ValueError("fast plan supports ngram_size <= 8 (uint64 gram codes)")
+        raise ValueError(
+            f"fast plan supports ngram_size <= 8 (uint64 gram codes), got "
+            f"{cfg.ngram_size}; use operators.dedup.near_duplicate_clusters"
+        )
     if shingle not in ("char", "word"):
         raise ValueError(shingle)
 
@@ -233,12 +251,28 @@ def _collect_idf(spark: SparkSession, terms: DataFrame, n_docs: int,
     if len(pdf) > max_vocab:
         raise ValueError(
             f"vocabulary exceeds broadcastable bound {max_vocab}; "
-            "use the generic posting-join path"
+            "use operators.dedup.near_duplicate_clusters"
         )
     pdf = pdf.sort_values("code")
     codes = pdf["code"].to_numpy(dtype=np.int64)
     idf = (np.log((1.0 + n_docs) / (1.0 + pdf["df"].to_numpy(dtype=np.float64))) + 1.0)
     return spark.sparkContext.broadcast((codes, idf))
+
+
+_MINHASH_SEED = 0x5EED_0001
+
+
+def _perm_params(num_perm: int, seed: int = _MINHASH_SEED) -> np.ndarray:
+    """Deterministic odd multipliers for multiply-shift universal hashing."""
+    rng = np.random.RandomState(seed)
+    a = rng.randint(1, 2**62, size=num_perm, dtype=np.int64).astype(np.uint64)
+    return (a * np.uint64(2) + np.uint64(1))  # force odd
+
+
+def _band_mixers(num_bands: int, seed: int = _MINHASH_SEED + 7) -> np.ndarray:
+    rng = np.random.RandomState(seed)
+    a = rng.randint(1, 2**62, size=num_bands, dtype=np.int64).astype(np.uint64)
+    return (a * np.uint64(2) + np.uint64(1))
 
 
 def doc_vectors(
@@ -274,7 +308,7 @@ def doc_vectors(
 
     out_dtype = np.int32 if cfg.ngram_size <= 3 else np.int64  # _code_type
     # reference tfidf_matrix_dtype semantics: weights are computed in f64
-    # (identical math to the generic path) then stored at the configured
+    # (identical math to the exact path) then stored at the configured
     # precision — see _vec_schema for the shuffle-byte rationale
     w_dtype = np.float32 if cfg.tfidf_matrix_dtype == "float32" else np.float64
 
@@ -320,8 +354,8 @@ def doc_vectors(
                     if scodes is None or len(scodes) == 0:
                         bands_col.append(None)
                         continue
-                    # minhash over shingle codes (multiply-shift, same
-                    # params as operators.candidates for a given num_perm)
+                    # minhash over shingle codes (multiply-shift, seeded
+                    # params: equal for every call with the same num_perm)
                     cu = np.asarray(scodes, dtype=np.int64).astype(np.uint64)
                     sig = (cu[:, None] * perms[None, :]).min(axis=0)
                     bands = sig.reshape(num_bands, r)
@@ -340,6 +374,35 @@ def doc_vectors(
             )
 
     return terms.mapInPandas(run, _vec_schema(cfg.ngram_size, cfg.tfidf_matrix_dtype))
+
+
+def _bucket_table(vecs: DataFrame) -> DataFrame:
+    """(doc_id, key): one row per (doc, band key) of a ``doc_vectors``
+    table — the LSH bucket table every MinHash pairing reads.
+
+    Key-only: the band key already folds the band INDEX into the 64-bit
+    hash (doc_vectors: ``(acc * mixers) ^ arange``), so carrying a separate
+    band column through the bucket shuffle is redundant.  Measured at 120k
+    docs/16 bands: 22.6 -> 21.4 MB bucket shuffle (lz4 compresses the
+    16-valued ordinal to ~nothing — the collect_list payloads dominate),
+    identical pair set (2,915,711).  A cross-band key collision (~2^-64)
+    would only MERGE two buckets, adding spurious candidates that the exact
+    re-score filters."""
+    return vecs.where(F.col("bands").isNotNull()).select(
+        "doc_id", F.explode("bands").alias("key")
+    )
+
+
+def _cross_bucket_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Distinct (master_side, dupe_side) pairs of two corpora's (capped)
+    bucket tables: a key equi-join, one candidate per pair however many
+    bands it collides in."""
+    return (
+        left.select("key", F.col("doc_id").alias(LEFT))
+        .join(right.select("key", F.col("doc_id").alias(RIGHT)), ["key"])
+        .select(LEFT, RIGHT)
+        .dropDuplicates([LEFT, RIGHT])
+    )
 
 
 def lsh_band_candidates(
@@ -364,25 +427,8 @@ def lsh_band_candidates(
     emitted pair set.  A ``drop_stats`` dict receives the accounting."""
     import logging
 
-    from ..operators.candidates import (
-        _grouped_bucket_pairs,
-        _salted_self_pairs,
-        auto_skew_policy,
-        bucket_drop_stats,
-    )
-
     log = logging.getLogger("string_grouper_spark.skew")
-    # key-only bucket table: the band key already folds the band INDEX
-    # into the 64-bit hash (doc_vectors: ``(acc * mixers) ^ arange``), so
-    # carrying a separate band column through the bucket shuffle is
-    # redundant.  Measured at 120k docs/16 bands: 22.6 -> 21.4 MB bucket
-    # shuffle (lz4 compresses the 16-valued ordinal to ~nothing — the
-    # collect_list payloads dominate), identical pair set (2,915,711).
-    # A cross-band key collision (~2^-64) would only MERGE two buckets,
-    # adding spurious candidates that the exact re-score filters.
-    buckets = vecs.where(F.col("bands").isNotNull()).select(
-        "doc_id", F.explode("bands").alias("key")
-    )
+    buckets = _bucket_table(vecs)
     kc = ("key",)
     has_drops = False
     if salt_above == "auto":
@@ -507,8 +553,9 @@ def fast_lsh_dedup_bipartite(
         independently (a bucket contributes |m|x|d| join rows).
 
     Returns (master_side, dupe_side, similarity) with
-    sim >= cfg.min_similarity — the candidate-generated sibling of
-    ``operators.candidates.rescored_pairs_bipartite``.
+    sim >= cfg.min_similarity: the exact two-series path's pairs that share
+    a band key.  ``drop_stats`` (a dict) receives each side's
+    ``bucket_drop_stats`` under ``"master"`` and ``"duplicates"``.
     """
     import logging
 
@@ -537,28 +584,8 @@ def fast_lsh_dedup_bipartite(
             shingle_words=shingle_words, idf_bc=idf_bc,
         ).persist()
 
-        def buckets_of(vecs: DataFrame) -> DataFrame:
-            # key-only buckets — see lsh_band_candidates: the key folds the band
-            # index, so the band column would be redundant shuffle bytes.
-            # Cap via count-agg + broadcast anti-join: never materializes a
-            # megabucket (candidates.capped_buckets).
-            from ..operators.candidates import capped_buckets
-
-            b = vecs.where(F.col("bands").isNotNull()).select(
-                "doc_id", F.explode("bands").alias("key")
-            )
-            return capped_buckets(b, max_bucket_size, key_cols=("key",))
-
-        bm, bd = buckets_of(vecs_m), buckets_of(vecs_d)
+        raw_m, raw_d = _bucket_table(vecs_m), _bucket_table(vecs_d)
         if drop_stats is not None:
-            from ..operators.candidates import bucket_drop_stats
-
-            raw_m = vecs_m.where(F.col("bands").isNotNull()).select(
-                "doc_id", F.explode("bands").alias("key")
-            )
-            raw_d = vecs_d.where(F.col("bands").isNotNull()).select(
-                "doc_id", F.explode("bands").alias("key")
-            )
             drop_stats["master"] = bucket_drop_stats(raw_m, max_bucket_size, key_cols=("key",))
             drop_stats["duplicates"] = bucket_drop_stats(raw_d, max_bucket_size, key_cols=("key",))
             if drop_stats["master"]["n_buckets_dropped"] or drop_stats[
@@ -567,11 +594,11 @@ def fast_lsh_dedup_bipartite(
                 logging.getLogger("string_grouper_spark.skew").warning(
                     "bipartite lsh bucket drops: %s", drop_stats
                 )
-        cand = (
-            bm.select("key", F.col("doc_id").alias(LEFT))
-            .join(bd.select("key", F.col("doc_id").alias(RIGHT)), ["key"])
-            .select(LEFT, RIGHT)
-            .dropDuplicates([LEFT, RIGHT])
+        # cap via count-agg + broadcast anti-join: never materializes a
+        # megabucket (candidates.capped_buckets)
+        cand = _cross_bucket_pairs(
+            capped_buckets(raw_m, max_bucket_size, key_cols=("key",)),
+            capped_buckets(raw_d, max_bucket_size, key_cols=("key",)),
         )
         out = _rescore(cand, vecs_m, vecs_d, cfg.min_similarity)
         # materialization fence: downstream actions must not re-run the
@@ -649,14 +676,10 @@ class PrefitLshMatcher:
         self._corpus_buckets = self._buckets(self.corpus_vecs)
 
     def _buckets(self, vecs: DataFrame) -> DataFrame:
-        # key-only buckets — see lsh_band_candidates' derivation; cap without
-        # materializing buckets (candidates.capped_buckets)
-        from ..operators.candidates import capped_buckets
-
-        b = vecs.where(F.col("bands").isNotNull()).select(
-            "doc_id", F.explode("bands").alias("key")
+        # cap without materializing buckets (candidates.capped_buckets)
+        return capped_buckets(
+            _bucket_table(vecs), self.max_bucket_size, key_cols=("key",)
         )
-        return capped_buckets(b, self.max_bucket_size, key_cols=("key",))
 
     def vectorize(self, batch: DataFrame) -> DataFrame:
         """Batch -> packed (doc_id, codes, ws, bands) vectors in the FROZEN
@@ -689,31 +712,20 @@ class PrefitLshMatcher:
         """``match`` over pre-vectorized batch vectors (see ``vectorize``) —
         lets callers that also ``extend`` the corpus pay the narrow passes
         once per batch."""
-        bb = self._buckets(vecs_b)
-        cand = (
-            self._corpus_buckets.select("key", F.col("doc_id").alias(LEFT))
-            .join(bb.select("key", F.col("doc_id").alias(RIGHT)), ["key"])
-            .select(LEFT, RIGHT)
-            .dropDuplicates([LEFT, RIGHT])
-        )
+        cand = _cross_bucket_pairs(self._corpus_buckets, self._buckets(vecs_b))
         out = _rescore(cand, self.corpus_vecs, vecs_b, self.cfg.min_similarity)
         if self_pairs:
-            out = out.unionByName(self._self_pairs_vecs(vecs_b, bb))
+            out = out.unionByName(self._self_pairs_vecs(vecs_b))
         return out
 
     def match_self(self, batch: DataFrame) -> DataFrame:
         """WITHIN-batch near-dup pairs only: (master_side < dupe_side,
         similarity), both sides batch ids, scored in the frozen corpus
         feature space."""
-        vecs_b = self.vectorize(batch)
-        return self._self_pairs_vecs(vecs_b, self._buckets(vecs_b))
+        return self._self_pairs_vecs(self.vectorize(batch))
 
-    def _self_pairs_vecs(self, vecs_b: DataFrame, bb: DataFrame) -> DataFrame:
-        from ..operators.candidates import _grouped_bucket_pairs
-
-        cand = _grouped_bucket_pairs(
-            bb, self.max_bucket_size, key_cols=("key",)
-        ).dropDuplicates([LEFT, RIGHT])
+    def _self_pairs_vecs(self, vecs_b: DataFrame) -> DataFrame:
+        cand = lsh_band_candidates(vecs_b, self.max_bucket_size, salt_above=None)
         return _rescore(cand, vecs_b, vecs_b, self.cfg.min_similarity)
 
     def extend(self, batch: DataFrame) -> None:

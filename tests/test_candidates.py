@@ -10,6 +10,11 @@ from string_grouper_spark.config import MatchConfig
 from string_grouper_spark.operators import candidates as cand
 from string_grouper_spark.operators.dedup import near_duplicate_pairs
 from string_grouper_spark.operators.similarity import LEFT, RIGHT
+from string_grouper_spark.plans.fast_dedup import (
+    doc_vectors,
+    lsh_band_candidates,
+    rescore_candidates_with_vecs,
+)
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -33,8 +38,9 @@ def _recall(got: pd.DataFrame, expected: set) -> float:
 
 def test_minhash_recall(spark, docs, exact_pairs):
     cfg = MatchConfig(min_similarity=0.5, max_n_matches=1_000_000)
-    c = cand.minhash_candidates(docs, cfg, num_perm=128, num_bands=64)
-    got = cand.rescored_pairs(docs, c, cfg).toPandas()
+    vecs = doc_vectors(docs, cfg, 128, 64, n_docs=500)
+    c = lsh_band_candidates(vecs, 1000, salt_above=None)
+    got = rescore_candidates_with_vecs(c, vecs, cfg).toPandas()
     r = _recall(got, exact_pairs)
     assert r >= 0.99, f"minhash recall {r:.4f} over {len(exact_pairs)} pairs"
     # precision is exact by construction: every surviving pair has true sim>=0.5
@@ -67,7 +73,9 @@ def test_simhash_hamming_ball_exhaustive(spark, docs, exact_pairs):
     assert got_pairs == _hamming_ball_pairs(cand.simhash_signatures(docs, cfg).toPandas(), 3)
 
     # and the rescored output stays a subset of the exact >=0.5 pairs
-    got = cand.rescored_pairs(docs, spark.createDataFrame(c), cfg).toPandas()
+    got = rescore_candidates_with_vecs(
+        spark.createDataFrame(c), doc_vectors(docs, cfg, n_docs=500), cfg
+    ).toPandas()
     assert set(zip(got[LEFT], got[RIGHT])) <= exact_pairs
 
 
@@ -82,7 +90,9 @@ def test_simhash_fast_engine_exhaustive_and_useful(spark, docs, exact_pairs):
     got_pairs = set(zip(c[LEFT], c[RIGHT]))
     assert got_pairs == _hamming_ball_pairs(cand.simhash_signatures(docs, cfg).toPandas(), 3)
 
-    got = cand.rescored_pairs(docs, spark.createDataFrame(c), cfg).toPandas()
+    got = rescore_candidates_with_vecs(
+        spark.createDataFrame(c), doc_vectors(docs, cfg, n_docs=500), cfg
+    ).toPandas()
     rp = set(zip(got[LEFT], got[RIGHT]))
     assert rp <= exact_pairs
     assert len(rp) > 0
@@ -209,17 +219,18 @@ def test_substring_and_suffix_agree_on_python_whitespace(spark, sep, cfg):
 
 
 def test_salted_bucket_join_equals_plain(spark):
-    # salting must re-shard the self-join WITHOUT changing the pair set
+    # salting must re-shard the self-join WITHOUT changing the pair set:
+    # band keys 7 (docs 0-11) and 9 (docs 1, 5, 20, 21) as doc_vectors rows
     pdf = pd.DataFrame(
         {
-            "band": [0] * 12 + [1] * 4,
-            "key": [7] * 12 + [9] * 4,
-            "doc_id": list(range(12)) + [1, 5, 20, 21],
+            "doc_id": list(range(12)) + [20, 21],
+            "bands": [[7, 9] if d in (1, 5) else [7] for d in range(12)]
+            + [[9], [9]],
         }
     )
-    buckets = spark.createDataFrame(pdf)
-    plain = cand._bucket_pairs(buckets, None).toPandas()
-    salted = cand._bucket_pairs(buckets, None, salt_above=3).toPandas()
+    vecs = spark.createDataFrame(pdf, "doc_id long, bands array<long>")
+    plain = lsh_band_candidates(vecs, None, salt_above=None).toPandas()
+    salted = lsh_band_candidates(vecs, None, salt_above=3).toPandas()
     key = lambda d: set(zip(d[LEFT], d[RIGHT]))
     assert key(plain) == key(salted)
     assert len(salted) == len(plain)  # exactly-once emission
@@ -228,7 +239,7 @@ def test_salted_bucket_join_equals_plain(spark):
 def test_megabucket_drop_accounting_and_salting(spark):
     # a boilerplate megabucket must (a) be visible in drop_stats when capped
     # and (b) survive fully when salted instead of dropped
-    from string_grouper_spark.operators.dedup import lsh_dedup_clusters
+    from string_grouper_spark.plans.fast_dedup import fast_lsh_dedup
 
     boiler = ["copyright terms and conditions apply to all pages here"] * 60
     family = [
@@ -241,15 +252,16 @@ def test_megabucket_drop_accounting_and_salting(spark):
     cfg = MatchConfig(min_similarity=0.8, max_n_matches=1_000_000)
 
     stats = {}
-    capped = lsh_dedup_clusters(
-        docs, cfg, num_bands=16, max_bucket_size=10, drop_stats=stats
+    capped = fast_lsh_dedup(
+        docs, cfg, num_bands=16, max_bucket_size=10, salt_above=None,
+        drop_stats=stats,
     ).toPandas()
     assert stats["n_buckets_dropped"] > 0
     assert stats["est_pairs_dropped"] >= 60 * 59 / 2
     # dropped megabucket -> boilerplate docs NOT clustered
     assert capped.set_index("doc_id")["component"].loc[range(60)].nunique() == 60
 
-    salted = lsh_dedup_clusters(
+    salted = fast_lsh_dedup(
         docs, cfg, num_bands=16, max_bucket_size=None, salt_above=10
     ).toPandas()
     comp = salted.set_index("doc_id")["component"]
@@ -359,8 +371,12 @@ def test_bipartite_minhash_recall_vs_exact(spark, docs):
     want = {(l, r): s for l, r, s in zip(exact[LEFT], exact[RIGHT], exact[SIM])}
     assert want, "fixture should contain cross-side near-dups"
 
-    pairs = cand.minhash_candidates_bipartite(master, dupes, cfg, num_perm=128, num_bands=64)
-    got_df = cand.rescored_pairs_bipartite(master, dupes, pairs, cfg).toPandas()
+    from string_grouper_spark.plans.fast_dedup import fast_lsh_dedup_bipartite
+
+    # the capped case: each side's buckets capped at 1000 members
+    got_df = fast_lsh_dedup_bipartite(
+        master, dupes, cfg, num_perm=128, num_bands=64, max_bucket_size=1000
+    ).toPandas()
     got = {(l, r): s for l, r, s in zip(got_df[LEFT], got_df[RIGHT], got_df[SIM])}
     recall = len(set(got) & set(want)) / len(want)
     assert recall >= 0.99, recall
@@ -434,10 +450,11 @@ def test_simhash_fast_batch_matches_python_reference(cfg):
 
 def test_minhash_deterministic_across_runs(spark, docs):
     cfg = MatchConfig()
-    a = cand.minhash_bands(docs.limit(50), cfg, 32, 16).toPandas()
-    b = cand.minhash_bands(docs.limit(50), cfg, 32, 16).toPandas()
-    a = a.sort_values(["doc_id", "band"]).reset_index(drop=True)
-    b = b.sort_values(["doc_id", "band"]).reset_index(drop=True)
+    sub = docs.limit(50)
+    a = doc_vectors(sub, cfg, 32, 16, n_docs=50).select("doc_id", "bands").toPandas()
+    b = doc_vectors(sub, cfg, 32, 16, n_docs=50).select("doc_id", "bands").toPandas()
+    a = a.sort_values("doc_id").reset_index(drop=True)
+    b = b.sort_values("doc_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
 
 

@@ -1,4 +1,4 @@
-"""fast_dedup plan: numeric equivalence with the generic posting-join path
+"""fast_dedup plan: numeric equivalence with the exact posting-join path
 and cluster-level equivalence of the end-to-end pipeline."""
 
 import numpy as np
@@ -61,16 +61,28 @@ def test_vector_weights_match_generic_postings(spark, docs):
             assert abs(got[code] - w) < 1e-12
 
 
-def test_fast_pipeline_matches_generic_clusters(spark, docs):
-    from string_grouper_spark.operators.dedup import lsh_dedup_clusters
+def _exact_components(docs, cfg):
+    # reference partition: connected components over the exact all-pairs
+    # near-duplicate pairs, labelled like the flagship (component = min id)
+    from string_grouper_spark.operators.dedup import near_duplicate_pairs
+    from string_grouper_spark.operators.grouping import NODE, connected_components
 
-    cfg = MatchConfig(min_similarity=0.8, max_n_matches=1_000_000)
-    generic = (
-        lsh_dedup_clusters(docs, cfg, num_bands=16, n_docs=500)
+    pairs = near_duplicate_pairs(docs, cfg, n_docs=500)
+    return (
+        connected_components(
+            pairs.select(F.col("master_side").alias("u"), F.col("dupe_side").alias("v")),
+            docs.select("doc_id"),
+        )
+        .withColumnRenamed(NODE, "doc_id")
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)
     )
+
+
+def test_fast_pipeline_matches_generic_clusters(spark, docs):
+    cfg = MatchConfig(min_similarity=0.8, max_n_matches=1_000_000)
+    exact = _exact_components(docs, cfg)
     fast = (
         fast_lsh_dedup(docs, cfg, num_bands=16, n_docs=500)
         .toPandas()
@@ -78,7 +90,7 @@ def test_fast_pipeline_matches_generic_clusters(spark, docs):
         .reset_index(drop=True)
     )
     # same partition of docs into clusters (labels are both component minima)
-    pd.testing.assert_frame_equal(generic, fast)
+    pd.testing.assert_frame_equal(exact, fast)
 
 
 def test_fast_pipeline_recall_vs_exact(spark, docs):
@@ -305,10 +317,8 @@ def test_encode_doc_matches_py_ngrams_property(text, n, ascii_fold):
 def test_fast_pipeline_float32_weights(spark, docs):
     """tfidf_matrix_dtype='float32' (reference option, SG:161-164,190):
     the fast plan ships true 4-byte weights and still produces the same
-    cluster partition as the generic float32 path and the float64 run."""
+    cluster partition as the exact float32 path and the float64 run."""
     from pyspark.sql.types import ArrayType, FloatType
-
-    from string_grouper_spark.operators.dedup import lsh_dedup_clusters
 
     cfg32 = MatchConfig(
         min_similarity=0.8, max_n_matches=1_000_000, tfidf_matrix_dtype="float32"
@@ -320,11 +330,8 @@ def test_fast_pipeline_float32_weights(spark, docs):
         fast_lsh_dedup(docs, cfg32, num_bands=16, n_docs=500)
         .toPandas().sort_values("doc_id").reset_index(drop=True)
     )
-    generic32 = (
-        lsh_dedup_clusters(docs, cfg32, num_bands=16, n_docs=500)
-        .toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(generic32, fast32)
+    exact32 = _exact_components(docs, cfg32)
+    pd.testing.assert_frame_equal(exact32, fast32)
 
     cfg64 = MatchConfig(min_similarity=0.8, max_n_matches=1_000_000)
     fast64 = (
@@ -437,3 +444,29 @@ def test_prefit_matcher_extend_compaction_bounded_and_identical(spark):
             dup.select((F.col("doc_id") + 8000).alias("doc_id"), "text")
         )  # 9th extend -> compaction -> collision from the re-delivered ids
     m_none.unpersist()
+
+
+def test_out_of_scope_config_names_exact_route(spark):
+    # inputs outside the flagship's scope fail loudly and name the exact
+    # path, which handles them
+    from string_grouper_spark.operators.dedup import near_duplicate_clusters
+    from string_grouper_spark.plans.fast_dedup import _collect_idf
+
+    text = "the quick brown fox jumps over the lazy dog by the river bank"
+    docs = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": [0, 1, 2],
+                "text": [text, text + "!", "an unrelated sentence about other things"],
+            }
+        )
+    )
+    cfg9 = MatchConfig(ngram_size=9, min_similarity=0.8)
+    with pytest.raises(ValueError, match="near_duplicate_clusters"):
+        fast_lsh_dedup(docs, cfg9, n_docs=3)
+    with pytest.raises(ValueError, match="near_duplicate_clusters"):
+        _collect_idf(spark, doc_term_arrays(docs, MatchConfig()), 3, max_vocab=5)
+
+    rep = near_duplicate_clusters(docs, cfg9).toPandas().set_index("doc_id")["group_rep"]
+    assert rep.loc[0] == rep.loc[1]
+    assert rep.loc[2] != rep.loc[0]

@@ -9,10 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from string_grouper_spark.config import MatchConfig
-from string_grouper_spark.operators.dedup import (
-    lsh_dedup_clusters,
-    near_duplicate_pairs,
-)
+from string_grouper_spark.operators.dedup import near_duplicate_pairs
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -63,11 +60,17 @@ def test_topn_invariant_to_partitioning(spark, docs):
 
 
 def test_lsh_clusters_invariant_to_partitioning(spark, docs):
+    # the salted bucket join (every bucket above 2 members salted); the
+    # unsalted flagship is test_fast_plan_invariant_to_partitioning
+    from string_grouper_spark.plans.fast_dedup import fast_lsh_dedup
+
     cfg = MatchConfig(min_similarity=0.8, max_n_matches=1_000_000)
     outs = []
     for nparts in (1, 16):
         d = docs.repartition(nparts)
-        labels = lsh_dedup_clusters(d, cfg, num_bands=16, n_docs=500).toPandas()
+        labels = fast_lsh_dedup(
+            d, cfg, num_bands=16, n_docs=500, salt_above=2
+        ).toPandas()
         outs.append(labels.sort_values("doc_id").reset_index(drop=True))
     pdt.assert_frame_equal(outs[0], outs[1])
 

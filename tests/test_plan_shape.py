@@ -122,20 +122,20 @@ def test_prefit_match_rescores_once(spark, docs):
 
 
 def test_rescored_pairs_scores_once(spark, docs):
-    # rescored_pairs filters the similarity column it returns: with a
-    # deterministic kernel Spark would inline the Arrow dot into the filter
-    # and evaluate it twice per candidate pair
-    from string_grouper_spark.functions.tfidf import tfidf_postings
-    from string_grouper_spark.operators.candidates import (
-        minhash_candidates,
-        rescored_pairs,
+    # rescore_candidates_with_vecs filters the similarity column it
+    # returns: with a deterministic kernel Spark would inline the Arrow dot
+    # into the filter and evaluate it twice per candidate pair
+    from string_grouper_spark.plans.fast_dedup import (
+        doc_vectors,
+        lsh_band_candidates,
+        rescore_candidates_with_vecs,
     )
 
     cfg = MatchConfig(min_similarity=0.5)
-    # checkpointed inputs: the tokenizer's own Python nodes must not count
-    cand = minhash_candidates(docs, cfg, num_perm=64, num_bands=32).localCheckpoint()
-    postings = tfidf_postings(docs, None, cfg, id_col="doc_id")[0].localCheckpoint()
-    out = rescored_pairs(docs, cand, cfg, postings=postings)
+    # checkpointed inputs: the vector passes' own Python nodes must not count
+    vecs = doc_vectors(docs, cfg, 64, 32).localCheckpoint()
+    cand = lsh_band_candidates(vecs, 1000, salt_above=None).localCheckpoint()
+    out = rescore_candidates_with_vecs(cand, vecs, cfg)
     assert "similarity" in out.columns
     plan = plan_of(out)
     assert plan.count("ArrowEvalPython") == 1, plan
