@@ -302,7 +302,6 @@ def main(argv: Optional[list] = None) -> int:
             res[name].write.mode("overwrite").parquet(
                 f"{args.output_dir}/{name}"
             )
-        res["unpersist"]()
         # the run's metrics table (north rule: stage counters persist with
         # the outputs, not only on stdout) — one row per counter
         spark.createDataFrame(

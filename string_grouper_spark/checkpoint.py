@@ -24,6 +24,14 @@ invalidation rule a lineage-aware catalog would apply.
 The pipelines below have no stage bodies of their own: each runs a plain
 pipeline's stages with ``StageCheckpointer.stage`` as the stage runner, so
 adding a checkpoint root never changes what a run computes.
+
+Every multi-stage plan runs through one of two stage runners with one
+call, ``stage(name, build, after=<upstream names>, reused=False)``:
+``StageCheckpointer.stage`` (every stage a resumable table, nothing cached)
+or ``in_memory_stages`` (``reused`` stages persisted, released when the run
+exits).  A plan whose RESULT still reads a stage the runner releases
+fences that result first with an eager ``localCheckpoint``, whose blocks
+belong to the result and are reclaimed with it.
 """
 
 from __future__ import annotations
@@ -32,6 +40,7 @@ import hashlib
 import json
 import os
 import time
+from contextlib import contextmanager
 from dataclasses import asdict, is_dataclass
 from typing import Callable, Optional
 
@@ -65,6 +74,29 @@ def input_fingerprint(df: DataFrame, cols: Optional[list] = None) -> str:
         F.coalesce(F.bit_xor(F.xxhash64("_h", "_c")), F.lit(0)).alias("h"),
     ).first()
     return _fingerprint({"rows": row["n"], "hash": row["h"], "cols": cols})
+
+
+@contextmanager
+def in_memory_stages():
+    """The in-memory stage runner: ``with in_memory_stages() as stage:``
+    yields ``stage(name, build, after=(), reused=False)``, which returns
+    ``build()``, persisted when ``reused``; persisted stages are released
+    when the block exits.  Every read of a stage must run inside the block
+    (an action, or an eager ``localCheckpoint`` fence on a result)."""
+    held = []
+
+    def stage(name, build, after=(), reused=False):
+        df = build()
+        if reused:
+            df = df.persist()
+            held.append(df)
+        return df
+
+    try:
+        yield stage
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 class StageCheckpointer:
@@ -285,7 +317,7 @@ def checkpointed_union_dedup_pipeline(
     io=None,
 ) -> DataFrame:
     """``dedup.near_duplicate_clusters_scale`` with EVERY stage of its
-    stage graph (``dedup._scale_plan``: vectors, cand_minhash /
+    stage graph (``dedup._scale_plan``: terms, vectors, cand_minhash /
     cand_simhash, edges_cosine, edges_substring / edges_suffix, labels)
     checkpointed — the resume granularity a 10^12-document run needs: each
     generator is its own stage table, so a crash during the suffix pass

@@ -68,8 +68,6 @@ class MatchConfig:
     # inverted-index self-join; the reference has no such guard because it
     # does a dense blocked matmul instead.
     candidate_max_df_ratio: Optional[float] = None
-    # Target shuffle partitions for the posting self-join; None = session value.
-    shuffle_partitions: Optional[int] = None
 
     def __post_init__(self) -> None:
         if self.group_rep not in (GROUP_REP_CENTROID, GROUP_REP_FIRST):

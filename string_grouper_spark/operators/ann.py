@@ -15,6 +15,7 @@ Two paths:
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Iterator, Optional
 
 import numpy as np
@@ -22,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+from ..checkpoint import in_memory_stages
 
 
 def _norm_expr(col):
@@ -131,15 +134,17 @@ def cosine_topk_blocked(
     self_search = queries is None
     qs = queries if queries is not None else items
     kk = int(k)
-    # ONE job over the query side: persist the slim (_id, raw vec)
-    # projection, count from the cache, and collect every chunk from the
-    # cache.  The previous shape ran a separate qs.count() plus one full
-    # query-side scan PER CHUNK, each re-evaluating the interpreted
-    # unit-vector HOF — n_chunks+1 query-side jobs that dominated the bench
-    # wall (BENCH_r03 ann_topk regression).  Normalization now happens in
-    # numpy on the collected block, so no Catalyst HOF runs at all.
-    qraw = qs.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")).persist()
-    try:
+    # ONE scan of the query side: the slim (_id, raw vec) projection is
+    # cached, then counted and collected per chunk from the cache (a scan
+    # per chunk dominated the bench wall, BENCH_r03) and normalized in
+    # numpy.  It is only read EAGERLY: the returned plan reads items and
+    # broadcasts, so the runner may release it.
+    with in_memory_stages() as stage:
+        qraw = stage(
+            "queries",
+            lambda: qs.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")),
+            reused=True,
+        )
         n_q = qraw.count()
         if n_q > max_query_rows:
             # hash-disjoint chunks: sizes are binomial around n/chunks, so
@@ -156,18 +161,11 @@ def cosine_topk_blocked(
                 )
                 for c in range(n_chunks)
             ]
-            local = parts[0]
-            for p in parts[1:]:
-                local = local.unionAll(p)
+            local = reduce(DataFrame.unionAll, parts)
         else:
             local = _blocked_topk_one_chunk(
                 items, qraw, kk, id_col, vec_col, self_search
             )
-    finally:
-        # qraw is only read EAGERLY above (count + per-chunk toPandas); the
-        # returned plan references items + broadcasts only, so releasing the
-        # cache here is safe
-        qraw.unpersist()
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("item_id").asc())
     return (
         local.withColumn("_rn", F.row_number().over(w))

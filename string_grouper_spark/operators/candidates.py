@@ -46,7 +46,6 @@ from .similarity import LEFT, RIGHT
 def bucket_drop_stats(
     buckets: DataFrame,
     max_bucket_size: Optional[int],
-    id_col: str = DOC,
     key_cols=("band", "key"),
 ) -> dict:
     """Recall accounting for the hot-bucket guard: what does dropping buckets
@@ -54,18 +53,30 @@ def bucket_drop_stats(
     member rows, and the implied candidate pairs (s*(s-1)/2 per bucket) —
     one small aggregation job, meant to be LOGGED with every production run
     so bucket drops are never silent (SURVEY §4.2(2))."""
-    if max_bucket_size is None:
-        return {"n_buckets_dropped": 0, "n_rows_dropped": 0, "est_pairs_dropped": 0}
-    sizes = buckets.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("sz"))
-    row = (
-        sizes.where(F.col("sz") > max_bucket_size)
-        .agg(
-            F.count(F.lit(1)).alias("nb"),
-            F.coalesce(F.sum("sz"), F.lit(0)).alias("nr"),
-            F.coalesce(F.sum(F.col("sz") * (F.col("sz") - 1) / 2), F.lit(0)).alias("np"),
-        )
-        .first()
+    return _over_cap_stats(
+        None if max_bucket_size is None
+        else _over_cap_buckets(buckets, max_bucket_size, key_cols)
     )
+
+
+def _over_cap_buckets(buckets, max_bucket_size: int, key_cols) -> DataFrame:
+    """(*key_cols, sz) of every over-cap bucket (count-only partial agg)."""
+    return (
+        buckets.groupBy(*key_cols)
+        .agg(F.count(F.lit(1)).alias("sz"))
+        .where(F.col("sz") > max_bucket_size)
+    )
+
+
+def _over_cap_stats(over_cap: Optional[DataFrame]) -> dict:
+    """``bucket_drop_stats`` of an ``_over_cap_buckets`` set (None: no cap)."""
+    if over_cap is None:
+        return {"n_buckets_dropped": 0, "n_rows_dropped": 0, "est_pairs_dropped": 0}
+    row = over_cap.agg(
+        F.count(F.lit(1)).alias("nb"),
+        F.coalesce(F.sum("sz"), F.lit(0)).alias("nr"),
+        F.coalesce(F.sum(F.col("sz") * (F.col("sz") - 1) / 2), F.lit(0)).alias("np"),
+    ).first()
     return {
         "n_buckets_dropped": int(row["nb"]),
         "n_rows_dropped": int(row["nr"]),
@@ -288,13 +299,8 @@ def capped_buckets(
     """
     if max_bucket_size is None:
         return buckets
-    hot = (
-        buckets.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("_sz"))
-        .where(F.col("_sz") > max_bucket_size)
-        .select(*key_cols)
-    )
-    return buckets.join(hot, list(key_cols), "left_anti")
+    hot = _over_cap_buckets(buckets, max_bucket_size, key_cols)
+    return buckets.join(hot.select(*key_cols), list(key_cols), "left_anti")
 
 
 # --------------------------------------------------------------------------

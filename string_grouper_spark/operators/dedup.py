@@ -8,12 +8,13 @@ core operators, returning DataFrames (nothing collected).
 from __future__ import annotations
 
 import re
-from functools import reduce
+from functools import partial, reduce
 from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..checkpoint import in_memory_stages
 from ..config import MatchConfig
 from .grouping import NODE, group_labels
 from .matching import match_edges
@@ -204,35 +205,18 @@ def near_duplicate_clusters_scale(
     Returns (<id_col>, component), component = min id — the same contract as
     ``near_duplicate_clusters``'s components and the LSH flagship.
 
-    Plan notes: the cosine leg runs on the FLAGSHIP fast-plan kernels — one
-    narrow vectorize pass (``doc_term_arrays``/``doc_vectors``, persisted)
-    feeds minhash banding AND the packed exact re-score; candidate tables
-    are slim id-pair frames (never carrying vectors), so unioning
-    generators adds narrow passes but no new wide shuffle.  The stages are
-    those of ``_scale_plan``, run in memory: only the vectors are
-    persisted, and released once the labels are computed.
+    Plan notes: the cosine leg runs on the FLAGSHIP fast-plan kernels, and
+    candidate tables are slim id-pair frames, so unioning generators adds
+    narrow passes but no new wide shuffle.  The stages are ``_scale_plan``'s,
+    run by ``checkpoint.in_memory_stages``: the terms and vectors (each read
+    twice) are persisted and released once the labels exist.
     """
-    held = []
-
-    def stage(name, build, after=(), reused=False):
-        df = build()
-        if reused:
-            df = df.persist()
-            held.append(df)
-        return df
-
-    try:
+    with in_memory_stages() as stage:
         return _scale_plan(
             docs, cfg, generators, stage, text_col, id_col, n_docs, num_perm,
             num_bands, max_bucket_size, salt_above, max_hamming, num_blocks,
             anchor_len, shingle, shingle_words, drop_stats,
         )
-    finally:
-        # connected_components fetches (or, above its driver bound,
-        # checkpoints and iterates) the edge list before it returns, so the
-        # caches are fully consumed before they are released
-        for df in held:
-            df.unpersist()
 
 
 def _scale_plan(
@@ -245,8 +229,9 @@ def _scale_plan(
     ``stage(name, build, after=<upstream stage names>, reused=False)`` that
     returns the stage's DataFrame:
 
-        vectors          terms + packed TF-IDF vectors and band keys
-                         (cosine generators; read by two stages: reused)
+        terms            per-doc gram counts (cosine generators; read by
+                         the idf collect and the vector pass: reused)
+        vectors          packed TF-IDF vectors and band keys (reused)
         cand_minhash     LSH band bucket join -> candidate id-pairs
         cand_simhash     Hamming-ball block join -> candidate id-pairs
         edges_cosine     union of cosine candidates -> ONE exact re-score
@@ -273,94 +258,82 @@ def _scale_plan(
     cos_gens = [g for g in generators if g in ("minhash", "simhash")]
 
     def plan(docs: DataFrame, id_col: str) -> DataFrame:
-        # the vectors build persists its terms pass, which feeds both the
-        # idf collect and the vector pass; released after the labels
-        terms = []
-
-        def build_vectors():
-            n = n_docs if n_docs is not None else docs.count()
-            terms.append(
-                doc_term_arrays(
-                    docs, cfg, text_col, id_col, shingle, shingle_words
-                ).persist()
-            )
-            return doc_vectors(
-                docs, cfg, num_perm, num_bands, text_col, id_col, n,
-                terms=terms[0], shingle=shingle, shingle_words=shingle_words,
-            )
-
         edges = {}
-        try:
-            if cos_gens:
-                vecs = stage("vectors", build_vectors, reused=True)
-                cands = {}
-                if "minhash" in cos_gens:
-                    cands["cand_minhash"] = stage(
-                        "cand_minhash",
-                        lambda: lsh_band_candidates(
-                            vecs, max_bucket_size, salt_above=salt_above,
-                            drop_stats=drop_stats,
-                        ),
-                        after=("vectors",),
-                    )
-                if "simhash" in cos_gens:
-                    # from docs, not the vectors; shingle threads through so
-                    # proposal happens in the SAME feature space the exact
-                    # re-score decides in
-                    cands["cand_simhash"] = stage(
-                        "cand_simhash",
-                        lambda: simhash_candidates(
-                            docs, cfg, max_hamming=max_hamming,
-                            num_blocks=num_blocks,
-                            max_bucket_size=max_bucket_size, text_col=text_col,
-                            id_col=id_col, shingle=shingle,
-                            shingle_words=shingle_words,
-                        ).select(LEFT, RIGHT),
-                    )
-
-                def build_cosine():
-                    cand = reduce(DataFrame.unionByName, cands.values())
-                    if len(cands) > 1:
-                        cand = cand.dropDuplicates([LEFT, RIGHT])
-                    scored = rescore_candidates_with_vecs(cand, vecs, cfg)
-                    return scored.select(
-                        F.col(LEFT).alias("u"), F.col(RIGHT).alias("v")
-                    )
-
-                edges["edges_cosine"] = stage(
-                    "edges_cosine", build_cosine, after=("vectors", *cands)
-                )
-            if "substring" in generators:
-                edges["edges_substring"] = stage(
-                    "edges_substring",
-                    lambda: substring_containment(
-                        docs, cfg, anchor_len=anchor_len, text_col=text_col,
-                        id_col=id_col,
-                    ).select(
-                        F.col("inner_id").alias("u"), F.col("outer_id").alias("v")
+        if cos_gens:
+            terms = stage("terms", partial(
+                doc_term_arrays, docs, cfg, text_col, id_col, shingle,
+                shingle_words,
+            ), reused=True)
+            vecs = stage("vectors", partial(
+                doc_vectors, docs, cfg, num_perm, num_bands, text_col, id_col,
+                n_docs, terms=terms, shingle=shingle,
+                shingle_words=shingle_words,
+            ), after=("terms",), reused=True)
+            cands = {}
+            if "minhash" in cos_gens:
+                cands["cand_minhash"] = stage(
+                    "cand_minhash",
+                    lambda: lsh_band_candidates(
+                        vecs, max_bucket_size, salt_above=salt_above,
+                        drop_stats=drop_stats,
                     ),
+                    after=("vectors",),
                 )
-            if "suffix" in generators:
-                edges["edges_suffix"] = stage(
-                    "edges_suffix",
-                    # connectivity only: copies collapsed, anchor_len-byte
-                    # windows
-                    lambda: substring_edges(
-                        docs, cfg, min_len=anchor_len, text_col=text_col,
-                        id_col=id_col,
-                    ).select(F.col("left").alias("u"), F.col("right").alias("v")),
+            if "simhash" in cos_gens:
+                # from docs, not the vectors; shingle threads through so
+                # proposal happens in the SAME feature space the exact
+                # re-score decides in
+                cands["cand_simhash"] = stage(
+                    "cand_simhash",
+                    lambda: simhash_candidates(
+                        docs, cfg, max_hamming=max_hamming,
+                        num_blocks=num_blocks,
+                        max_bucket_size=max_bucket_size, text_col=text_col,
+                        id_col=id_col, shingle=shingle,
+                        shingle_words=shingle_words,
+                    ).select(LEFT, RIGHT),
                 )
-            return stage(
-                "labels",
-                lambda: connected_components(
-                    reduce(DataFrame.unionByName, edges.values()),
-                    docs.select(F.col(id_col)),
-                ).withColumnRenamed(NODE, id_col),
-                after=tuple(edges),
+
+            def build_cosine():
+                cand = reduce(DataFrame.unionByName, cands.values())
+                if len(cands) > 1:
+                    cand = cand.dropDuplicates([LEFT, RIGHT])
+                scored = rescore_candidates_with_vecs(cand, vecs, cfg)
+                return scored.select(
+                    F.col(LEFT).alias("u"), F.col(RIGHT).alias("v")
+                )
+
+            edges["edges_cosine"] = stage(
+                "edges_cosine", build_cosine, after=("vectors", *cands)
             )
-        finally:
-            for t in terms:
-                t.unpersist()
+        if "substring" in generators:
+            edges["edges_substring"] = stage(
+                "edges_substring",
+                lambda: substring_containment(
+                    docs, cfg, anchor_len=anchor_len, text_col=text_col,
+                    id_col=id_col,
+                ).select(
+                    F.col("inner_id").alias("u"), F.col("outer_id").alias("v")
+                ),
+            )
+        if "suffix" in generators:
+            edges["edges_suffix"] = stage(
+                "edges_suffix",
+                # connectivity only: copies collapsed, anchor_len-byte
+                # windows
+                lambda: substring_edges(
+                    docs, cfg, min_len=anchor_len, text_col=text_col,
+                    id_col=id_col,
+                ).select(F.col("left").alias("u"), F.col("right").alias("v")),
+            )
+        return stage(
+            "labels",
+            lambda: connected_components(
+                reduce(DataFrame.unionByName, edges.values()),
+                docs.select(F.col(id_col)),
+            ).withColumnRenamed(NODE, id_col),
+            after=tuple(edges),
+        )
 
     return run_with_long_ids(docs, id_col, plan)
 

@@ -95,14 +95,16 @@ def match_edges(
         assume_ascii=assume_ascii,
     )
     if self_join:
-        # persist(), deliberately NOT localCheckpoint: the checkpoint's
-        # ExistingRDD scan was measured 5x slower end-to-end here (the
-        # exploded posting rows pay an InternalRow round-trip per consumer
-        # and the downstream gram join loses the columnar cache scan),
-        # while the cache entry costs one postings table per call until
-        # the session drops it — acceptable for the exact/small path this
-        # serves, and the caller can spark.catalog.clearCache() between
-        # corpora if needed
+        # persist(), NOT localCheckpoint: the checkpoint's ExistingRDD scan
+        # was measured 5x slower end-to-end (an InternalRow round-trip per
+        # consumer; the gram join loses the columnar cache scan).  Nor is
+        # it released: calls over an identical input plan reuse it.  A
+        # release after an eager edge fence measured, on names_exact (seed
+        # 11, 4 cores, 5 interleaved pairs), warm wall 2.18 -> 4.28 s (5/5
+        # worse), shuffle 0.107 -> 0.47 MB and pinned-digest pass ratio 1.0
+        # -> 0.25-1.0: each call re-ran the postings and with them the tf
+        # JOIN idf build-side race (tfidf.build_postings).  One entry per
+        # distinct corpus stays until spark.catalog.clearCache().
         m_post = m_post.persist()
         edges = _self_join_edges(m_post, master.select(F.col(id_col)), cfg, n_master)
     else:

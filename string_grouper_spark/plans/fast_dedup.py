@@ -41,6 +41,7 @@ errors name it.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator, Optional
 
 import numpy as np
@@ -57,10 +58,13 @@ from pyspark.sql.types import (
 
 from pyspark.sql.types import FloatType, IntegerType
 
+from ..checkpoint import in_memory_stages
 from ..config import MatchConfig
 from ..functions.normalize import py_normalize
 from ..operators.candidates import (
     _grouped_bucket_pairs,
+    _over_cap_buckets,
+    _over_cap_stats,
     _salted_self_pairs,
     auto_skew_policy,
     bucket_drop_stats,
@@ -565,51 +569,53 @@ def fast_lsh_dedup_bipartite(
         n_master = master.count()
     if n_duplicates is None:
         n_duplicates = duplicates.count()
+    n = n_master + n_duplicates
+    sides = {"master": master, "duplicates": duplicates}
 
-    terms_m = doc_term_arrays(master, cfg, text_col, id_col, shingle, shingle_words).persist()
-    terms_d = doc_term_arrays(duplicates, cfg, text_col, id_col, shingle, shingle_words).persist()
-    try:
+    with in_memory_stages() as stage:
+        # terms feed the idf collect and the vector pass; vectors the
+        # bucket table and the re-score
+        terms = {
+            side: stage(f"terms_{side}", partial(
+                doc_term_arrays, df, cfg, text_col, id_col, shingle,
+                shingle_words,
+            ), reused=True)
+            for side, df in sides.items()
+        }
         # corpus-wide IDF: document frequencies over BOTH term tables
         idf_bc = _collect_idf(
-            spark, terms_m.unionAll(terms_d), n_master + n_duplicates
+            spark, terms["master"].unionAll(terms["duplicates"]), n
         )
-        vecs_m = doc_vectors(
-            master, cfg, num_perm, num_bands, text_col, id_col,
-            n_master + n_duplicates, terms=terms_m, shingle=shingle,
-            shingle_words=shingle_words, idf_bc=idf_bc,
-        ).persist()
-        vecs_d = doc_vectors(
-            duplicates, cfg, num_perm, num_bands, text_col, id_col,
-            n_master + n_duplicates, terms=terms_d, shingle=shingle,
-            shingle_words=shingle_words, idf_bc=idf_bc,
-        ).persist()
-
-        raw_m, raw_d = _bucket_table(vecs_m), _bucket_table(vecs_d)
-        if drop_stats is not None:
-            drop_stats["master"] = bucket_drop_stats(raw_m, max_bucket_size, key_cols=("key",))
-            drop_stats["duplicates"] = bucket_drop_stats(raw_d, max_bucket_size, key_cols=("key",))
-            if drop_stats["master"]["n_buckets_dropped"] or drop_stats[
-                "duplicates"
-            ]["n_buckets_dropped"]:
-                logging.getLogger("string_grouper_spark.skew").warning(
-                    "bipartite lsh bucket drops: %s", drop_stats
-                )
-        # cap via count-agg + broadcast anti-join: never materializes a
-        # megabucket (candidates.capped_buckets)
-        cand = _cross_bucket_pairs(
-            capped_buckets(raw_m, max_bucket_size, key_cols=("key",)),
-            capped_buckets(raw_d, max_bucket_size, key_cols=("key",)),
-        )
-        out = _rescore(cand, vecs_m, vecs_d, cfg.min_similarity)
+        vecs, capped = {}, {}
+        for side, df in sides.items():
+            vecs[side] = stage(f"vectors_{side}", partial(
+                doc_vectors, df, cfg, num_perm, num_bands, text_col, id_col, n,
+                terms=terms[side], shingle=shingle,
+                shingle_words=shingle_words, idf_bc=idf_bc,
+            ), reused=True)
+            raw = capped[side] = _bucket_table(vecs[side])
+            # the cap's anti-join (candidates.capped_buckets) and, with
+            # drop_stats, the drop accounting read one over-cap set
+            hot = None if max_bucket_size is None else stage(
+                f"over_cap_{side}",
+                partial(_over_cap_buckets, raw, max_bucket_size, ("key",)),
+                reused=drop_stats is not None,
+            )
+            if hot is not None:
+                capped[side] = raw.join(hot.select("key"), "key", "left_anti")
+            if drop_stats is not None:
+                drop_stats[side] = _over_cap_stats(hot)
+        if drop_stats is not None and any(
+            drop_stats[side]["n_buckets_dropped"] for side in sides
+        ):
+            logging.getLogger("string_grouper_spark.skew").warning(
+                "bipartite lsh bucket drops: %s", drop_stats
+            )
+        cand = _cross_bucket_pairs(capped["master"], capped["duplicates"])
+        out = _rescore(cand, vecs["master"], vecs["duplicates"], cfg.min_similarity)
         # materialization fence: downstream actions must not re-run the
-        # narrow passes after the persisted inputs are released
-        out = out.localCheckpoint(eager=True)
-        vecs_m.unpersist()
-        vecs_d.unpersist()
-        return out
-    finally:
-        terms_m.unpersist()
-        terms_d.unpersist()
+        # narrow passes once the runner has released their inputs
+        return out.localCheckpoint(eager=True)
 
 
 class PrefitLshMatcher:
@@ -659,19 +665,19 @@ class PrefitLshMatcher:
         self._extend_count = 0
         spark = corpus.sparkSession
         n = corpus.count()
-        terms = doc_term_arrays(
-            corpus, self.cfg, text_col, id_col, shingle, shingle_words
-        ).persist()
-        try:
+        with in_memory_stages() as stage:
+            terms = stage("terms", partial(
+                doc_term_arrays, corpus, self.cfg, text_col, id_col, shingle,
+                shingle_words,
+            ), reused=True)
             self.idf_bc = _collect_idf(spark, terms, n)
+            # object state, not a stage: released by unpersist()
             self.corpus_vecs = doc_vectors(
                 corpus, self.cfg, num_perm, num_bands, text_col, id_col, n,
                 terms=terms, shingle=shingle, shingle_words=shingle_words,
                 idf_bc=self.idf_bc,
             ).persist()
             self.corpus_vecs.count()  # materialize while terms is cached
-        finally:
-            terms.unpersist()
         self._base_vecs = self.corpus_vecs  # the persisted fit-time piece
         self._corpus_buckets = self._buckets(self.corpus_vecs)
 

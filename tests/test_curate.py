@@ -127,7 +127,6 @@ def test_null_ts_page_never_elected_canonical(spark):
     curated = res["curated"].toPandas()
     assert res["counters"]["n_clusters"] == 1
     assert list(curated["url"]) == ["https://a.com/real"]
-    res["unpersist"]()
 
 
 def test_recrawl_same_url_is_accounted_in_dropped(spark):
@@ -155,7 +154,6 @@ def test_recrawl_same_url_is_accounted_in_dropped(spark):
     # the kept crawl is the earliest
     kept_ts = res["curated"].toPandas()["warc_ts"]
     assert list(kept_ts) == [dt.datetime(2024, 1, 1)]
-    res["unpersist"]()
 
 
 def test_kept_null_ts_page_not_falsely_dropped(spark):
@@ -181,4 +179,3 @@ def test_kept_null_ts_page_not_falsely_dropped(spark):
     assert res["dropped"].count() == 0
     assert res["counters"]["n_dropped_url_dedup"] == 0
     assert res["curated"].count() == 1
-    res["unpersist"]()

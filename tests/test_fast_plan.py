@@ -195,6 +195,58 @@ def test_fast_bipartite_matches_exact_two_series_path(spark, docs):
         assert abs(s - want[k]) < 1e-9, (k, s, want[k])
 
 
+def test_fast_bipartite_megabucket_per_side_drops(spark):
+    # each side has a megabucket (copies of one text share all 16 band
+    # keys): drop_stats counts what the cap drops on each side, and no pair
+    # with a dropped member is emitted
+    from string_grouper_spark.operators.similarity import LEFT, RIGHT
+    from string_grouper_spark.plans.fast_dedup import fast_lsh_dedup_bipartite
+
+    hot_m = "spark shuffles every partition across the cluster network"
+    hot_d = "minhash bands hash each signature slice into one bucket key"
+    solo = "the quick brown fox jumps over the lazy dog near the river"
+    master = spark.createDataFrame(
+        [(i, hot_m) for i in range(6)]
+        + [(10, solo), (11, hot_d)],
+        "doc_id long, text string",
+    )
+    dupes = spark.createDataFrame(
+        [(100 + i, hot_d) for i in range(4)]
+        + [(104, hot_m), (105, solo.upper())],
+        "doc_id long, text string",
+    )
+    cap, bands = 3, 16
+    cfg = MatchConfig(min_similarity=0.5, max_n_matches=1_000_000)
+
+    def expected(side):
+        # bands are MinHash of the shingle set alone (IDF-independent)
+        keys = (
+            doc_vectors(side, cfg, num_bands=bands)
+            .select(F.explode("bands").alias("key"))
+            .toPandas()["key"]
+            .value_counts()
+        )
+        sz = keys[keys > cap]
+        return {
+            "n_buckets_dropped": len(sz),
+            "n_rows_dropped": int(sz.sum()),
+            "est_pairs_dropped": int((sz * (sz - 1) // 2).sum()),
+        }
+
+    stats = {}
+    got = fast_lsh_dedup_bipartite(
+        master, dupes, cfg, num_bands=bands, max_bucket_size=cap,
+        drop_stats=stats,
+    ).toPandas()
+    assert stats["master"] == expected(master)
+    assert stats["duplicates"] == expected(dupes)
+    # six copies in the master's megabuckets, four in the duplicates'
+    assert stats["master"]["n_rows_dropped"] == 6 * bands
+    assert stats["duplicates"]["n_rows_dropped"] == 4 * bands
+    pairs = set(zip(got[LEFT], got[RIGHT]))
+    assert pairs == {(10, 105)}
+
+
 def test_prefit_matcher_frozen_vocab_semantics(spark):
     # PrefitLshMatcher = the reference's corpus-reuse workflow: vocabulary
     # and IDF frozen on the CORPUS; batch grams outside the vocabulary are

@@ -144,6 +144,14 @@ def test_non_string_series_rejected(spark):
         SparkStringGrouper(pd.Series(["foo", np.nan]))
 
 
+def test_shuffle_partitions_is_not_a_config_option():
+    # Spark's session-level spark.sql.shuffle.partitions is the one knob
+    from string_grouper_spark.config import MatchConfig
+
+    with pytest.raises(TypeError, match="shuffle_partitions"):
+        MatchConfig.from_kwargs(shuffle_partitions=8)
+
+
 def test_invalid_id_combination_rejected(spark):
     from string_grouper_spark import SparkStringGrouper
 
