@@ -59,13 +59,14 @@ def bucket_drop_stats(
     )
 
 
+def _bucket_sizes(buckets, key_cols) -> DataFrame:
+    """(*key_cols, sz) of every bucket (count-only partial agg)."""
+    return buckets.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("sz"))
+
+
 def _over_cap_buckets(buckets, max_bucket_size: int, key_cols) -> DataFrame:
-    """(*key_cols, sz) of every over-cap bucket (count-only partial agg)."""
-    return (
-        buckets.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("sz"))
-        .where(F.col("sz") > max_bucket_size)
-    )
+    """(*key_cols, sz) of every over-cap bucket."""
+    return _bucket_sizes(buckets, key_cols).where(F.col("sz") > max_bucket_size)
 
 
 def _over_cap_stats(over_cap: Optional[DataFrame]) -> dict:
@@ -90,6 +91,7 @@ def auto_skew_policy(
     parallelism: Optional[int] = None,
     target_pairs_per_task: int = 4_000_000,
     key_cols=("band", "key"),
+    sizes: Optional[DataFrame] = None,
 ) -> dict:
     """ONE aggregation pass over the band table picks the hot-bucket salt
     threshold from the MEASURED bucket-size histogram (SURVEY §4.2(2): "s
@@ -107,6 +109,7 @@ def auto_skew_policy(
     (n_buckets / max_sz / est_pairs) and the drop accounting vs
     ``max_bucket_size`` (n_buckets_dropped / n_rows_dropped /
     est_pairs_dropped) — everything a caller should LOG with the run.
+    ``sizes``: the table's ``_bucket_sizes``, when the caller holds it.
     """
     import math
 
@@ -115,7 +118,8 @@ def auto_skew_policy(
     sz = F.col("sz")
     pairs_of = sz * (sz - 1) / 2  # double arithmetic: no ANSI long overflow
     surviving = sz <= max_bucket_size if max_bucket_size is not None else F.lit(True)
-    sizes = buckets.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("sz"))
+    if sizes is None:
+        sizes = _bucket_sizes(buckets, key_cols)
     row = sizes.agg(
         F.count(F.lit(1)).alias("n_buckets"),
         F.coalesce(F.max(F.when(surviving, sz)), F.lit(0)).alias("max_sz"),
@@ -144,6 +148,7 @@ def _salted_self_pairs(
     salt_above: Optional[int],
     key_cols=("band", "key"),
     max_bucket_size: Optional[int] = None,
+    sizes: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Self-join a (*key_cols, <doc>) bucket table into pairs l<r.
 
@@ -160,7 +165,8 @@ def _salted_self_pairs(
     window over the key: ``Window.partitionBy(key)`` would land every hot
     key's rows in one task — the exact skew this function exists to
     avoid, paid before it could help — and AQE can split a skewed join
-    but never a window.
+    but never a window.  ``sizes``: the table's ``_bucket_sizes``, when
+    the caller holds it.
     """
     keys = list(key_cols)
     if salt_above is None:
@@ -174,7 +180,9 @@ def _salted_self_pairs(
             .where(F.col(LEFT) < F.col(RIGHT))
             .select(LEFT, RIGHT)
         )
-    sizes = buckets.groupBy(*keys).agg(F.count(F.lit(1)).alias("_sz"))
+    if sizes is None:
+        sizes = _bucket_sizes(buckets, keys)
+    sizes = sizes.withColumnRenamed("sz", "_sz")
     if max_bucket_size is not None:
         sizes = sizes.where(F.col("_sz") <= max_bucket_size)
     sized = buckets.join(sizes, keys)  # inner join doubles as the cap filter
@@ -234,7 +242,7 @@ def _grouped_bucket_pairs(
     buckets: DataFrame,
     max_bucket_size: Optional[int],
     key_cols=("band", "key"),
-    prefilter_hot: bool = False,
+    sizes: Optional[DataFrame] = None,
 ) -> DataFrame:
     """ONE-SHUFFLE bucket pairing: group members per (band, key), emit all
     in-bucket pairs from the collected array.
@@ -251,25 +259,22 @@ def _grouped_bucket_pairs(
     instead (``_salted_self_pairs``).  Emits one row per (bucket, pair):
     callers dedupe or count collisions.
 
-    ``prefilter_hot``: the ``F.size`` cap filters AFTER ``collect_list``
+    ``sizes``: the ``F.size`` cap filters AFTER ``collect_list``
     materializes each bucket — a 10^9-member stop-gram bucket would build
-    one multi-GB aggregation buffer before being discarded.  With
-    ``prefilter_hot`` the over-cap keys (a tiny set: callers enable this
-    only when the skew policy has already counted dropped buckets) are
-    computed with a count-only partial agg and broadcast-anti-joined out of
-    the bucket table, so no task ever collects a megabucket.  Costs one
-    extra count-shuffle of the bucket table — off by default, enabled by
-    the flagship exactly when the measured histogram shows drops.
+    one multi-GB aggregation buffer before being discarded.  Given the
+    table's ``_bucket_sizes`` (the flagship passes the one its skew policy
+    measured, exactly when that policy counted dropped buckets), the
+    over-cap keys are anti-joined out of the bucket table first, so no
+    task ever collects a megabucket.
     """
     ds = F.col("_ds")
-    if prefilter_hot:
-        # one extra count-shuffle of the bucket table, paid only on the
-        # drops-exist path (the caller's skew policy already measured them)
-        buckets = capped_buckets(buckets, max_bucket_size, key_cols)
+    if sizes is not None and max_bucket_size is not None:
+        hot = sizes.where(F.col("sz") > max_bucket_size).select(*key_cols)
+        buckets = buckets.join(hot, list(key_cols), "left_anti")
     grouped = buckets.groupBy(*key_cols).agg(F.collect_list(DOC).alias("_ds"))
     sized = grouped.where(F.size(ds) >= 2)
     if max_bucket_size is not None:
-        # belt-and-braces: also enforces the cap when prefilter_hot is off
+        # belt-and-braces: also enforces the cap without ``sizes``
         sized = sized.where(F.size(ds) <= max_bucket_size)
     return sized.select("_ds").mapInPandas(_emit_bucket_pairs, _PAIR_SCHEMA)
 

@@ -62,12 +62,12 @@ from ..checkpoint import in_memory_stages
 from ..config import MatchConfig
 from ..functions.normalize import py_normalize
 from ..operators.candidates import (
+    _bucket_sizes,
     _grouped_bucket_pairs,
     _over_cap_buckets,
     _over_cap_stats,
     _salted_self_pairs,
     auto_skew_policy,
-    bucket_drop_stats,
     capped_buckets,
 )
 from ..operators.similarity import LEFT, RIGHT, SIM, _rescore_dot
@@ -428,36 +428,46 @@ def lsh_band_candidates(
     a one-pass bucket-size histogram (candidates.auto_skew_policy) and
     ALWAYS logs the measured skew/drop accounting (WARNING when buckets are
     dropped), so drops are never silent.  Salting never changes the
-    emitted pair set.  A ``drop_stats`` dict receives the accounting."""
+    emitted pair set.  A ``drop_stats`` dict receives the accounting.  The
+    bucket table is counted once: a pairing that needs bucket sizes reads
+    the accounting's ``(key, sz)`` table."""
     import logging
 
-    log = logging.getLogger("string_grouper_spark.skew")
     buckets = _bucket_table(vecs)
     kc = ("key",)
-    has_drops = False
-    if salt_above == "auto":
-        policy = auto_skew_policy(buckets, max_bucket_size, key_cols=kc)
-        salt_above = policy["salt_above"]
-        has_drops = policy["n_buckets_dropped"] > 0
+    sizes = None
+    if salt_above == "auto" or drop_stats is not None:
+        # kept (local checkpoint) once the accounting has read it, so a
+        # pairing that needs bucket sizes too does not count them again
+        sizes = _bucket_sizes(buckets, kc).localCheckpoint(eager=False)
+        if salt_above == "auto":
+            stats = auto_skew_policy(
+                buckets, max_bucket_size, key_cols=kc, sizes=sizes
+            )
+            salt_above = stats["salt_above"]
+        else:
+            stats = _over_cap_stats(
+                None if max_bucket_size is None
+                else sizes.where(F.col("sz") > max_bucket_size)
+            )
+        if salt_above is None and not stats["n_buckets_dropped"]:
+            sizes = None  # the pairing's size filter is enough
         if drop_stats is not None:
-            drop_stats.update(policy)
-        emit = log.warning if policy["n_buckets_dropped"] else log.info
-        emit("lsh skew policy: %s", policy)
-    elif drop_stats is not None:
-        drop_stats.update(bucket_drop_stats(buckets, max_bucket_size, key_cols=kc))
-        has_drops = drop_stats.get("n_buckets_dropped", 0) > 0
-        if has_drops:
-            log.warning("lsh bucket drops: %s", drop_stats)
+            drop_stats.update(stats)
+        log = logging.getLogger("string_grouper_spark.skew")
+        emit = log.warning if stats["n_buckets_dropped"] else log.info
+        emit("lsh skew policy: %s", stats)
     if salt_above is None:
-        # one-shuffle grouped pairing (see _grouped_bucket_pairs); when
-        # the measured histogram shows over-cap buckets, pre-filter them
-        # via broadcast anti-join so no task collect_lists a megabucket
+        # one-shuffle grouped pairing (see _grouped_bucket_pairs); given
+        # sizes, dropped buckets are anti-joined out first so no task
+        # collect_lists a megabucket
         raw_pairs = _grouped_bucket_pairs(
-            buckets, max_bucket_size, key_cols=kc, prefilter_hot=has_drops
+            buckets, max_bucket_size, key_cols=kc, sizes=sizes
         )
     else:
         raw_pairs = _salted_self_pairs(
-            buckets, salt_above, key_cols=kc, max_bucket_size=max_bucket_size
+            buckets, salt_above, key_cols=kc, max_bucket_size=max_bucket_size,
+            sizes=sizes,
         )
     # a pair colliding in several bands is one candidate
     return raw_pairs.dropDuplicates([LEFT, RIGHT])

@@ -459,9 +459,9 @@ def test_minhash_deterministic_across_runs(spark, docs):
 
 
 def test_prefilter_hot_equals_postfilter_pairs(spark):
-    # prefilter_hot drops over-cap buckets BEFORE collect_list (so no task
-    # ever materializes a megabucket) — the emitted pair set must be
-    # identical to the F.size-after-collect filter
+    # given the bucket sizes, over-cap buckets are dropped BEFORE
+    # collect_list (so no task ever materializes a megabucket) — the
+    # emitted pair set must be identical to the F.size-after-collect filter
     pdf = pd.DataFrame(
         {
             "key": [7] * 12 + [9] * 4 + [11] * 2,
@@ -472,7 +472,8 @@ def test_prefilter_hot_equals_postfilter_pairs(spark):
     key = lambda d: set(zip(d[LEFT], d[RIGHT]))
     post = cand._grouped_bucket_pairs(buckets, 5, key_cols=("key",)).toPandas()
     pre = cand._grouped_bucket_pairs(
-        buckets, 5, key_cols=("key",), prefilter_hot=True
+        buckets, 5, key_cols=("key",),
+        sizes=cand._bucket_sizes(buckets, ("key",)),
     ).toPandas()
     assert key(post) == key(pre)
     # the size-12 bucket is gone either way; the size-4 and size-2 survive

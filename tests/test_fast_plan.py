@@ -247,6 +247,47 @@ def test_fast_bipartite_megabucket_per_side_drops(spark):
     assert pairs == {(10, 105)}
 
 
+def test_band_candidates_count_the_bucket_table_once(spark, monkeypatch):
+    # salt_above="auto" with a dropped megabucket: the cap's anti-join reads
+    # the (key, sz) table the skew policy measured, so each bucket row is
+    # read twice (the histogram and the pairing), not counted a second time
+    from string_grouper_spark.operators.similarity import LEFT, RIGHT
+    from string_grouper_spark.plans import fast_dedup
+
+    # band key 7 on docs 0-11 (over the cap of 5), key 9 on docs 1, 5, 20
+    # and 21, and one key of its own per doc
+    ids = list(range(12)) + [20, 21]
+    bands = [[7, 9, 100 + d] if d in (1, 5) else [7, 100 + d] for d in range(12)]
+    bands += [[9, 120], [9, 121]]
+    vecs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": ids, "bands": bands}),
+        "doc_id long, bands array<long>",
+    )
+    reads = spark.sparkContext.accumulator(0)
+
+    def tap(key):
+        reads.add(1)
+        return key
+
+    table, tapped = fast_dedup._bucket_table, F.udf(tap, "long")
+    monkeypatch.setattr(
+        fast_dedup, "_bucket_table",
+        lambda v: table(v).withColumn("key", tapped("key")),
+    )
+    stats = {}
+    got = fast_dedup.lsh_band_candidates(
+        vecs, 5, salt_above="auto", drop_stats=stats
+    ).toPandas()
+    assert set(zip(got[LEFT], got[RIGHT])) == {
+        (1, 5), (1, 20), (1, 21), (5, 20), (5, 21), (20, 21)
+    }
+    assert stats == {
+        "salt_above": None, "n_buckets": 16, "max_sz": 4, "est_pairs": 6,
+        "n_buckets_dropped": 1, "n_rows_dropped": 12, "est_pairs_dropped": 66,
+    }
+    assert reads.value == 2 * sum(map(len, bands))
+
+
 def test_prefit_matcher_frozen_vocab_semantics(spark):
     # PrefitLshMatcher = the reference's corpus-reuse workflow: vocabulary
     # and IDF frozen on the CORPUS; batch grams outside the vocabulary are

@@ -1,8 +1,16 @@
-"""get_spark's driver JVM options: a fixed heap with a bounded eden."""
+"""get_spark's session: driver JVM options (a fixed heap with a bounded
+eden) and the Python worker daemon that reads zip archives once."""
 
+import importlib
 import os
+import subprocess
+import sys
+import zipfile
+import zipimport
 
-from string_grouper_spark import session
+import pytest
+
+from string_grouper_spark import _worker_daemon, session
 from string_grouper_spark.session import _driver_java_options, _mem_bytes
 
 
@@ -31,3 +39,79 @@ def test_session_jvm_runs_with_the_options(spark):
     args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
     for opt in want.split():
         assert opt in args
+
+
+def _write_zip(path, modules):
+    with zipfile.ZipFile(path, "w") as z:
+        for name, src in modules.items():
+            z.writestr(f"{name}.py", src)
+
+
+@pytest.mark.skipif(
+    sys.version_info >= (3, 13), reason="zipimporter re-reads lazily from 3.13"
+)
+def test_worker_daemon_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, {"sgs_zip_a": "A = 1\n"})
+    monkeypatch.syspath_prepend(archive)
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches",
+        zipimport.zipimporter.invalidate_caches,
+    )
+    monkeypatch.setattr(_worker_daemon, "_read_at", {})
+    read = zipimport._read_directory
+    reads = []
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda p: reads.append(p) or read(p)
+    )
+    try:
+        assert importlib.import_module("sgs_zip_a").A == 1
+        reads.clear()
+        _worker_daemon.cache_zip_directories()
+        assert reads.count(archive) == 1
+        for _ in range(3):  # one call per task in a Spark worker
+            importlib.invalidate_caches()
+        assert reads.count(archive) == 1
+        # a rewritten archive is read again, and its new module imports
+        _write_zip(archive, {"sgs_zip_a": "A = 1\n", "sgs_zip_b": "B = 2\n"})
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 2
+        assert importlib.import_module("sgs_zip_b").B == 2
+    finally:
+        for name in ("sgs_zip_a", "sgs_zip_b"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(archive, None)
+
+
+def test_session_workers_fork_from_the_worker_daemon(spark):
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") == _worker_daemon.__name__
+
+    def report(batches):
+        import zipimport
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        code = zipimport.zipimporter.invalidate_caches.__code__
+        yield pa.RecordBatch.from_pydict({"file": [code.co_filename]})
+
+    got = spark.range(8, numPartitions=2).mapInArrow(report, "file string")
+    files = {r.file for r in got.collect()}
+    if sys.version_info < (3, 13):
+        assert len(files) == 1
+        assert os.path.samefile(files.pop(), _worker_daemon.__file__)
+
+
+def test_worker_daemon_writes_nothing_to_stdout():
+    # the daemon's stdout carries its port to the JVM: a stray print there
+    # breaks every Python task
+    root = os.path.dirname(os.path.dirname(_worker_daemon.__file__))
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "from string_grouper_spark import _worker_daemon as d; "
+         "d.cache_zip_directories()"],
+        cwd=root, capture_output=True, check=True,
+    )
+    assert out.stdout == b""
