@@ -1,6 +1,7 @@
 """``pyspark.daemon`` whose forked workers re-read a zip archive's directory
-only when the archive changed, not on every task (``session``'s docstring
-has why).  Nothing here may print: stdout carries the port to the JVM."""
+only when it changed, not on every task as Spark's worker makes zipimporter
+do before CPython 3.13.  Started by ``python -m``, so workers must find the
+package at start.  Nothing may print: stdout carries the port to the JVM."""
 
 import importlib
 import os
@@ -26,8 +27,7 @@ def _invalidate_caches(self):
 
 
 def cache_zip_directories():
-    """Patch ``zipimporter`` (Python < 3.13) and read each archive once, so
-    forked workers start with every stamp recorded."""
+    """Patch ``zipimporter`` and read each archive once, stamps recorded."""
     if sys.version_info < (3, 13):
         zipimport.zipimporter.invalidate_caches = _invalidate_caches
         importlib.invalidate_caches()

@@ -18,7 +18,7 @@ numpy — no per-row Python (input_hint requirement).
 Skew design: band/bucket keys are Zipf-distributed on web text.  Buckets
 larger than ``max_bucket_size`` are dropped from candidate generation (they
 are near-stop-gram buckets that would contribute |bucket|^2 join rows); the
-drops are measured by ``auto_skew_policy`` / ``bucket_drop_stats`` so
+drops are measured by ``auto_skew_policy`` / ``_over_cap_stats`` so
 recall accounting stays honest.  AQE skew-join splitting handles residual
 imbalance.
 """
@@ -30,7 +30,7 @@ from typing import Optional, Tuple
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
@@ -41,22 +41,6 @@ from .similarity import LEFT, RIGHT
 # --------------------------------------------------------------------------
 # LSH bucket pairing and skew accounting
 # --------------------------------------------------------------------------
-
-
-def bucket_drop_stats(
-    buckets: DataFrame,
-    max_bucket_size: Optional[int],
-    key_cols=("band", "key"),
-) -> dict:
-    """Recall accounting for the hot-bucket guard: what does dropping buckets
-    larger than ``max_bucket_size`` cost?  Returns counts of dropped buckets,
-    member rows, and the implied candidate pairs (s*(s-1)/2 per bucket) —
-    one small aggregation job, meant to be LOGGED with every production run
-    so bucket drops are never silent (SURVEY §4.2(2))."""
-    return _over_cap_stats(
-        None if max_bucket_size is None
-        else _over_cap_buckets(buckets, max_bucket_size, key_cols)
-    )
 
 
 def _bucket_sizes(buckets, key_cols) -> DataFrame:
@@ -70,7 +54,8 @@ def _over_cap_buckets(buckets, max_bucket_size: int, key_cols) -> DataFrame:
 
 
 def _over_cap_stats(over_cap: Optional[DataFrame]) -> dict:
-    """``bucket_drop_stats`` of an ``_over_cap_buckets`` set (None: no cap)."""
+    """Recall accounting (dropped buckets, member rows, implied pairs) of an
+    ``_over_cap_buckets`` set (None: no cap), LOGGED so drops are never silent."""
     if over_cap is None:
         return {"n_buckets_dropped": 0, "n_rows_dropped": 0, "est_pairs_dropped": 0}
     row = over_cap.agg(
@@ -86,16 +71,14 @@ def _over_cap_stats(over_cap: Optional[DataFrame]) -> dict:
 
 
 def auto_skew_policy(
-    buckets: DataFrame,
+    sizes: DataFrame,
     max_bucket_size: Optional[int] = None,
     parallelism: Optional[int] = None,
     target_pairs_per_task: int = 4_000_000,
-    key_cols=("band", "key"),
-    sizes: Optional[DataFrame] = None,
-) -> dict:
-    """ONE aggregation pass over the band table picks the hot-bucket salt
-    threshold from the MEASURED bucket-size histogram (SURVEY §4.2(2): "s
-    chosen from a first-pass key histogram") and returns the full skew /
+) -> Tuple[dict, DataFrame]:
+    """ONE pass over a bucket table's ``_bucket_sizes`` picks the hot-bucket
+    salt threshold from the MEASURED bucket-size histogram (SURVEY §4.2(2):
+    "s chosen from a first-pass key histogram") and returns the full skew /
     drop accounting, so a production run never drops or skews silently.
 
     Policy: a bucket needs salting when its own pair work (sz^2/2) exceeds a
@@ -105,29 +88,35 @@ def auto_skew_policy(
     exceeds that, salting is skipped (returns ``salt_above=None``) — the
     common case, where the grouped one-shuffle pairing is strictly better.
 
-    Returned dict: ``salt_above`` plus the histogram summary
-    (n_buckets / max_sz / est_pairs) and the drop accounting vs
-    ``max_bucket_size`` (n_buckets_dropped / n_rows_dropped /
+    Returns ``(policy, over_cap)``.  ``policy``: ``salt_above`` plus the
+    histogram summary (n_buckets / max_sz / est_pairs) and the drop
+    accounting vs ``max_bucket_size`` (n_buckets_dropped / n_rows_dropped /
     est_pairs_dropped) — everything a caller should LOG with the run.
-    ``sizes``: the table's ``_bucket_sizes``, when the caller holds it.
+    ``over_cap``: the dropped buckets' ``(key, sz)`` rows, kept (local
+    checkpoint) by the same pass, which observes the histogram on their way
+    — a megabucket filter reads them instead of counting the table again.
     """
     import math
 
     if parallelism is None:
-        parallelism = buckets.sparkSession.sparkContext.defaultParallelism
+        parallelism = sizes.sparkSession.sparkContext.defaultParallelism
     sz = F.col("sz")
     pairs_of = sz * (sz - 1) / 2  # double arithmetic: no ANSI long overflow
-    surviving = sz <= max_bucket_size if max_bucket_size is not None else F.lit(True)
-    if sizes is None:
-        sizes = _bucket_sizes(buckets, key_cols)
-    row = sizes.agg(
+    # no cap: every bucket survives, by a filter the optimizer cannot fold
+    # to false (pruning it would drop the observed pass from the plan)
+    cap = max_bucket_size if max_bucket_size is not None else 2**63 - 1
+    surviving = sz <= cap
+    measured = Observation()
+    over_cap = sizes.observe(
+        measured,
         F.count(F.lit(1)).alias("n_buckets"),
         F.coalesce(F.max(F.when(surviving, sz)), F.lit(0)).alias("max_sz"),
         F.coalesce(F.sum(F.when(surviving, pairs_of)), F.lit(0.0)).alias("est_pairs"),
         F.coalesce(F.count(F.when(~surviving, F.lit(1))), F.lit(0)).alias("nb_drop"),
         F.coalesce(F.sum(F.when(~surviving, sz)), F.lit(0)).alias("nr_drop"),
         F.coalesce(F.sum(F.when(~surviving, pairs_of)), F.lit(0.0)).alias("np_drop"),
-    ).first()
+    ).where(~surviving).localCheckpoint()
+    row = measured.get
     est_pairs = float(row["est_pairs"])
     per_task = max(float(target_pairs_per_task), est_pairs / max(parallelism, 1))
     threshold = int(math.ceil(math.sqrt(2.0 * per_task)))
@@ -140,7 +129,7 @@ def auto_skew_policy(
         "n_buckets_dropped": int(row["nb_drop"]),
         "n_rows_dropped": int(row["nr_drop"]),
         "est_pairs_dropped": int(row["np_drop"]),
-    }
+    }, over_cap
 
 
 def _salted_self_pairs(
@@ -148,7 +137,6 @@ def _salted_self_pairs(
     salt_above: Optional[int],
     key_cols=("band", "key"),
     max_bucket_size: Optional[int] = None,
-    sizes: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Self-join a (*key_cols, <doc>) bucket table into pairs l<r.
 
@@ -165,8 +153,7 @@ def _salted_self_pairs(
     window over the key: ``Window.partitionBy(key)`` would land every hot
     key's rows in one task — the exact skew this function exists to
     avoid, paid before it could help — and AQE can split a skewed join
-    but never a window.  ``sizes``: the table's ``_bucket_sizes``, when
-    the caller holds it.
+    but never a window.
     """
     keys = list(key_cols)
     if salt_above is None:
@@ -180,9 +167,7 @@ def _salted_self_pairs(
             .where(F.col(LEFT) < F.col(RIGHT))
             .select(LEFT, RIGHT)
         )
-    if sizes is None:
-        sizes = _bucket_sizes(buckets, keys)
-    sizes = sizes.withColumnRenamed("sz", "_sz")
+    sizes = buckets.groupBy(*keys).agg(F.count(F.lit(1)).alias("_sz"))
     if max_bucket_size is not None:
         sizes = sizes.where(F.col("_sz") <= max_bucket_size)
     sized = buckets.join(sizes, keys)  # inner join doubles as the cap filter
@@ -242,7 +227,7 @@ def _grouped_bucket_pairs(
     buckets: DataFrame,
     max_bucket_size: Optional[int],
     key_cols=("band", "key"),
-    sizes: Optional[DataFrame] = None,
+    over_cap: Optional[DataFrame] = None,
 ) -> DataFrame:
     """ONE-SHUFFLE bucket pairing: group members per (band, key), emit all
     in-bucket pairs from the collected array.
@@ -259,22 +244,22 @@ def _grouped_bucket_pairs(
     instead (``_salted_self_pairs``).  Emits one row per (bucket, pair):
     callers dedupe or count collisions.
 
-    ``sizes``: the ``F.size`` cap filters AFTER ``collect_list``
+    ``over_cap``: the ``F.size`` cap filters AFTER ``collect_list``
     materializes each bucket — a 10^9-member stop-gram bucket would build
     one multi-GB aggregation buffer before being discarded.  Given the
-    table's ``_bucket_sizes`` (the flagship passes the one its skew policy
-    measured, exactly when that policy counted dropped buckets), the
-    over-cap keys are anti-joined out of the bucket table first, so no
-    task ever collects a megabucket.
+    over-cap buckets' keys (the flagship passes the rows its skew policy
+    kept, exactly when that policy counted dropped buckets), they are
+    anti-joined out of the bucket table first, so no task ever collects a
+    megabucket.
     """
     ds = F.col("_ds")
-    if sizes is not None and max_bucket_size is not None:
-        hot = sizes.where(F.col("sz") > max_bucket_size).select(*key_cols)
+    if over_cap is not None:
+        hot = over_cap.select(*key_cols)
         buckets = buckets.join(hot, list(key_cols), "left_anti")
     grouped = buckets.groupBy(*key_cols).agg(F.collect_list(DOC).alias("_ds"))
     sized = grouped.where(F.size(ds) >= 2)
     if max_bucket_size is not None:
-        # belt-and-braces: also enforces the cap without ``sizes``
+        # belt-and-braces: also enforces the cap without ``over_cap``
         sized = sized.where(F.size(ds) <= max_bucket_size)
     return sized.select("_ds").mapInPandas(_emit_bucket_pairs, _PAIR_SCHEMA)
 

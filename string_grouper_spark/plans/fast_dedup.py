@@ -429,45 +429,40 @@ def lsh_band_candidates(
     ALWAYS logs the measured skew/drop accounting (WARNING when buckets are
     dropped), so drops are never silent.  Salting never changes the
     emitted pair set.  A ``drop_stats`` dict receives the accounting.  The
-    bucket table is counted once: a pairing that needs bucket sizes reads
-    the accounting's ``(key, sz)`` table."""
+    bucket table is counted once: dropped buckets are filtered out by the
+    over-cap rows that the accounting's pass kept."""
     import logging
 
     buckets = _bucket_table(vecs)
     kc = ("key",)
-    sizes = None
-    if salt_above == "auto" or drop_stats is not None:
-        # kept (local checkpoint) once the accounting has read it, so a
-        # pairing that needs bucket sizes too does not count them again
-        sizes = _bucket_sizes(buckets, kc).localCheckpoint(eager=False)
+    stats = over_cap = None
+    if salt_above == "auto" or (
+        drop_stats is not None and max_bucket_size is not None
+    ):
+        sizes = _bucket_sizes(buckets, kc)
+        stats, over_cap = auto_skew_policy(sizes, max_bucket_size)
         if salt_above == "auto":
-            stats = auto_skew_policy(
-                buckets, max_bucket_size, key_cols=kc, sizes=sizes
-            )
             salt_above = stats["salt_above"]
-        else:
-            stats = _over_cap_stats(
-                None if max_bucket_size is None
-                else sizes.where(F.col("sz") > max_bucket_size)
-            )
-        if salt_above is None and not stats["n_buckets_dropped"]:
-            sizes = None  # the pairing's size filter is enough
+        stats["salt_above"] = salt_above
+    elif drop_stats is not None:
+        stats = _over_cap_stats(None)  # no cap: nothing dropped
+    if stats is not None:
         if drop_stats is not None:
             drop_stats.update(stats)
         log = logging.getLogger("string_grouper_spark.skew")
         emit = log.warning if stats["n_buckets_dropped"] else log.info
         emit("lsh skew policy: %s", stats)
     if salt_above is None:
-        # one-shuffle grouped pairing (see _grouped_bucket_pairs); given
-        # sizes, dropped buckets are anti-joined out first so no task
-        # collect_lists a megabucket
+        # one-shuffle grouped pairing (see _grouped_bucket_pairs); dropped
+        # buckets are anti-joined out first so no task collect_lists a
+        # megabucket
         raw_pairs = _grouped_bucket_pairs(
-            buckets, max_bucket_size, key_cols=kc, sizes=sizes
+            buckets, max_bucket_size, key_cols=kc,
+            over_cap=over_cap if stats and stats["n_buckets_dropped"] else None,
         )
     else:
         raw_pairs = _salted_self_pairs(
-            buckets, salt_above, key_cols=kc, max_bucket_size=max_bucket_size,
-            sizes=sizes,
+            buckets, salt_above, key_cols=kc, max_bucket_size=max_bucket_size
         )
     # a pair colliding in several bands is one candidate
     return raw_pairs.dropDuplicates([LEFT, RIGHT])
@@ -568,8 +563,9 @@ def fast_lsh_dedup_bipartite(
 
     Returns (master_side, dupe_side, similarity) with
     sim >= cfg.min_similarity: the exact two-series path's pairs that share
-    a band key.  ``drop_stats`` (a dict) receives each side's
-    ``bucket_drop_stats`` under ``"master"`` and ``"duplicates"``.
+    a band key.  ``drop_stats`` (a dict) receives each side's drop
+    accounting (``candidates._over_cap_stats``) under ``"master"`` and
+    ``"duplicates"``.
     """
     import logging
 

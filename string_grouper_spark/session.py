@@ -4,16 +4,6 @@ Defaults are tuned for correctness-at-scale: AQE on (skew-join splitting +
 partition coalescing replace the reference's manual ``n_blocks`` machinery,
 string_grouper.py:387-415), Arrow on (all our Python kernels are
 pandas_udf/mapInPandas).
-
-Python workers fork from ``_worker_daemon``.  Spark's worker calls
-``importlib.invalidate_caches()`` per task; before CPython 3.13 (whose
-``Lib/zipimport.py`` ``zipimporter.invalidate_caches`` only drops the
-cache) every zipimporter then re-reads its archive: 16 importers over
-pyspark.zip, py4j and the spark-core jar, 26,672 entries, 133-221 ms per
-task (4 cores, load average 2).  The daemon's workers re-read only a changed
-archive (0.1 ms): perfbench ``pages_union`` warm ``wall_s`` 6.07 -> 4.31 s
-(medians of 10 interleaved pairs, 4 cores).  Workers must be able to
-import the package, as its own UDFs already require.
 """
 
 from __future__ import annotations
@@ -61,6 +51,22 @@ def _driver_java_options(driver_mem: str) -> str:
     if heap <= os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"):
         opts.insert(0, f"-Xms{heap >> 20}m")
     return " ".join(opts)
+
+
+def _daemon_module(master: str) -> str:
+    """``_worker_daemon`` when local workers find the package at start: a
+    directory in the working directory, on PYTHONPATH or in site-packages,
+    not only one shipped by ``--py-files``/``addPyFile``; else Spark's."""
+    import site
+
+    home = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    paths += [*site.getsitepackages(), site.getusersitepackages()]
+    if re.fullmatch(r"local(\[.*\])?", master) and any(
+        os.path.isdir(p) and os.path.samefile(p, home) for p in paths if p
+    ):
+        return "string_grouper_spark._worker_daemon"
+    return "pyspark.daemon"
 
 
 def get_spark(
@@ -130,7 +136,7 @@ def get_spark(
         # heap is still spark.executor.memory (default 1g!) — size it too
         .config("spark.executor.memory", os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "4g"))
         .config("spark.ui.enabled", "false")
-        # skips the per-task zip re-read: ~0.2 s per Python task (above)
-        .config("spark.python.daemon.module", "string_grouper_spark._worker_daemon")
+        # local workers skip the per-task zip re-read (_worker_daemon)
+        .config("spark.python.daemon.module", _daemon_module(master))
         .getOrCreate()
     )

@@ -274,27 +274,30 @@ def test_megabucket_drop_accounting_and_salting(spark):
 def test_auto_skew_policy_from_histogram(spark):
     # the threshold must come from the MEASURED bucket histogram: small
     # buckets -> no salting; a megabucket -> salt_above derived from the
-    # per-task pair budget; drop accounting matches bucket_drop_stats
+    # per-task pair budget; dropped buckets are fully accounted
     small = spark.createDataFrame(
         pd.DataFrame({"band": [0] * 6, "key": [1, 1, 1, 2, 2, 3], "doc_id": range(6)})
     )
-    pol = cand.auto_skew_policy(small, None, parallelism=8, target_pairs_per_task=100)
+    sizes = lambda b: cand._bucket_sizes(b, ("band", "key"))
+    pol, _ = cand.auto_skew_policy(sizes(small), None, parallelism=8, target_pairs_per_task=100)
     assert pol["salt_above"] is None and pol["max_sz"] == 3
     assert pol["n_buckets_dropped"] == 0
 
     mega = spark.createDataFrame(
         pd.DataFrame({"band": [0] * 300, "key": [7] * 300, "doc_id": range(300)})
     )
-    pol = cand.auto_skew_policy(mega, None, parallelism=8, target_pairs_per_task=100)
+    pol, _ = cand.auto_skew_policy(sizes(mega), None, parallelism=8, target_pairs_per_task=100)
     # 300^2/2 pairs >> budget: salt threshold = ceil(sqrt(2*per_task))
     assert pol["salt_above"] is not None and pol["salt_above"] < 300
     assert pol["est_pairs"] == 300 * 299 // 2
     # with a cap, the dropped megabucket is fully accounted
-    pol_capped = cand.auto_skew_policy(mega, 100, parallelism=8)
+    pol_capped, over_cap = cand.auto_skew_policy(sizes(mega), 100, parallelism=8)
     assert pol_capped["n_buckets_dropped"] == 1
     assert pol_capped["n_rows_dropped"] == 300
     assert pol_capped["est_pairs_dropped"] == 300 * 299 // 2
     assert pol_capped["salt_above"] is None  # nothing survives to salt
+    # the same pass kept the dropped bucket's row for the pairing's filter
+    assert [tuple(r) for r in over_cap.collect()] == [(0, 7, 300)]
 
 
 def test_fast_dedup_default_run_reports_megabucket(spark, caplog):
@@ -459,7 +462,7 @@ def test_minhash_deterministic_across_runs(spark, docs):
 
 
 def test_prefilter_hot_equals_postfilter_pairs(spark):
-    # given the bucket sizes, over-cap buckets are dropped BEFORE
+    # given the over-cap rows, those buckets are dropped BEFORE
     # collect_list (so no task ever materializes a megabucket) — the
     # emitted pair set must be identical to the F.size-after-collect filter
     pdf = pd.DataFrame(
@@ -473,7 +476,7 @@ def test_prefilter_hot_equals_postfilter_pairs(spark):
     post = cand._grouped_bucket_pairs(buckets, 5, key_cols=("key",)).toPandas()
     pre = cand._grouped_bucket_pairs(
         buckets, 5, key_cols=("key",),
-        sizes=cand._bucket_sizes(buckets, ("key",)),
+        over_cap=cand._over_cap_buckets(buckets, 5, ("key",)),
     ).toPandas()
     assert key(post) == key(pre)
     # the size-12 bucket is gone either way; the size-4 and size-2 survive

@@ -247,10 +247,12 @@ def test_fast_bipartite_megabucket_per_side_drops(spark):
     assert pairs == {(10, 105)}
 
 
-def test_band_candidates_count_the_bucket_table_once(spark, monkeypatch):
-    # salt_above="auto" with a dropped megabucket: the cap's anti-join reads
-    # the (key, sz) table the skew policy measured, so each bucket row is
-    # read twice (the histogram and the pairing), not counted a second time
+@pytest.mark.parametrize("salt_above", ["auto", None])
+def test_band_candidates_count_the_bucket_table_once(spark, monkeypatch, salt_above):
+    # a dropped megabucket, measured by the skew policy (auto) or by the drop
+    # accounting (an explicit threshold): the cap's anti-join reads the
+    # over-cap rows that pass kept, so each bucket row is read twice (the
+    # histogram and the pairing), not counted a second time
     from string_grouper_spark.operators.similarity import LEFT, RIGHT
     from string_grouper_spark.plans import fast_dedup
 
@@ -276,7 +278,7 @@ def test_band_candidates_count_the_bucket_table_once(spark, monkeypatch):
     )
     stats = {}
     got = fast_dedup.lsh_band_candidates(
-        vecs, 5, salt_above="auto", drop_stats=stats
+        vecs, 5, salt_above=salt_above, drop_stats=stats
     ).toPandas()
     assert set(zip(got[LEFT], got[RIGHT])) == {
         (1, 5), (1, 20), (1, 21), (5, 20), (5, 21), (20, 21)

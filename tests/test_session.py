@@ -1,5 +1,6 @@
 """get_spark's session: driver JVM options (a fixed heap with a bounded
-eden) and the Python worker daemon that reads zip archives once."""
+eden), and the Python worker daemon that reads zip archives once where the
+workers can import it."""
 
 import importlib
 import os
@@ -11,7 +12,7 @@ import zipimport
 import pytest
 
 from string_grouper_spark import _worker_daemon, session
-from string_grouper_spark.session import _driver_java_options, _mem_bytes
+from string_grouper_spark.session import _daemon_module, _driver_java_options, _mem_bytes
 
 
 def test_mem_bytes_reads_jvm_memory_strings():
@@ -83,7 +84,27 @@ def test_worker_daemon_rereads_only_a_changed_archive(tmp_path, monkeypatch):
         sys.path_importer_cache.pop(archive, None)
 
 
+def test_daemon_module_needs_local_workers_that_find_the_package(
+    tmp_path, monkeypatch
+):
+    root = os.path.dirname(os.path.dirname(_worker_daemon.__file__))
+    monkeypatch.delenv("PYTHONPATH", raising=False)
+    monkeypatch.chdir(root)
+    for master in ("local", "local[4]", "local[*]"):
+        assert _daemon_module(master) == _worker_daemon.__name__
+    # executors of a cluster start elsewhere
+    for master in ("local-cluster[2,1,1024]", "spark://host:7077", "yarn"):
+        assert _daemon_module(master) == "pyspark.daemon"
+    # a driver outside the repository, importing the package through its
+    # own sys.path: the workers would not find it at daemon start
+    monkeypatch.chdir(tmp_path)
+    assert _daemon_module("local[4]") == "pyspark.daemon"
+    monkeypatch.setenv("PYTHONPATH", os.pathsep.join([str(tmp_path), root]))
+    assert _daemon_module("local[4]") == _worker_daemon.__name__
+
+
 def test_session_workers_fork_from_the_worker_daemon(spark):
+    # the test session runs from the repository root on a local master
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.python.daemon.module") == _worker_daemon.__name__
 
@@ -115,3 +136,40 @@ def test_worker_daemon_writes_nothing_to_stdout():
         cwd=root, capture_output=True, check=True,
     )
     assert out.stdout == b""
+
+
+def test_workers_import_the_package_shipped_with_add_py_file(tmp_path):
+    # a driver outside the repository reaches the package through its own
+    # sys.path; the workers get it only from addPyFile, once tasks start
+    root = os.path.dirname(os.path.dirname(_worker_daemon.__file__))
+    shipped = tmp_path / "shipped.zip"
+    with zipfile.ZipFile(shipped, "w") as z:
+        for d, _, files in os.walk(os.path.join(root, "string_grouper_spark")):
+            for f in files:
+                if f.endswith(".py"):
+                    z.write(os.path.join(d, f), os.path.relpath(os.path.join(d, f), root))
+    script = f"""
+import sys
+sys.path.insert(0, {root!r})
+from string_grouper_spark.session import get_spark
+
+def where(batches):
+    import pyarrow as pa
+    import string_grouper_spark
+    for _ in batches:
+        pass
+    yield pa.RecordBatch.from_pydict({{"file": [string_grouper_spark.__file__]}})
+
+spark = get_spark("add-py-file", master="local[1]")
+spark.sparkContext.addPyFile({str(shipped)!r})
+print(spark.range(1).mapInArrow(where, "file string").first().file)
+spark.stop()
+"""
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    env.pop("PYTHONPATH", None)
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "shipped.zip" in out.stdout.splitlines()[-1]
