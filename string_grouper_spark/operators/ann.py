@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..checkpoint import in_memory_stages
+from .candidates import capped_buckets
 
 
 def _norm_expr(col):
@@ -414,7 +415,7 @@ def lsh_cosine_topk(
     one executor (O(m * dim) doubles + a row_block * m score slab).  Size
     ``planes_per_table`` ~ log2(n / target_bucket_size) so expected
     buckets stay small; ``max_bucket_size`` additionally DROPS over-cap
-    buckets via a count-agg + broadcast anti-join (the text path's
+    buckets via a count-agg + anti-join (the text path's
     ``capped_buckets`` — the bucket is never materialized).  Dropping a
     megabucket is standard LSH practice (it is the low-selectivity
     noise bucket), but it is a recall trade — leave None to keep every
@@ -423,10 +424,7 @@ def lsh_cosine_topk(
     bucketed = _sign_lsh_buckets(
         items, dim, num_tables, planes_per_table, id_col, vec_col
     )
-    if max_bucket_size is not None:
-        from .candidates import capped_buckets
-
-        bucketed = capped_buckets(bucketed, max_bucket_size, ("tbl", "key"))
+    bucketed = capped_buckets(bucketed, max_bucket_size, ("tbl", "key"))
     return _finalize_topk(_bucket_local_topk(bucketed, ["tbl", "key"], int(k)), int(k))
 
 
@@ -497,10 +495,7 @@ def ivf_cosine_topk(
     # normalization happens INSIDE the assign pass and the unit vector is
     # carried through, so no (interpreted) normalization expression runs
     assigned = _ivf_assign(raw, bc, npb)
-    if max_cell_size is not None:
-        from .candidates import capped_buckets
-
-        assigned = capped_buckets(assigned, max_cell_size, ("cell",))
+    assigned = capped_buckets(assigned, max_cell_size, ("cell",))
     return _finalize_topk(_bucket_local_topk(assigned, ["cell"], int(k)), int(k))
 
 
@@ -665,10 +660,7 @@ class PrefitAnnIndex:
             self._keys = ["cell"]
             # the inverted file proper: each item in its ONE nearest cell
             bucketed = _ivf_assign(raw, self._cents_bc, 1)
-        if max_bucket_size is not None:
-            from .candidates import capped_buckets
-
-            bucketed = capped_buckets(bucketed, max_bucket_size, tuple(self._keys))
+        bucketed = capped_buckets(bucketed, max_bucket_size, tuple(self._keys))
         self._item_buckets = bucketed.persist()
         self._item_buckets.count()  # materialize the frozen index
 
@@ -803,10 +795,7 @@ def embedding_near_dup_pairs(
         bucketed = _sign_lsh_buckets(
             items, dim, num_tables, planes_per_table, id_col, vec_col
         )
-        if max_bucket_size is not None:
-            from .candidates import capped_buckets
-
-            bucketed = capped_buckets(bucketed, max_bucket_size, ("tbl", "key"))
+        bucketed = capped_buckets(bucketed, max_bucket_size, ("tbl", "key"))
         # shared per-bucket BLAS kernel, thresholded INSIDE the mask (with
         # a half-ulp-of-the-rounding margin so the final rounded comparison
         # decides the boundary), ordered pairs i<j — no pair join, no

@@ -18,9 +18,11 @@ numpy — no per-row Python (input_hint requirement).
 Skew design: band/bucket keys are Zipf-distributed on web text.  Buckets
 larger than ``max_bucket_size`` are dropped from candidate generation (they
 are near-stop-gram buckets that would contribute |bucket|^2 join rows); the
-drops are measured by ``auto_skew_policy`` / ``_over_cap_stats`` so
-recall accounting stays honest.  AQE skew-join splitting handles residual
-imbalance.
+drops are measured so recall accounting stays honest.  Two functions
+here count bucket keys: ``bucket_policy`` is the ONE measured pass that
+decides each bucket's cap drop and salting and returns the drop
+accounting; ``capped_buckets`` is the lazy, job-free cap for callers that
+keep no accounting.  AQE skew-join splitting handles residual imbalance.
 """
 
 from __future__ import annotations
@@ -43,84 +45,76 @@ from .similarity import LEFT, RIGHT
 # --------------------------------------------------------------------------
 
 
-def _bucket_sizes(buckets, key_cols) -> DataFrame:
-    """(*key_cols, sz) of every bucket (count-only partial agg)."""
-    return buckets.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("sz"))
+_TARGET_PAIRS_PER_TASK = 4_000_000  # pair work one task may own unsalted
 
 
-def _over_cap_buckets(buckets, max_bucket_size: int, key_cols) -> DataFrame:
-    """(*key_cols, sz) of every over-cap bucket."""
-    return _bucket_sizes(buckets, key_cols).where(F.col("sz") > max_bucket_size)
+def bucket_policy(
+    buckets: DataFrame, key_cols, max_bucket_size: Optional[int], salt_above
+) -> Tuple[dict, Optional[DataFrame]]:
+    """The ONE measured pass over a bucket table that decides every bucket's
+    fate: dropped (over ``max_bucket_size``), salted (over the salt
+    threshold) or paired as is (SURVEY §4.2(2): "s chosen from a
+    first-pass key histogram").
 
+    ``salt_above='auto'`` picks the threshold from the measured histogram:
+    a bucket needs salting when its own pair work (sz^2/2) exceeds a fair
+    per-task share of the surviving pair work — ``per_task =
+    max(_TARGET_PAIRS_PER_TASK, est_pairs / defaultParallelism)``,
+    threshold ``ceil(sqrt(2 * per_task))`` — and skips salting when no
+    surviving bucket exceeds it (the common case, where the grouped
+    one-shuffle pairing is strictly better).  An int is taken as is; None
+    never salts.
 
-def _over_cap_stats(over_cap: Optional[DataFrame]) -> dict:
-    """Recall accounting (dropped buckets, member rows, implied pairs) of an
-    ``_over_cap_buckets`` set (None: no cap), LOGGED so drops are never silent."""
-    if over_cap is None:
-        return {"n_buckets_dropped": 0, "n_rows_dropped": 0, "est_pairs_dropped": 0}
-    row = over_cap.agg(
-        F.count(F.lit(1)).alias("nb"),
-        F.coalesce(F.sum("sz"), F.lit(0)).alias("nr"),
-        F.coalesce(F.sum(F.col("sz") * (F.col("sz") - 1) / 2), F.lit(0)).alias("np"),
-    ).first()
-    return {
-        "n_buckets_dropped": int(row["nb"]),
-        "n_rows_dropped": int(row["nr"]),
-        "est_pairs_dropped": int(row["np"]),
-    }
-
-
-def auto_skew_policy(
-    sizes: DataFrame,
-    max_bucket_size: Optional[int] = None,
-    parallelism: Optional[int] = None,
-    target_pairs_per_task: int = 4_000_000,
-) -> Tuple[dict, DataFrame]:
-    """ONE pass over a bucket table's ``_bucket_sizes`` picks the hot-bucket
-    salt threshold from the MEASURED bucket-size histogram (SURVEY §4.2(2):
-    "s chosen from a first-pass key histogram") and returns the full skew /
-    drop accounting, so a production run never drops or skews silently.
-
-    Policy: a bucket needs salting when its own pair work (sz^2/2) exceeds a
-    fair per-task share of the total surviving pair work —
-    ``per_task = max(target_pairs_per_task, est_pairs / parallelism)``,
-    ``salt_above = ceil(sqrt(2 * per_task))``.  If no surviving bucket
-    exceeds that, salting is skipped (returns ``salt_above=None``) — the
-    common case, where the grouped one-shuffle pairing is strictly better.
-
-    Returns ``(policy, over_cap)``.  ``policy``: ``salt_above`` plus the
-    histogram summary (n_buckets / max_sz / est_pairs) and the drop
-    accounting vs ``max_bucket_size`` (n_buckets_dropped / n_rows_dropped /
-    est_pairs_dropped) — everything a caller should LOG with the run.
-    ``over_cap``: the dropped buckets' ``(key, sz)`` rows, kept (local
-    checkpoint) by the same pass, which observes the histogram on their way
-    — a megabucket filter reads them instead of counting the table again.
+    Returns ``(policy, hot)``.  ``policy``: the resolved ``salt_above``,
+    the histogram summary (n_buckets / max_sz / est_pairs) and the drop
+    accounting (n_buckets_dropped / n_rows_dropped / est_pairs_dropped) —
+    everything a caller should LOG with the run.  ``hot``: the
+    ``(*key_cols, sz)`` rows above ``min(cap, lowest salt threshold)``,
+    kept (local checkpoint) by the same pass, so the drop's anti-join and
+    the salted join's sizes read them instead of counting the table again.
+    Every threshold ``'auto'`` can pick is at least
+    ``ceil(sqrt(2 * _TARGET_PAIRS_PER_TASK))``.  With no cap and no
+    salting there is nothing to decide: no job runs and ``hot`` is None.
     """
     import math
 
-    if parallelism is None:
-        parallelism = sizes.sparkSession.sparkContext.defaultParallelism
+    if max_bucket_size is None and salt_above is None:
+        return {
+            "salt_above": None,
+            "n_buckets_dropped": 0, "n_rows_dropped": 0, "est_pairs_dropped": 0,
+        }, None
+    lowest = salt_above
+    if salt_above == "auto":
+        lowest = int(math.ceil(math.sqrt(2.0 * _TARGET_PAIRS_PER_TASK)))
+    bound = min(b for b in (max_bucket_size, lowest) if b is not None)
     sz = F.col("sz")
     pairs_of = sz * (sz - 1) / 2  # double arithmetic: no ANSI long overflow
-    # no cap: every bucket survives, by a filter the optimizer cannot fold
-    # to false (pruning it would drop the observed pass from the plan)
+    # no cap: every bucket survives
     cap = max_bucket_size if max_bucket_size is not None else 2**63 - 1
     surviving = sz <= cap
     measured = Observation()
-    over_cap = sizes.observe(
-        measured,
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.coalesce(F.max(F.when(surviving, sz)), F.lit(0)).alias("max_sz"),
-        F.coalesce(F.sum(F.when(surviving, pairs_of)), F.lit(0.0)).alias("est_pairs"),
-        F.coalesce(F.count(F.when(~surviving, F.lit(1))), F.lit(0)).alias("nb_drop"),
-        F.coalesce(F.sum(F.when(~surviving, sz)), F.lit(0)).alias("nr_drop"),
-        F.coalesce(F.sum(F.when(~surviving, pairs_of)), F.lit(0.0)).alias("np_drop"),
-    ).where(~surviving).localCheckpoint()
+    hot = (
+        buckets.groupBy(*key_cols)
+        .agg(F.count(F.lit(1)).alias("sz"))
+        .observe(
+            measured,
+            F.count(F.lit(1)).alias("n_buckets"),
+            F.coalesce(F.max(F.when(surviving, sz)), F.lit(0)).alias("max_sz"),
+            F.coalesce(F.sum(F.when(surviving, pairs_of)), F.lit(0.0)).alias("est_pairs"),
+            F.coalesce(F.count(F.when(~surviving, F.lit(1))), F.lit(0)).alias("nb_drop"),
+            F.coalesce(F.sum(F.when(~surviving, sz)), F.lit(0)).alias("nr_drop"),
+            F.coalesce(F.sum(F.when(~surviving, pairs_of)), F.lit(0.0)).alias("np_drop"),
+        )
+        .where(sz > bound)
+        .localCheckpoint()
+    )
     row = measured.get
     est_pairs = float(row["est_pairs"])
-    per_task = max(float(target_pairs_per_task), est_pairs / max(parallelism, 1))
-    threshold = int(math.ceil(math.sqrt(2.0 * per_task)))
-    salt_above = threshold if int(row["max_sz"]) > threshold else None
+    if salt_above == "auto":
+        parallelism = buckets.sparkSession.sparkContext.defaultParallelism
+        per_task = max(float(_TARGET_PAIRS_PER_TASK), est_pairs / max(parallelism, 1))
+        threshold = int(math.ceil(math.sqrt(2.0 * per_task)))
+        salt_above = threshold if int(row["max_sz"]) > threshold else None
     return {
         "salt_above": salt_above,
         "n_buckets": int(row["n_buckets"]),
@@ -129,18 +123,15 @@ def auto_skew_policy(
         "n_buckets_dropped": int(row["nb_drop"]),
         "n_rows_dropped": int(row["nr_drop"]),
         "est_pairs_dropped": int(row["np_drop"]),
-    }, over_cap
+    }, hot
 
 
 def _salted_self_pairs(
-    buckets: DataFrame,
-    salt_above: Optional[int],
-    key_cols=("band", "key"),
-    max_bucket_size: Optional[int] = None,
+    buckets: DataFrame, salt_above: int, key_cols, hot: DataFrame
 ) -> DataFrame:
     """Self-join a (*key_cols, <doc>) bucket table into pairs l<r.
 
-    ``salt_above``: buckets larger than this are SALTED — members get
+    Buckets larger than ``salt_above`` are SALTED — members get
     ``nsalt = ceil(sz / salt_above)`` deterministic salt groups, the left
     side is replicated once per target salt, and the join key becomes
     (*key_cols, salt).  Every pair (a,b) with a<b is still emitted exactly
@@ -148,32 +139,19 @@ def _salted_self_pairs(
     partition receives a whole megabucket — the s^2 work is spread over
     nsalt^2 tasks instead of one (SURVEY §4.2(2) hot-band salting).
 
-    Bucket sizes (for the salt count and the ``max_bucket_size`` cap) are
-    computed with a partial-agg ``groupBy().count()`` + equi-join, NOT a
-    window over the key: ``Window.partitionBy(key)`` would land every hot
-    key's rows in one task — the exact skew this function exists to
-    avoid, paid before it could help — and AQE can split a skewed join
-    but never a window.
+    Sizes come from ``hot``, the ``bucket_policy`` rows (every bucket over
+    ``salt_above`` is among them) by a left join; every other bucket has
+    ``nsalt`` 1.  No window over the key: ``Window.partitionBy(key)``
+    would land every hot key's rows in one task — the exact skew this
+    function exists to avoid, paid before it could help — and AQE can
+    split a skewed join but never a window.
     """
     keys = list(key_cols)
-    if salt_above is None:
-        # the cap applies on this branch too (callers that pre-route small
-        # buckets elsewhere just pass max_bucket_size=None)
-        b = capped_buckets(buckets, max_bucket_size, key_cols)
-        l = b.select(*keys, F.col(DOC).alias(LEFT))
-        r = b.select(*keys, F.col(DOC).alias(RIGHT))
-        return (
-            l.join(r, keys)
-            .where(F.col(LEFT) < F.col(RIGHT))
-            .select(LEFT, RIGHT)
-        )
-    sizes = buckets.groupBy(*keys).agg(F.count(F.lit(1)).alias("_sz"))
-    if max_bucket_size is not None:
-        sizes = sizes.where(F.col("_sz") <= max_bucket_size)
-    sized = buckets.join(sizes, keys)  # inner join doubles as the cap filter
-    nsalt = F.ceil(F.col("_sz") / F.lit(int(salt_above))).cast("int")
-    salted = sized.withColumn("_nsalt", nsalt).withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(DOC)), F.col("_nsalt")).cast("int")
+    nsalt = F.coalesce(F.ceil(F.col("sz") / F.lit(int(salt_above))), F.lit(1))
+    salted = (
+        buckets.join(hot, keys, "left")
+        .withColumn("_nsalt", nsalt.cast("int"))
+        .withColumn("_salt", F.pmod(F.xxhash64(F.col(DOC)), F.col("_nsalt")).cast("int"))
     )
     l = salted.select(
         *keys,
@@ -223,45 +201,29 @@ def _emit_bucket_pairs(batches):
             )
 
 
-def _grouped_bucket_pairs(
-    buckets: DataFrame,
-    max_bucket_size: Optional[int],
-    key_cols=("band", "key"),
-    over_cap: Optional[DataFrame] = None,
-) -> DataFrame:
+def _grouped_bucket_pairs(buckets: DataFrame, key_cols) -> DataFrame:
     """ONE-SHUFFLE bucket pairing: group members per (band, key), emit all
     in-bucket pairs from the collected array.
 
     The window+self-join formulation shuffles the bucket table three times
     (size window, join left, join right) — measured 54 s at 400k docs x 64
-    bands (25.6M bucket rows); this groupBy ships them once and the size cap
-    becomes a free ``F.size`` filter (measured ~3x faster).  Emission runs
-    in a numpy ``mapInPandas`` pass: the Catalyst ``transform``/``slice``/
-    ``flatten`` formulation is INTERPRETED per element and measured ~1.4x
-    slower (1.5 vs 1.08 s at 120k docs, identical 1.45M pairs) despite
-    staying JVM-side.  Per-bucket pair generation is O(s^2) inside one task,
-    which ``max_bucket_size`` bounds — megabucket skew needs the salted join
-    instead (``_salted_self_pairs``).  Emits one row per (bucket, pair):
-    callers dedupe or count collisions.
-
-    ``over_cap``: the ``F.size`` cap filters AFTER ``collect_list``
-    materializes each bucket — a 10^9-member stop-gram bucket would build
-    one multi-GB aggregation buffer before being discarded.  Given the
-    over-cap buckets' keys (the flagship passes the rows its skew policy
-    kept, exactly when that policy counted dropped buckets), they are
-    anti-joined out of the bucket table first, so no task ever collects a
-    megabucket.
+    bands (25.6M bucket rows); this groupBy ships them once (measured ~3x
+    faster).  Emission runs in a numpy ``mapInPandas`` pass: the Catalyst
+    ``transform``/``slice``/``flatten`` formulation is INTERPRETED per
+    element and measured ~1.4x slower (1.5 vs 1.08 s at 120k docs,
+    identical 1.45M pairs) despite staying JVM-side.  Per-bucket pair
+    generation is O(s^2) inside one task, so the caller drops over-cap
+    buckets BEFORE this runs (anti-joined by ``bucket_policy``'s ``hot``
+    rows: no task ever ``collect_list``s a megabucket) — megabucket skew
+    within the cap needs the salted join instead (``_salted_self_pairs``).
+    Emits one row per (bucket, pair): callers dedupe or count collisions.
     """
-    ds = F.col("_ds")
-    if over_cap is not None:
-        hot = over_cap.select(*key_cols)
-        buckets = buckets.join(hot, list(key_cols), "left_anti")
     grouped = buckets.groupBy(*key_cols).agg(F.collect_list(DOC).alias("_ds"))
-    sized = grouped.where(F.size(ds) >= 2)
-    if max_bucket_size is not None:
-        # belt-and-braces: also enforces the cap without ``over_cap``
-        sized = sized.where(F.size(ds) <= max_bucket_size)
-    return sized.select("_ds").mapInPandas(_emit_bucket_pairs, _PAIR_SCHEMA)
+    return (
+        grouped.where(F.size("_ds") >= 2)
+        .select("_ds")
+        .mapInPandas(_emit_bucket_pairs, _PAIR_SCHEMA)
+    )
 
 
 def capped_buckets(
@@ -269,16 +231,18 @@ def capped_buckets(
     max_bucket_size: Optional[int],
     key_cols=("band", "key"),
 ) -> DataFrame:
-    """Enforce the bucket-size cap on a FLAT bucket table without ever
-    materializing a bucket: a count-only partial agg finds the over-cap
-    keys (a tiny set) and a broadcast anti-join removes their rows.
+    """Enforce the bucket-size cap on a FLAT bucket table lazily, with no
+    job of its own and without ever materializing a bucket: a count-only
+    partial agg finds the over-cap keys (a tiny set) and an anti-join
+    removes their rows.  For callers that keep no drop accounting (ANN,
+    SimHash/image blocks, the corpus-frozen matcher's buckets, the exact
+    path's stop grams); ``bucket_policy`` is the measured form.
 
     The grouped alternative (collect_list -> F.size filter -> explode)
     builds each bucket in one aggregation buffer first — a stop-gram
     megabucket becomes a multi-GB task buffer at web scale, and its
     shuffle ships every member row where this ships one count per key per
-    map partition.  Used by the bipartite / corpus-frozen join paths,
-    whose bucket tables feed an equi-join and never need the grouped form.
+    map partition.
 
     The anti-join carries NO broadcast hint: the hot-key set is tiny in
     the designed regime (a handful of stop-gram buckets), so AQE converts
@@ -289,7 +253,11 @@ def capped_buckets(
     """
     if max_bucket_size is None:
         return buckets
-    hot = _over_cap_buckets(buckets, max_bucket_size, key_cols)
+    hot = (
+        buckets.groupBy(*key_cols)
+        .agg(F.count(F.lit(1)).alias("sz"))
+        .where(F.col("sz") > max_bucket_size)
+    )
     return buckets.join(hot.select(*key_cols), list(key_cols), "left_anti")
 
 

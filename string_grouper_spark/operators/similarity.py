@@ -58,22 +58,18 @@ def prune_hot_grams(postings: DataFrame, max_df: int) -> DataFrame:
     scale a gram like ``'the'`` would produce df^2 join rows.  Use ONLY for
     candidate generation — recall accounting is the caller's job.
 
-    Plan shape matters here: the document frequency is computed with
-    ``groupBy(gram).count()`` (map-side partial agg — the shuffle carries
-    ~|vocab| rows per partition, not the postings), and the HOT-gram set —
-    tiny by definition (|vocab| * max_df_ratio at most) — is broadcast and
-    anti-joined out.  A ``Window.partitionBy(gram)`` formulation would
-    shuffle the full posting rows BY THE SKEWED KEY and land every hot
-    gram's postings in one task: the exact skew this guard exists to avoid,
-    paid before the guard could apply.
+    Plan shape matters here: this is ``candidates.capped_buckets`` over
+    the gram key — document frequency from a map-side partial count (the
+    shuffle carries ~|vocab| rows per partition, not the postings), the
+    HOT-gram set (tiny by definition) anti-joined out, broadcast by AQE at
+    run time.  A ``Window.partitionBy(gram)`` formulation would shuffle the
+    full posting rows BY THE SKEWED KEY and land every hot gram's postings
+    in one task: the exact skew this guard exists to avoid, paid before
+    the guard could apply.
     """
-    hot = (
-        postings.groupBy(GRAM)
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .where(F.col("_df") > max_df)
-        .select(GRAM)
-    )
-    return postings.join(F.broadcast(hot), GRAM, "left_anti")
+    from .candidates import capped_buckets  # candidates imports this module
+
+    return capped_buckets(postings, max_df, (GRAM,))
 
 
 def candidate_pairs_from_postings(postings: DataFrame, max_df: int) -> DataFrame:

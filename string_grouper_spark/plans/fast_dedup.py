@@ -62,12 +62,9 @@ from ..checkpoint import in_memory_stages
 from ..config import MatchConfig
 from ..functions.normalize import py_normalize
 from ..operators.candidates import (
-    _bucket_sizes,
     _grouped_bucket_pairs,
-    _over_cap_buckets,
-    _over_cap_stats,
     _salted_self_pairs,
-    auto_skew_policy,
+    bucket_policy,
     capped_buckets,
 )
 from ..operators.similarity import LEFT, RIGHT, SIM, _rescore_dot
@@ -425,45 +422,32 @@ def lsh_band_candidates(
     are dropped; buckets above ``salt_above`` (but within the cap) are
     SALTED — the self-join is spread over ceil(sz/salt_above)^2 sub-tasks
     instead of skewing one.  ``salt_above='auto'`` picks the threshold from
-    a one-pass bucket-size histogram (candidates.auto_skew_policy) and
-    ALWAYS logs the measured skew/drop accounting (WARNING when buckets are
-    dropped), so drops are never silent.  Salting never changes the
-    emitted pair set.  A ``drop_stats`` dict receives the accounting.  The
-    bucket table is counted once: dropped buckets are filtered out by the
-    over-cap rows that the accounting's pass kept."""
+    the bucket-size histogram.  One pass (``candidates.bucket_policy``)
+    measures that histogram whenever there is a cap or salting, and its
+    accounting is ALWAYS logged (WARNING when buckets are dropped), so
+    drops are never silent.  Salting never changes the emitted pair set.
+    A ``drop_stats`` dict receives the accounting.  The bucket table is
+    counted once: dropped buckets are anti-joined out, and salted ones
+    sized, by the hot rows that pass kept."""
     import logging
 
     buckets = _bucket_table(vecs)
     kc = ("key",)
-    stats = over_cap = None
-    if salt_above == "auto" or (
-        drop_stats is not None and max_bucket_size is not None
-    ):
-        sizes = _bucket_sizes(buckets, kc)
-        stats, over_cap = auto_skew_policy(sizes, max_bucket_size)
-        if salt_above == "auto":
-            salt_above = stats["salt_above"]
-        stats["salt_above"] = salt_above
-    elif drop_stats is not None:
-        stats = _over_cap_stats(None)  # no cap: nothing dropped
-    if stats is not None:
-        if drop_stats is not None:
-            drop_stats.update(stats)
+    stats, hot = bucket_policy(buckets, kc, max_bucket_size, salt_above)
+    if drop_stats is not None:
+        drop_stats.update(stats)
+    if hot is not None:
         log = logging.getLogger("string_grouper_spark.skew")
         emit = log.warning if stats["n_buckets_dropped"] else log.info
         emit("lsh skew policy: %s", stats)
-    if salt_above is None:
-        # one-shuffle grouped pairing (see _grouped_bucket_pairs); dropped
-        # buckets are anti-joined out first so no task collect_lists a
-        # megabucket
-        raw_pairs = _grouped_bucket_pairs(
-            buckets, max_bucket_size, key_cols=kc,
-            over_cap=over_cap if stats and stats["n_buckets_dropped"] else None,
-        )
+    if stats["n_buckets_dropped"]:
+        # no task ever collect_lists (or salts) a dropped megabucket
+        over_cap = hot.where(F.col("sz") > max_bucket_size).select(*kc)
+        buckets = buckets.join(over_cap, list(kc), "left_anti")
+    if stats["salt_above"] is None:
+        raw_pairs = _grouped_bucket_pairs(buckets, kc)
     else:
-        raw_pairs = _salted_self_pairs(
-            buckets, salt_above, key_cols=kc, max_bucket_size=max_bucket_size
-        )
+        raw_pairs = _salted_self_pairs(buckets, stats["salt_above"], kc, hot)
     # a pair colliding in several bands is one candidate
     return raw_pairs.dropDuplicates([LEFT, RIGHT])
 
@@ -564,7 +548,7 @@ def fast_lsh_dedup_bipartite(
     Returns (master_side, dupe_side, similarity) with
     sim >= cfg.min_similarity: the exact two-series path's pairs that share
     a band key.  ``drop_stats`` (a dict) receives each side's drop
-    accounting (``candidates._over_cap_stats``) under ``"master"`` and
+    accounting (``candidates.bucket_policy``) under ``"master"`` and
     ``"duplicates"``.
     """
     import logging
@@ -592,7 +576,7 @@ def fast_lsh_dedup_bipartite(
         idf_bc = _collect_idf(
             spark, terms["master"].unionAll(terms["duplicates"]), n
         )
-        vecs, capped = {}, {}
+        vecs, capped, dropped = {}, {}, {}
         for side, df in sides.items():
             vecs[side] = stage(f"vectors_{side}", partial(
                 doc_vectors, df, cfg, num_perm, num_bands, text_col, id_col, n,
@@ -600,22 +584,16 @@ def fast_lsh_dedup_bipartite(
                 shingle_words=shingle_words, idf_bc=idf_bc,
             ), reused=True)
             raw = capped[side] = _bucket_table(vecs[side])
-            # the cap's anti-join (candidates.capped_buckets) and, with
-            # drop_stats, the drop accounting read one over-cap set
-            hot = None if max_bucket_size is None else stage(
-                f"over_cap_{side}",
-                partial(_over_cap_buckets, raw, max_bucket_size, ("key",)),
-                reused=drop_stats is not None,
-            )
-            if hot is not None:
+            # the cap's drop accounting and anti-join read one measured pass
+            stats, hot = bucket_policy(raw, ("key",), max_bucket_size, None)
+            if stats["n_buckets_dropped"]:
                 capped[side] = raw.join(hot.select("key"), "key", "left_anti")
-            if drop_stats is not None:
-                drop_stats[side] = _over_cap_stats(hot)
-        if drop_stats is not None and any(
-            drop_stats[side]["n_buckets_dropped"] for side in sides
-        ):
+            dropped[side] = {k: v for k, v in stats.items() if k.endswith("_dropped")}
+        if drop_stats is not None:
+            drop_stats.update(dropped)
+        if any(d["n_buckets_dropped"] for d in dropped.values()):
             logging.getLogger("string_grouper_spark.skew").warning(
-                "bipartite lsh bucket drops: %s", drop_stats
+                "bipartite lsh bucket drops: %s", dropped
             )
         cand = _cross_bucket_pairs(capped["master"], capped["duplicates"])
         out = _rescore(cand, vecs["master"], vecs["duplicates"], cfg.min_similarity)

@@ -271,27 +271,33 @@ def test_megabucket_drop_accounting_and_salting(spark):
     assert comp.loc[62] == 62
 
 
-def test_auto_skew_policy_from_histogram(spark):
+def test_auto_skew_policy_from_histogram(spark, monkeypatch):
     # the threshold must come from the MEASURED bucket histogram: small
     # buckets -> no salting; a megabucket -> salt_above derived from the
     # per-task pair budget; dropped buckets are fully accounted
+    import math
+
+    monkeypatch.setattr(cand, "_TARGET_PAIRS_PER_TASK", 100)
+    keys = ("band", "key")
     small = spark.createDataFrame(
         pd.DataFrame({"band": [0] * 6, "key": [1, 1, 1, 2, 2, 3], "doc_id": range(6)})
     )
-    sizes = lambda b: cand._bucket_sizes(b, ("band", "key"))
-    pol, _ = cand.auto_skew_policy(sizes(small), None, parallelism=8, target_pairs_per_task=100)
+    pol, _ = cand.bucket_policy(small, keys, None, "auto")
     assert pol["salt_above"] is None and pol["max_sz"] == 3
     assert pol["n_buckets_dropped"] == 0
 
     mega = spark.createDataFrame(
         pd.DataFrame({"band": [0] * 300, "key": [7] * 300, "doc_id": range(300)})
     )
-    pol, _ = cand.auto_skew_policy(sizes(mega), None, parallelism=8, target_pairs_per_task=100)
+    pol, _ = cand.bucket_policy(mega, keys, None, "auto")
     # 300^2/2 pairs >> budget: salt threshold = ceil(sqrt(2*per_task))
     assert pol["salt_above"] is not None and pol["salt_above"] < 300
     assert pol["est_pairs"] == 300 * 299 // 2
+    par = spark.sparkContext.defaultParallelism
+    per_task = max(100.0, pol["est_pairs"] / par)
+    assert pol["salt_above"] == math.ceil(math.sqrt(2 * per_task))
     # with a cap, the dropped megabucket is fully accounted
-    pol_capped, over_cap = cand.auto_skew_policy(sizes(mega), 100, parallelism=8)
+    pol_capped, over_cap = cand.bucket_policy(mega, keys, 100, "auto")
     assert pol_capped["n_buckets_dropped"] == 1
     assert pol_capped["n_rows_dropped"] == 300
     assert pol_capped["est_pairs_dropped"] == 300 * 299 // 2
@@ -462,9 +468,11 @@ def test_minhash_deterministic_across_runs(spark, docs):
 
 
 def test_prefilter_hot_equals_postfilter_pairs(spark):
-    # given the over-cap rows, those buckets are dropped BEFORE
-    # collect_list (so no task ever materializes a megabucket) — the
-    # emitted pair set must be identical to the F.size-after-collect filter
+    # the over-cap rows are dropped BEFORE collect_list (so no task ever
+    # materializes a megabucket) — the emitted pair set must be identical
+    # to an F.size-after-collect filter
+    from itertools import combinations
+
     pdf = pd.DataFrame(
         {
             "key": [7] * 12 + [9] * 4 + [11] * 2,
@@ -473,12 +481,17 @@ def test_prefilter_hot_equals_postfilter_pairs(spark):
     )
     buckets = spark.createDataFrame(pdf)
     key = lambda d: set(zip(d[LEFT], d[RIGHT]))
-    post = cand._grouped_bucket_pairs(buckets, 5, key_cols=("key",)).toPandas()
-    pre = cand._grouped_bucket_pairs(
-        buckets, 5, key_cols=("key",),
-        over_cap=cand._over_cap_buckets(buckets, 5, ("key",)),
-    ).toPandas()
-    assert key(post) == key(pre)
+    grouped = buckets.groupBy("key").agg(F.collect_list("doc_id").alias("_ds"))
+    post = {
+        p
+        for row in grouped.where(F.size("_ds") <= 5).collect()
+        for p in combinations(sorted(row["_ds"]), 2)
+    }
+    pol, hot = cand.bucket_policy(buckets, ("key",), 5, None)
+    assert pol["n_buckets_dropped"] == 1
+    kept = buckets.join(hot.select("key"), "key", "left_anti")
+    pre = cand._grouped_bucket_pairs(kept, ("key",)).toPandas()
+    assert post == key(pre)
     # the size-12 bucket is gone either way; the size-4 and size-2 survive
     assert len(key(pre)) == 6 + 1
 

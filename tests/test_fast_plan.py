@@ -247,15 +247,7 @@ def test_fast_bipartite_megabucket_per_side_drops(spark):
     assert pairs == {(10, 105)}
 
 
-@pytest.mark.parametrize("salt_above", ["auto", None])
-def test_band_candidates_count_the_bucket_table_once(spark, monkeypatch, salt_above):
-    # a dropped megabucket, measured by the skew policy (auto) or by the drop
-    # accounting (an explicit threshold): the cap's anti-join reads the
-    # over-cap rows that pass kept, so each bucket row is read twice (the
-    # histogram and the pairing), not counted a second time
-    from string_grouper_spark.operators.similarity import LEFT, RIGHT
-    from string_grouper_spark.plans import fast_dedup
-
+def _megabucket_vecs(spark):
     # band key 7 on docs 0-11 (over the cap of 5), key 9 on docs 1, 5, 20
     # and 21, and one key of its own per doc
     ids = list(range(12)) + [20, 21]
@@ -265,6 +257,19 @@ def test_band_candidates_count_the_bucket_table_once(spark, monkeypatch, salt_ab
         pd.DataFrame({"doc_id": ids, "bands": bands}),
         "doc_id long, bands array<long>",
     )
+    return vecs, bands
+
+
+@pytest.mark.parametrize("salt_above", ["auto", None])
+def test_band_candidates_count_the_bucket_table_once(spark, monkeypatch, salt_above):
+    # a dropped megabucket, measured by the skew policy (auto) or by the drop
+    # accounting (an explicit threshold): the cap's anti-join reads the
+    # over-cap rows that pass kept, so each bucket row is read twice (the
+    # histogram and the pairing), not counted a second time
+    from string_grouper_spark.operators.similarity import LEFT, RIGHT
+    from string_grouper_spark.plans import fast_dedup
+
+    vecs, bands = _megabucket_vecs(spark)
     reads = spark.sparkContext.accumulator(0)
 
     def tap(key):
@@ -288,6 +293,63 @@ def test_band_candidates_count_the_bucket_table_once(spark, monkeypatch, salt_ab
         "n_buckets_dropped": 1, "n_rows_dropped": 12, "est_pairs_dropped": 66,
     }
     assert reads.value == 2 * sum(map(len, bands))
+
+
+def test_salted_band_candidates_count_the_bucket_table_once(spark):
+    # the salted join sizes its buckets from the rows the policy pass kept:
+    # the pairing's own plan holds no second bucket count
+    from string_grouper_spark.operators.similarity import LEFT, RIGHT
+    from string_grouper_spark.plans import fast_dedup
+    from tests.test_plan_shape import plan_of
+
+    vecs, _ = _megabucket_vecs(spark)
+    stats = {}
+    cand = fast_dedup.lsh_band_candidates(vecs, 5, salt_above=2, drop_stats=stats)
+    plan = plan_of(cand)
+    assert "partial_count" not in plan, plan
+    got = cand.toPandas()
+    assert set(zip(got[LEFT], got[RIGHT])) == {
+        (1, 5), (1, 20), (1, 21), (5, 20), (5, 21), (20, 21)
+    }
+    assert stats == {
+        "salt_above": 2, "n_buckets": 16, "max_sz": 4, "est_pairs": 6,
+        "n_buckets_dropped": 1, "n_rows_dropped": 12, "est_pairs_dropped": 66,
+    }
+
+
+def test_prefit_match_self_drops_megabuckets_before_collecting(spark):
+    # within-batch pairing measures the batch's buckets: an over-cap bucket
+    # is anti-joined out BELOW the collect_list, never collected and then
+    # filtered by size
+    from string_grouper_spark.operators.similarity import LEFT, RIGHT
+    from string_grouper_spark.plans.fast_dedup import PrefitLshMatcher
+    from tests.test_plan_shape import plan_of
+
+    cfg = MatchConfig(min_similarity=0.8, max_n_matches=1_000_000)
+    corpus = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [0, 1], "text": [
+            "copyright terms and conditions apply to all pages here",
+            "the unique quick brown fox document number one",
+        ]})
+    )
+    texts = ["copyright terms and conditions apply to all pages here"] * 40 + [
+        "the unique quick brown fox document number one",
+        "the unique quick brown fox document number one!",
+    ]
+    batch = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(100, 142), "text": texts})
+    )
+    m = PrefitLshMatcher(corpus, cfg, num_perm=64, num_bands=16, max_bucket_size=10)
+    try:
+        pairs = m._self_pairs_vecs(m.vectorize(batch))
+        lines = plan_of(pairs).splitlines()
+        collects = [i for i, ln in enumerate(lines) if "collect_list" in ln]
+        anti = [i for i, ln in enumerate(lines) if "LeftAnti" in ln]
+        assert collects and anti and min(anti) > max(collects), "\n".join(lines)
+        got = pairs.toPandas()
+        assert set(zip(got[LEFT], got[RIGHT])) == {(140, 141)}
+    finally:
+        m.unpersist()
 
 
 def test_prefit_matcher_frozen_vocab_semantics(spark):

@@ -209,16 +209,17 @@ def test_salted_pairing_has_no_window(spark):
     # window sort task (AQE splits skewed joins, not windows)
     import pandas as pd
 
-    from string_grouper_spark.operators.candidates import _salted_self_pairs
+    from string_grouper_spark.operators.candidates import (
+        _salted_self_pairs,
+        bucket_policy,
+    )
 
     buckets = spark.createDataFrame(
         pd.DataFrame({"key": [1] * 6 + [2] * 3, "doc_id": range(9)})
     )
-    plan = plan_of(
-        _salted_self_pairs(buckets, 2, key_cols=("key",), max_bucket_size=100)
-    )
+    _, hot = bucket_policy(buckets, ("key",), 100, 2)
+    plan = plan_of(_salted_self_pairs(buckets, 2, ("key",), hot))
     assert "Window" not in plan, plan
-    assert "partial_count" in plan, plan
 
 
 def test_group_rep_selection_has_no_window(spark, docs):
