@@ -42,7 +42,7 @@ errors name it.
 from __future__ import annotations
 
 from functools import partial
-from typing import Iterator, Optional
+from typing import Iterator, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -406,6 +406,27 @@ def _cross_bucket_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
     )
 
 
+def _measured_buckets(
+    buckets: DataFrame, max_bucket_size: Optional[int], salt_above, what: str
+) -> Tuple[DataFrame, dict, Optional[DataFrame]]:
+    """A ``key`` bucket table through ``candidates.bucket_policy``: the
+    policy's accounting is logged as ``<what> skew policy`` (WARNING when
+    buckets are dropped, so drops are never silent), and the over-cap keys
+    are anti-joined out, so no task ever collect_lists (or salts) a dropped
+    megabucket.  Returns (kept buckets, policy, hot)."""
+    import logging
+
+    stats, hot = bucket_policy(buckets, ("key",), max_bucket_size, salt_above)
+    if hot is not None:
+        log = logging.getLogger("string_grouper_spark.skew")
+        emit = log.warning if stats["n_buckets_dropped"] else log.info
+        emit("%s skew policy: %s", what, stats)
+    if stats["n_buckets_dropped"]:
+        over_cap = hot.where(F.col("sz") > max_bucket_size).select("key")
+        buckets = buckets.join(over_cap, ["key"], "left_anti")
+    return buckets, stats, hot
+
+
 def lsh_band_candidates(
     vecs: DataFrame,
     max_bucket_size: Optional[int] = 1000,
@@ -429,21 +450,12 @@ def lsh_band_candidates(
     A ``drop_stats`` dict receives the accounting.  The bucket table is
     counted once: dropped buckets are anti-joined out, and salted ones
     sized, by the hot rows that pass kept."""
-    import logging
-
-    buckets = _bucket_table(vecs)
     kc = ("key",)
-    stats, hot = bucket_policy(buckets, kc, max_bucket_size, salt_above)
+    buckets, stats, hot = _measured_buckets(
+        _bucket_table(vecs), max_bucket_size, salt_above, "lsh"
+    )
     if drop_stats is not None:
         drop_stats.update(stats)
-    if hot is not None:
-        log = logging.getLogger("string_grouper_spark.skew")
-        emit = log.warning if stats["n_buckets_dropped"] else log.info
-        emit("lsh skew policy: %s", stats)
-    if stats["n_buckets_dropped"]:
-        # no task ever collect_lists (or salts) a dropped megabucket
-        over_cap = hot.where(F.col("sz") > max_bucket_size).select(*kc)
-        buckets = buckets.join(over_cap, list(kc), "left_anti")
     if stats["salt_above"] is None:
         raw_pairs = _grouped_bucket_pairs(buckets, kc)
     else:
@@ -615,7 +627,8 @@ class PrefitLshMatcher:
         grams outside the vocabulary are dropped, exactly sklearn
         ``transform`` on a fitted vectorizer);
       * persisted packed corpus vectors;
-      * the corpus-side bucket table.
+      * the corpus-side bucket table, capped by one measured pass at fit
+        (its drops logged like ``lsh_band_candidates``'s).
 
     Each ``match(batch)`` runs two narrow passes over the batch plus one
     bucket equi-join + packed exact re-score — cost scales with the BATCH,
@@ -663,10 +676,18 @@ class PrefitLshMatcher:
             ).persist()
             self.corpus_vecs.count()  # materialize while terms is cached
         self._base_vecs = self.corpus_vecs  # the persisted fit-time piece
-        self._corpus_buckets = self._buckets(self.corpus_vecs)
+        self._fit_buckets()
+
+    def _fit_buckets(self) -> None:
+        # the corpus table is measured once, at fit, so its drops are logged
+        self._corpus_buckets, _, _ = _measured_buckets(
+            _bucket_table(self.corpus_vecs), self.max_bucket_size, None,
+            "prefit corpus lsh",
+        )
 
     def _buckets(self, vecs: DataFrame) -> DataFrame:
-        # cap without materializing buckets (candidates.capped_buckets)
+        # a batch's (or extension piece's) cap, without a job of its own
+        # (candidates.capped_buckets)
         return capped_buckets(
             _bucket_table(vecs), self.max_bucket_size, key_cols=("key",)
         )
@@ -837,7 +858,7 @@ class PrefitLshMatcher:
         self.corpus_vecs = spark.read.parquet(f"{path}/vectors").persist()
         self.corpus_vecs.count()
         self._base_vecs = self.corpus_vecs
-        self._corpus_buckets = self._buckets(self.corpus_vecs)
+        self._fit_buckets()
         return self
 
     def unpersist(self) -> None:

@@ -352,6 +352,40 @@ def test_prefit_match_self_drops_megabuckets_before_collecting(spark):
         m.unpersist()
 
 
+def test_prefit_fit_logs_its_corpus_bucket_drops(spark, caplog):
+    # the corpus bucket table is measured once, at fit: a megabucket there
+    # is dropped with a WARNING, as in lsh_band_candidates, and matching a
+    # batch still finds the pair outside it
+    import logging
+
+    from string_grouper_spark.operators.similarity import LEFT, RIGHT
+    from string_grouper_spark.plans.fast_dedup import PrefitLshMatcher
+
+    cfg = MatchConfig(min_similarity=0.8, max_n_matches=1_000_000)
+    boiler = "copyright terms and conditions apply to all pages here"
+    unique = "the unique quick brown fox document number one"
+    corpus = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(21), "text": [boiler] * 20 + [unique]})
+    )
+    with caplog.at_level(logging.INFO, logger="string_grouper_spark.skew"):
+        m = PrefitLshMatcher(corpus, cfg, num_perm=64, num_bands=16, max_bucket_size=10)
+    try:
+        (warned,) = [
+            r.getMessage() for r in caplog.records
+            if r.levelno == logging.WARNING and "prefit corpus" in r.getMessage()
+        ]
+        # 20 identical docs share every one of the 16 band keys
+        assert "'n_buckets_dropped': 16" in warned, warned
+        assert "'n_rows_dropped': 320" in warned, warned
+        batch = spark.createDataFrame(
+            pd.DataFrame({"doc_id": [100, 101], "text": [boiler, unique + "!"]})
+        )
+        got = m.match(batch).toPandas()
+        assert set(zip(got[LEFT], got[RIGHT])) == {(20, 101)}
+    finally:
+        m.unpersist()
+
+
 def test_prefit_matcher_frozen_vocab_semantics(spark):
     # PrefitLshMatcher = the reference's corpus-reuse workflow: vocabulary
     # and IDF frozen on the CORPUS; batch grams outside the vocabulary are

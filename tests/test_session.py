@@ -1,9 +1,10 @@
 """get_spark's session: driver JVM options (a fixed heap with a bounded
-eden), and the Python worker daemon that reads zip archives once where the
-workers can import it."""
+eden, the class-data-sharing archive's flags), and the Python worker
+daemon that reads zip archives once where the workers can import it."""
 
 import importlib
 import os
+import re
 import subprocess
 import sys
 import zipfile
@@ -34,12 +35,27 @@ def test_driver_java_options_fix_the_heap_that_fits(monkeypatch):
 
 
 def test_session_jvm_runs_with_the_options(spark):
-    want = _driver_java_options(os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
-    assert spark.sparkContext.getConf().get("spark.driver.defaultJavaOptions") == want
+    base = _driver_java_options(os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+    got = spark.sparkContext.getConf().get("spark.driver.defaultJavaOptions")
+    # then the class-data-sharing archive's flags, where the environment
+    # allows one: start from the archive, or dump one at exit
+    archive = re.fullmatch(
+        re.escape(base)
+        + r" -XX:(?:SharedArchiveFile|ArchiveClassesAtExit)=(\S+) "
+        + re.escape(session._QUIET_CDS),
+        got,
+    )
+    assert got == base or archive
     jvm = spark.sparkContext._jvm
     args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
-    for opt in want.split():
+    for opt in got.split():
         assert opt in args
+    if archive:
+        store = os.path.dirname(archive.group(1))
+        assert os.path.basename(store) == "string_grouper_spark"
+        # the dump needs a class path without a non-empty directory
+        conf = jvm.System.getProperty("java.class.path").split(os.pathsep)[0]
+        assert os.path.samefile(conf, os.path.join(store, "conf"))
 
 
 def _write_zip(path, modules):
